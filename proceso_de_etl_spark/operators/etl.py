@@ -485,6 +485,9 @@ def etl_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``partitionBy(year)`` parquet. The year filter on the read side
     resolves to PartitionFilters — pruned directories are never
     listed, the exact effect the reference's design was after.
+    ``write_parquet`` rebalances on the year first, so each year
+    directory holds files sized by its bytes (one per year at test
+    scale), not one per input split.
     """
     import tempfile
 
@@ -1314,7 +1317,9 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     footgun this operator exists to encode; with
     ``partitionOverwriteMode=dynamic`` only partitions present in the
     batch are replaced. At 100 TB that is the difference between
-    rewriting one day and rewriting the table.
+    rewriting one day and rewriting the table. The mode is set per
+    write (``write_parquet(dynamic=True)``), never session-wide, so a
+    concurrent static write on the same session keeps its semantics.
 
     Here: orders partitioned by order year; a restated 1997 batch
     (prices adjusted +1000) overwrites in dynamic mode; the read-back
@@ -1334,12 +1339,7 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         orders.filter(F.col("order_year") == 1997)
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        batch.write.mode("overwrite").partitionBy("order_year").parquet(target)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_parquet(batch, target, partition_by=["order_year"], dynamic=True)
     back = spark.read.parquet(target)
     return (
         back.groupBy(F.col("order_year").cast("bigint").alias("order_year"))

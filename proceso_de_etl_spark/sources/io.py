@@ -5,11 +5,17 @@ and loads SQL Server. Here every format goes through explicit
 schemas — schema inference is a full extra pass over the data, which
 at 100 TB is not a default anyone wants; malformed handling is a
 declared policy, not an accident.
+
+Partitioned writes are sized by data: ``write_parquet`` rebalances
+rows on the partition columns, so each partition directory holds
+about (its bytes ÷ ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+files, at least one — not one file per writing task per value.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -45,14 +51,45 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
+def write_parquet(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    mode: str = "overwrite",
+    dynamic: bool = False,
+) -> None:
     """Columnar sink; with ``partition_by`` the layout implements the
     reference's fact-table partitioning design (its README §2.3 —
     yearly date-range partitions) so date-filtered reads prune whole
-    directories instead of scanning."""
+    directories instead of scanning.
+
+    Layout rule: files per partition directory ≈ its bytes ÷
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, at least one.
+    A plain partitioned write emits one file per writing task into
+    every directory that task touches (input splits × partition
+    values files at 100 TB). So the rows are first rebalanced on the
+    partition columns — a hash shuffle that AQE plans as
+    ``RebalancePartitions`` — which merges small shuffle partitions
+    and splits any above the advisory size. ``repartition(col)``
+    would instead funnel each value through a single task (one file
+    for a whole 100 TB year), and ``coalesce`` keeps every task
+    writing into every directory.
+
+    ``dynamic=True`` overwrites only the partitions present in ``df``
+    (per-write ``partitionOverwriteMode=dynamic``; the session conf
+    is left alone) — the period-restatement write of E25.
+
+    Streaming ``foreachBatch`` epoch writes do not come through here:
+    AQE is off inside micro-batches, where the rebalance would become
+    a fixed ``spark.sql.shuffle.partitions``-way hash shuffle per epoch.
+    """
+    if partition_by:
+        df = df.hint("rebalance", *[F.col(c) for c in partition_by])
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
     w.parquet(path)
 
 
@@ -148,8 +185,6 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from proceso_de_etl_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -192,8 +227,6 @@ def source_federated_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DURING a format conversion — no downtime cutover."""
     import os
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -254,8 +287,6 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing; nothing here changes shape."""
     import os
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -324,8 +355,6 @@ def source_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats; this proves each leg lossless in isolation)."""
     import os
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from proceso_de_etl_spark.sources.catalog import load_table
 

@@ -338,11 +338,12 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write cost ~0.65 s of pure fixed overhead per invocation
     # (profile_vault_ingest.py phase table) and epoch 1 then paid a
     # listing + scan + full_outer shuffle against a provably empty
-    # side; with a LocalRelation store AQE's empty-relation
-    # propagation collapses that first merge to a projection of the
-    # candidates. Store contents after epoch 1 are identical (merge
-    # with an empty store = the candidate rows), so the final state
-    # and its oracle are unchanged.
+    # side; with a LocalRelation store the batch optimizer's
+    # PropagateEmptyRelation rule collapses that first merge to a
+    # projection of the candidates (AQE is off inside micro-batches,
+    # so it plays no part). Store contents after epoch 1 are identical
+    # (merge with an empty store = the candidate rows), so the final
+    # state and its oracle are unchanged.
     state: dict[str, str | None] = {"cur": None}
 
     stream = (
@@ -369,6 +370,11 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
+    if state["cur"] is None:
+        raise RuntimeError(
+            f"stream_data_vault_ingest: no micro-batch ran over {landing}, "
+            "so no vault store was written"
+        )
     return (
         spark.read.parquet(state["cur"])
         .groupBy("vault_table", "load_epoch")

@@ -66,17 +66,56 @@ def test_csv_malformed_policies(spark, tmp_path):
         read_csv(spark, str(raw), schema, mode="FAILFAST").collect()
 
 
+def _four_file_lineitem(spark, tmp_path):
+    """lineitem re-read from a 4-file copy, so the frame has four
+    input splits that each hold every ship year. The copy must come
+    from a read: CollapseRepartition would fold a ``repartition(4)``
+    placed directly under the write's rebalance."""
+    src = str(tmp_path / "lineitem_4")
+    load_table(spark, SF_SMOKE, "lineitem").repartition(4).write.parquet(src)
+    return spark.read.parquet(src).withColumn("ship_year", F.year("l_shipdate").cast("int"))
+
+
+def _data_files_per_partition(root: str) -> dict[str, int]:
+    import os
+
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(root, d)))
+        for d in os.listdir(root)
+        if "=" in d
+    }
+
+
 def test_partitioned_write_prunes(spark, tmp_path):
-    li = load_table(spark, SF_SMOKE, "lineitem").withColumn(
-        "ship_year", F.year("l_shipdate").cast("int")
-    )
+    li = _four_file_lineitem(spark, tmp_path)
+    assert li.rdd.getNumPartitions() == 4
     p = str(tmp_path / "fact")
     write_parquet(li, p, partition_by=["ship_year"])
+    # sized by data: a few KB per year is one file, not one per input split
+    files = _data_files_per_partition(p)
+    assert len(files) > 1 and set(files.values()) == {1}, files
     back = spark.read.parquet(p).filter(F.col("ship_year") == 1997)
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "ship_year" in plan.split("PartitionFilters")[1][:200]
     want = li.filter(F.col("ship_year") == 1997).count()
     assert back.count() == want
+
+
+def test_partitioned_write_splits_partitions_above_advisory_size(spark, tmp_path):
+    """The other half of the layout rule: a partition value with more
+    bytes than the advisory size is written by several tasks, so a
+    100 TB year is never funneled through one."""
+    li = _four_file_lineitem(spark, tmp_path)
+    p = str(tmp_path / "fact")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        write_parquet(li, p, partition_by=["ship_year"])
+    finally:
+        spark.conf.set(key, prev)
+    assert max(_data_files_per_partition(p).values()) > 1
+    assert spark.read.parquet(p).count() == li.count()
 
 
 def test_avro_gated_with_actionable_error(spark):
@@ -195,10 +234,9 @@ def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tmp_pa
     import os
 
     root = str(tmp_path / "dpo")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], "id long, part string, v double"
-    )
-    base.write.partitionBy("part").parquet(root)
+    schema = "id long, part string, v double"
+    base = spark.createDataFrame([(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], schema)
+    write_parquet(base, root, partition_by=["part"])
 
     def listing(part: str) -> list[tuple[str, int]]:
         d = os.path.join(root, f"part={part}")
@@ -209,14 +247,11 @@ def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tmp_pa
         )
 
     a_before = listing("a")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        spark.createDataFrame([(9, "b", 99.0)], "id long, part string, v double").write.mode(
-            "overwrite"
-        ).partitionBy("part").parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    conf_before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    batch = spark.createDataFrame([(9, "b", 99.0)], schema)
+    write_parquet(batch, root, partition_by=["part"], dynamic=True)
+    # the mode is a per-write option: the session conf is never flipped
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == conf_before
     assert listing("a") == a_before  # untouched partition: identical files
     got = {(r.id, r.part, r.v) for r in spark.read.parquet(root).collect()}
     assert got == {(1, "a", 10.0), (2, "a", 20.0), (9, "b", 99.0)}
