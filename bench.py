@@ -21,14 +21,8 @@ from __future__ import annotations
 import json
 import os
 import re
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from proceso_de_etl_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
+import harness
 
 HEADLINE = (
     "q1_pricing_summary",
@@ -490,31 +484,21 @@ NOISY = ("q1_pricing_summary", "ab_bootstrap_se")
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = harness.SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    spark = get_spark(app_name="bench")
-
-    from proceso_de_etl_spark import cachereg
-    from proceso_de_etl_spark.operators import dedup, ml
-
-    queries = entrymod.queries()
-    # warmup: JVM + codegen + file listing, outside the timed region
-    queries["q6_forecast_revenue"](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    spark = harness.start("bench", warm_dir=sf_dir)
+    queries = harness.entrymod.queries()
 
     def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return round(time.perf_counter() - t0, 3)
+        return harness.time_noop(lambda: queries[name](spark, sf_dir))
 
     def run_sentinel() -> float:
         from pyspark.sql import functions as F
 
-        t0 = time.perf_counter()
-        spark.range(SENTINEL_N).select(
-            F.sum(F.col("id") % 7).alias("s")
-        ).write.mode("overwrite").format("noop").save()
-        return round(time.perf_counter() - t0, 3)
+        return harness.time_noop(
+            lambda: spark.range(SENTINEL_N).select(F.sum(F.col("id") % 7).alias("s"))
+        )
 
     reps: dict[str, list[float]] = {name: [] for name in HEADLINE}
     sentinel_reps: list[float] = []
@@ -531,15 +515,12 @@ def main() -> None:
         # hourly rollup), and any other persisted storage so pass N+1
         # measures the same work as pass 1 (and re-persists cleanly —
         # no "already cached" warnings)
-        dedup.unpersist_shingles()
-        ml.unpersist_copurchase()
-        cachereg.release_all()
-        spark.catalog.clearCache()
+        harness.release(spark)
 
     # median over however many samples each query collected (REPS for
     # most, 2*REPS for NOISY); even-count medians take the lower middle
     # so a floor re-seed never averages two samples into a fake value
-    timings = {name: sorted(ts)[(len(ts) - 1) // 2] for name, ts in reps.items()}
+    timings = {name: harness.median(ts) for name, ts in reps.items()}
     spreads = {name: round(max(ts) - min(ts), 3) for name, ts in reps.items()}
     total = round(sum(timings.values()), 3)
     deltas = {
@@ -554,10 +535,10 @@ def main() -> None:
     # run). The median of per-query median/floor ratios estimates the
     # common box factor; a true code regression in one query still
     # stands out against it, while uniform slowdown cancels.
-    ratios = sorted(timings[n] / BASELINE[n] for n in deltas)
-    drift = ratios[(len(ratios) - 1) // 2] if ratios else 1.0
+    ratios = [timings[n] / BASELINE[n] for n in deltas]
+    drift = harness.median(ratios) if ratios else 1.0
     drift = max(drift, 1.0)  # a fast box must never mask a regression
-    sentinel_median = sorted(sentinel_reps)[(len(sentinel_reps) - 1) // 2]
+    sentinel_median = harness.median(sentinel_reps)
     sentinel_ratio = max(sentinel_median / SENTINEL_FLOOR, 1.0)
     # drift alert (r7 advisor): a suite_drift beyond DRIFT_ALERT is an
     # explicit verdict item, attributed by the sentinel — "box" when
@@ -606,7 +587,7 @@ def main() -> None:
         "regressed": regressed,
         "decomposition": DECOMPOSITION,
     }
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
+    detail_path = os.path.join(harness.ROOT, "bench_detail.json")
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # BENCH_r05 AND BENCH_r07 both came back "parsed": null — each time

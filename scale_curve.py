@@ -26,23 +26,26 @@ curve measures the ENGINE's response to 10× rows with the same shape
 Derived data lives under /tmp (regenerated on demand), never in the
 repo and never used for CORRECTNESS gates — timing evidence only.
 
-Usage: python scale_curve.py [round]  → SCALE_r{N}.json + one JSON line
+Usage: python scale_curve.py [round [key ...]]
+  no keys: every FAMILIES entry, each in its own child process
+           (``scale_curve.py <round> <family keys>``) merging into
+           SCALE_r{N}.json;
+  keys:    measure only these in this JVM and MERGE them into the
+           existing SCALE_r{N}.json (re-measuring after a knob change).
+Default round: next after the highest existing *_rNN.json artifact.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
-
-from proceso_de_etl_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
+import harness
 
 SRC = "/root/testdata/sf0.1"
 DERIVED = "/tmp/spark_graft_derived/sf1.0"
@@ -62,29 +65,37 @@ OFF = {
     "vec_id": 100_000,
 }
 
-# the flagship families the r8 verdict names: graph ladders, ANN
-# pinned paths, minhash-LSH, semdedup, the SES/Holt folds — plus the
-# headline star ETL. Each family's knob law lives in SURVEY §4.
-CURVE_KEYS = (
-    "etl_star_flagship",
-    "graph_copurchase_edges",
-    # r13: the shared deg→oriented→adj build measured on its own, so
-    # the triangle curve reads warm-adjacency work (cell ordering is
-    # build-first, same attribution as the bench suite)
-    "graph_oriented_adjacency",
-    "graph_triangle_count",
-    "graph_pagerank_ladder",
-    "graph_hits_ladder",
-    "graph_louvain_ladder",
-    "ann_ivf_pinned_topk",
-    "ann_pq_pinned_topk",
-    "ann_ivfpq_pinned_topk",
-    "dedup_minhash_lsh",
-    "semdedup_pairs",
-    "dedup_semantic_semdedup",
-    "events_exp_smoothing",
-    "events_holt_trend",
-)
+# One JVM per family (r10 lesson: broadcast blocks accumulate until
+# GC, so 45 measurements in one session OOM'd a broadcast that runs
+# fine in a fresh JVM). Within a family the order is build-first, so
+# downstream keys read the shared build warm (the bench attribution).
+# The flagship families the r8 verdict named, plus the plan-changed
+# graph/basket/profile/vault families re-curved in r13-r14; each
+# family's knob law lives in SURVEY §4.
+FAMILIES = {
+    "star": ("etl_star_flagship",),
+    "triangle": (
+        "graph_copurchase_edges",
+        "graph_oriented_adjacency",
+        "graph_triangle_count",
+        "graph_clustering_coeff",
+        "graph_kcore",
+    ),
+    "truss": ("graph_copurchase_supported", "graph_ktruss"),
+    "ranking": ("graph_purchase_edges", "graph_pagerank_ladder", "graph_hits_ladder"),
+    "basket": ("basket_pair_counts", "market_basket_rules", "item_similarity_cf"),
+    "community": (
+        "graph_label_propagation",
+        "graph_modularity",
+        "graph_louvain_move",
+        "graph_louvain_ladder",
+    ),
+    "ann_pinned": ("ann_ivf_pinned_topk", "ann_pq_pinned_topk", "ann_ivfpq_pinned_topk"),
+    "dedup": ("dedup_minhash_lsh", "semdedup_pairs", "dedup_semantic_semdedup"),
+    "smoothing": ("events_exp_smoothing", "events_holt_trend"),
+    "profile": ("etl_profile_table", "etl_profile_table_approx"),
+    "vault_stream": ("stream_data_vault_ingest",),
+}
 
 SF_DIRS = (
     ("0.01", "/root/testdata/sf0.01"),
@@ -213,18 +224,20 @@ def gen_derived(
 
 
 def main() -> None:
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 9
-    # optional trailing args: measure only these keys and MERGE into
-    # the existing SCALE artifact (re-measuring after a knob change)
-    only = tuple(sys.argv[2:]) or None
-    curve_keys = only or CURVE_KEYS
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"SCALE_r{rnd:02d}.json"
-    )
+    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else harness.next_round()
+    curve_keys = tuple(sys.argv[2:])
+    if not curve_keys:
+        for name, keys in FAMILIES.items():
+            print(f"=== family {name}: {' '.join(keys)} ===", flush=True)
+            subprocess.run(
+                [sys.executable, os.path.abspath(__file__), str(rnd), *keys], check=True
+            )
+        return
+    out_path = os.path.join(harness.ROOT, f"SCALE_r{rnd:02d}.json")
     sf_dirs = SF_DIRS
     if os.environ.get("SPARK_GRAFT_SF10"):
         sf_dirs = SF_DIRS_10
-    spark = get_spark(app_name="scale_curve")
+    spark = harness.start("scale_curve", warm_dir=SRC)
     if not os.path.exists(os.path.join(DERIVED, "embeddings.parquet")):
         print("generating derived sf1.0 ...", flush=True)
         t0 = time.time()
@@ -237,15 +250,7 @@ def main() -> None:
         t0 = time.time()
         gen_derived(spark, DERIVED10, FACTOR * 10)
         print(f"generated in {time.time() - t0:.0f}s", flush=True)
-
-    from proceso_de_etl_spark import cachereg
-    from proceso_de_etl_spark.operators import dedup, ml
-
-    queries = entrymod.queries()
-    # warmup outside the timed region
-    queries["q6_forecast_revenue"](spark, SRC).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    queries = harness.entrymod.queries()
 
     samples: dict[str, dict[str, list[float]]] = {
         k: {sf: [] for sf, _ in sf_dirs} for k in curve_keys
@@ -253,24 +258,16 @@ def main() -> None:
     for rep in range(REPS):
         for sf, sf_dir in sf_dirs:
             for key in curve_keys:
-                t0 = time.perf_counter()
-                queries[key](spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                sec = round(time.perf_counter() - t0, 3)
+                sec = harness.time_noop(lambda: queries[key](spark, sf_dir))
                 samples[key][sf].append(sec)
                 print(f"rep{rep} sf{sf} {key}: {sec}s", flush=True)
             # cold-start each (rep, sf) cell like bench: shared
             # persists released so every cell measures the same work
-            dedup.unpersist_shingles()
-            ml.unpersist_copurchase()
-            cachereg.release_all()
-            spark.catalog.clearCache()
+            harness.release(spark)
 
-    med = lambda xs: sorted(xs)[(len(xs) - 1) // 2]  # noqa: E731
     curves = {}
     for key in curve_keys:
-        m = {sf: med(samples[key][sf]) for sf, _ in sf_dirs}
+        m = {sf: harness.median(samples[key][sf]) for sf, _ in sf_dirs}
         curves[key] = {
             "median_sec": m,
             "samples": samples[key],
@@ -287,12 +284,12 @@ def main() -> None:
         "reps": REPS,
         "curves": curves,
     }
-    if only and os.path.exists(out_path):
+    if os.path.exists(out_path):
         prior = json.load(open(out_path))
         merged = prior.get("curves", {})
         merged.update(curves)
-        # carry forward any non-curve sections other tools merged in
-        # (profile_bridge.py's stage_timings) instead of dropping them
+        # carry forward the non-curve sections earlier rounds recorded
+        # (stage_timings, vault_ingest_ab) instead of dropping them
         for k, v in prior.items():
             if k not in payload:
                 payload[k] = v

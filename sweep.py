@@ -1,98 +1,72 @@
 #!/usr/bin/env python3
-"""Full oracle-sweep artifact (r8 verdict item 5): replay EVERY
-oracle-paired ``queries()`` key against its DuckDB oracle at
-``$SPARK_GRAFT_SF_DIR`` (default sf0.1) and write the per-key result
-ledger as ``SWEEP_r{N}.json`` — the same row shape as the driver's
-CORRECTNESS_r*.json, so the "every oracle green at sf0.1" claim is an
-auditable artifact instead of a build-log sentence.
+"""Oracle sweep (r8 verdict item 5): replay oracle-paired
+``queries()`` keys against their DuckDB oracles at
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1) with the strict local gate
+(``harness.check``: row count, column names, and exact-repr
+canonicalized values — a pass here implies a pass under any
+order-insensitive value hash).
 
-Comparison is the STRICT local gate (tests/oracle_harness.py):
-row count, column names, and exact-repr canonicalized values — a pass
-here implies a pass under any order-insensitive value hash.
-
-Usage: python sweep.py [round_number]   (default: next after the
-highest existing SWEEP_r*/CORRECTNESS_r* file)
+Usage:
+  python sweep.py [round]      EVERY oracle key; writes the per-key
+                               ledger as SWEEP_r{N}.json (same row shape
+                               as CORRECTNESS_r*.json).
+                               Default round: next after the highest
+                               existing *_rNN.json artifact.
+  python sweep.py <key> [...]  the named keys only; one JSON line per
+                               key, exit 1 unless every key passes.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
-import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
-
-from proceso_de_etl_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
-from oracle_harness import canonicalize, duckdb_con  # noqa: E402
+import harness
 
 # release shared persists every RELEASE_EVERY keys so the sweep's
 # storage footprint stays bounded (the r6 full-sweep recipe)
 RELEASE_EVERY = 40
 
 
-def _next_round() -> int:
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "*_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
+def check_keys(keys: list[str]) -> None:
+    sf_dir = harness.SF_DIR
+    spark = harness.start("sweep")
+    con = harness.duckdb_con(sf_dir)
+    n_pass = 0
+    for key in keys:
+        row = harness.check(spark, con, sf_dir, key)
+        if row["err"]:
+            print(row["err"])
+        ok = harness.passed(row)
+        n_pass += ok
+        print(
+            json.dumps({"key": key, "ok": ok, "sec": row["sec"], "sf_dir": sf_dir}),
+            flush=True,
+        )
+    print(json.dumps({"n": len(keys), "n_pass": n_pass}))
+    sys.exit(0 if n_pass == len(keys) else 1)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else _next_round()
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"SWEEP_r{rnd:02d}.json"
-    )
-    spark = get_spark(app_name="sweep")
-    con = duckdb_con(sf_dir)
+def full_sweep(rnd: int) -> None:
+    sf_dir = harness.SF_DIR
+    out_path = os.path.join(harness.ROOT, f"SWEEP_r{rnd:02d}.json")
+    spark = harness.start("sweep")
+    con = harness.duckdb_con(sf_dir)
 
-    from proceso_de_etl_spark import cachereg
-    from proceso_de_etl_spark.operators import dedup, ml
-
-    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    qs, osql = harness.entrymod.queries(), harness.entrymod.oracle_sql()
     results: dict[str, dict] = {}
     t_start = time.time()
     n_pass = 0
-    for i, (key, sql) in enumerate(osql.items()):
+    for i, key in enumerate(osql):
         if key not in qs:
             continue
         if i and i % RELEASE_EVERY == 0:
-            dedup.unpersist_shingles()
-            ml.unpersist_copurchase()
-            cachereg.release_all()
-            spark.catalog.clearCache()
-        row = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        t0 = time.time()
-        try:
-            got = qs[key](spark, sf_dir).toPandas()
-            want = con.sql(sql).df()
-            row["spark_rows"], row["oracle_rows"] = len(got), len(want)
-            row["rows_match"] = len(got) == len(want)
-            row["schema_match"] = sorted(got.columns) == sorted(want.columns)
-            if row["rows_match"] and row["schema_match"]:
-                g, w = canonicalize(got), canonicalize(want)
-                row["hash_match"] = g == w
-        except Exception:
-            row["err"] = traceback.format_exc(limit=3)
-        row["sec"] = round(time.time() - t0, 3)
+            harness.release(spark)
+        row = harness.check(spark, con, sf_dir, key)
         results[key] = row
-        ok = row["rows_match"] and row["schema_match"] and row["hash_match"]
+        ok = harness.passed(row)
         n_pass += ok
         if not ok:
             print(f"FAIL {key}: {row['err'] or 'value/schema mismatch'}", flush=True)
@@ -117,6 +91,16 @@ def main() -> None:
             }
         )
     )
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if len(args) == 1 and args[0].isdigit():
+        full_sweep(int(args[0]))
+    elif args:
+        check_keys(args)
+    else:
+        full_sweep(harness.next_round())
 
 
 if __name__ == "__main__":

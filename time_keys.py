@@ -3,51 +3,37 @@
 isolates the computation in a fresh JVM, releasing shared caches
 between reps exactly the way bench.py does.
 
+Each timed call runs under Spark job group ``<key>``, so an event log
+of the run rolls up per key with ``perfbench.eventlog.read``.
+
 Usage: python time_keys.py <reps> <key> [<key> ...]
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from proceso_de_etl_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
+import harness
 
 
 def main() -> None:
     reps = int(sys.argv[1])
     keys = sys.argv[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="time_keys")
-    queries = entrymod.queries()
-    # warmup: JVM + codegen + file listing, outside the timed region
-    queries["q6_forecast_revenue"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    from proceso_de_etl_spark import cachereg
-    from proceso_de_etl_spark.operators import dedup, ml
+    sf_dir = harness.SF_DIR
+    spark = harness.start("time_keys", warm_dir=sf_dir)
+    sc = spark.sparkContext
+    queries = harness.entrymod.queries()
 
     samples: dict[str, list[float]] = {k: [] for k in keys}
     for _ in range(reps):
         for key in keys:
-            spark.sparkContext.setJobDescription(f"time:{key}")
-            t0 = time.perf_counter()
-            queries[key](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            samples[key].append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        dedup.unpersist_shingles()
-        ml.unpersist_copurchase()
-        cachereg.release_all()
-        spark.catalog.clearCache()
-    out = {
-        k: {"median": sorted(v)[(len(v) - 1) // 2], "samples": v}
-        for k, v in samples.items()
-    }
+            sc.setJobGroup(key, key)
+            samples[key].append(harness.time_noop(lambda: queries[key](spark, sf_dir)))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        harness.release(spark)
+    out = {k: {"median": harness.median(v), "samples": v} for k, v in samples.items()}
     print(json.dumps(out, indent=1))
 
 
