@@ -27,27 +27,16 @@ with atomic rename promotion (sources/atomic.py's pattern).
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from proceso_de_etl_spark.operators.etl import ORACLES as _ETL_ORACLES
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.streaming.jobs import drain, replay
 
 ORACLES: dict[str, str] = {}
-
-CHANGE_SCHEMA = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType()),
-        T.StructField("o_orderstatus", T.StringType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("seq", T.IntegerType()),
-    ]
-)
 
 _CUTOFF = "TIMESTAMP '1999-01-01 00:00:00'"
 
@@ -114,15 +103,13 @@ def merge_cdc_batch(snapshot: DataFrame, changes: DataFrame) -> DataFrame:
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query: land the three change sets as separate files,
-    stream them one-file-per-trigger, merge each micro-batch into the
-    versioned snapshot, return the final snapshot (tombstones
-    filtered). Shares etl_cdc_apply's DuckDB oracle — the seq guard
-    makes the final state independent of batch boundaries."""
+    """Contract query: land the three change sets as separate files
+    (``replay``), stream them one-file-per-trigger, merge each
+    micro-batch into the versioned snapshot, return the final
+    snapshot (tombstones filtered). Shares etl_cdc_apply's DuckDB
+    oracle — the seq guard makes the final state independent of
+    batch boundaries."""
     workdir = tempfile.mkdtemp(prefix="stream_cdc_")
-    landing = os.path.join(workdir, "landing")
-    os.makedirs(landing)
-
     base, change_sets = _change_feed(spark, sf_dir)
     snap0 = base.select(
         "o_orderkey", "o_orderstatus", "o_totalprice",
@@ -133,23 +120,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {"cur": os.path.join(workdir, "snapshot_v0")}
     snap0.write.parquet(state["cur"])
 
-    # land each change set as one plain parquet file (the file source
-    # watches a flat dir; write-then-move keeps arrival atomic).
-    # coalesce(1) is GATE-FIXTURE generation only — it simulates the
-    # upstream CDC feed dropping one file per change set; the operator
-    # path (stream -> merge) never coalesces
-    for i, cs in enumerate(change_sets, 1):
-        stage = os.path.join(workdir, f"_stage_{i}")
-        cs.coalesce(1).write.parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        shutil.move(os.path.join(stage, part), os.path.join(landing, f"changes_{i}.parquet"))
-        shutil.rmtree(stage)
-
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-    )
+    # one landed file per change set, the upstream CDC feed's shape;
+    # the operator path (stream -> merge) never coalesces
+    stream = replay(spark, change_sets, "stream_cdc")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -158,12 +131,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_cdc_batch(snapshot, batch_df).write.mode("overwrite").parquet(nxt)
         state["cur"] = nxt  # pointer flip = atomic promote
 
-    q = stream.writeStream.outputMode("update").foreachBatch(apply_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
     return (
         spark.read.parquet(state["cur"])
         .filter(~F.col("deleted"))
@@ -174,17 +142,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Batch-boundary independence (the seq guard) means the streamed
 # final state answers to the batch twin's oracle verbatim.
 ORACLES["stream_cdc_apply"] = _ETL_ORACLES["etl_cdc_apply"]
-
-
-INGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType()),
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("o_orderstatus", T.StringType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("wave", T.IntegerType()),
-    ]
-)
 
 
 def _vault_candidates(batch: DataFrame) -> DataFrame:
@@ -298,9 +255,6 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from proceso_de_etl_spark.operators.etl import _dv_digest_col
 
     workdir = tempfile.mkdtemp(prefix="stream_dv_")
-    landing = os.path.join(workdir, "landing")
-    os.makedirs(landing)
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -322,21 +276,15 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(3).alias("wave"),
         ),
     ]
-    for i, wv in enumerate(waves, 1):
-        stage = os.path.join(workdir, f"_stage_{i}")
-        # coalesce(1) is GATE-FIXTURE generation only (one landing
-        # file per wave so maxFilesPerTrigger=1 maps waves to
-        # micro-batches), never the operator's write path — keep it
-        # out of any bench decomposition, it charges fixture cost
-        wv.coalesce(1).write.parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        shutil.move(os.path.join(stage, part), os.path.join(landing, f"wave_{i}.parquet"))
-        shutil.rmtree(stage)
+    # one landed file per wave (``replay``) maps waves to micro-batches;
+    # its coalesce(1) is fixture cost — keep it out of any bench
+    # decomposition of the operator
+    stream = replay(spark, waves, "stream_dv")
 
     # r14 (guide §6): the store starts as an in-memory EMPTY relation
     # instead of a written-then-re-read empty parquet dir — the v0
     # write cost ~0.65 s of pure fixed overhead per invocation
-    # (profile_vault_ingest.py phase table) and epoch 1 then paid a
+    # (SCALE_r13/r14 `vault_ingest_ab`) and epoch 1 then paid a
     # listing + scan + full_outer shuffle against a provably empty
     # side; with a LocalRelation store the batch optimizer's
     # PropagateEmptyRelation rule collapses that first merge to a
@@ -345,12 +293,6 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (merge with an empty store = the candidate rows), so the final
     # state and its oracle are unchanged.
     state: dict[str, str | None] = {"cur": None}
-
-    stream = (
-        spark.readStream.schema(INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-    )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -364,16 +306,11 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_vault_batch(store, batch_df).write.mode("overwrite").parquet(nxt)
         state["cur"] = nxt  # pointer flip = atomic promote
 
-    q = stream.writeStream.outputMode("update").foreachBatch(apply_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
     if state["cur"] is None:
         raise RuntimeError(
-            f"stream_data_vault_ingest: no micro-batch ran over {landing}, "
-            "so no vault store was written"
+            "stream_data_vault_ingest: no micro-batch ran over the replayed "
+            "waves, so no vault store was written"
         )
     return (
         spark.read.parquet(state["cur"])

@@ -8,9 +8,12 @@ sinks. Each job here has a batch twin in operators/events.py whose
 DuckDB oracle pins the semantics; tests assert stream == batch.
 
 For local verification the file source drives a static parquet file
-through the engine (one batch) into a memory sink; on a cluster the
-same plans run on kafka/file-arrival sources unchanged — that is the
-point of declaring them as streaming DataFrames.
+through the engine (one batch) into a memory sink; jobs whose state
+must carry across triggers replay their input as ordered
+micro-batches (``replay``), and every query runs to completion through
+``drain``. On a cluster the same plans run on kafka/file-arrival
+sources unchanged — that is the point of declaring them as streaming
+DataFrames.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from proceso_de_etl_spark.functions.columns import dsum
 
@@ -108,21 +112,68 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Drive a streaming plan over the (static) source to completion
-    through a memory sink; return the materialized result."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+def replay(spark: SparkSession, frames: list[DataFrame], prefix: str) -> DataFrame:
+    """Stream ``frames`` back as ordered micro-batches: frame i lands
+    as one parquet file with modification time base + i s, and the
+    file source, read one file per trigger, delivers the oldest
+    first, so epoch i is exactly frame i with no wall-clock wait.
+    Each frame is written to a staging dir, its part file moved into
+    the one landing dir, and the staging dir removed, so arrival is
+    atomic and nothing but the landing files is left behind.
+    coalesce(1) is GATE-FIXTURE generation only (one file per batch
+    simulates an upstream feed dropping one file per arrival); in
+    production the arrival order comes from the source itself (kafka
+    offsets / file drops), nothing is restaged, and this shim
+    disappears."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    root = tempfile.mkdtemp(prefix=f"{prefix}_")
+    landing = os.path.join(root, "landing")
+    os.makedirs(landing)
+    base = int(time.time())
+    for i, frame in enumerate(frames):
+        stage = os.path.join(root, f"_stage_{i}")
+        frame.coalesce(1).write.parquet(stage)
+        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+        dst = os.path.join(landing, f"b{i}.parquet")
+        shutil.move(os.path.join(stage, part), dst)
+        shutil.rmtree(stage)
+        os.utime(dst, (base + i, base + i))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
     )
+
+
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``'s query, process every available input, and
+    stop it even when a micro-batch raises (the error re-raises);
+    returns the stopped query, whose ``recentProgress`` stays
+    readable."""
+    q = writer.start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return stream_df.sparkSession.table(name)
+    return q
+
+
+def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
+    """Drive a streaming plan over the (static) source to completion
+    through a memory sink; return the materialized result. The sink's
+    temp view is dropped before returning: the returned frame holds
+    the sink itself, while the view would pin its rows for the rest
+    of the session."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    drain(stream_df.writeStream.outputMode(mode).format("memory").queryName(name))
+    spark = stream_df.sparkSession
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def windowed_counts(events: DataFrame) -> DataFrame:
@@ -256,16 +307,9 @@ def foreach_batch_idempotent_sink(spark: SparkSession, sf_dir: str, target_dir: 
         open(marker, "w").close()
         committed.append(epoch_id)
 
-    q = (
-        stream_events(spark, sf_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(write_epoch)
-        .start()
+    drain(
+        stream_events(spark, sf_dir).writeStream.outputMode("append").foreachBatch(write_epoch)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return len(committed)
 
 
@@ -406,10 +450,10 @@ LATE_WM_DELAY = "2 hours"
 def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST12 — watermark late-data accounting: how many GROUPS did the
     watermark actually drop, and does the ledger reconcile? The
-    events table is replayed as three ordered micro-batches (recent
-    25% → middle 25% → oldest 50% as the late arrivals); the
-    engine's own `numRowsDroppedByWatermark` metric is the ground
-    truth for what the windowed agg refused.
+    events table is replayed (``replay``) as three ordered
+    micro-batches (recent 25% → middle 25% → oldest 50% as the late
+    arrivals); the engine's own `numRowsDroppedByWatermark` metric is
+    the ground truth for what the windowed agg refused.
 
     Two engine facts this operator documents (empirically pinned,
     Spark 4.1) that anyone building late-data SLAs must know:
@@ -423,10 +467,6 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     The test pins the exact expected group count from the watermark
     rule (window_end ≤ max(batch1.ts) − delay). Rows-only: the
     metric is engine-internal by design."""
-    import os
-    import tempfile
-    import time as _time
-
     from proceso_de_etl_spark.sources.catalog import _ensure_session_confs, load_table
 
     _ensure_session_confs(spark)
@@ -442,43 +482,20 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") >= cuts.c50) & (F.unix_micros("ts") < cuts.c75)
     )
     late = ev.filter(F.unix_micros("ts") < cuts.c50)
-    stage = tempfile.mkdtemp(prefix="stream_late_")
-    # three single files with distinct mtimes -> deterministic replay
-    # order (maxFilesPerTrigger=1, oldest file first). The toPandas
-    # staging is TEST SCAFFOLDING for the ordered replay — in
-    # production the arrival order comes from the source itself
-    # (kafka offsets / file drops) and nothing passes the driver.
-    # Coerce to TIMESTAMP(MICROS): pandas defaults to nanos, which
-    # the TimestampType stream schema would reject
-    for fname, part in (("b1_recent", recent), ("b2_middle", middle), ("b3_late", late)):
-        part.toPandas().to_parquet(
-            os.path.join(stage, f"{fname}.parquet"),
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-        _time.sleep(1.1)
-
-    src = (
-        spark.readStream.schema(recent.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     counts = (
-        src.withWatermark("ts", LATE_WM_DELAY)
+        replay(spark, [recent, middle, late], "stream_late")
+        .withWatermark("ts", LATE_WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    name = f"late_{uuid.uuid4().hex[:12]}"
-    q = counts.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        dropped_groups = sum(
-            so["numRowsDroppedByWatermark"]
-            for p in q.recentProgress
-            for so in p["stateOperators"]
-        )
-    finally:
-        q.stop()
+    # the metric is read off the stateful operator, so the rows need
+    # no sink: noop discards them instead of collecting them
+    q = drain(counts.writeStream.outputMode("update").format("noop"))
+    dropped_groups = sum(
+        so["numRowsDroppedByWatermark"]
+        for p in q.recentProgress
+        for so in p["stateOperators"]
+    )
     n_recent, n_middle, n_late = recent.count(), middle.count(), late.count()
     return spark.createDataFrame(
         [(n_recent + n_middle + n_late, n_recent, n_middle, n_late, dropped_groups)],
@@ -531,11 +548,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = counts.writeStream.outputMode("complete").foreachBatch(rank_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(counts.writeStream.outputMode("complete").foreachBatch(rank_epoch))
     return spark.read.parquet(out_dir)
 
 
@@ -562,7 +575,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATE EVICTION, batches after the purchase itself — the part of
     outer-join semantics a batch engine never has to think about.
 
-    Replay shape (ST12's ordered two-batch scaffolding): batch 1 is
+    Replay shape (``replay``, two ordered batches): batch 1 is
     the real event history; batch 2 is a pair of far-future sentinel
     rows (one per side — each side's watermark only advances on rows
     that SURVIVE its own filter) that push both watermarks ~30 days
@@ -576,10 +589,6 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     length; the sentinel trick is the test-time stand-in for the
     continuously-arriving data that advances watermarks in
     production."""
-    import os
-    import tempfile
-    import time as _time
-
     from proceso_de_etl_spark.sources.catalog import _ensure_session_confs, load_table
 
     _ensure_session_confs(spark)
@@ -598,25 +607,11 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    stage = tempfile.mkdtemp(prefix="stream_loj_")
-    for fname, part in (("b1_events", ev), ("b2_sentinels", sentinels)):
-        part.toPandas().to_parquet(
-            os.path.join(stage, f"{fname}.parquet"),
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-        _time.sleep(1.1)
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-
+    # both join sides read the one replayed frame: a single file
+    # source, so the two sides advance through the batches together
+    src = replay(spark, [ev, sentinels], "stream_loj")
     purchases = (
-        src()
-        .filter(F.col("event_type") == "purchase")
+        src.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id"),
             F.col("event_id").alias("purchase_id"),
@@ -625,8 +620,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("pts", "2 hours")
     )
     clicks = (
-        src()
-        .filter(F.col("event_type") == "click")
+        src.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"),
             F.col("event_id").alias("click_id"),
@@ -672,9 +666,10 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     row is a cross-batch duplicate the state must catch; the output
     equals the batch distinct set (value oracle, shared shape with
     ST3)."""
+    import glob
     import os
+    import shutil
     import tempfile
-    import time as _time
 
     from proceso_de_etl_spark.sources.catalog import _ensure_session_confs
 
@@ -683,11 +678,9 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     src = os.path.join(sf_dir, "events.parquet")
     # single-file table OR multi-file directory (production layout):
     # pass 1 symlinks every part (original mtimes), pass 2 re-copies
-    # them after a sleep so every replayed row is a CROSS-BATCH
-    # duplicate arriving at a strictly later modification time
-    import glob
-    import shutil
-
+    # them stamped 2 s past the newest part, so every replayed row is
+    # a CROSS-BATCH duplicate arriving at a strictly later
+    # modification time (no wall-clock wait)
     parts = (
         sorted(glob.glob(os.path.join(src, "*.parquet")))
         if os.path.isdir(src)
@@ -695,9 +688,11 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     for j, p in enumerate(parts):
         os.symlink(p, os.path.join(stage, f"b1_{j:05d}_events.parquet"))
-    _time.sleep(1.1)  # distinct mtime → deterministic replay order
+    t = max(os.stat(p).st_mtime for p in parts) + 2
     for j, p in enumerate(parts):
-        shutil.copyfile(p, os.path.join(stage, f"b2_{j:05d}_replay.parquet"))
+        dst = os.path.join(stage, f"b2_{j:05d}_replay.parquet")
+        shutil.copyfile(p, dst)
+        os.utime(dst, (t, t))
     schema, ts_is_long = _events_raw_schema(sf_dir)
     # one trigger per PASS, not per file: the source batches the
     # len(parts) oldest files (all of b1 — earlier mtimes) into
@@ -754,11 +749,8 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumption to stop at the cap — admitting naively per-batch
     would emit 2× the quota. Arrival order (doc_id % 2, doc_id) is
     deterministic, so the whole admission set is value-oracled."""
-    import glob
     import os
-    import shutil
     import tempfile
-    import time as _time
 
     from pyspark.sql import Window as W
 
@@ -767,20 +759,8 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    stage = tempfile.mkdtemp(prefix="stream_quota_src_")
-    for i, parity in enumerate((0, 1)):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_quota_b{i}_")
-        docs.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_docs.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime → deterministic replay order
-    raw = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark, [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)], "stream_quota"
     )
     out_dir = os.path.join(tempfile.mkdtemp(prefix="stream_quota_"), "admitted")
     admitted_so_far: dict[str, int] = {}
@@ -803,11 +783,7 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in admitted.groupBy("source").agg(F.count("*").alias("n")).collect():
             admitted_so_far[r["source"]] = admitted_so_far.get(r["source"], 0) + r["n"]
 
-    q = raw.writeStream.outputMode("append").foreachBatch(admit_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(raw.writeStream.outputMode("append").foreachBatch(admit_epoch))
     return (
         spark.read.parquet(out_dir)
         .groupBy("source")
@@ -875,11 +851,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = counts.writeStream.outputMode("complete").foreachBatch(finish_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(counts.writeStream.outputMode("complete").foreachBatch(finish_epoch))
     return spark.read.parquet(out_dir)
 
 
@@ -910,12 +882,6 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-processing would duplicate it. The full matrix is
     value-oracled against the batch lag() form: stream and batch
     must agree edge-for-edge."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from pyspark.sql import Window as W
 
     from proceso_de_etl_spark.sources.catalog import load_table
@@ -924,25 +890,7 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    mm = ev.agg(
-        F.min(F.unix_micros("ts")).alias("lo"), F.max(F.unix_micros("ts")).alias("hi")
-    ).collect()[0]
-    mid_us = (mm["lo"] + mm["hi"]) // 2
-    stage = tempfile.mkdtemp(prefix="stream_markov_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") <= mid_us, F.unix_micros("ts") > mid_us)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_markov_b{i}_")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime → deterministic replay order
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = replay(spark, _time_halves(ev), "stream_markov")
     edges = run_to_memory(markov_transition_edges(raw), "append")
     cnt = edges.groupBy("prev_type", "next_type").agg(F.count("*").alias("n"))
     wp = W.partitionBy("prev_type")
@@ -983,35 +931,20 @@ def stream_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch's novel shingles + one metrics row.
 
     Source = documents replayed as two ordered micro-batches (even
-    doc_ids then odd — the ST15 staging discipline), so batch 2's
+    doc_ids then odd, ``replay`` — as in ST15), so batch 2's
     rate MUST discount batch 1's vocabulary: recomputing per-batch
     novelty naively (no store) would report rate 1.0 twice. Both
     batch rows are value-oracled: DuckDB recomputes each batch's
     novel count from the same parity rule."""
-    import glob
     import os
-    import shutil
     import tempfile
-    import time as _time
 
     from proceso_de_etl_spark.functions.text import shingles, tokens
     from proceso_de_etl_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = tempfile.mkdtemp(prefix="stream_novelty_src_")
-    for i, parity in enumerate((0, 1)):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_novelty_b{i}_")
-        docs.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_docs.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime → deterministic replay order
-    raw = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark, [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)], "stream_novelty"
     )
     root = tempfile.mkdtemp(prefix="stream_novelty_")
     seen_dir = os.path.join(root, "seen")
@@ -1041,11 +974,7 @@ def stream_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(metrics_dir)
         novel.unpersist()
 
-    q = raw.writeStream.outputMode("append").foreachBatch(score_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(raw.writeStream.outputMode("append").foreachBatch(score_epoch))
     return (
         spark.read.parquet(metrics_dir)
         .select(
@@ -1167,38 +1096,17 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful aggregate there is); foreachBatch lands each epoch's
     snapshot, so the output is the lag TRAJECTORY, not just the
     final value — exactly what an on-call dashboard plots. Source =
-    two time-split ordered batches (ST17 staging); both epochs'
-    snapshots are value-oracled against static recomputation of the
-    same halves, proving the monitor's intermediate states are
-    right, not only its end state."""
-    import glob
+    two time-split ordered batches (``replay`` of ``_time_halves``);
+    both epochs' snapshots are value-oracled against static
+    recomputation of the same halves, proving the monitor's
+    intermediate states are right, not only its end state."""
     import os
-    import shutil
     import tempfile
-    import time as _time
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    mm = ev.agg(
-        F.min(F.unix_micros("ts")).alias("lo"), F.max(F.unix_micros("ts")).alias("hi")
-    ).collect()[0]
-    mid_us = (mm["lo"] + mm["hi"]) // 2
-    stage = tempfile.mkdtemp(prefix="stream_fresh_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") <= mid_us, F.unix_micros("ts") > mid_us)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_fresh_b{i}_")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime → deterministic replay order
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = replay(spark, _time_halves(ev), "stream_fresh")
     latest = raw.groupBy("event_type").agg(
         F.max(F.unix_micros("ts")).alias("latest_us")
     )
@@ -1220,11 +1128,7 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = latest.writeStream.outputMode("complete").foreachBatch(snapshot_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(latest.writeStream.outputMode("complete").foreachBatch(snapshot_epoch))
     return spark.read.parquet(out_dir).orderBy("batch_id", "event_type")
 
 
@@ -1269,12 +1173,6 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully value-oracled: the state recursion runs in exact
     micro-unit integers, and the oracle replays training params +
     the closed-form CUSUM over the monitor half in SQL."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from proceso_de_etl_spark.operators.events import cusum_params
     from proceso_de_etl_spark.sources.catalog import load_table
     from proceso_de_etl_spark.streaming.stateful import cusum_monitor_state
@@ -1306,18 +1204,10 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h") * 1000000).cast("bigint").alias("h6"),
     )
     monitor = ev.filter(F.unix_micros("ts") >= split)
-    stage = tempfile.mkdtemp(prefix="stream_cusum_src_")
-    for i, pred in enumerate((F.unix_micros("ts") < b2, F.unix_micros("ts") >= b2)):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_cusum_b{i}_")
-        monitor.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime -> deterministic replay order
-    raw = (
-        spark.readStream.schema(monitor.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark,
+        [monitor.filter(F.unix_micros("ts") < b2), monitor.filter(F.unix_micros("ts") >= b2)],
+        "stream_cusum",
     )
     enriched = raw.withColumn(
         "hr_us", F.unix_micros(F.date_trunc("hour", "ts"))
@@ -1414,12 +1304,6 @@ def stream_exp_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits no row on either side (the oracle's t≥1 guard mirrors the
     no-input-no-emission rule); identical consecutive states dedup
     on both sides (DISTINCT) for the same reason."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from proceso_de_etl_spark.sources.catalog import load_table
     from proceso_de_etl_spark.streaming.stateful import ses_monitor_state
 
@@ -1429,20 +1313,10 @@ def stream_exp_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     split = mm["lo"] + (mm["hi"] - mm["lo"]) // 2
     split -= split % HOUR_US
-    stage = tempfile.mkdtemp(prefix="stream_ses_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") < split, F.unix_micros("ts") >= split)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_ses_b{i}_")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime -> deterministic replay order
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark,
+        [ev.filter(F.unix_micros("ts") < split), ev.filter(F.unix_micros("ts") >= split)],
+        "stream_ses",
     )
     enriched = raw.withColumn("hr_us", F.unix_micros(F.date_trunc("hour", "ts")))
     mem = run_to_memory(ses_monitor_state(enriched), "update")
@@ -1503,12 +1377,6 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the batch twin spells the pmod form). Per-epoch trajectory,
     every row value-oracled by A107's WITH RECURSIVE recursion
     evaluated at the epoch-boundary cumulative-hour counts."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from proceso_de_etl_spark.sources.catalog import load_table
     from proceso_de_etl_spark.streaming.stateful import holt_monitor_state
 
@@ -1518,20 +1386,10 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     split = mm["lo"] + (mm["hi"] - mm["lo"]) // 2
     split -= split % HOUR_US
-    stage = tempfile.mkdtemp(prefix="stream_holt_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") < split, F.unix_micros("ts") >= split)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_holt_b{i}_")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime -> deterministic replay order
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark,
+        [ev.filter(F.unix_micros("ts") < split), ev.filter(F.unix_micros("ts") >= split)],
+        "stream_holt",
     )
     enriched = raw.withColumn("hr_us", F.unix_micros(F.date_trunc("hour", "ts")))
     mem = run_to_memory(holt_monitor_state(enriched), "update")
@@ -1607,15 +1465,8 @@ def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory rows, every one value-oracled by A115's WITH RECURSIVE
     list-carrying recursion evaluated at the epoch-boundary
     cumulative-hour counts (warmup epochs report zeros — replayed by
-    the oracle's k < m arm). Same two-file fixture as ST25: halves
-    split on an hour boundary with distinct mtimes for deterministic
-    replay order."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
+    the oracle's k < m arm). Same two-batch ``replay`` as ST25:
+    halves split on an hour boundary."""
     from proceso_de_etl_spark.sources.catalog import load_table
     from proceso_de_etl_spark.streaming.stateful import hw_monitor_state
 
@@ -1625,20 +1476,10 @@ def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     split = mm["lo"] + (mm["hi"] - mm["lo"]) // 2
     split -= split % HOUR_US
-    stage = tempfile.mkdtemp(prefix="stream_hw_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") < split, F.unix_micros("ts") >= split)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"stream_hw_b{i}_")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}_events.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime -> deterministic replay order
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = replay(
+        spark,
+        [ev.filter(F.unix_micros("ts") < split), ev.filter(F.unix_micros("ts") >= split)],
+        "stream_hw",
     )
     enriched = raw.withColumn("hr_us", F.unix_micros(F.date_trunc("hour", "ts")))
     mem = run_to_memory(hw_monitor_state(enriched), "update")
@@ -1864,35 +1705,17 @@ FROM banded
 """
 
 
-def _stage_time_halves(spark: SparkSession, df: DataFrame, prefix: str) -> str:
-    """Stage a frame as two time-ordered micro-batch files split at
-    the corpus midpoint timestamp (the ST17 replay discipline): the
-    returned directory, streamed with maxFilesPerTrigger=1, replays
-    the data as batch 0 = events ≤ mid, batch 1 = events > mid, so
-    any cross-trigger state the job claims to keep is PROVEN by
-    users/windows spanning the boundary. df must carry a ``ts``
-    timestamp column."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
+def _time_halves(df: DataFrame) -> list[DataFrame]:
+    """Split a frame at the corpus midpoint timestamp into the two
+    time-ordered micro-batches of the ST17 replay: batch 0 = events
+    ≤ mid, batch 1 = events > mid, so any cross-trigger state a job
+    claims to keep is PROVEN by users/windows spanning the boundary.
+    df must carry a ``ts`` timestamp column."""
     mm = df.agg(
         F.min(F.unix_micros("ts")).alias("lo"), F.max(F.unix_micros("ts")).alias("hi")
     ).collect()[0]
     mid_us = (mm["lo"] + mm["hi"]) // 2
-    stage = tempfile.mkdtemp(prefix=f"{prefix}_src_")
-    for i, pred in enumerate(
-        (F.unix_micros("ts") <= mid_us, F.unix_micros("ts") > mid_us)
-    ):
-        half_dir = tempfile.mkdtemp(prefix=f"{prefix}_b{i}_")
-        df.filter(pred).coalesce(1).write.mode("overwrite").parquet(half_dir)
-        part = glob.glob(os.path.join(half_dir, "part-*.parquet"))[0]
-        shutil.copyfile(part, os.path.join(stage, f"b{i}.parquet"))
-        if i == 0:
-            _time.sleep(1.1)  # distinct mtime → deterministic replay order
-    return stage
+    return [df.filter(F.unix_micros("ts") <= mid_us), df.filter(F.unix_micros("ts") > mid_us)]
 
 
 def stream_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1914,7 +1737,8 @@ def stream_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     across epochs to the batch totals exactly, so the final report is
     value-oracled by A102's own SQL.
 
-    Source = the two time-ordered micro-batches (_stage_time_halves):
+    Source = the two time-ordered micro-batches (``replay`` of
+    ``_time_halves``):
     every batch-2 purchase whose first touch landed in batch 1 exists
     ONLY IF the store carries across triggers — per-batch recompute
     would shift first-touch credit and shrink k in the linear split."""
@@ -1927,22 +1751,13 @@ def stream_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    stage = _stage_time_halves(spark, ev, "stream_attr")
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = replay(spark, _time_halves(ev), "stream_attr")
     root = tempfile.mkdtemp(prefix="stream_attr_")
     touch_dir = os.path.join(root, "touches")
     credit_dir = os.path.join(root, "credits")
     attribute_epoch = _attribution_epoch_fn(touch_dir, credit_dir)
 
-    q = raw.writeStream.outputMode("append").foreachBatch(attribute_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(raw.writeStream.outputMode("append").foreachBatch(attribute_epoch))
     ledger = spark.read.parquet(credit_dir)
     return (
         ledger.groupBy("channel")
@@ -2091,12 +1906,7 @@ def stream_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    stage = _stage_time_halves(spark, ev, "stream_ltv")
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = replay(spark, _time_halves(ev), "stream_ltv")
     root = tempfile.mkdtemp(prefix="stream_ltv_")
     rev_dir = os.path.join(root, "rev")
     state = {"firsts_dir": None}
@@ -2153,11 +1963,7 @@ def stream_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(rev_dir)
             )
 
-    q = raw.writeStream.outputMode("append").foreachBatch(ltv_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(raw.writeStream.outputMode("append").foreachBatch(ltv_epoch))
     firsts = spark.read.parquet(state["firsts_dir"])
     sizes = firsts.groupBy("cohort_week").agg(F.count("*").alias("cohort_size"))
     z = F.lit(0).cast("decimal(18,6)")

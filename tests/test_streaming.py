@@ -734,3 +734,83 @@ def test_stream_holt_winters_warmup_carries_across_triggers(spark, tmp_path):
         HW_GAMMA_NUM, HW_GAMMA_DEN,
     )
     assert (s2, b2, sae2) != (s, b, sae)
+
+
+def test_replay_delivers_frames_in_order_and_leaves_only_landing(spark, tmp_path, monkeypatch):
+    """replay's contract: epoch i receives exactly frame i, ordered by
+    explicit mtimes at least 1 s apart (so the order holds on
+    second-granularity filesystems) rather than by a wall-clock wait,
+    and the staging dirs are gone — only the landing files remain."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    frames = [
+        spark.createDataFrame([(i, j) for j in range(i + 2)], "batch int, j int")
+        for i in range(3)
+    ]
+    seen = {}
+
+    def record(batch_df, epoch_id):
+        seen[epoch_id] = _sorted_rows(batch_df)
+
+    jobs.drain(jobs.replay(spark, frames, "replay_test").writeStream.foreachBatch(record))
+    assert seen == {i: _sorted_rows(f) for i, f in enumerate(frames)}
+
+    (root,) = [d for d in os.listdir(tmp_path) if d.startswith("replay_test_")]
+    assert os.listdir(tmp_path / root) == ["landing"]
+    landing = tmp_path / root / "landing"
+    mtimes = sorted(os.stat(landing / f).st_mtime for f in os.listdir(landing))
+    assert len(mtimes) == 3
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
+def test_drain_reraises_and_stops_the_query(spark):
+    """drain's contract: a micro-batch that raises propagates out of
+    drain, and the query is stopped anyway (stop in finally)."""
+    import pytest
+
+    def boom(batch_df, epoch_id):
+        raise ValueError("planted batch failure")
+
+    src = jobs.replay(spark, [spark.range(3)], "drain_test")
+    with pytest.raises(Exception, match="planted batch failure"):
+        jobs.drain(src.writeStream.foreachBatch(boom))
+    assert spark.streams.active == []
+
+
+def test_run_to_memory_drops_its_temp_view(spark):
+    """run_to_memory must not leave its memory sink registered: the
+    view would pin the sink's rows for the whole session. The
+    returned frames stay valid after the view is dropped."""
+    first = jobs.stream_tumbling_window(spark, SF_SMOKE)
+    second = jobs.stream_tumbling_window(spark, SF_SMOKE)
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")] == []
+    assert _sorted_rows(first) == _sorted_rows(second)
+    assert first.count() > 0
+
+
+def test_streaming_package_has_no_sleeps_and_one_drain():
+    """Ordered replays come from explicit mtimes (jobs.replay), never
+    from wall-clock waits, and every query runs through jobs.drain:
+    no ``sleep(`` anywhere in the package, and
+    ``processAllAvailable`` only inside drain."""
+    import inspect
+    import pathlib
+
+    import proceso_de_etl_spark
+
+    pkg = pathlib.Path(proceso_de_etl_spark.__file__).parent
+    drain_lines, start = inspect.getsourcelines(jobs.drain)
+    drain_span = range(start, start + len(drain_lines))
+    sleeps, stray = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "sleep(" in line:
+                sleeps.append(f"{path.relative_to(pkg)}:{no}")
+            if "processAllAvailable" in line and not (
+                path == pathlib.Path(inspect.getsourcefile(jobs)) and no in drain_span
+            ):
+                stray.append(f"{path.relative_to(pkg)}:{no}")
+    assert sleeps == []
+    assert stray == []
