@@ -26,6 +26,17 @@ of parallelism.
 
 Each query has a matching ANSI-SQL oracle in ORACLES (same aliases,
 same decimal-exact aggregation) runnable by DuckDB.
+
+Parameters. A TPC-H query is a template with substitution
+parameters. The families q1, q3, q4, q5, q6, q10, q14, q17 and q18
+live here (q9, q12 and q19 in plans/tpch_ext.py). Each one declares
+its base parameters once, in a ``Q<n>_BASE`` dict beside its builder.
+The builder takes a parameter dict ``p`` that defaults to it, and the
+oracle is the ``q<n>_sql(p)`` template rendered from the same dict.
+So the base key is the family at ``Q<n>_BASE``, and
+plans/tpch_params.py binds the same builder and template to a second
+dict for the ``_v2`` key. The other queries keep their constants
+inline.
 """
 
 from __future__ import annotations
@@ -35,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from proceso_de_etl_spark.functions.columns import davg, dsum
 from proceso_de_etl_spark.sources.catalog import load_table
 
+
 def DISC_PRICE():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
@@ -42,10 +54,19 @@ def DISC_PRICE():
 def CHARGE():
     return F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
 
+
+def _ts(d: str):
+    """The ``TIMESTAMP 'd 00:00:00'`` literal as a Spark column."""
+    return F.expr(f"TIMESTAMP '{d} 00:00:00'")
+
+
 ORACLES: dict[str, str] = {}
 
 
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+Q1_BASE = {"ship_cutoff": "2001-09-01"}
+
+
+def q1_pricing_summary(spark: SparkSession, sf_dir: str, p: dict = Q1_BASE) -> DataFrame:
     """Pricing summary report: 2-key groupBy, 8 aggregates, one scan.
 
     One shuffle on (returnflag, linestatus) — 6 groups total, partial
@@ -54,7 +75,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.filter(F.col("l_shipdate") <= F.expr("TIMESTAMP '2001-09-01 00:00:00'"))
+        li.filter(F.col("l_shipdate") <= _ts(p["ship_cutoff"]))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),
@@ -69,7 +90,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q1_pricing_summary"] = """
+def q1_sql(p: dict = Q1_BASE) -> str:
+    return f"""
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -80,12 +102,18 @@ SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
+WHERE l_shipdate <= TIMESTAMP '{p["ship_cutoff"]} 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
 
 
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q1_pricing_summary"] = q1_sql()
+
+
+Q3_BASE = {"segment": "BUILDING", "cutoff": "1998-03-15"}
+
+
+def q3_shipping_priority(spark: SparkSession, sf_dir: str, p: dict = Q3_BASE) -> DataFrame:
     """Unshipped-orders revenue: 3-way join + group + top-10.
 
     customer scales with SF so it carries no broadcast hint — AQE
@@ -93,8 +121,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders join shuffles on orderkey. Top-10 uses a total
     order with o_orderkey tie-break so the result is deterministic.
     """
-    cutoff = F.expr("TIMESTAMP '1998-03-15 00:00:00'")
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    cutoff = _ts(p["cutoff"])
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == p["segment"])
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
@@ -107,63 +135,77 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q3_shipping_priority"] = """
+def q3_sql(p: dict = Q3_BASE) -> str:
+    return f"""
 SELECT o_orderkey, o_orderdate,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
 FROM customer JOIN orders ON c_custkey = o_custkey
               JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-  AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
+WHERE c_mktsegment = '{p["segment"]}'
+  AND o_orderdate < TIMESTAMP '{p["cutoff"]} 00:00:00'
+  AND l_shipdate  > TIMESTAMP '{p["cutoff"]} 00:00:00'
 GROUP BY o_orderkey, o_orderdate
 ORDER BY revenue DESC, o_orderkey ASC
 LIMIT 10
 """
 
 
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q3_shipping_priority"] = q3_sql()
+
+
+Q4_BASE = {"start": "1996-01-01", "end": "1996-07-01", "late_days": 60}
+
+
+def q4_order_priority(spark: SparkSession, sf_dir: str, p: dict = Q4_BASE) -> DataFrame:
     """Order-priority checking: correlated EXISTS as a left-semi join
     (late-shipping lineitems), then count per priority."""
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-        & (F.col("o_orderdate") < F.expr("TIMESTAMP '1996-07-01 00:00:00'"))
+        (F.col("o_orderdate") >= _ts(p["start"]))
+        & (F.col("o_orderdate") < _ts(p["end"]))
     )
     li = load_table(spark, sf_dir, "lineitem")
     late = (
         orders.join(
             li,
             (orders.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > F.expr("o_orderdate + INTERVAL 60 DAY")),
+            & (li.l_shipdate > F.expr(f"o_orderdate + INTERVAL {p['late_days']} DAY")),
             "left_semi",
         )
     )
     return late.groupBy("o_orderpriority").agg(F.count("*").alias("order_count"))
 
 
-ORACLES["q4_order_priority"] = """
+def q4_sql(p: dict = Q4_BASE) -> str:
+    return f"""
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
+WHERE o_orderdate >= TIMESTAMP '{p["start"]} 00:00:00'
+  AND o_orderdate <  TIMESTAMP '{p["end"]} 00:00:00'
   AND EXISTS (SELECT 1 FROM lineitem
               WHERE l_orderkey = o_orderkey
-                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+                AND l_shipdate > o_orderdate + INTERVAL {p["late_days"]} DAY)
 GROUP BY o_orderpriority
 """
 
 
-def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q4_order_priority"] = q4_sql()
+
+
+Q5_BASE = {"region": "ASIA", "year_start": "1996-01-01", "year_end": "1997-01-01"}
+
+
+def q5_local_supplier(spark: SparkSession, sf_dir: str, p: dict = Q5_BASE) -> DataFrame:
     """Local-supplier volume: 6-table join; nation/region (fixed-size
     dims) broadcast by hint, customer/supplier by AQE while they fit."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-        & (F.col("o_orderdate") < F.expr("TIMESTAMP '1997-01-01 00:00:00'"))
+        (F.col("o_orderdate") >= _ts(p["year_start"]))
+        & (F.col("o_orderdate") < _ts(p["year_end"]))
     )
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == p["region"])
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -175,44 +217,61 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q5_local_supplier"] = """
+def q5_sql(p: dict = Q5_BASE) -> str:
+    return f"""
 SELECT n_name,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
 FROM customer, orders, lineitem, supplier, nation, region
 WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
   AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
   AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+  AND r_name = '{p["region"]}'
+  AND o_orderdate >= TIMESTAMP '{p["year_start"]} 00:00:00'
+  AND o_orderdate <  TIMESTAMP '{p["year_end"]} 00:00:00'
 GROUP BY n_name
 """
 
 
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q5_local_supplier"] = q5_sql()
+
+
+Q6_BASE = {
+    "year_start": "1996-01-01",
+    "year_end": "1997-01-01",
+    "disc_lo": 0.03,
+    "disc_hi": 0.07,
+    "qty_max": 24,
+}
+
+
+def q6_forecast_revenue(spark: SparkSession, sf_dir: str, p: dict = Q6_BASE) -> DataFrame:
     """Forecast revenue change: pure scan-filter-aggregate. All three
     predicates push into the parquet scan (verified in test_plans)."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
-            (F.col("l_shipdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-            & (F.col("l_shipdate") < F.expr("TIMESTAMP '1997-01-01 00:00:00'"))
-            & (F.col("l_discount") >= 0.03)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
+            (F.col("l_shipdate") >= _ts(p["year_start"]))
+            & (F.col("l_shipdate") < _ts(p["year_end"]))
+            & (F.col("l_discount") >= p["disc_lo"])
+            & (F.col("l_discount") <= p["disc_hi"])
+            & (F.col("l_quantity") < p["qty_max"])
         )
         .agg(dsum(F.col("l_extendedprice") * F.col("l_discount"), 6).alias("revenue"))
     )
 
 
-ORACLES["q6_forecast_revenue"] = """
+def q6_sql(p: dict = Q6_BASE) -> str:
+    return f"""
 SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue
 FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.03 AND 0.07
-  AND l_quantity < 24
+WHERE l_shipdate >= TIMESTAMP '{p["year_start"]} 00:00:00'
+  AND l_shipdate <  TIMESTAMP '{p["year_end"]} 00:00:00'
+  AND l_discount BETWEEN {p["disc_lo"]} AND {p["disc_hi"]}
+  AND l_quantity < {p["qty_max"]}
 """
+
+
+ORACLES["q6_forecast_revenue"] = q6_sql()
 
 
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,12 +316,15 @@ GROUP BY n1.n_name, n2.n_name, CAST(year(l_shipdate) AS BIGINT)
 """
 
 
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+Q10_BASE = {"quarter_start": "1996-07-01", "quarter_end": "1996-10-01"}
+
+
+def q10_returned_items(spark: SparkSession, sf_dir: str, p: dict = Q10_BASE) -> DataFrame:
     """Returned-item reporting: top-20 customers by lost revenue."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.expr("TIMESTAMP '1996-07-01 00:00:00'"))
-        & (F.col("o_orderdate") < F.expr("TIMESTAMP '1996-10-01 00:00:00'"))
+        (F.col("o_orderdate") >= _ts(p["quarter_start"]))
+        & (F.col("o_orderdate") < _ts(p["quarter_end"]))
     )
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nation = load_table(spark, sf_dir, "nation")
@@ -277,14 +339,15 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q10_returned_items"] = """
+def q10_sql(p: dict = Q10_BASE) -> str:
+    return f"""
 SELECT c_custkey, c_name, c_acctbal, n_name,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
 FROM customer JOIN orders ON c_custkey = o_custkey
      JOIN lineitem ON l_orderkey = o_orderkey
      JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
+WHERE o_orderdate >= TIMESTAMP '{p["quarter_start"]} 00:00:00'
+  AND o_orderdate <  TIMESTAMP '{p["quarter_end"]} 00:00:00'
   AND l_returnflag = 'R'
 GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey ASC
@@ -292,13 +355,19 @@ LIMIT 20
 """
 
 
-def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q10_returned_items"] = q10_sql()
+
+
+Q14_BASE = {"month_start": "1996-09-01", "month_end": "1996-10-01"}
+
+
+def q14_promo_effect(spark: SparkSession, sf_dir: str, p: dict = Q14_BASE) -> DataFrame:
     """Promotion effect: conditional aggregation over a part join —
     CASE WHEN inside SUM; part is unhinted (SF-scaling), AQE
     broadcasts it while it fits."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.expr("TIMESTAMP '1996-09-01 00:00:00'"))
-        & (F.col("l_shipdate") < F.expr("TIMESTAMP '1996-10-01 00:00:00'"))
+        (F.col("l_shipdate") >= _ts(p["month_start"]))
+        & (F.col("l_shipdate") < _ts(p["month_end"]))
     )
     part = load_table(spark, sf_dir, "part")
     promo = F.when(F.col("p_type") == "PROMO", DISC_PRICE()).otherwise(F.lit(0.0))
@@ -310,19 +379,26 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q14_promo_effect"] = """
+def q14_sql(p: dict = Q14_BASE) -> str:
+    return f"""
 SELECT 100.0 * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
                                   THEN l_extendedprice * (1 - l_discount)
                                   ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
              / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
        AS promo_revenue_pct
 FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
+WHERE l_shipdate >= TIMESTAMP '{p["month_start"]} 00:00:00'
+  AND l_shipdate <  TIMESTAMP '{p["month_end"]} 00:00:00'
 """
 
 
-def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q14_promo_effect"] = q14_sql()
+
+
+Q17_BASE = {"brand": "Brand#23", "factor": 0.2}
+
+
+def q17_small_qty_revenue(spark: SparkSession, sf_dir: str, p: dict = Q17_BASE) -> DataFrame:
     """Small-quantity-order revenue: correlated scalar AVG subquery,
     expressed as a per-part aggregate joined back (the plan Catalyst
     would de-correlate to anyway; quantity sums are exact in double).
@@ -331,7 +407,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the correlation only ever needs those groups; identical
     values)."""
     li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == p["brand"])
     per_part = (
         li.join(part.select("p_partkey"), li.l_partkey == F.col("p_partkey"), "left_semi")
         .groupBy(F.col("l_partkey").alias("ap_partkey"))
@@ -340,21 +416,28 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(per_part, li.l_partkey == F.col("ap_partkey"))
-        .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
+        .filter(F.col("l_quantity") < p["factor"] * F.col("avg_qty"))
         .agg((dsum("l_extendedprice") / 7.0).alias("avg_yearly"))
     )
 
 
-ORACLES["q17_small_qty_revenue"] = """
+def q17_sql(p: dict = Q17_BASE) -> str:
+    return f"""
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_brand = 'Brand#23'
-  AND l_quantity < 0.2 * (SELECT SUM(l_quantity) / COUNT(l_quantity)
+WHERE p_brand = '{p["brand"]}'
+  AND l_quantity < {p["factor"]} * (SELECT SUM(l_quantity) / COUNT(l_quantity)
                           FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
 """
 
 
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+ORACLES["q17_small_qty_revenue"] = q17_sql()
+
+
+Q18_BASE = {"qty_threshold": 130}
+
+
+def q18_large_orders(spark: SparkSession, sf_dir: str, p: dict = Q18_BASE) -> DataFrame:
     """Large-volume customers: group-having pushed to the fact side
     first (one pass over lineitem), then joins pick up the labels."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -363,7 +446,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 130)
+        .filter(F.col("sum_qty") > p["qty_threshold"])
     )
     return (
         big.join(orders, big.l_orderkey == orders.o_orderkey)
@@ -377,10 +460,12 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q18_large_orders"] = """
+def q18_sql(p: dict = Q18_BASE) -> str:
+    return f"""
 SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
 FROM (SELECT l_orderkey, SUM(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 130) big
+      FROM lineitem GROUP BY l_orderkey
+      HAVING SUM(l_quantity) > {p["qty_threshold"]}) big
 JOIN orders ON big.l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 ORDER BY o_totalprice DESC, o_orderkey ASC
@@ -388,12 +473,15 @@ LIMIT 100
 """
 
 
+ORACLES["q18_large_orders"] = q18_sql()
+
+
 def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global sales opportunity: customers above the (exact) average
     balance with no orders — scalar aggregate broadcast + anti-join."""
     cust = load_table(spark, sf_dir, "customer")
     recent = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.expr("TIMESTAMP '2000-01-01 00:00:00'")
+        F.col("o_orderdate") >= _ts("2000-01-01")
     )
     nation = load_table(spark, sf_dir, "nation")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(

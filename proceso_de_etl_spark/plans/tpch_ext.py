@@ -7,14 +7,20 @@ Same engineering rules as plans/tpch.py: fixed-size dims
 (nation/region) broadcast by hint, SF-scaling tables
 (customer/supplier/part) unhinted so AQE decides, exact decimal
 aggregation for doubles, deterministic tie-breaks on every top-N.
+The q9, q12 and q19 families are parameterized the same way as the
+families in plans/tpch.py: a ``Q<n>_BASE`` dict, a builder taking
+``p``, and a ``q<n>_sql(p)`` oracle template.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from proceso_de_etl_spark.functions.columns import dsum
-from proceso_de_etl_spark.plans.tpch import DISC_PRICE
+from proceso_de_etl_spark.plans.tpch import DISC_PRICE, _ts
 from proceso_de_etl_spark.sources.catalog import load_table
 
 ORACLES: dict[str, str] = {}
@@ -161,30 +167,49 @@ GROUP BY p_brand, p_type, p_size
 """
 
 
-def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q19 shape — disjunction of conjunctive band predicates. The
-    entire OR-of-ANDs stays a single scan-side filter (Catalyst
-    pushes the common l_partkey join key and evaluates the residual
-    disjunction in codegen — no union-of-scans rewrite needed)."""
+Q19_BASE = {
+    "bands": (
+        {"brand": "Brand#12", "size_hi": 15, "qty_lo": 1, "qty_hi": 11},
+        {"brand": "Brand#23", "size_hi": 25, "qty_lo": 10, "qty_hi": 20},
+        {"brand": "Brand#25", "size_hi": 35, "qty_lo": 20, "qty_hi": 30},
+    )
+}
+
+
+def q19_disjunctive_filter(spark: SparkSession, sf_dir: str, p: dict = Q19_BASE) -> DataFrame:
+    """Q19 shape — disjunction of conjunctive band predicates, one
+    (brand, size, quantity) conjunction per band in ``p["bands"]``
+    OR'ed left to right. The entire OR-of-ANDs stays a single
+    scan-side filter (Catalyst pushes the common l_partkey join key
+    and evaluates the residual disjunction in codegen — no
+    union-of-scans rewrite needed)."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     j = li.join(part, li.l_partkey == part.p_partkey)
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & (F.col("p_size").between(1, 15)) & (F.col("l_quantity").between(1, 11)))
-        | ((F.col("p_brand") == "Brand#23") & (F.col("p_size").between(1, 25)) & (F.col("l_quantity").between(10, 20)))
-        | ((F.col("p_brand") == "Brand#25") & (F.col("p_size").between(1, 35)) & (F.col("l_quantity").between(20, 30)))
-    )
+    cond = reduce(or_, (
+        (F.col("p_brand") == b["brand"])
+        & (F.col("p_size").between(1, b["size_hi"]))
+        & (F.col("l_quantity").between(b["qty_lo"], b["qty_hi"]))
+        for b in p["bands"]
+    ))
     return j.filter(cond).agg(dsum(DISC_PRICE(), 6).alias("revenue"), F.count("*").alias("n_lines"))
 
 
-ORACLES["q19_disjunctive_filter"] = """
+def q19_sql(p: dict = Q19_BASE) -> str:
+    bands = "\n   OR ".join(
+        f"(p_brand = '{b['brand']}' AND p_size BETWEEN 1 AND {b['size_hi']}"
+        f" AND l_quantity BETWEEN {b['qty_lo']} AND {b['qty_hi']})"
+        for b in p["bands"]
+    )
+    return f"""
 SELECT CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#25' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)
+WHERE {bands}
 """
+
+
+ORACLES["q19_disjunctive_filter"] = q19_sql()
 
 
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,19 +273,25 @@ ORDER BY numwait DESC, s_name ASC
 LIMIT 10
 """
 
-def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+Q12_BASE = {"year_lo": "1996-01-01", "year_hi": "1997-01-01", "high_prefixes": ("1", "2")}
+
+
+def q12_priority_classes(spark: SparkSession, sf_dir: str, p: dict = Q12_BASE) -> DataFrame:
     """Q12 shape — two conditional counts after a fact-fact join:
-    per line status, how many lines belong to urgent/high-priority
-    orders vs the rest (the original's shipmode column isn't in the
-    testdata; order priority plays its role). One shuffle (the join),
-    then a partial-aggregated CASE-WHEN count pair."""
+    per line status, how many lines belong to high-priority orders
+    (priority starting with one of ``p["high_prefixes"]``; urgent and
+    high at the base) vs the rest (the original's shipmode column
+    isn't in the testdata; order priority plays its role). One
+    shuffle (the join), then a partial-aggregated CASE-WHEN count
+    pair."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-        & (F.col("l_shipdate") < F.expr("TIMESTAMP '1997-01-01 00:00:00'"))
+        (F.col("l_shipdate") >= _ts(p["year_lo"]))
+        & (F.col("l_shipdate") < _ts(p["year_hi"]))
     )
     orders = load_table(spark, sf_dir, "orders")
     high = F.when(
-        F.col("o_orderpriority").startswith("1") | F.col("o_orderpriority").startswith("2"),
+        reduce(or_, (F.col("o_orderpriority").startswith(x) for x in p["high_prefixes"])),
         1,
     ).otherwise(0)
     return (
@@ -273,17 +304,22 @@ def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q12_priority_classes"] = """
+def q12_sql(p: dict = Q12_BASE) -> str:
+    high = " OR ".join(f"o_orderpriority LIKE '{x}%'" for x in p["high_prefixes"])
+    return f"""
 SELECT l_linestatus,
-       CAST(SUM(CASE WHEN o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%'
+       CAST(SUM(CASE WHEN {high}
                 THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%'
+       CAST(SUM(CASE WHEN {high}
                 THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
+WHERE l_shipdate >= TIMESTAMP '{p["year_lo"]} 00:00:00'
+  AND l_shipdate <  TIMESTAMP '{p["year_hi"]} 00:00:00'
 GROUP BY l_linestatus
 """
+
+
+ORACLES["q12_priority_classes"] = q12_sql()
 
 
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,8 +362,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate broadcast back — no window over the whole table,
     no second scan of the fact."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-        & (F.col("l_shipdate") < F.expr("TIMESTAMP '1996-04-01 00:00:00'"))
+        (F.col("l_shipdate") >= _ts("1996-01-01"))
+        & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
     supp = load_table(spark, sf_dir, "supplier")
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
@@ -398,7 +434,10 @@ ORDER BY s_suppkey
 """
 
 
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+Q9_BASE = {"part_word": "bolt", "cost_rate": 0.6}
+
+
+def q9_product_profit(spark: SparkSession, sf_dir: str, p: dict = Q9_BASE) -> DataFrame:
     """Q9 shape — product-type profit by nation and year: a 5-table
     join (lineitem ⋈ part ⋈ supplier ⋈ nation ⋈ orders) with a
     substring part filter and a per-row profit expression aggregated
@@ -413,8 +452,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    profit = DISC_PRICE() - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like(f"%{p['part_word']}%"))
+    profit = DISC_PRICE() - F.lit(p["cost_rate"]) * F.col("p_retailprice") * F.col("l_quantity")
     return (
         li.join(part.select("p_partkey", "p_retailprice"), li.l_partkey == F.col("p_partkey"))
         .join(supp.select("s_suppkey", "s_nationkey"), li.l_suppkey == F.col("s_suppkey"))
@@ -429,20 +468,24 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q9_product_profit"] = """
+def q9_sql(p: dict = Q9_BASE) -> str:
+    return f"""
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS BIGINT) AS o_year,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                     - 0.6 * p_retailprice * l_quantity
+                     - {p["cost_rate"]} * p_retailprice * l_quantity
                 AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit
 FROM lineitem JOIN part ON l_partkey = p_partkey
      JOIN supplier ON l_suppkey = s_suppkey
      JOIN nation ON s_nationkey = n_nationkey
      JOIN orders ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%bolt%'
+WHERE p_name LIKE '%{p["part_word"]}%'
 GROUP BY 1, 2
 ORDER BY nation ASC, o_year DESC
 """
+
+
+ORACLES["q9_product_profit"] = q9_sql()
 
 
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:

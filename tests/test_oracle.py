@@ -45,7 +45,25 @@ def test_rows_only_query_runs(spark, name):
     assert df.count() > 0, f"{name}: rows-only operator returned an empty frame"
 
 
+def test_registry_has_no_collisions_or_dangling_priority_keys():
+    """queries()/oracle_sql() merge the modules' dicts with update, so
+    a key registered twice would silently shadow the earlier module's,
+    and queries() silently skips a _PRIORITY key nobody registered."""
+    for attr in ("QUERIES", "ORACLES"):
+        owner: dict[str, str] = {}
+        for m in entrymod._MODULES:
+            for key in getattr(m, attr):
+                assert key not in owner, (
+                    f"{attr}: {key} registered by {owner[key]} and {m.__name__}"
+                )
+                owner[key] = m.__name__
+    missing = [k for k in entrymod._PRIORITY if k not in QUERIES]
+    assert not missing, missing
+    assert len(QUERIES) == 332
+    assert len(ORACLES) == 314
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
-    assert df.count() >= 0
+    assert df.count() > 0
     assert df.schema.fieldNames()

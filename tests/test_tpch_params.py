@@ -18,6 +18,21 @@ def test_variants_match_oracles(spark):
         compare(fn(spark, SF_SMOKE), con, tpch_params.ORACLES[key], key)
 
 
+def test_variants_keep_family_schema(spark):
+    """A variant is its family at other parameters, so it returns the
+    family's columns: same names, same types, in the same order."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    assert len(tpch_params.QUERIES) == 12
+    for key, fn in tpch_params.QUERIES.items():
+        base = queries[key.removesuffix("_v2")](spark, SF_SMOKE).schema
+        variant = fn(spark, SF_SMOKE).schema
+        assert [(f.name, f.dataType) for f in variant] == [
+            (f.name, f.dataType) for f in base
+        ], key
+
+
 def test_parameters_are_not_vacuous(spark):
     li = load_table(spark, SF_SMOKE, "lineitem")
     cust = load_table(spark, SF_SMOKE, "customer")
