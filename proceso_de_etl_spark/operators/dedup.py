@@ -531,13 +531,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["dedup_embedding_cosine"] = f"""
-WITH elems AS (
+# Oracle prelude shared by every embedding oracle: one row per
+# (vector, element) in double, and each vector's L2 norm.
+EMB_ELEMS_CTES = """elems AS (
   SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
          CAST(unnest(embedding) AS DOUBLE) AS x
   FROM embeddings
 ),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
+norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id)"""
+
+
+ORACLES["dedup_embedding_cosine"] = f"""
+WITH {EMB_ELEMS_CTES},
 dots AS (
   SELECT ea.vec_id AS a, eb.vec_id AS b, SUM(ea.x * eb.x) AS dot
   FROM elems ea JOIN elems eb ON ea.i = eb.i AND ea.vec_id < eb.vec_id
@@ -591,10 +596,24 @@ def dedup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hyperplane-dot scale: 2^48. Weights are exactly ±1 and every gate
 # embedding element is a float32 whose value×2^48 is an exact BIGINT,
 # so the scaled dot is exact integer arithmetic on both engines.
-# Shared protocol constant between this oracle CTE block and
-# similarity.with_lsh_tables (which imports it from here — dedup
+# Shared protocol constants between this oracle CTE block and
+# similarity.with_lsh_tables (which imports them from here — dedup
 # must not import similarity back).
 DOT_SCALE = 1 << 48
+N_TABLES = 16  # independent hash tables (union of candidates)
+PLANES_PER_TABLE = 5  # 2^5 = 32 buckets per table
+EMB_DIM = 64
+
+
+def sql_matrix_values(rows, sql_type: str = "DOUBLE", key: str = "") -> str:
+    """VALUES body for a pinned matrix: one ``(key i, [v, ...]::T[])``
+    row per matrix row, where ``key`` prefixes the row index (the PQ
+    codebooks key by ``"m, "``). repr() renders each Python double at
+    full precision, so both engines parse identical values."""
+    return ",\n         ".join(
+        "(%s%d, [%s]::%s[])" % (key, i, ", ".join(repr(v) for v in r), sql_type)
+        for i, r in enumerate(rows)
+    )
 
 
 def lsh_bucket_ctes(n_tables: int, planes_per_table: int, emb_dim: int) -> str:
@@ -613,12 +632,7 @@ def lsh_bucket_ctes(n_tables: int, planes_per_table: int, emb_dim: int) -> str:
     integer arithmetic on both engines regardless of SUM order —
     mirrors with_lsh_tables (similarity.py), which imports
     DOT_SCALE from here."""
-    return f"""elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
+    return f"""{EMB_ELEMS_CTES},
 grid AS (
   SELECT t.t AS table_idx, j.j AS plane, i.i AS i,
          CASE WHEN CAST(concat('0x', substr(md5('plane:' || t.t || ':' || j.j || ':' || i.i), 1, 2)) AS INT) % 2 = 0
@@ -639,11 +653,8 @@ buckets AS (
 
 
 def _embedding_lsh_pairs_oracle_sql() -> str:
-    # table geometry mirrors similarity.py's N_TABLES/PLANES_PER_TABLE/
-    # EMB_DIM; passed as literals here because similarity imports THIS
-    # module (a top-level back-import would be circular)
     return f"""
-WITH {lsh_bucket_ctes(16, 5, 64)},
+WITH {lsh_bucket_ctes(N_TABLES, PLANES_PER_TABLE, EMB_DIM)},
 cand AS (
   SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
   FROM buckets x JOIN buckets y
@@ -1539,19 +1550,10 @@ def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_pairs_oracle_sql() -> str:
-    vals = ",\n         ".join(
-        "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(v) for v in c))
-        for i, c in enumerate(SEMDEDUP_PINNED_CENTROIDS)
-    )
     return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
+WITH {EMB_ELEMS_CTES},
 cents(cluster, w) AS (
-  VALUES {vals}
+  VALUES {sql_matrix_values(SEMDEDUP_PINNED_CENTROIDS)}
 ),
 centel AS (SELECT cluster, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM cents),
 dists AS (

@@ -401,7 +401,8 @@ def kmeans_fit(df: DataFrame, k: int = K, n_iter: int = N_ITER, emb_col: str = "
     iteration-invariant — codegen caches hit — and per-dim means come
     from one posexplode + (cluster, pos) aggregation (partial-agg
     bounds shuffle rows at k·dim per task). Ties argmin to the lower
-    cluster id, matching assign_clusters."""
+    cluster id, matching assign_clusters. Input with fewer than k rows
+    yields that many centroids (none on empty input)."""
     init = df.filter(F.col("vec_id") < k).select("vec_id", emb_col).collect()
     if len(init) < k:  # ids not dense from 0 — pay the sort once
         init = df.orderBy("vec_id").limit(k).select("vec_id", emb_col).collect()
@@ -459,7 +460,7 @@ def kmeans_fit(df: DataFrame, k: int = K, n_iter: int = N_ITER, emb_col: str = "
                 [rows[c][i][0] / rows[c][i][1] for i in range(len(centroids[c]))]
                 if c in rows
                 else centroids[c]
-                for c in range(k)
+                for c in range(len(centroids))
             ]
             converged = new_centroids == centroids
             centroids = new_centroids
@@ -3420,15 +3421,12 @@ def ml_kmeans_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_ladder_oracle_sql() -> str:
+    from proceso_de_etl_spark.operators.dedup import sql_matrix_values
     from proceso_de_etl_spark.operators.similarity import IVF_PINNED_CENTROIDS
 
     cq0 = [
         [int(round(v * KML_SCALE)) for v in c] for c in IVF_PINNED_CENTROIDS
     ]
-    vals = ",\n         ".join(
-        "(%d, [%s]::BIGINT[])" % (i, ", ".join(str(v) for v in c))
-        for i, c in enumerate(cq0)
-    )
     return f"""
 WITH xq AS (
   SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
@@ -3436,7 +3434,7 @@ WITH xq AS (
   FROM embeddings
 ),
 cents(cluster, w) AS (
-  VALUES {vals}
+  VALUES {sql_matrix_values(cq0, "BIGINT")}
 ),
 c0 AS (SELECT cluster, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cq FROM cents),
 d1 AS (

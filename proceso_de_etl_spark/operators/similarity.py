@@ -1,24 +1,50 @@
-"""Similarity search over the embedding column (SURVEY.md §2.3
-T6-T7): brute-force cosine top-k as the exactness baseline, and a
-random-hyperplane LSH bucketed variant as the scale path.
+"""Similarity search over the embedding column (SURVEY.md §2.3 T6-T7e,
+T30, T43, T50, T71): exact cosine top-k as the recall baseline, three
+approximate indexes as the scale paths, their composition and audit.
 
-Scale: brute force is O(queries × corpus) — fine for a small query
-set against a broadcastable corpus, wrong for all-pairs at 100 TB.
-The LSH variant hashes each vector once into a 16-bit bucket
-(deterministic pseudo-hyperplanes), so candidate generation is an
-equi-join on the bucket id; re-ranking touches only bucket-mates.
+- T6 exact: broadcast queries × corpus. O(queries × corpus) — fine
+  for a small query set, wrong for all-pairs at 100 TB.
+- T7 LSH: 16 md5-seeded tables of 5 ±1 hyperplanes each (N_TABLES ×
+  PLANES_PER_TABLE, 32 buckets per table); candidates are the
+  bucket-mates in any table, found by an equi-join on the bucket id.
+- T7b IVF: a k-means coarse quantizer; each query scans only its
+  N_PROBE nearest inverted lists.
+- T7c PQ: per-subspace codebooks; candidates rank by asymmetric
+  table-lookup distance (ADC) before the exact re-rank.
+- T7d IVF×PQ: the IVF probe prunes which rows the ADC scan touches.
+- T7e recall/cost audit, T50 incremental IVF maintenance, T71 rank
+  fusion; T30 int8 quantization and T43 sparse top-k ride along.
+
+Every search is one pipeline of shared stages — pair source (all
+pairs, LSH buckets, IVF probe), optional PQ encode + ADC shortlist,
+exact re-rank — written once below for Spark and once for the DuckDB
+oracle. The fit/pinned split: a fit key (``ann_ivf_topk``,
+``ann_pq_topk``, ``ann_ivfpq_topk``) fits its geometry with
+``ml.kmeans_fit`` and stays rows-only, because an iterative float fit
+does not replay across engines. Its pinned twin calls the same
+builder with the geometry frozen as 6dp literals
+(``IVF_PINNED_CENTROIDS``, ``PQ_PINNED_CODEBOOKS``), which the oracle
+replays value-for-value; the float decision margins this relies on
+are measured in tests/test_properties.py. T50 splits the same way:
+``ann_ivf_incremental_pinned`` runs the insert against the frozen
+quantizer and reports in exact integers.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from proceso_de_etl_spark.operators.dedup import (
     DOT_SCALE,
+    EMB_DIM,
+    EMB_ELEMS_CTES,
+    N_TABLES,
+    PLANES_PER_TABLE,
     dot_cosine,
     lsh_bucket_ctes,
+    sql_matrix_values,
     with_norm,
 )
 from proceso_de_etl_spark.sources.catalog import load_table
@@ -29,47 +55,293 @@ N_QUERIES = 20  # vec_id < 20 act as the query set
 TOP_K = 5
 
 
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T6 — exact cosine top-k: broadcast the (small) query set
-    against the corpus, window-rank per query. The corpus side never
-    shuffles — at scale this is one scan + a per-query heap."""
-    from pyspark.sql import Window as W
+# ---------------------------------------------------------------------------
+# Shared search stages (Spark). A pair frame carries the query side
+# (query_id, qe, qn) and the corpus side (neighbor_id, ce, cn).
 
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("norm").alias("qn")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("norm").alias("cn")
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")))
-    )
+
+def _query_cols() -> list[Column]:
+    return [
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("norm").alias("qn"),
+    ]
+
+
+def _corpus_cols() -> list[Column]:
+    return [
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ce"),
+        F.col("norm").alias("cn"),
+    ]
+
+
+def _all_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Every (query, corpus vector) pair but the self-pair: the small
+    query set is broadcast, so the corpus side never shuffles."""
+    return corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
+
+
+def _rerank(pairs: DataFrame) -> DataFrame:
+    """The exact re-rank every search ends in: cosine in double per
+    pair, TOP_K per query by (cosine desc, neighbor_id asc), emitted
+    as (query_id, rank, neighbor_id, cosine) with cosine at 6dp."""
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        pairs.withColumn("cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")))
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
     )
 
 
-ORACLES["ann_cosine_topk"] = f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM elems q
-  JOIN elems c ON q.i = c.i AND q.vec_id <> c.vec_id
-  JOIN norms nq ON nq.vec_id = q.vec_id
-  JOIN norms nc ON nc.vec_id = c.vec_id
+def _ivf_corpus(emb: DataFrame, centroids: list[list[float]], *extra: Column) -> DataFrame:
+    """The inverted lists: one assignment scan puts every vector
+    (with norm) in its nearest cell, emitted as (neighbor_id, ce, cn,
+    list_id, *extra)."""
+    from proceso_de_etl_spark.operators.ml import assign_clusters
+
+    return assign_clusters(emb, centroids).select(
+        *_corpus_cols(), F.col("cluster").alias("list_id"), *extra
+    )
+
+
+def _probe_pairs(
+    corpus_assigned: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    n_probe: int,
+    *query_cols: Column,
+) -> DataFrame:
+    """The IVF probe: each query (projected to ``query_cols``, which
+    must include query_id) fans out to its n_probe nearest cells, and
+    the list_id equi-join touches only those inverted lists of
+    ``corpus_assigned`` (neighbor_id, list_id, ...); self-pairs are
+    dropped. Centroids ride in as broadcast data, (d, c) structs
+    zipped with the cell index, and array_sort + slice picks the
+    probe set (ties to the lower cell id)."""
+    from proceso_de_etl_spark.operators.ml import dists_over_matrix, with_broadcast_value
+
+    cells = F.zip_with(
+        dists_over_matrix(F.col("embedding"), F.col("_qmat")),
+        F.sequence(F.lit(0).cast("bigint"), F.lit(len(centroids) - 1).cast("bigint")),
+        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
+    )
+    fanned = with_broadcast_value(queries, centroids, "_qmat", "array<array<double>>").select(
+        *query_cols, F.explode(F.slice(F.array_sort(cells), 1, n_probe)).alias("p")
+    )
+    probes = fanned.select(*fanned.columns[:-1], F.col("p.c").alias("list_id"))
+    return corpus_assigned.join(F.broadcast(probes), "list_id").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+
+
+def _normalized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings with ``norm`` and the L2-normalized vector ``ne`` —
+    the space the PQ codebooks live in."""
+    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
+    return emb.withColumn(
+        "ne", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("norm"))
+    )
+
+
+def _pq_subspace(m: int) -> Column:
+    sub = EMB_DIM // PQ_M
+    return F.slice(F.col("ne"), m * sub + 1, sub)
+
+
+def _fit_codebooks(emb: DataFrame) -> list[list[list[float]]]:
+    """One k-means codebook (PQ_K codes) per subspace of ``ne``."""
+    from proceso_de_etl_spark.operators.ml import kmeans_fit
+
+    return [
+        kmeans_fit(
+            emb.select("vec_id", _pq_subspace(m).alias("sub")), k=PQ_K, n_iter=3, emb_col="sub"
+        )
+        for m in range(PQ_M)
+    ]
+
+
+def _adc_pairs(
+    emb: DataFrame,
+    codebooks: list[list[list[float]]],
+    centroids: list[list[float]] | None = None,
+) -> DataFrame:
+    """PQ encode + ADC scoring. Corpus rows carry PQ_M codes (argmin
+    against each subspace's codebook); queries keep full precision and
+    carry their own K-entry distance table per subspace; each pair's
+    ``adc`` is the ordered M-term sum of table lookups (the same fold
+    order as the oracle's pivot). Without ``centroids`` every corpus
+    row is a candidate (T7c); with them, only the rows of each query's
+    IVFPQ_N_PROBE nearest cells are (T7d). Codebooks ride in as a
+    broadcast M×K×sub tensor column: plan-literal codebooks cost
+    seconds of Catalyst analysis per invocation."""
+    from proceso_de_etl_spark.operators.ml import dists_over_matrix, with_broadcast_value
+
+    embc = with_broadcast_value(emb, codebooks, "_cb", "array<array<array<double>>>")
+
+    def table(m: int) -> Column:
+        return dists_over_matrix(_pq_subspace(m), F.element_at(F.col("_cb"), m + 1))
+
+    def code(m: int) -> Column:
+        dists = table(m)
+        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias(f"code{m}")
+
+    codes = [code(m) for m in range(PQ_M)]
+    qtabs = [table(m).alias(f"qtab{m}") for m in range(PQ_M)]
+    queries = embc.filter(F.col("vec_id") < N_QUERIES)
+    if centroids is None:
+        pairs = _all_pairs(
+            embc.select(*_corpus_cols(), *codes), queries.select(*_query_cols(), *qtabs)
+        )
+    else:
+        pairs = _probe_pairs(
+            _ivf_corpus(embc, centroids, *codes),
+            queries,
+            centroids,
+            IVFPQ_N_PROBE,
+            *_query_cols(),
+            *qtabs,
+        )
+    adc = sum(F.element_at(F.col(f"qtab{m}"), F.col(f"code{m}") + 1) for m in range(PQ_M))
+    return pairs.withColumn("adc", adc)
+
+
+def _pq_search(
+    emb: DataFrame,
+    codebooks: list[list[list[float]]],
+    rerank: int,
+    centroids: list[list[float]] | None = None,
+) -> DataFrame:
+    """PQ search: the ``rerank`` lowest-ADC candidates per query
+    (ties by neighbor_id), re-ranked exactly."""
+    cand_w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    return _rerank(
+        _adc_pairs(emb, codebooks, centroids)
+        .withColumn("cand_rk", F.row_number().over(cand_w))
+        .filter(F.col("cand_rk") <= rerank)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Shared oracle stages (DuckDB), the same pipeline in SQL: a pair
+# source CTE named ``pairs`` (query_id, neighbor_id), an optional PQ
+# shortlist ``cand``, and the exact re-rank.
+
+_ALL_PAIRS_CTE = f"""pairs AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+  FROM norms q JOIN norms c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
-  GROUP BY q.vec_id, c.vec_id, nq.norm, nc.norm
+)"""
+
+
+def _ivf_ctes(centroids: list[list[float]], n_probe: int | None = None) -> str:
+    """IVF stage: ``assign`` puts every vector in its nearest cell
+    (ties to the lower list_id); with ``n_probe``, ``pairs`` joins
+    each query to the vectors of its n_probe nearest cells."""
+    assign = f"""cents(list_id, w) AS (
+  VALUES {sql_matrix_values(centroids)}
+),
+centel AS (SELECT list_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM cents),
+dists AS (
+  SELECT e.vec_id, ce.list_id, SUM((e.x - ce.cx) * (e.x - ce.cx)) AS d2
+  FROM elems e JOIN centel ce ON ce.i = e.i GROUP BY 1, 2
+),
+assign AS (
+  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id FROM (
+    SELECT vec_id, list_id,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
+    FROM dists
+  ) WHERE rn = 1
+)"""
+    if n_probe is None:
+        return assign
+    return f"""{assign},
+qprobe AS (
+  SELECT vec_id AS query_id, CAST(list_id AS BIGINT) AS list_id FROM (
+    SELECT vec_id, list_id,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
+    FROM dists WHERE vec_id < {N_QUERIES}
+  ) WHERE rn <= {n_probe}
+),
+pairs AS (
+  SELECT p.query_id, a.vec_id AS neighbor_id
+  FROM qprobe p JOIN assign a ON a.list_id = p.list_id
+  WHERE a.vec_id <> p.query_id
+)"""
+
+
+def _pq_ctes(codebooks: list[list[list[float]]], rerank: int) -> str:
+    """PQ stage over ``pairs``: encode the normalized vectors, score
+    every pair by ADC, keep each query's ``rerank`` lowest as
+    ``cand``. The M lookups are pivoted and added left to right —
+    Spark's m=0..M-1 fold — so no unordered SUM sits on a ranking
+    boundary."""
+    sub = EMB_DIM // PQ_M
+    vals = ",\n         ".join(
+        sql_matrix_values(cb, key=f"{m}, ") for m, cb in enumerate(codebooks)
+    )
+    pivots = ",\n         ".join(
+        f"MAX(CASE WHEN c.m = {m} THEN q.d2 END) AS d{m}" for m in range(PQ_M)
+    )
+    adc_sum = " + ".join(f"d{m}" for m in range(PQ_M))
+    return f"""ne AS (
+  SELECT e.vec_id, e.i, e.x / n.norm AS xn
+  FROM elems e JOIN norms n ON n.vec_id = e.vec_id
+),
+pcents(m, code, w) AS (
+  VALUES {vals}
+),
+pcentel AS (
+  SELECT m, code, unnest(range(1, len(w) + 1)) AS j, unnest(w) AS cx FROM pcents
+),
+pdists AS (
+  SELECT v.vec_id, ce.m, ce.code, SUM((v.xn - ce.cx) * (v.xn - ce.cx)) AS d2
+  FROM ne v JOIN pcentel ce
+    ON ce.m = (v.i - 1) // {sub} AND ce.j = ((v.i - 1) % {sub}) + 1
+  GROUP BY 1, 2, 3
+),
+codes AS (
+  SELECT vec_id, m, code FROM (
+    SELECT vec_id, m, code,
+           row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
+    FROM pdists
+  ) WHERE rn = 1
+),
+adc AS (
+  SELECT p.query_id, p.neighbor_id,
+         {pivots}
+  FROM pairs p
+  JOIN codes c ON c.vec_id = p.neighbor_id
+  JOIN pdists q ON q.vec_id = p.query_id AND q.m = c.m AND q.code = c.code
+  GROUP BY 1, 2
+),
+cand AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                ORDER BY {adc_sum}, neighbor_id) AS cand_rk
+    FROM adc
+  ) WHERE cand_rk <= {rerank}
+)"""
+
+
+def _topk_oracle(*ctes: str, src: str = "pairs") -> str:
+    """A top-k oracle: ``ctes`` (the prelude first) end in the
+    candidate CTE ``src``; the exact re-rank scores each candidate
+    pair by cosine and keeps TOP_K per query."""
+    body = ",\n".join(ctes)
+    return f"""
+WITH {body},
+scored AS (
+  SELECT cd.query_id, cd.neighbor_id,
+         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
+  FROM {src} cd
+  JOIN elems q ON q.vec_id = cd.query_id
+  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
+  JOIN norms nq ON nq.vec_id = cd.query_id
+  JOIN norms nc ON nc.vec_id = cd.neighbor_id
+  GROUP BY 1, 2, nq.norm, nc.norm
 ),
 ranked AS (
   SELECT query_id, neighbor_id, cosine,
@@ -81,9 +353,21 @@ SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine
 FROM ranked WHERE rank <= {TOP_K}
 """
 
-N_TABLES = 16  # independent hash tables (union of candidates)
-PLANES_PER_TABLE = 5  # 2^5 = 32 buckets per table
-EMB_DIM = 64
+
+# ---------------------------------------------------------------------------
+# Keys
+
+
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T6 — exact cosine top-k: broadcast the (small) query set
+    against the corpus, window-rank per query. The corpus side never
+    shuffles — at scale this is one scan + a per-query heap."""
+    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(*_query_cols())
+    return _rerank(_all_pairs(emb.select(*_corpus_cols()), queries))
+
+
+ORACLES["ann_cosine_topk"] = _topk_oracle(EMB_ELEMS_CTES, _ALL_PAIRS_CTE)
 
 
 def _plane_weights(table: int, n_planes: int = PLANES_PER_TABLE, dim: int = EMB_DIM) -> list[list[float]]:
@@ -200,8 +484,6 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank; recall stays probabilistic in general, but for
     the FIXED plane family the output is deterministic
     (ann_cosine_topk remains the exact-recall twin)."""
-    from pyspark.sql import Window as W
-
     emb = with_norm(load_table(spark, sf_dir, "embeddings"))
     tabled = with_lsh_tables(emb)
     queries = tabled.filter(F.col("vec_id") < N_QUERIES).select(
@@ -214,52 +496,51 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("norm").alias("qn"))
-    cv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("norm").alias("cn"))
-    scored = (
-        candidates.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    return _rerank(
+        candidates.join(F.broadcast(emb.select(*_query_cols())), "query_id").join(
+            emb.select(*_corpus_cols()), "neighbor_id"
+        )
     )
 
 
-ORACLES["ann_lsh_bucketed"] = f"""
-WITH {lsh_bucket_ctes(N_TABLES, PLANES_PER_TABLE, EMB_DIM)},
-cand AS (
+ORACLES["ann_lsh_bucketed"] = _topk_oracle(
+    lsh_bucket_ctes(N_TABLES, PLANES_PER_TABLE, EMB_DIM),
+    f"""pairs AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM buckets q JOIN buckets c
     ON q.table_idx = c.table_idx AND q.bucket = c.bucket
   WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
-),
-scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM cand cd
-  JOIN elems q ON q.vec_id = cd.query_id
-  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
-  JOIN norms nq ON nq.vec_id = cd.query_id
-  JOIN norms nc ON nc.vec_id = cd.neighbor_id
-  GROUP BY 1, 2, nq.norm, nc.norm
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
+)""",
 )
-SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
 
 
 N_LISTS = 16  # IVF coarse-quantizer cells (k-means centroids)
 N_PROBE = 4  # cells scanned per query
+
+
+def ivf_search(
+    corpus_assigned: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    n_probe: int = N_PROBE,
+) -> DataFrame:
+    """The probe-and-rerank half of IVF, shared by T7b and T50:
+    queries (with ``norm``) explode to their n_probe nearest cells,
+    the equi-join on list_id touches only those inverted lists, exact
+    cosine re-ranks inside them. `corpus_assigned` carries
+    (neighbor_id, ce, cn, list_id). Raising n_probe is the standard
+    recall knob when the quantizer has drifted from the data (T50's
+    report detects it; probing more cells buys recall at linear
+    scan-cost until the scheduled refit)."""
+    return _rerank(_probe_pairs(corpus_assigned, queries, centroids, n_probe, *_query_cols()))
+
+
+def _ivf_topk(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """IVF search of the first N_QUERIES vectors against ``emb``
+    indexed by ``centroids`` — T7b's builder, fitted or pinned."""
+    return ivf_search(
+        _ivf_corpus(emb, centroids), emb.filter(F.col("vec_id") < N_QUERIES), centroids
+    )
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,67 +558,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     always builds the same index. (Rows-only: recall is approximate
     by construction; ann_cosine_topk is the exact twin and the
     recall test pins this variant against it.)"""
-    from proceso_de_etl_spark.operators.ml import assign_clusters, kmeans_fit
+    from proceso_de_etl_spark.operators.ml import kmeans_fit
 
     emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    centroids = kmeans_fit(emb, k=N_LISTS, n_iter=3)
-    corpus = assign_clusters(emb, centroids).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        F.col("cluster").alias("list_id"),
-    )
-    return ivf_search(corpus, emb.filter(F.col("vec_id") < N_QUERIES), centroids)
-
-
-def ivf_search(
-    corpus_assigned: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    n_probe: int = N_PROBE,
-) -> DataFrame:
-    """The probe-and-rerank half of IVF, shared by T7b and T50:
-    queries (with ``norm``) explode to their n_probe nearest cells,
-    the equi-join on list_id touches only those inverted lists, exact
-    cosine re-ranks inside them. `corpus_assigned` carries
-    (neighbor_id, ce, cn, list_id). Raising n_probe is the standard
-    recall knob when the quantizer has drifted from the data (T50's
-    report detects it; probing more cells buys recall at linear
-    scan-cost until the scheduled refit)."""
-    from pyspark.sql import Window as W
-
-    from proceso_de_etl_spark.operators.ml import dists_over_matrix, with_broadcast_value
-
-    # centroids as broadcast data, (d, c) structs zipped with the cell
-    # index — same array_sort/slice probe selection as the literal form
-    cells = F.zip_with(
-        dists_over_matrix(F.col("embedding"), F.col("_qmat")),
-        F.sequence(F.lit(0).cast("bigint"), F.lit(len(centroids) - 1).cast("bigint")),
-        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-    )
-    probes = (
-        with_broadcast_value(queries, centroids, "_qmat", "array<array<double>>")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm").alias("qn"),
-            F.explode(F.slice(F.array_sort(cells), 1, n_probe)).alias("p"),
-        )
-        .select("query_id", "qe", "qn", F.col("p.c").alias("list_id"))
-    )
-    scored = (
-        corpus_assigned.join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
+    return _ivf_topk(emb, kmeans_fit(emb, k=N_LISTS, n_iter=3))
 
 
 # Frozen coarse quantizer for the driver-verifiable IVF companion:
@@ -369,94 +593,24 @@ IVF_PINNED_CENTROIDS: list[list[float]] = [
 
 def ann_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7b companion — IVF probe-and-rerank made driver-verifiable:
-    identical plan to ``ann_ivf_topk`` (one assignment scan against
-    broadcast centroids, per-query explode to the N_PROBE nearest
-    cells, list_id equi-join, exact-cosine re-rank to TOP_K) but
-    against the FROZEN quantizer ``IVF_PINNED_CENTROIDS``, so DuckDB
-    can replay assignment, probe selection, and re-rank
-    value-for-value. Cell-boundary float safety is measured, not
-    assumed: tests/test_properties.py asserts the minimum gap
-    between every query's N_PROBE-th and (N_PROBE+1)-th nearest cell
-    distance and between corpus argmin gaps, orders above double
-    reassociation error. The iterative FIT itself stays rows-only in
-    the parent key — exactly the split the SemDeDup pair, so the
-    quantizer-freshness question (T50) remains the operator family's
-    own concern."""
-    from proceso_de_etl_spark.operators.ml import assign_clusters
-
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    corpus = assign_clusters(emb, IVF_PINNED_CENTROIDS).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        F.col("cluster").alias("list_id"),
-    )
-    return ivf_search(
-        corpus, emb.filter(F.col("vec_id") < N_QUERIES), IVF_PINNED_CENTROIDS
-    )
+    ``ann_ivf_topk``'s builder (one assignment scan against broadcast
+    centroids, per-query explode to the N_PROBE nearest cells,
+    list_id equi-join, exact-cosine re-rank to TOP_K) applied to the
+    FROZEN quantizer ``IVF_PINNED_CENTROIDS``, so DuckDB can replay
+    assignment, probe selection, and re-rank value-for-value.
+    Cell-boundary float safety is measured, not assumed:
+    tests/test_properties.py asserts the minimum gap between every
+    query's N_PROBE-th and (N_PROBE+1)-th nearest cell distance and
+    between corpus argmin gaps, orders above double reassociation
+    error. The iterative FIT itself stays rows-only in the parent key
+    — exactly the split the SemDeDup pair, so the quantizer-freshness
+    question (T50) remains the operator family's own concern."""
+    return _ivf_topk(with_norm(load_table(spark, sf_dir, "embeddings")), IVF_PINNED_CENTROIDS)
 
 
-def _ivf_pinned_oracle_sql() -> str:
-    vals = ",\n         ".join(
-        "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(v) for v in c))
-        for i, c in enumerate(IVF_PINNED_CENTROIDS)
-    )
-    return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
-cents(list_id, w) AS (
-  VALUES {vals}
-),
-centel AS (SELECT list_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM cents),
-dists AS (
-  SELECT e.vec_id, ce.list_id, SUM((e.x - ce.cx) * (e.x - ce.cx)) AS d2
-  FROM elems e JOIN centel ce ON ce.i = e.i GROUP BY 1, 2
-),
-assign AS (
-  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM dists
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM dists WHERE vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM qprobe p JOIN assign a ON a.list_id = p.list_id
-  WHERE a.vec_id <> p.query_id
-),
-scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM cand cd
-  JOIN elems q ON q.vec_id = cd.query_id
-  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
-  JOIN norms nq ON nq.vec_id = cd.query_id
-  JOIN norms nc ON nc.vec_id = cd.neighbor_id
-  GROUP BY 1, 2, nq.norm, nc.norm
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
+ORACLES["ann_ivf_pinned_topk"] = _topk_oracle(
+    EMB_ELEMS_CTES, _ivf_ctes(IVF_PINNED_CENTROIDS, N_PROBE)
 )
-SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ORACLES["ann_ivf_pinned_topk"] = _ivf_pinned_oracle_sql()
 
 
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,7 +638,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ground truth must be exact, queries are the free knob).
     Ref: reference has no ANN surface; evaluation discipline follows
     the recall tests pinning T7/T7b since r3."""
-    from proceso_de_etl_spark.operators.ml import _sq_dist, assign_clusters
+    from proceso_de_etl_spark.operators.ml import assign_clusters
 
     exact_top = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     ivf_top = ann_ivf_pinned_topk(spark, sf_dir).select("query_id", "neighbor_id")
@@ -494,28 +648,20 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("nh"))
     )
 
-    # candidate-scan cost: replay the probe fan-out (same expressions
-    # as ivf_search) and count the list_id equi-join's rows per query
+    # candidate-scan cost: the same probe fan-out as the search, its
+    # list_id equi-join's rows counted per query
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = assign_clusters(emb, IVF_PINNED_CENTROIDS).select(
         F.col("vec_id").alias("neighbor_id"), F.col("cluster").alias("list_id")
     )
-    cells = F.array(
-        *[
-            F.struct(
-                _sq_dist(F.col("embedding"), c).alias("d"),
-                F.lit(i).cast("bigint").alias("c"),
-            )
-            for i, c in enumerate(IVF_PINNED_CENTROIDS)
-        ]
-    )
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(F.slice(F.array_sort(cells), 1, N_PROBE)).alias("p"),
-    ).select("query_id", F.col("p.c").alias("list_id"))
     cand_counts = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+        _probe_pairs(
+            corpus,
+            emb.filter(F.col("vec_id") < N_QUERIES),
+            IVF_PINNED_CENTROIDS,
+            N_PROBE,
+            F.col("vec_id").alias("query_id"),
+        )
         .groupBy("query_id")
         .agg(F.count("*").alias("nc"))
     )
@@ -540,86 +686,19 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_eval_oracle_sql() -> str:
-    vals = ",\n         ".join(
-        "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(v) for v in c))
-        for i, c in enumerate(IVF_PINNED_CENTROIDS)
-    )
-    return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
-xscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM elems q
-  JOIN elems c ON q.i = c.i AND q.vec_id <> c.vec_id
-  JOIN norms nq ON nq.vec_id = q.vec_id
-  JOIN norms nc ON nc.vec_id = c.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-  GROUP BY q.vec_id, c.vec_id, nq.norm, nc.norm
-),
-xtop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM xscored
-  ) WHERE rank <= {TOP_K}
-),
-cents(list_id, w) AS (
-  VALUES {vals}
-),
-centel AS (SELECT list_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM cents),
-dists AS (
-  SELECT e.vec_id, ce.list_id, SUM((e.x - ce.cx) * (e.x - ce.cx)) AS d2
-  FROM elems e JOIN centel ce ON ce.i = e.i GROUP BY 1, 2
-),
-assign AS (
-  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM dists
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM dists WHERE vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM qprobe p JOIN assign a ON a.list_id = p.list_id
-  WHERE a.vec_id <> p.query_id
-),
-iscored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM cand cd
-  JOIN elems q ON q.vec_id = cd.query_id
-  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
-  JOIN norms nq ON nq.vec_id = cd.query_id
-  JOIN norms nc ON nc.vec_id = cd.neighbor_id
-  GROUP BY 1, 2, nq.norm, nc.norm
-),
-itop AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM iscored
-  ) WHERE rank <= {TOP_K}
-),
+# the two audited searches are embedded whole as scoped CTEs (the
+# ab_test_battery composition discipline); the probe fan-out is
+# recounted from the shared IVF stage
+ORACLES["ann_recall_eval"] = f"""
+WITH xtop AS ({ORACLES["ann_cosine_topk"].strip()}),
+itop AS ({ORACLES["ann_ivf_pinned_topk"].strip()}),
+{EMB_ELEMS_CTES},
+{_ivf_ctes(IVF_PINNED_CENTROIDS, N_PROBE)},
 hits AS (
   SELECT t.query_id, COUNT(*) AS nh
   FROM itop t JOIN xtop x USING (query_id, neighbor_id) GROUP BY 1
 ),
-candn AS (SELECT query_id, COUNT(*) AS nc FROM cand GROUP BY 1),
+candn AS (SELECT query_id, COUNT(*) AS nc FROM pairs GROUP BY 1),
 total AS (SELECT COUNT(*) AS n_corpus FROM embeddings),
 base AS (SELECT DISTINCT query_id FROM xtop)
 SELECT b.query_id,
@@ -631,9 +710,6 @@ FROM base b CROSS JOIN total t
 LEFT JOIN hits h ON h.query_id = b.query_id
 LEFT JOIN candn c ON c.query_id = b.query_id
 """
-
-
-ORACLES["ann_recall_eval"] = _recall_eval_oracle_sql()
 
 
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -788,35 +864,10 @@ def ann_ivf_incremental_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("list_id")
 
 
-def _ivf_incremental_pinned_oracle_sql() -> str:
-    vals = ",\n         ".join(
-        "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(v) for v in c))
-        for i, c in enumerate(IVF_PINNED_CENTROIDS)
-    )
-    qvals = ",\n         ".join(
-        "(%d, [%s]::BIGINT[])" % (i, ", ".join(str(v) for v in c))
-        for i, c in enumerate(IVF_PINNED_CENTROIDS_Q48)
-    )
-    return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-cents(list_id, w) AS (VALUES {vals}),
-centel AS (SELECT list_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM cents),
-dists AS (
-  SELECT e.vec_id, ce.list_id, SUM((e.x - ce.cx) * (e.x - ce.cx)) AS d2
-  FROM elems e JOIN centel ce ON ce.i = e.i GROUP BY 1, 2
-),
-assign AS (
-  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM dists
-  ) WHERE rn = 1
-),
-qcents(list_id, qw) AS (VALUES {qvals}),
+ORACLES["ann_ivf_incremental_pinned"] = f"""
+WITH {EMB_ELEMS_CTES},
+{_ivf_ctes(IVF_PINNED_CENTROIDS)},
+qcents(list_id, qw) AS (VALUES {sql_matrix_values(IVF_PINNED_CENTROIDS_Q48, "BIGINT")}),
 qcentel AS (SELECT list_id, unnest(range(1, len(qw) + 1)) AS i, unnest(qw) AS cq FROM qcents),
 rowd AS (
   SELECT e.vec_id, a.list_id,
@@ -843,9 +894,6 @@ FROM stats ORDER BY list_id
 """
 
 
-ORACLES["ann_ivf_incremental_pinned"] = _ivf_incremental_pinned_oracle_sql()
-
-
 PQ_M = 4  # subspaces (64-dim embedding → 16 dims each)
 PQ_K = 16  # codebook size per subspace (4-bit codes)
 PQ_RERANK = 80  # ADC candidates re-ranked exactly per query (recall 0.87 vs exact at gate SF; 50 gave 0.79)
@@ -870,70 +918,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast query set. Deterministic like IVF (k-means init =
     lowest vec_ids). (Rows-only: lossy by construction; the recall
     test pins it against ann_cosine_topk.)"""
-    from pyspark.sql import Window as W
-
-    from proceso_de_etl_spark.operators.ml import (
-        dists_over_matrix,
-        kmeans_fit,
-        with_broadcast_value,
-    )
-
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    emb = emb.withColumn(
-        "ne", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("norm"))
-    )
-    dim = len(emb.select("embedding").first()[0])
-    sub = dim // PQ_M
-    subcol = lambda m: F.slice(F.col("ne"), m * sub + 1, sub)  # noqa: E731
-
-    codebooks = [
-        kmeans_fit(
-            emb.select("vec_id", subcol(m).alias("sub")), k=PQ_K, n_iter=3, emb_col="sub"
-        )
-        for m in range(PQ_M)
-    ]
-    # codebooks as a broadcast M×K×sub tensor column (plan-literal
-    # codebooks cost seconds of Catalyst analysis per invocation)
-    embc = with_broadcast_value(emb, codebooks, "_cb", "array<array<array<double>>>")
-    qdists = lambda m: dists_over_matrix(  # noqa: E731
-        subcol(m), F.element_at(F.col("_cb"), m + 1)
-    )
-
-    def _code(m: int) -> F.Column:
-        dists = qdists(m)
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    corpus = embc.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        *[_code(m).alias(f"code{m}") for m in range(PQ_M)],
-    )
-    queries = embc.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qn"),
-        *[qdists(m).alias(f"qtab{m}") for m in range(PQ_M)],
-    )
-    adc = sum(
-        F.element_at(F.col(f"qtab{m}"), F.col(f"code{m}") + 1) for m in range(PQ_M)
-    )
-    cand_w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    candidates = (
-        corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .withColumn("cand_rk", F.row_number().over(cand_w))
-        .filter(F.col("cand_rk") <= PQ_RERANK)
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn(
-            "cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    emb = _normalized_embeddings(spark, sf_dir)
+    return _pq_search(emb, _fit_codebooks(emb), PQ_RERANK)
 
 
 # Frozen PQ codebooks for the driver-verifiable ADC companion: fit
@@ -1020,13 +1006,13 @@ PQ_PINNED_CODEBOOKS: list[list[list[float]]] = [
 
 
 def ann_pq_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T7c companion — PQ/ADC made driver-verifiable: identical plan
-    to ``ann_pq_topk`` (normalize, per-subspace argmin encode against
-    the codebooks, per-query K x M distance table, candidates rank by
-    the M summed lookups, top PQ_RERANK re-rank by exact cosine) but
-    against ``PQ_PINNED_CODEBOOKS``, so DuckDB replays encoding, the
-    ADC ranking, and the re-rank value-for-value. Every float
-    decision this relies on is measured, not assumed
+    """T7c companion — PQ/ADC made driver-verifiable: ``ann_pq_topk``'s
+    builder (normalize, per-subspace argmin encode against the
+    codebooks, per-query K x M distance table, candidates rank by the
+    M summed lookups, top PQ_RERANK re-rank by exact cosine) applied
+    to ``PQ_PINNED_CODEBOOKS``, so DuckDB replays encoding, the ADC
+    ranking, and the re-rank value-for-value. Every float decision
+    this relies on is measured, not assumed
     (tests/test_properties.py::test_float_margin_guards_for_pq_pinned):
     per-(vector, subspace) argmin gap, the PQ_RERANK boundary gap per
     query (identical-code ties are exact in both engines and break by
@@ -1034,140 +1020,12 @@ def ann_pq_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered 4-term add on BOTH engines (Spark folds m=0..3; the
     oracle pivots the four lookups and adds left-to-right), so no
     unordered SUM sits on a ranking boundary."""
-    from pyspark.sql import Window as W
-
-    from proceso_de_etl_spark.operators.ml import dists_over_matrix, with_broadcast_value
-
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    emb = emb.withColumn(
-        "ne", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("norm"))
-    )
-    sub = EMB_DIM // PQ_M
-    subcol = lambda m: F.slice(F.col("ne"), m * sub + 1, sub)  # noqa: E731
-    embc = with_broadcast_value(
-        emb, PQ_PINNED_CODEBOOKS, "_cb", "array<array<array<double>>>"
-    )
-    qdists = lambda m: dists_over_matrix(  # noqa: E731
-        subcol(m), F.element_at(F.col("_cb"), m + 1)
-    )
-
-    def _code(m: int) -> F.Column:
-        dists = qdists(m)
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    corpus = embc.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        *[_code(m).alias(f"code{m}") for m in range(PQ_M)],
-    )
-    queries = embc.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qn"),
-        *[qdists(m).alias(f"qtab{m}") for m in range(PQ_M)],
-    )
-    adc = sum(
-        F.element_at(F.col(f"qtab{m}"), F.col(f"code{m}") + 1) for m in range(PQ_M)
-    )
-    cand_w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    candidates = (
-        corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .withColumn("cand_rk", F.row_number().over(cand_w))
-        .filter(F.col("cand_rk") <= PQ_RERANK)
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn(
-            "cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _pq_search(_normalized_embeddings(spark, sf_dir), PQ_PINNED_CODEBOOKS, PQ_RERANK)
 
 
-def _pq_pinned_oracle_sql() -> str:
-    sub = EMB_DIM // PQ_M
-    vals = ",\n         ".join(
-        "(%d, %d, [%s]::DOUBLE[])" % (m, k, ", ".join(repr(v) for v in c))
-        for m, cb in enumerate(PQ_PINNED_CODEBOOKS)
-        for k, c in enumerate(cb)
-    )
-    # ordered 4-term ADC add, matching Spark's m=0..3 fold
-    adc_sum = " + ".join(f"d{m}" for m in range(PQ_M))
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN c.m = {m} THEN q.d2 END) AS d{m}" for m in range(PQ_M)
-    )
-    return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
-ne AS (
-  SELECT e.vec_id, e.i, e.x / n.norm AS xn
-  FROM elems e JOIN norms n ON n.vec_id = e.vec_id
-),
-cents(m, code, w) AS (
-  VALUES {vals}
-),
-centel AS (
-  SELECT m, code, unnest(range(1, len(w) + 1)) AS j, unnest(w) AS cx FROM cents
-),
-dists AS (
-  SELECT v.vec_id, ce.m, ce.code, SUM((v.xn - ce.cx) * (v.xn - ce.cx)) AS d2
-  FROM ne v JOIN centel ce
-    ON ce.m = (v.i - 1) // {sub} AND ce.j = ((v.i - 1) % {sub}) + 1
-  GROUP BY 1, 2, 3
-),
-codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
-    FROM dists
-  ) WHERE rn = 1
-),
-adc AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {pivots}
-  FROM codes c
-  JOIN dists q ON q.m = c.m AND q.code = c.code
-  WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
-  GROUP BY 1, 2
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY {adc_sum}, neighbor_id) AS cand_rk
-    FROM adc
-  ) WHERE cand_rk <= {PQ_RERANK}
-),
-scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM cand cd
-  JOIN elems q ON q.vec_id = cd.query_id
-  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
-  JOIN norms nq ON nq.vec_id = cd.query_id
-  JOIN norms nc ON nc.vec_id = cd.neighbor_id
-  GROUP BY 1, 2, nq.norm, nc.norm
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
+ORACLES["ann_pq_pinned_topk"] = _topk_oracle(
+    EMB_ELEMS_CTES, _ALL_PAIRS_CTE, _pq_ctes(PQ_PINNED_CODEBOOKS, PQ_RERANK), src="cand"
 )
-SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ORACLES["ann_pq_pinned_topk"] = _pq_pinned_oracle_sql()
 
 
 IVFPQ_N_PROBE = 6  # cells scanned per query (of N_LISTS; >T7b's 4 to offset PQ loss)
@@ -1175,81 +1033,15 @@ IVFPQ_RERANK = 120  # deeper than T7c's 80: the cell-pruned ADC ranking is noisi
 
 
 def _ivfpq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared builder for T7d (IVF×PQ): the ADC-scored candidate set
-    read from the PROBED CELLS ONLY — split out so the scale test can
-    count the rows the scan actually touches (must be well under
-    queries × corpus, the plain-PQ scan size)."""
-    from proceso_de_etl_spark.operators.ml import (
-        assign_clusters,
-        dists_over_matrix,
-        kmeans_fit,
-        with_broadcast_value,
-    )
+    """T7d's ADC-scored candidate set read from the PROBED CELLS ONLY
+    — exposed so the scale test can count the rows the scan actually
+    touches (must be well under queries × corpus, the plain-PQ scan
+    size)."""
+    from proceso_de_etl_spark.operators.ml import kmeans_fit
 
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    emb = emb.withColumn(
-        "ne", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("norm"))
-    )
-    dim = len(emb.select("embedding").first()[0])
-    sub = dim // PQ_M
-    subcol = lambda m: F.slice(F.col("ne"), m * sub + 1, sub)  # noqa: E731
-
+    emb = _normalized_embeddings(spark, sf_dir)
     centroids = kmeans_fit(emb, k=N_LISTS, n_iter=3)
-    codebooks = [
-        kmeans_fit(
-            emb.select("vec_id", subcol(m).alias("sub")), k=PQ_K, n_iter=3, emb_col="sub"
-        )
-        for m in range(PQ_M)
-    ]
-    embc = with_broadcast_value(emb, codebooks, "_cb", "array<array<array<double>>>")
-    qdists = lambda m: dists_over_matrix(  # noqa: E731
-        subcol(m), F.element_at(F.col("_cb"), m + 1)
-    )
-
-    def _code(m: int) -> F.Column:
-        dists = qdists(m)
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    corpus = assign_clusters(embc, centroids).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        F.col("cluster").alias("list_id"),
-        *[_code(m).alias(f"code{m}") for m in range(PQ_M)],
-    )
-    cells = F.zip_with(
-        dists_over_matrix(F.col("embedding"), F.col("_qmat")),
-        F.sequence(F.lit(0).cast("bigint"), F.lit(len(centroids) - 1).cast("bigint")),
-        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-    )
-    probes = (
-        with_broadcast_value(
-            embc.filter(F.col("vec_id") < N_QUERIES),
-            centroids,
-            "_qmat",
-            "array<array<double>>",
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm").alias("qn"),
-            *[qdists(m).alias(f"qtab{m}") for m in range(PQ_M)],
-            F.explode(F.slice(F.array_sort(cells), 1, IVFPQ_N_PROBE)).alias("p"),
-        )
-        .select(
-            "query_id",
-            "qe",
-            "qn",
-            *[f"qtab{m}" for m in range(PQ_M)],
-            F.col("p.c").alias("list_id"),
-        )
-    )
-    adc = sum(F.element_at(F.col(f"qtab{m}"), F.col(f"code{m}") + 1) for m in range(PQ_M))
-    return (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-    )
+    return _adc_pairs(emb, _fit_codebooks(emb), centroids)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1266,230 +1058,44 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact twin pinned ≥0.85 in tests, candidate-scan size pinned
     < queries × corpus). Same determinism as T7b/T7c (k-means init =
     lowest vec_ids, lexicographic ties)."""
-    from pyspark.sql import Window as W
+    from proceso_de_etl_spark.operators.ml import kmeans_fit
 
-    candidates = _ivfpq_candidates(spark, sf_dir)
-    cand_w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    shortlist = candidates.withColumn("cand_rk", F.row_number().over(cand_w)).filter(
-        F.col("cand_rk") <= IVFPQ_RERANK
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        shortlist.withColumn(
-            "cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    emb = _normalized_embeddings(spark, sf_dir)
+    centroids = kmeans_fit(emb, k=N_LISTS, n_iter=3)
+    return _pq_search(emb, _fit_codebooks(emb), IVFPQ_RERANK, centroids)
 
 
 def ann_ivfpq_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7d companion (r7 verdict item 6) — IVF×PQ made
-    driver-verifiable by composing the two FROZEN geometries: the
-    pinned coarse quantizer (``IVF_PINNED_CENTROIDS``, T7b2's) prunes
-    WHICH cells each query scans (IVFPQ_N_PROBE nearest), the pinned
-    codebooks (``PQ_PINNED_CODEBOOKS``, T7c2's) price WHAT each
-    touched row costs (4-term ADC lookup), and the top IVFPQ_RERANK
-    re-rank by exact cosine. Identical plan shape to ``ann_ivfpq_topk``
-    — one assignment+encode scan, a broadcast probe join that touches
-    only the probed lists, candidate-bounded re-rank — but every
-    stage replays value-for-value in DuckDB, closing the ANN family's
-    last composition gap (the float FITS stay rows-only in T7d, which
-    remains the recall-tested twin). Float decision boundaries are
-    measured, not assumed (tests/test_properties.py::
+    driver-verifiable: ``ann_ivfpq_topk``'s builder applied to the two
+    FROZEN geometries: the pinned coarse quantizer
+    (``IVF_PINNED_CENTROIDS``, T7b2's) prunes WHICH cells each query
+    scans (IVFPQ_N_PROBE nearest), the pinned codebooks
+    (``PQ_PINNED_CODEBOOKS``, T7c2's) price WHAT each touched row costs
+    (4-term ADC lookup), and the top IVFPQ_RERANK re-rank by exact
+    cosine — one assignment+encode scan, a broadcast probe join that
+    touches only the probed lists, candidate-bounded re-rank — and
+    every stage replays value-for-value in DuckDB, closing the ANN
+    family's last composition gap (the float FITS stay rows-only in
+    T7d, which remains the recall-tested twin). Float decision
+    boundaries are measured, not assumed (tests/test_properties.py::
     test_float_margin_guards_for_ivfpq_pinned): the probe-set boundary
     at IVFPQ_N_PROBE, the ADC candidate boundary at IVFPQ_RERANK
     within the PROBED set, and the TOP_K cosine boundary."""
-    from pyspark.sql import Window as W
-
-    from proceso_de_etl_spark.operators.ml import (
-        assign_clusters,
-        dists_over_matrix,
-        with_broadcast_value,
-    )
-
-    emb = with_norm(load_table(spark, sf_dir, "embeddings"))
-    emb = emb.withColumn(
-        "ne", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("norm"))
-    )
-    sub = EMB_DIM // PQ_M
-    subcol = lambda m: F.slice(F.col("ne"), m * sub + 1, sub)  # noqa: E731
-    embc = with_broadcast_value(
-        emb, PQ_PINNED_CODEBOOKS, "_cb", "array<array<array<double>>>"
-    )
-    qdists = lambda m: dists_over_matrix(  # noqa: E731
-        subcol(m), F.element_at(F.col("_cb"), m + 1)
-    )
-
-    def _code(m: int) -> F.Column:
-        dists = qdists(m)
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    corpus = assign_clusters(embc, IVF_PINNED_CENTROIDS).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cn"),
-        F.col("cluster").alias("list_id"),
-        *[_code(m).alias(f"code{m}") for m in range(PQ_M)],
-    )
-    cells = F.zip_with(
-        dists_over_matrix(F.col("embedding"), F.col("_qmat")),
-        F.sequence(
-            F.lit(0).cast("bigint"), F.lit(len(IVF_PINNED_CENTROIDS) - 1).cast("bigint")
-        ),
-        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-    )
-    probes = (
-        with_broadcast_value(
-            embc.filter(F.col("vec_id") < N_QUERIES),
-            IVF_PINNED_CENTROIDS,
-            "_qmat",
-            "array<array<double>>",
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm").alias("qn"),
-            *[qdists(m).alias(f"qtab{m}") for m in range(PQ_M)],
-            F.explode(F.slice(F.array_sort(cells), 1, IVFPQ_N_PROBE)).alias("p"),
-        )
-        .select(
-            "query_id",
-            "qe",
-            "qn",
-            *[f"qtab{m}" for m in range(PQ_M)],
-            F.col("p.c").alias("list_id"),
-        )
-    )
-    # ordered 4-term ADC add — same fold order as the oracle's pivot
-    adc = sum(F.element_at(F.col(f"qtab{m}"), F.col(f"code{m}") + 1) for m in range(PQ_M))
-    cand_w = W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    shortlist = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .withColumn("cand_rk", F.row_number().over(cand_w))
-        .filter(F.col("cand_rk") <= IVFPQ_RERANK)
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        shortlist.withColumn(
-            "cosine", dot_cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    return _pq_search(
+        _normalized_embeddings(spark, sf_dir),
+        PQ_PINNED_CODEBOOKS,
+        IVFPQ_RERANK,
+        IVF_PINNED_CENTROIDS,
     )
 
 
-def _ivfpq_pinned_oracle_sql() -> str:
-    sub = EMB_DIM // PQ_M
-    ivf_vals = ",\n         ".join(
-        "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(v) for v in c))
-        for i, c in enumerate(IVF_PINNED_CENTROIDS)
-    )
-    pq_vals = ",\n         ".join(
-        "(%d, %d, [%s]::DOUBLE[])" % (m, k, ", ".join(repr(v) for v in c))
-        for m, cb in enumerate(PQ_PINNED_CODEBOOKS)
-        for k, c in enumerate(cb)
-    )
-    adc_sum = " + ".join(f"d{m}" for m in range(PQ_M))
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN c.m = {m} THEN q.d2 END) AS d{m}" for m in range(PQ_M)
-    )
-    return f"""
-WITH elems AS (
-  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sqrt(SUM(x * x)) AS norm FROM elems GROUP BY vec_id),
-ne AS (
-  SELECT e.vec_id, e.i, e.x / n.norm AS xn
-  FROM elems e JOIN norms n ON n.vec_id = e.vec_id
-),
-ccents(list_id, w) AS (
-  VALUES {ivf_vals}
-),
-ccentel AS (SELECT list_id, unnest(range(1, len(w) + 1)) AS i, unnest(w) AS cx FROM ccents),
-cdists AS (
-  SELECT e.vec_id, ce.list_id, SUM((e.x - ce.cx) * (e.x - ce.cx)) AS d2
-  FROM elems e JOIN ccentel ce ON ce.i = e.i GROUP BY 1, 2
-),
-assign AS (
-  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM cdists
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, CAST(list_id AS BIGINT) AS list_id FROM (
-    SELECT vec_id, list_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, list_id) AS rn
-    FROM cdists WHERE vec_id < {N_QUERIES}
-  ) WHERE rn <= {IVFPQ_N_PROBE}
-),
-pcents(m, code, w) AS (
-  VALUES {pq_vals}
-),
-pcentel AS (
-  SELECT m, code, unnest(range(1, len(w) + 1)) AS j, unnest(w) AS cx FROM pcents
-),
-pdists AS (
-  SELECT v.vec_id, ce.m, ce.code, SUM((v.xn - ce.cx) * (v.xn - ce.cx)) AS d2
-  FROM ne v JOIN pcentel ce
-    ON ce.m = (v.i - 1) // {sub} AND ce.j = ((v.i - 1) % {sub}) + 1
-  GROUP BY 1, 2, 3
-),
-codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
-    FROM pdists
-  ) WHERE rn = 1
-),
-adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         {pivots}
-  FROM qprobe p
-  JOIN assign a ON a.list_id = p.list_id
-  JOIN codes c ON c.vec_id = a.vec_id
-  JOIN pdists q ON q.m = c.m AND q.code = c.code AND q.vec_id = p.query_id
-  WHERE a.vec_id <> p.query_id
-  GROUP BY 1, 2
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY {adc_sum}, neighbor_id) AS cand_rk
-    FROM adc
-  ) WHERE cand_rk <= {IVFPQ_RERANK}
-),
-scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         SUM(q.x * c.x) / (nq.norm * nc.norm) AS cosine
-  FROM cand cd
-  JOIN elems q ON q.vec_id = cd.query_id
-  JOIN elems c ON c.vec_id = cd.neighbor_id AND c.i = q.i
-  JOIN norms nq ON nq.vec_id = cd.query_id
-  JOIN norms nc ON nc.vec_id = cd.neighbor_id
-  GROUP BY 1, 2, nq.norm, nc.norm
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
+ORACLES["ann_ivfpq_pinned_topk"] = _topk_oracle(
+    EMB_ELEMS_CTES,
+    _ivf_ctes(IVF_PINNED_CENTROIDS, IVFPQ_N_PROBE),
+    _pq_ctes(PQ_PINNED_CODEBOOKS, IVFPQ_RERANK),
+    src="cand",
 )
-SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-ORACLES["ann_ivfpq_pinned_topk"] = _ivfpq_pinned_oracle_sql()
 
 
 def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,8 +1183,6 @@ def ann_sparse_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force is not. Stop-term pressure is bounded by the same
     DF-cap idea as decontamination (w(t) → 0 for df > 1e6 — here the
     damping itself kills ubiquitous terms)."""
-    from pyspark.sql import Window as W
-
     from proceso_de_etl_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1663,7 +1267,6 @@ def ann_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited on their own keys; fusion itself is one union + one
     keyed agg + a per-query top-k window over ≤ 3·TOP_K candidate
     rows per query."""
-    from pyspark.sql import Window as W
 
     contribs = F.array(
         *[F.lit(RRF_SCALE // (RRF_K0 + r)).cast("bigint") for r in range(1, TOP_K + 1)]

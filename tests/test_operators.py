@@ -965,6 +965,58 @@ def test_report_ops_survive_empty_inputs(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+def test_ann_keys_on_empty_embeddings_return_empty(spark, tmp_path):
+    """Every embedding key of the similarity family, fit keys
+    included, returns zero rows and its documented columns when the
+    embeddings table is empty: the k-means fits degrade to no
+    geometry instead of raising, and the searches find no pairs."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from proceso_de_etl_spark.operators import similarity
+    from tests.conftest import SF_SMOKE
+
+    topk = ["query_id", "rank", "neighbor_id", "cosine"]
+    columns = {
+        "ann_rank_fusion": ["query_id", "fused_rank", "neighbor_id", "rrf_scaled", "n_sources"],
+        "ann_cosine_topk": topk,
+        "embedding_int8_quantize": ["vec_id", "n_dims", "scale_r6", "code_checksum", "max_err"],
+        "ann_lsh_bucketed": topk,
+        "ann_ivf_topk": topk,
+        "ann_ivf_pinned_topk": topk,
+        "ann_recall_eval": ["query_id", "n_hits", "recall_at_k", "n_candidates", "scan_frac"],
+        "ann_pq_topk": topk,
+        "ann_pq_pinned_topk": topk,
+        "ann_ivfpq_topk": topk,
+        "ann_ivfpq_pinned_topk": topk,
+        "ann_ivf_incremental": [
+            "list_id", "n_corpus", "n_batch", "mean_dist_corpus", "mean_dist_batch",
+        ],
+        "ann_ivf_incremental_pinned": [
+            "list_id", "n_corpus", "n_batch", "mean_qdist_corpus", "mean_qdist_batch",
+            "drift_ppm",
+        ],
+    }
+    assert set(columns) == set(similarity.QUERIES) - {"ann_sparse_tfidf_topk"}
+
+    sf = tmp_path / "sf_empty_embeddings"
+    sf.mkdir()
+    for name in os.listdir(SF_SMOKE):
+        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
+    emb = sf / "embeddings.parquet"
+    empty = pq.read_table(emb).slice(0, 0)
+    emb.unlink()
+    pq.write_table(empty, emb)
+
+    for key, cols in columns.items():
+        df = similarity.QUERIES[key](spark, str(sf))
+        assert df.columns == cols, key
+        assert df.collect() == [], key
+        spark.catalog.clearCache()
+
+
 def test_multimodal_phash_golden_and_neardup(spark):
     """dHash: numpy-reference golden on a literal payload; identical
     payloads collide exactly; a few flipped bytes stay within the

@@ -682,7 +682,9 @@ def test_r7_companions_stay_jvm_side(spark):
         ml_kmeans_ladder,
     )
     from proceso_de_etl_spark.operators.similarity import (
+        ann_ivf_incremental_pinned,
         ann_ivf_pinned_topk,
+        ann_ivfpq_pinned_topk,
         ann_pq_pinned_topk,
         ann_recall_eval,
     )
@@ -696,6 +698,8 @@ def test_r7_companions_stay_jvm_side(spark):
         semdedup_pairs,
         ann_ivf_pinned_topk,
         ann_pq_pinned_topk,
+        ann_ivfpq_pinned_topk,
+        ann_ivf_incremental_pinned,
         ann_recall_eval,
         graph_connected_components,
         graph_modularity,
