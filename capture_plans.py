@@ -3,7 +3,13 @@
 
 Usage: python capture_plans.py <outdir> <suffix> <key> [<key> ...]
 
-Writes <outdir>/<key>_<suffix>.txt for each key. A key whose
+Writes <outdir>/<key>_<suffix>.txt for each key, and the returned
+frame's optimized logical plan, with the session counters masked
+(expression ids ``#\d+L?`` -> ``#``, the ``plan_id=`` of the cached
+physical plans an InMemoryRelation prints -> ``plan_id=#``), to
+<outdir>/optimized/<key>.txt: run it from two checkouts into two
+outdirs and ``diff -r <a>/optimized <b>/optimized`` lists the keys
+whose plans differ. A key whose
 operator runs no localCheckpoint gets its returned frame's formatted
 plan, bare. An iterative key also gets the PRE-checkpoint plan of
 every localCheckpoint site it executes — the plan that actually runs
@@ -22,6 +28,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -40,9 +47,16 @@ def fmt(df: DataFrame) -> str:
     return buf.getvalue()
 
 
+def optimized(df: DataFrame) -> str:
+    """The optimized logical plan with expression and plan ids masked,
+    so the same plan prints the same text in any session."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"plan_id=\d+", "plan_id=#", re.sub(r"#\d+L?", "#", plan))
+
+
 def main() -> None:
     outdir, suffix, *keys = sys.argv[1:]
-    os.makedirs(outdir, exist_ok=True)
+    os.makedirs(os.path.join(outdir, "optimized"), exist_ok=True)
     sf_dir = harness.SF_DIR
     spark = harness.start("capture_plans")
     queries = harness.entrymod.queries()
@@ -70,6 +84,8 @@ def main() -> None:
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write("\n".join(parts))
+        with open(os.path.join(outdir, "optimized", f"{key}.txt"), "w") as f:
+            f.write(optimized(df))
         nex = sum(p.count("Exchange") for p in captured)
         print(
             f"wrote {path}: {len(captured)} checkpoint sites, "

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark.functions.text import shingles, shingles_sql, tokens, tokens_sql
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -746,7 +747,8 @@ def connected_components(
             if root not in label or node < label[root]:
                 label[root] = node
         rows = [(node, label[find(node)]) for node in parent]
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             rows, f"doc_id {id_type}, cluster {id_type}"
         )
     nodes = sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))

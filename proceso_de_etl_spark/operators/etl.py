@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from proceso_de_etl_spark.functions.columns import clean_id, dsum, money
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -534,10 +535,17 @@ def etl_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = tempfile.mkdtemp(prefix="fact_dpp_")
     write_parquet(li, target, partition_by=["ship_year"])
     fact = spark.read.parquet(target)
-    calendar = spark.createDataFrame(
-        [(1995, "CLOSED"), (1996, "OPEN"), (1997, "OPEN"), (1998, "CLOSED")],
-        "cal_year int, books string",
-    ).filter(F.col("books") == "OPEN")
+    # The calendar is generated in the plan rather than held as local
+    # rows: a filter over a LocalRelation folds into its rows, and with
+    # no Filter left on the dimension side Catalyst inserts no DPP.
+    calendar = (
+        spark.range(1995, 1999, numPartitions=1)
+        .select(
+            F.col("id").cast("int").alias("cal_year"),
+            F.when(F.col("id").isin(1996, 1997), "OPEN").otherwise("CLOSED").alias("books"),
+        )
+        .filter(F.col("books") == "OPEN")
+    )
     return (
         fact.join(F.broadcast(calendar), fact.ship_year == calendar.cal_year)
         .groupBy(F.col("cal_year").cast("bigint").alias("cal_year"))
@@ -615,7 +623,7 @@ def etl_atomic_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = [
         (name, spark.read.parquet(f"{root}/{name}").count()) for name in ("dim_categoria", "dim_clasificacion")
     ]
-    return spark.createDataFrame(manifest, "table_name string, n_rows bigint")
+    return local_frame(spark, manifest, "table_name string, n_rows bigint")
 
 
 # The manifest counts READ BACK from the committed directories must
@@ -1899,7 +1907,8 @@ def etl_observed_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.mode("overwrite").format("noop").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),
@@ -2887,7 +2896,8 @@ def etl_data_vault_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(hk, hd, F.lit(DV_PIT_LOAD_2).cast("date").alias("load_date"))
     )
     sat = sat1.unionByName(sat2)
-    snaps = spark.createDataFrame(
+    snaps = local_frame(
+        spark,
         [(s,) for s in DV_PIT_SNAPSHOTS], "snapshot_date string"
     ).select(F.col("snapshot_date").cast("date"))
     pit = (
@@ -3004,7 +3014,8 @@ def etl_data_vault_effectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("is_open"),
     )
     events = open1.unionByName(close2).unionByName(open2)
-    snaps = spark.createDataFrame(
+    snaps = local_frame(
+        spark,
         [(s,) for s in DV_EFF_SNAPSHOTS], "snapshot_date string"
     ).select(F.col("snapshot_date").cast("date"))
     state = (
@@ -3111,7 +3122,8 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     events = open1.unionByName(open2)
-    snaps = spark.createDataFrame(
+    snaps = local_frame(
+        spark,
         [(s,) for s in DV_EFF_SNAPSHOTS], "snapshot_date string"
     ).select(F.col("snapshot_date").cast("date"))
     eff = (
@@ -3665,7 +3677,8 @@ def etl_data_vault_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(both_tables(gone, DV_DEL_D2, True))
         .unionByName(both_tables(back, DV_DEL_D3, False))
     )
-    snaps = spark.createDataFrame(
+    snaps = local_frame(
+        spark,
         [(s,) for s in DV_DEL_SNAPSHOTS], "snapshot_date string"
     ).select(F.col("snapshot_date").cast("date"))
     state = (

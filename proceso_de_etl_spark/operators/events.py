@@ -22,6 +22,7 @@ from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.functions.columns import dsum, money
 from proceso_de_etl_spark.operators.windows import ranked_topk
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -383,7 +384,8 @@ def events_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests 3 intervals scan-side, no shuffle. (For big-both-sides
     range joins, bucketize the range key first — see SURVEY §4.)"""
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 20.0), ("mid", 20.0, 50.0), ("high", 50.0, 1e18)],
         "band string, lo double, hi double",
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from proceso_de_etl_spark.functions.columns import dsum, money
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -400,14 +401,15 @@ def pareto_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         offsets.append((pid, row_acc, val_acc))
         row_acc += n
         val_acc += s
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         offsets, "_pid int, _roff long, _voff decimal(38,4)"
     )
     # grand total = the final cumulative offset — the bounded collect
     # above already holds the exact decimal sum, so no second
     # lineitem scan (float(Decimal) and Spark's decimal→double cast
     # both round-to-nearest: identical value)
-    total = spark.createDataFrame([(float(val_acc),)], "total_rev double")
+    total = local_frame(spark, [(float(val_acc),)], "total_rev double")
     w = (
         W.partitionBy("_pid")
         .orderBy(F.desc("rev"), F.asc("l_partkey"))
@@ -1068,7 +1070,7 @@ def agg_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pid, s in parts:
         offsets.append((pid, acc))
         acc += s
-    offs = spark.createDataFrame(offsets, "_pid int, _woff decimal(38,2)")
+    offs = local_frame(spark, offsets, "_pid int, _woff decimal(38,2)")
     w = (
         W.partitionBy("_pid")
         .orderBy(F.asc("v"), F.asc("k1"), F.asc("k2"))

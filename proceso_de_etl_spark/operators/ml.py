@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -51,7 +52,7 @@ def with_broadcast_value(df: DataFrame, value, name: str, sql_type: str) -> Data
     invocation against milliseconds of execution. As data, the plan
     is value-invariant (codegen caches hit) and the per-row
     arithmetic — the transform/zip_with fold order — is unchanged."""
-    wdf = df.sparkSession.createDataFrame([(value,)], f"{name}: {sql_type}")
+    wdf = local_frame(df.sparkSession, [(value,)], f"{name}: {sql_type}")
     return df.crossJoin(F.broadcast(wdf))
 
 
@@ -413,7 +414,8 @@ def kmeans_fit(df: DataFrame, k: int = K, n_iter: int = N_ITER, emb_col: str = "
     ).persist()
     try:
         for _ in range(n_iter):
-            cdf = spark.createDataFrame(
+            cdf = local_frame(
+                spark,
                 [(i, c, sum(x * x for x in c)) for i, c in enumerate(centroids)],
                 "cluster int, cvec array<double>, cnorm2 double",
             )
@@ -654,7 +656,7 @@ def logreg_fit(feat: DataFrame, n_iter: int = LOGREG_N_ITER, lr: float = LOGREG_
         n = z.count()
         w = [0.0] * dim
         for _ in range(n_iter):
-            wdf = spark.createDataFrame([(w,)], "w array<double>")
+            wdf = local_frame(spark, [(w,)], "w array<double>")
             dot = F.aggregate(
                 F.zip_with("x", "w", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
             )
@@ -697,7 +699,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = stats[f"s_{c}"] or 1.0
         zcols.append(((F.col(c) - float(stats[f"m_{c}"])) / float(s if s > 0 else 1.0)).alias(c))
     z = feat.select(*zcols, "y").select(F.array(F.lit(1.0), "x1", "x2", "x3").alias("x"), "y")
-    wdf = spark.createDataFrame([(w,)], "w array<double>")
+    wdf = local_frame(spark, [(w,)], "w array<double>")
     dot = F.aggregate(
         F.zip_with("x", "w", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -3348,7 +3350,8 @@ def ml_kmeans_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, dim = len(cq0), len(cq0[0])
     emb = load_table(spark, sf_dir, "embeddings")
     xq = emb.select("vec_id", _kml_quantize(F.col("embedding")).alias("xq"))
-    c0 = spark.createDataFrame(
+    c0 = local_frame(
+        spark,
         [(i, cq0[i]) for i in range(k)], "cluster bigint, cq array<bigint>"
     )
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark.functions.columns import dsum
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -696,7 +697,8 @@ def global_rank_frame(
     for pid, n in counts:
         offsets[pid] = acc
         acc += n
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
     )
     w = W.partitionBy("_pid").orderBy(*key)

@@ -48,6 +48,7 @@ from proceso_de_etl_spark.operators.dedup import (
     with_norm,
 )
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -436,7 +437,7 @@ def with_lsh_tables(
     wmat = [
         [int(v) for v in w] for t in range(N_TABLES) for w in _plane_weights(t)
     ]  # (N_TABLES*PLANES_PER_TABLE) x EMB_DIM, row t*PLANES+j = table t plane j
-    wdf = spark.createDataFrame([(wmat,)], "planes: array<array<bigint>>")
+    wdf = local_frame(spark, [(wmat,)], "planes: array<array<bigint>>")
     dots = F.transform(
         F.col("planes"),
         lambda w: F.aggregate(

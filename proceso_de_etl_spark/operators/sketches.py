@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -141,7 +142,7 @@ def sketch_count_min_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     sk = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes(row.sk))
     rows = [(t, int(sk.estimateCount(t)), int(sk.totalCount())) for t in CMS_PROBES]
-    return spark.createDataFrame(rows, "token string, est_count long, n_total long")
+    return local_frame(spark, rows, "token string, est_count long, n_total long")
 
 
 # ---------------------------------------------------------------------------
@@ -489,7 +490,7 @@ def sketch_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     total = tok.agg(F.count("*").cast("bigint").alias("n_total"))
-    probes = spark.createDataFrame([(t,) for t in CMS_PROBES], "token string")
+    probes = local_frame(spark, [(t,) for t in CMS_PROBES], "token string")
     pcells = probes.select(
         "token",
         F.posexplode(

@@ -26,6 +26,7 @@ from proceso_de_etl_spark.functions.text import (
 from proceso_de_etl_spark.functions.columns import dsum
 from proceso_de_etl_spark.operators.windows import ranked_topk
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -922,7 +923,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("freq"))
     )
     merges = bpe_train(words)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, l + r, c) for i, (l, r, c) in enumerate(merges)],
         "rank long, left string, right string, merged string, pair_count long",
     )

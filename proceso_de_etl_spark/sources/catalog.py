@@ -1,9 +1,11 @@
 """Catalog over the synthetic testdata star schema.
 
-Tables live as one parquet file per table under an sf-dir
-(``/root/testdata/sf0.01`` etc.). ``load_table`` returns a lazily
-planned DataFrame — Catalyst prunes columns and pushes filters into
-the parquet scan, so callers never pre-materialize.
+Tables live as one parquet file (or directory) per table under an
+sf-dir. ``load_table`` returns a lazily planned DataFrame — Catalyst
+prunes columns and pushes filters into the parquet scan, so callers
+never pre-materialize. Each table's schema is inferred once per
+session: parquet inference is a Spark job (a footer read), and an
+engine pass loads the same few tables dozens of times.
 """
 
 from __future__ import annotations
@@ -28,6 +30,10 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# (applicationId, path, listing signature) -> inferred StructType. Holds
+# no Spark storage, so it lives outside cachereg and needs no release.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
 
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Defensive: the engine's queries may be called with a session
@@ -49,11 +55,52 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf locked down — proceed with whatever the host set
 
 
+def _listing_signature(path: str) -> tuple | None:
+    """Sorted ``(name, size, mtime_ns)`` of the files a table path
+    holds (the file itself for a one-file table, every file below it
+    for a directory), or None when nothing local answers: a remote URI
+    or a missing path then takes the uncached read, which infers, or
+    raises PATH_NOT_FOUND, as a plain ``spark.read.parquet`` does."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        sig = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(sig))
+    except OSError:  # a file vanished mid-listing: treat as unlisted
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    (session, path, listing). A repeat read passes the kept schema, so
+    it launches no inference job; it is still a new relation with new
+    attribute ids, so self-joins resolve. Rewriting the path changes
+    its listing, and the next read infers again."""
+    sig = _listing_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path, sig)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # ts on disk varies by testdata generation: TIMESTAMP(NANOS)
         # (reads as epoch-nanos long under nanosAsLong) or naive

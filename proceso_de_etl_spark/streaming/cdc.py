@@ -34,6 +34,7 @@ from pyspark.sql import Window as W
 
 from proceso_de_etl_spark.operators.etl import ORACLES as _ETL_ORACLES
 from proceso_de_etl_spark.sources.catalog import load_table
+from proceso_de_etl_spark.sources.local import local_frame
 from proceso_de_etl_spark.streaming.jobs import drain, replay
 
 ORACLES: dict[str, str] = {}
@@ -117,7 +118,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("seq"),
         F.lit(False).alias("deleted"),
     )
-    state = {"cur": os.path.join(workdir, "snapshot_v0")}
+    # each version is read back with the schema of the frame that wrote
+    # it: no parquet schema-inference job per micro-batch
+    state = {"cur": os.path.join(workdir, "snapshot_v0"), "schema": snap0.schema}
     snap0.write.parquet(state["cur"])
 
     # one landed file per change set, the upstream CDC feed's shape;
@@ -126,14 +129,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        snapshot = sess.read.parquet(state["cur"])
+        snapshot = sess.read.schema(state["schema"]).parquet(state["cur"])
         nxt = os.path.join(workdir, f"snapshot_v{epoch_id + 1}")
-        merge_cdc_batch(snapshot, batch_df).write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt  # pointer flip = atomic promote
+        merged = merge_cdc_batch(snapshot, batch_df)
+        merged.write.mode("overwrite").parquet(nxt)
+        state.update(cur=nxt, schema=merged.schema)  # pointer flip = atomic promote
 
     drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
     return (
-        spark.read.parquet(state["cur"])
+        spark.read.schema(state["schema"]).parquet(state["cur"])
         .filter(~F.col("deleted"))
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "row_source")
     )
@@ -292,19 +296,22 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so it plays no part). Store contents after epoch 1 are identical
     # (merge with an empty store = the candidate rows), so the final
     # state and its oracle are unchanged.
-    state: dict[str, str | None] = {"cur": None}
+    # Each later version is read back with the schema of the frame
+    # that wrote it, so no micro-batch pays a schema-inference job.
+    state: dict = {"cur": None, "schema": None}
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
         if state["cur"] is None:
-            store = sess.createDataFrame(
-                [], "vault_table string, hk bigint, hd bigint, load_epoch int"
+            store = local_frame(
+                sess, [], "vault_table string, hk bigint, hd bigint, load_epoch int"
             )
         else:
-            store = sess.read.parquet(state["cur"])
+            store = sess.read.schema(state["schema"]).parquet(state["cur"])
         nxt = os.path.join(workdir, f"store_v{epoch_id + 1}")
-        merge_vault_batch(store, batch_df).write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt  # pointer flip = atomic promote
+        merged = merge_vault_batch(store, batch_df)
+        merged.write.mode("overwrite").parquet(nxt)
+        state.update(cur=nxt, schema=merged.schema)  # pointer flip = atomic promote
 
     drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
     if state["cur"] is None:
@@ -313,7 +320,7 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "waves, so no vault store was written"
         )
     return (
-        spark.read.parquet(state["cur"])
+        spark.read.schema(state["schema"]).parquet(state["cur"])
         .groupBy("vault_table", "load_epoch")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),

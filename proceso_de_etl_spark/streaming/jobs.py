@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from proceso_de_etl_spark.functions.columns import dsum
+from proceso_de_etl_spark.sources.local import local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -497,7 +498,8 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         for so in p["stateOperators"]
     )
     n_recent, n_middle, n_late = recent.count(), middle.count(), late.count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_recent + n_middle + n_late, n_recent, n_middle, n_late, dropped_groups)],
         "n_input long, n_batch1 long, n_batch2 long, n_batch3_late long,"
         " n_dropped_groups long",
@@ -597,7 +599,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = ev.agg(F.max(F.unix_micros("ts")).alias("m")).collect()[0].m
     day_us = 24 * 3600 * 1_000_000
-    sentinels = spark.createDataFrame(
+    sentinels = local_frame(
+        spark,
         [(-1, mx + 30 * day_us, -1, "purchase", 0.0), (-2, mx + 31 * day_us, -2, "click", 0.0)],
         "event_id long, ts_us long, user_id long, event_type string, value double",
     ).select(
@@ -767,7 +770,8 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def admit_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        off = sess.createDataFrame(
+        off = local_frame(
+            sess,
             list(admitted_so_far.items()) or [("__none__", 0)],
             "source string, _prior long",
         )
@@ -968,7 +972,8 @@ def stream_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row = stats.collect()[0]  # bounded: one metrics row per epoch
         novel.write.mode("append").parquet(seen_dir)
-        sess.createDataFrame(
+        local_frame(
+            sess,
             [(int(epoch_id), row["n_shingles"], row["n_novel"])],
             "batch_id int, n_shingles long, n_novel long",
         ).write.mode("append").parquet(metrics_dir)

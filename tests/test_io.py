@@ -1,6 +1,8 @@
 """Source/sink coverage (SURVEY.md §2.4): format roundtrips, schema'd
 reads, malformed-row policies, partitioned writes with pruning."""
 
+from decimal import Decimal
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -14,6 +16,7 @@ from proceso_de_etl_spark.sources.io import (
     write_orc,
     write_parquet,
 )
+from proceso_de_etl_spark.sources.local import local_frame
 from tests.conftest import SF_SMOKE
 
 
@@ -255,3 +258,151 @@ def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tmp_pa
     assert listing("a") == a_before  # untouched partition: identical files
     got = {(r.id, r.part, r.v) for r in spark.read.parquet(root).collect()}
     assert got == {(1, "a", 10.0), (2, "a", 20.0), (9, "b", 99.0)}
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, counted under a job group
+    of their own once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_each_schema_once_per_session(spark, tmp_path):
+    """Parquet schema inference is a Spark job; a second load of the
+    same unchanged table reuses the first load's schema and launches
+    none, and the frame it returns reads the same rows."""
+    import shutil
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_SMOKE}/nation.parquet", sf / "nation.parquet")
+    assert _jobs_launched(spark, lambda: load_table(spark, str(sf), "nation")) >= 1
+    frames = []
+    assert _jobs_launched(spark, lambda: frames.append(load_table(spark, str(sf), "nation"))) == 0
+    want = load_table(spark, SF_SMOKE, "nation")
+    assert frames[0].schema == want.schema
+    assert sorted(map(tuple, frames[0].collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_load_table_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """The kept schema is keyed by the path's file listing: rewriting
+    the table with an added column makes the next load infer again and
+    see the column."""
+    path = str(tmp_path / "sf" / "region.parquet")
+    region = load_table(spark, SF_SMOKE, "region")
+    region.write.parquet(path)
+    before = load_table(spark, str(tmp_path / "sf"), "region")
+    assert "r_extra" not in before.columns
+    region.withColumn("r_extra", F.col("r_regionkey") * 2).write.mode("overwrite").parquet(path)
+    after = load_table(spark, str(tmp_path / "sf"), "region")
+    assert after.columns == region.columns + ["r_extra"]
+    assert sorted(r.r_extra for r in after.collect()) == [0, 2, 4, 6, 8]
+
+
+def test_load_table_self_join_matches_duckdb(spark):
+    """Two loads of one table are two relations with their own
+    attribute ids, so a self-join resolves and counts what DuckDB
+    counts."""
+    import duckdb
+
+    from tests.conftest import SF_CORRECT
+
+    a = load_table(spark, SF_CORRECT, "lineitem")
+    b = load_table(spark, SF_CORRECT, "lineitem")
+    got = a.join(b, a["l_orderkey"] == b["l_orderkey"]).count()
+    p = f"{SF_CORRECT}/lineitem.parquet"
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{p}') a JOIN read_parquet('{p}') b USING (l_orderkey)"
+    ).fetchone()[0]
+    assert got == want > 0
+
+
+# Every DDL a ``local_frame`` call site passes, with rows of the shape
+# that site builds (nested lists, tuples, Decimals, NULLs, no rows).
+_LOCAL_FRAME_CASES = [
+    ("n_input long, n_batch1 long, n_batch2 long, n_batch3_late long,"
+     " n_dropped_groups long", [(10, 4, 3, 3, 1)]),
+    ("event_id long, ts_us long, user_id long, event_type string, value double",
+     [(-1, 1_700_000_000_000_000, -1, "purchase", 0.0), (-2, 1_700_086_400_000_000, -2, "click", 0.0)]),
+    ("source string, _prior long", [("__none__", 0)]),
+    ("source string, _prior long", list({"web": 3, "mail": 1}.items())),
+    ("batch_id int, n_shingles long, n_novel long", [(0, 12, 5), (1, 7, None)]),
+    ("vault_table string, hk bigint, hd bigint, load_epoch int", []),
+    ("_cmat: array<array<double>>", [([[0.1, -0.2], [0.3, 0.4]],)]),
+    ("_cm: array<array<double>>", [(((0.5, 0.25), (1.0, -1.0)),)]),
+    ("_cn: array<double>", [([1.0, 0.5],)]),
+    ("_sb: array<int>", [([0, 2, 1],)]),
+    ("_qmat: array<array<bigint>>", [([[48, -3], [7, 0]],)]),
+    ("_cb: array<array<array<double>>>", [([[[0.1, 0.2]], [[0.3, 0.4]]],)]),
+    ("cluster int, cvec array<double>, cnorm2 double", [(0, [1.0, 2.0], 5.0), (1, [0.0, 0.0], 0.0)]),
+    ("w array<double>", [([0.0, 0.0, 0.0, 0.0],)]),
+    ("cluster bigint, cq array<bigint>", [(0, [1, -2, 3]), (1, [4, 5, -6])]),
+    ("_pid int, _offset long", [(0, 0), (1, 17)]),
+    ("doc_id bigint, cluster bigint", [(3, 1), (1, 1)]),
+    ("doc_id string, cluster string", [("d3", "d1"), ("d1", "d1")]),
+    ("rank long, left string, right string, merged string, pair_count long",
+     [(1, "t", "h", "th", 9), (2, "th", "e", "the", 4)]),
+    ("_pid int, _roff long, _voff decimal(38,4)",
+     [(0, 0, Decimal(0)), (1, 5, Decimal("12345.6789"))]),
+    ("total_rev double", [(12345.6789,)]),
+    ("_pid int, _woff decimal(38,2)", [(0, Decimal(0)), (1, Decimal("98.76"))]),
+    ("table_name string, n_rows bigint", [("dim_categoria", 150), ("dim_clasificacion", 5)]),
+    ("n_rows long, revenue double, n_null_custkey long, max_orderkey long",
+     [(1500, 2.5e8, 0, 60000)]),
+    ("snapshot_date string", [("1995-01-01",), ("1997-06-30",)]),
+    ("band string, lo double, hi double", [("low", 0.0, 20.0), ("high", 50.0, 1e18)]),
+    ("planes: array<array<bigint>>", [([[1, -1, 0], [0, 1, 1]],)]),
+    ("token string, est_count long, n_total long", [("the", 42, 900)]),
+    ("token string", [("the",), ("of",)]),
+]
+
+
+@pytest.mark.parametrize("ddl,rows", _LOCAL_FRAME_CASES)
+def test_local_frame_equals_create_dataframe(spark, ddl, rows):
+    """local_frame gives the frame createDataFrame(rows, ddl) gives —
+    same schema, same rows — as a LocalRelation: its physical plan is
+    a LocalTableScan, not a scan of a Python RDD."""
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+
+
+def test_local_frame_rejects_rows_of_the_wrong_width(spark):
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, 2, 3)], "a int, b int")
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, 2), (3,)], "a int, b int")
+
+
+def test_driver_rows_reach_spark_only_through_local_frame():
+    """Every frame over driver-held rows is built by local_frame: no
+    ``createDataFrame(`` anywhere in the package outside it."""
+    import inspect
+    import pathlib
+
+    import proceso_de_etl_spark
+    from proceso_de_etl_spark.sources import local
+
+    pkg = pathlib.Path(proceso_de_etl_spark.__file__).parent
+    lines, start = inspect.getsourcelines(local_frame)
+    span = range(start, start + len(lines))
+    stray = [
+        f"{path.relative_to(pkg)}:{no}"
+        for path in sorted(pkg.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+        and not (path == pathlib.Path(inspect.getsourcefile(local)) and no in span)
+    ]
+    assert stray == []
