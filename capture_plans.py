@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Capture .explain("formatted") output for named queries() keys.
+r"""Capture .explain("formatted") output for named queries() keys.
 
 Usage: python capture_plans.py <outdir> <suffix> <key> [<key> ...]
 
