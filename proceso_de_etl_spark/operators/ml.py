@@ -1533,8 +1533,12 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _supported_edges_sql() -> str:
-    return f"""op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-pair AS (
+    # MATERIALIZED: DuckDB 1.0 would otherwise inline op into both
+    # sides of the self-join and pair into every reader (sf0.1 on a
+    # 4-vCPU machine: the graph_connected_components oracle 18 s ->
+    # 0.9 s, same rows)
+    return f"""op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+pair AS MATERIALIZED (
   SELECT a.p AS u, b.p AS v
   FROM op a JOIN op b ON a.ok = b.ok AND a.p < b.p
   GROUP BY 1, 2 HAVING COUNT(*) >= {MIN_SUPPORT}
@@ -1665,6 +1669,42 @@ def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nodes
 
 
+def _lpa_prelude_sql() -> str:
+    """The opening WITH clause of all five community oracles: the
+    support-filtered ``pair`` set, its symmetric ``edges``, the
+    unrolled LPA ladder l0 … l{LPA_ROUNDS} and ``labels(node, comm)``,
+    its last round. Every CTE is MATERIALIZED: DuckDB inlines plain
+    CTEs, and the Louvain oracles stack move rounds and Q blocks on
+    this ladder, so inlining expands the scan tree exponentially
+    (observed: >20k open file handles)."""
+    rounds = "".join(
+        f""",
+r{i} AS MATERIALIZED (
+  SELECT e.src AS node, l.label, COUNT(*) AS c
+  FROM edges e JOIN l{i - 1} l ON l.node = e.dst GROUP BY 1, 2
+),
+l{i} AS MATERIALIZED (
+  SELECT node, label FROM (
+    SELECT node, label,
+           row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
+    FROM r{i}
+  ) WHERE rn = 1
+)"""
+        for i in range(1, LPA_ROUNDS + 1)
+    )
+    return f"""
+WITH {_supported_edges_sql()},
+edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM pair UNION ALL SELECT v, u FROM pair),
+l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM edges){rounds},
+labels AS MATERIALIZED (SELECT node, label AS comm FROM l{LPA_ROUNDS})"""
+
+
+ORACLES["graph_label_propagation"] = f"""{_lpa_prelude_sql()}
+SELECT comm AS community, CAST(COUNT(*) AS BIGINT) AS n_members
+FROM labels GROUP BY 1
+"""
+
+
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A93 — Newman modularity of the A92 label-propagation
     partition, reported per community: Q_c = intra_c/m −
@@ -1684,9 +1724,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges_supported(spark, sf_dir)
     lu = labels.withColumnRenamed("node", "u").withColumnRenamed("community", "cu")
     lv = labels.withColumnRenamed("node", "v").withColumnRenamed("community", "cv")
-    # NOTE (r13): a pair-aggregate + node-sized-members form was tried
-    # and REVERTED — see graph_louvain_move.q_total: at the gate SF
-    # the support graph is tiny (m = 3,573 at sf0.1), the repeated
+    # NOTE (r13): a pair-aggregate + node-sized-members form (group
+    # the labeled edges by (cu, cv) once, derive intra + degree sums
+    # from the tiny pair frame) was tried and REVERTED: at the gate
+    # SF the support graph is tiny (m = 3,573 at sf0.1), the repeated
     # joins are broadcast-cheap, and the added exchanges cost more
     # than the saved re-executions (interleaved A/B ~+1.1 s).
     labeled_edges = edges.join(lu, "u").join(lv, "v")
@@ -1729,48 +1770,11 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_oracle_sql() -> str:
-    rounds = []
-    for i in range(1, LPA_ROUNDS + 1):
-        p = i - 1
-        rounds.append(
-            f"""r{i} AS (
-  SELECT e.src AS node, l.label, COUNT(*) AS c
-  FROM edges e JOIN l{p} l ON l.node = e.dst GROUP BY 1, 2
-),
-l{i} AS (
-  SELECT node, label FROM (
-    SELECT node, label,
-           row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-    FROM r{i}
-  ) WHERE rn = 1
-)"""
-        )
-    ladder = ",\n".join(rounds)
-    return f"""
-WITH {_supported_edges_sql()},
-edges AS (SELECT u AS src, v AS dst FROM pair UNION ALL SELECT v, u FROM pair),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-{ladder}
-SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-FROM l{LPA_ROUNDS} GROUP BY 1
-"""
-
-
-ORACLES["graph_label_propagation"] = _lpa_oracle_sql()
-
-
-def _modularity_oracle_sql() -> str:
-    # same ladder as A92's oracle, then the Q arithmetic over exact
-    # integer counts (one rounded float expression per community row)
-    ladder_sql = _lpa_oracle_sql()
-    # strip the final SELECT of the LPA oracle; rebuild with labels
-    head, _, _ = ladder_sql.rpartition("SELECT label AS community")
-    head = head.rstrip().rstrip(",") + ","
-    return f"""{head}
-labels AS (SELECT node, label AS community FROM l{LPA_ROUNDS}),
+# the LPA prelude, then the Q arithmetic over exact integer counts
+# (one rounded float expression per community row)
+ORACLES["graph_modularity"] = f"""{_lpa_prelude_sql()},
 le AS (
-  SELECT p.u, p.v, cu.community AS cu, cv.community AS cv
+  SELECT p.u, p.v, cu.comm AS cu, cv.comm AS cv
   FROM pair p JOIN labels cu ON cu.node = p.u JOIN labels cv ON cv.node = p.v
 ),
 m AS (SELECT COUNT(*) AS m FROM le),
@@ -1793,16 +1797,35 @@ FROM deg LEFT JOIN intra USING (community), m
 """
 
 
-ORACLES["graph_modularity"] = _modularity_oracle_sql()
+# ---------------------------------------------------------------------------
+# Louvain stages. Each stage has one Spark implementation and one SQL
+# fragment, and the four Louvain keys (A94 move, A95 coarsen, A97
+# ladder, A97b fixpoint) are compositions of them:
+#   move round   _weighted_louvain_move   / _wmove_sql
+#   Q ledger     _q_ledger                / _q_block_sql
+#   contraction  _contract                / _contract_sql
+# ---------------------------------------------------------------------------
 
 
+def _lpa_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The A92 labels as a Louvain partition (node, comm)."""
+    return lpa_labels(spark, sf_dir).select(F.col("id").alias("node"), F.col("label").alias("comm"))
 
 
-def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A94 — one synchronous Louvain local-move round (Blondel et al.
-    2008) refining the A92 LPA partition, with the gain comparison
-    made INTEGER-EXACT so determinism needs no float margins at all:
-    moving node i (degree k_i, removed from its current community
+def _unit_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The support graph as the Louvain stages read it: its (u, v)
+    edges, the same edges at unit weight (u, v, w = 1), and the 1-row
+    total weight (m)."""
+    edges = copurchase_edges_supported(spark, sf_dir)
+    w1 = edges.select("u", "v", F.lit(1).cast("bigint").alias("w"))
+    return edges, w1, edges.agg(F.count("*").cast("bigint").alias("m"))
+
+
+def _weighted_louvain_move(labels: DataFrame, wedges: DataFrame, m_row: DataFrame) -> DataFrame:
+    """One synchronous Louvain local-move round (Blondel et al. 2008)
+    on a weighted multigraph, with the gain comparison made
+    INTEGER-EXACT so determinism needs no float margins: moving node
+    i (weighted degree k_i, removed from its current community
     first, the standard convention) into community c changes Q by
     ΔQ ∝ k_{i,c}/m − Σtot'(c)·k_i/(2m²); multiplying by the positive
     constant 2m² gives the integer score
@@ -1810,48 +1833,48 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_i when c is i's own community. Every node simultaneously takes
     argmax_c s(i,c) over its neighbor communities ∪ {stay}, ties to
     the smallest community id, moving only on a STRICT improvement
-    over staying. One round (the classic algorithm loops until Q
-    stalls, sequentially — order-dependent and thus oracle-hostile;
-    the synchronous single round is the deterministic unit both
-    engines can replay, and composes: run it again on its own
-    output). Output: the refinement ledger — communities/Q before
-    and after (A93's exact-integer arithmetic, 6dp-rounded at the
-    edge) and the move count. Plan shape: the per-node candidate
-    frame is one edge⋈labels join + a (node, community) count, all
-    keyed shuffles linear in m; the rest is small keyed aggregates.
-    Q CAN decrease under synchronous moves (two adjacent nodes may
-    swap into each other's communities) — the ledger reports, not
-    asserts, the delta; the oracle pins it either way."""
-    labels = lpa_labels(spark, sf_dir).select(
-        F.col("id").alias("node"), F.col("label").alias("comm")
+    over staying.
+
+    ``wedges`` is (u, v, w) with u <= v and self-loops allowed;
+    ``labels`` is (node, comm); ``m_row`` a broadcastable 1-row frame
+    with total weight m. Self-loops contribute 2w to their node's
+    weighted degree and w to m, and are EXCLUDED from k_{i,c} (they
+    move with the node, so they cancel in every gain comparison).
+    Plan shape: one edge⋈labels join + a (node, community) sum, all
+    keyed shuffles linear in the edge count; the rest is small keyed
+    aggregates. Integer headroom: scores are bounded by
+    2m·max(k) ≤ 4m² — BIGINT-safe while 2m < 3e9. Returns
+    (node, own, new_comm)."""
+    # weighted degree over both endpoints of every edge, so a loop
+    # counts its w twice
+    deg = (
+        wedges.select(F.col("u").alias("node"), "w")
+        .unionByName(wedges.select(F.col("v").alias("node"), "w"))
+        .groupBy("node")
+        .agg(F.sum("w").alias("k"))
     )
-    edges = copurchase_edges_supported(spark, sf_dir)
-    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    m_row = F.broadcast(edges.agg(F.count("*").alias("m")))
-    deg = sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("k"))
-    tot = (
-        labels.join(deg, "node")
-        .groupBy("comm")
-        .agg(F.sum("k").alias("tot"))
-    )
-    # k_{i,c}: edges from node to community c (via dst labels)
+    nonloop = wedges.filter(F.col("u") < F.col("v"))
+    sym = nonloop.select(
+        F.col("u").alias("src"), F.col("v").alias("dst"), "w"
+    ).unionByName(nonloop.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
+    tot = labels.join(deg, "node").groupBy("comm").agg(F.sum("k").alias("tot"))
     kic = (
-        sym.join(labels.withColumnRenamed("node", "dst").withColumnRenamed("comm", "c"), "dst")
+        sym.join(
+            labels.withColumnRenamed("node", "dst").withColumnRenamed("comm", "c"),
+            "dst",
+        )
         .groupBy(F.col("src").alias("node"), "c")
-        .agg(F.count("*").alias("kic"))
+        .agg(F.sum("w").alias("kic"))
     )
     # candidate scores: neighbor communities plus the stay option
-    # (stay has k_{i,own} from kic when i has intra edges, else 0 —
-    # covered by the left join + coalesce below)
+    # (the union guarantees the stay row even with no intra edge)
     own = labels.select("node", F.col("comm").alias("own"))
     cand = (
         kic.join(own, "node")
-        .unionByName(  # ensure the stay option exists even with no intra edge
-            own.select("node", F.col("own").alias("c"), F.lit(0).cast("bigint").alias("kic"), "own")
-            .select("node", "c", "kic", "own"),
-            allowMissingColumns=False,
+        .unionByName(
+            own.select(
+                "node", F.col("own").alias("c"), F.lit(0).cast("bigint").alias("kic"), "own"
+            )
         )
         .groupBy("node", "c", "own")
         .agg(F.max("kic").alias("kic"))
@@ -1859,16 +1882,17 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cand.join(deg, "node")
         .join(tot.withColumnRenamed("comm", "c"), "c")
-        .crossJoin(m_row)
+        .crossJoin(F.broadcast(m_row))
         .withColumn(
-            "tot_adj", F.col("tot") - F.when(F.col("c") == F.col("own"), F.col("k")).otherwise(F.lit(0))
+            "tot_adj",
+            F.col("tot") - F.when(F.col("c") == F.col("own"), F.col("k")).otherwise(F.lit(0)),
         )
         .withColumn("score", 2 * F.col("m") * F.col("kic") - F.col("tot_adj") * F.col("k"))
     )
     # best and stay folded into ONE aggregate over scored (r13): the
     # former best⋈stay join re-executed the whole scored subtree —
-    # including the edge-sized kic join — a second time. cand
-    # guarantees exactly one c == own row per node, so
+    # including the edge-sized kic join — a second time per round.
+    # cand guarantees exactly one c == own row per node, so
     # max(when(c == own, score)) IS the stay score; tie-break and the
     # strict-improvement rule are unchanged.
     best = (
@@ -1885,197 +1909,430 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stay_score",
         )
     )
-    # eager checkpoint (r13): moved fans out to the after-Q ledger and
-    # the move count — without it each consumer re-executed the whole
-    # move plan (kic join included) from the parquet scan up
-    moved = best.select(
+    return best.select(
         "node",
         "own",
         F.when(F.col("best_score") > F.col("stay_score"), F.col("best_c"))
         .otherwise(F.col("own"))
         .alias("new_comm"),
-    ).localCheckpoint(eager=True)
+    )
 
-    def q_total(lbl: DataFrame) -> DataFrame:
-        # NOTE (r13): a pair-aggregate form (group the labeled edges
-        # by (cu, cv) once, derive intra + degree sums from the tiny
-        # pair frame) was tried and REVERTED: at the gate SF the
-        # support graph is tiny (m = 3,573 at sf0.1) so these joins
-        # are broadcast-cheap and the extra pair exchange + explode
-        # stages cost more scheduling than the saved re-executions
-        # (interleaved A/B: ~+1.1 s on graph_modularity). The win
-        # kept from that experiment is the moved-checkpoint + stay
-        # fold above, measured 18.6 → 8.7 s interleaved.
-        lu = lbl.withColumnRenamed("node", "u").withColumnRenamed("lab", "cu")
-        lv = lbl.withColumnRenamed("node", "v").withColumnRenamed("lab", "cv")
-        le = edges.join(lu, "u").join(lv, "v")
-        intra = le.filter(F.col("cu") == F.col("cv")).agg(F.count("*").alias("intra"))
-        dc = (
-            le.select(F.col("u").alias("node"), F.col("cu").alias("c"))
-            .unionByName(le.select(F.col("v").alias("node"), F.col("cv").alias("c")))
-            .groupBy("c")
-            .agg(F.count("*").alias("dsum"))
+
+def _weighted_q_num(labels: DataFrame, wedges: DataFrame, m_row: DataFrame) -> DataFrame:
+    """Exact integer modularity ledger of a partition over a weighted
+    multigraph (u ≤ v, self-loops allowed, every endpoint labeled):
+    one row with n_communities, intra_w (Σw of cu==cv edges — loops
+    always intra), sum_deg_sq (Σ_c D_c², D_c = Σ weighted degree,
+    loops counting 2w) and q_num = 4m·intra_w − Σ D_c² (Newman Q
+    scaled by 4m² — the A97 integer discipline, so round acceptance
+    never compares floats). Weighted-contracted Q equals
+    original-partition Q, which is what lets the phase-2 loop measure
+    itself on the small graph. D_c is summed over the labeled edges'
+    two endpoint communities, so a loop adds its w twice without a
+    separate degree frame: one edge⋈labels join pair feeds both
+    aggregates, the shape of the SQL twin _q_block_sql."""
+    lu = labels.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
+    lv = labels.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
+    le = wedges.join(lu, "u").join(lv, "v")
+    intra = le.filter(F.col("cu") == F.col("cv")).agg(
+        F.coalesce(F.sum("w"), F.lit(0)).cast("bigint").alias("intra_w")
+    )
+    dc = (
+        le.select(F.col("cu").alias("c"), "w")
+        .unionByName(le.select(F.col("cv").alias("c"), "w"))
+        .groupBy("c")
+        .agg(F.sum("w").alias("d"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_communities"),
+            F.sum(F.col("d") * F.col("d")).cast("bigint").alias("sum_deg_sq"),
         )
-        sq = dc.crossJoin(m_row).agg(
-            F.sum(F.pow(F.col("dsum") / (2 * F.col("m")), 2)).alias("sumsq"),
-            F.count("*").cast("bigint").alias("n_comms"),
+    )
+    return (
+        dc.crossJoin(intra)
+        .crossJoin(F.broadcast(m_row))
+        .select(
+            "n_communities",
+            "intra_w",
+            "sum_deg_sq",
+            (4 * F.col("m") * F.col("intra_w") - F.col("sum_deg_sq"))
+            .cast("bigint")
+            .alias("q_num"),
+            F.col("m").cast("bigint").alias("m"),
         )
-        return (
-            intra.crossJoin(m_row)
-            .crossJoin(F.broadcast(sq))
-            .select(
-                (F.round(F.col("intra") / F.col("m") - F.col("sumsq"), 6) + F.lit(0.0)).alias("q"),
-                "n_comms",
-            )
-        )
-    before = q_total(labels.select("node", F.col("comm").alias("lab")))
-    after = q_total(moved.select("node", F.col("new_comm").alias("lab")))
+    )
+
+
+def _q_ledger(labels: DataFrame, wedges: DataFrame, m_row: DataFrame, *lead: Column) -> DataFrame:
+    """The quality row every Louvain stage reports: the ``lead``
+    columns, then _weighted_q_num's exact pieces (n_communities,
+    intra_edges, sum_deg_sq, q_num) and q = round(q_num / 4m², 6),
+    the one place Q becomes a float (+ 0.0 folds IEEE -0.0 to +0.0,
+    which the repr-compare gate tells apart). On an empty graph
+    q_num is NULL, so q is NULL rather than a division by zero."""
+    return _weighted_q_num(labels, wedges, m_row).select(
+        *lead,
+        "n_communities",
+        F.col("intra_w").alias("intra_edges"),
+        "sum_deg_sq",
+        "q_num",
+        (F.round(F.col("q_num") / (4.0 * F.col("m") * F.col("m")), 6) + F.lit(0.0)).alias("q"),
+    )
+
+
+def _contract(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """Louvain phase 2: contract every community of ``labels``
+    (node, comm) into a supernode and count the unit ``edges``
+    (u, v) between supernodes — (u, v, w) with u <= v, intra-
+    community edges folding into the supernode's self-loop weight
+    (the standard convention, where loops carry the contracted
+    Σ_in). One edge⋈labels join pair + one keyed count, linear in
+    m; the output is communities², typically tiny."""
+    lu = labels.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
+    lv = labels.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
+    return (
+        edges.join(lu, "u")
+        .join(lv, "v")
+        .select(F.least("cu", "cv").alias("u"), F.greatest("cu", "cv").alias("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").cast("bigint").alias("w"))
+    )
+
+
+def _singletons(edges: DataFrame) -> DataFrame:
+    """The classic Louvain start: every endpoint of ``edges`` in its
+    own community, (node, comm = node)."""
+    nodes = (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    return nodes.select("node", F.col("node").alias("comm"))
+
+
+def _project_back(lvl0: DataFrame, lvl1: DataFrame) -> DataFrame:
+    """Labels of the original nodes after a level-1 round: node →
+    its level-0 community → that supernode's level-1 community."""
+    up = lvl1.select(F.col("node").alias("comm"), F.col("comm").alias("comm1"))
+    return lvl0.join(up, "comm").select("node", F.col("comm1").alias("comm"))
+
+
+def _wmove_sql(p: str, edges_cte: str, labels_cte: str, m_cte: str) -> str:
+    """CTE block for one weighted local-move round (prefix ``p``), the
+    SQL twin of _weighted_louvain_move: consumes {edges_cte}(u, v, w)
+    / {labels_cte}(node, comm) / {m_cte}(m); defines
+    {p}moved(node, own, new_comm)."""
+    return f"""{p}deg AS MATERIALIZED (
+  SELECT node, SUM(w) AS k FROM (
+    SELECT u AS node, w FROM {edges_cte} UNION ALL SELECT v, w FROM {edges_cte}
+  ) GROUP BY 1
+),
+{p}sym AS MATERIALIZED (
+  SELECT u AS src, v AS dst, w FROM {edges_cte} WHERE u < v
+  UNION ALL SELECT v, u, w FROM {edges_cte} WHERE u < v
+),
+{p}tot AS MATERIALIZED (
+  SELECT comm, SUM(k) AS tot FROM {labels_cte} JOIN {p}deg USING (node) GROUP BY 1
+),
+{p}kic AS MATERIALIZED (
+  SELECT e.src AS node, ld.comm AS c, SUM(e.w) AS kic
+  FROM {p}sym e JOIN {labels_cte} ld ON ld.node = e.dst GROUP BY 1, 2
+),
+{p}cand AS MATERIALIZED (
+  SELECT node, c, MAX(kic) AS kic, MAX(own) AS own FROM (
+    SELECT k.node, k.c, k.kic, o.comm AS own
+    FROM {p}kic k JOIN {labels_cte} o ON o.node = k.node
+    UNION ALL
+    SELECT node, comm AS c, 0, comm FROM {labels_cte}
+  ) GROUP BY node, c
+),
+{p}scored AS MATERIALIZED (
+  SELECT cd.node, cd.c, cd.own,
+         2 * m.m * cd.kic
+           - (t.tot - CASE WHEN cd.c = cd.own THEN d.k ELSE 0 END) * d.k AS score
+  FROM {p}cand cd JOIN {p}deg d ON d.node = cd.node
+  JOIN {p}tot t ON t.comm = cd.c, {m_cte} m
+),
+{p}best AS MATERIALIZED (
+  SELECT node, own, score AS best_score, c AS best_c FROM (
+    SELECT node, own, score, c,
+           row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn
+    FROM {p}scored
+  ) WHERE rn = 1
+),
+{p}stay AS MATERIALIZED (SELECT node, score AS stay_score FROM {p}scored WHERE c = own),
+{p}moved AS MATERIALIZED (
+  SELECT b.node, b.own,
+         CASE WHEN b.best_score > s.stay_score THEN b.best_c ELSE b.own END AS new_comm
+  FROM {p}best b JOIN {p}stay s ON s.node = b.node
+)"""
+
+
+def _q_block_sql(p: str, lbl: str) -> str:
+    """CTE block for one Q ledger row (prefix ``p``), the SQL twin of
+    _q_ledger at unit weight: consumes {lbl}(node, comm), ``pair``
+    and mr(m); defines {p}q(n_communities, intra_edges, sum_deg_sq,
+    q_num, q)."""
+    return f"""{p}le AS MATERIALIZED (
+  SELECT p.u, p.v, cu.comm AS cu, cv.comm AS cv
+  FROM pair p JOIN {lbl} cu ON cu.node = p.u JOIN {lbl} cv ON cv.node = p.v
+),
+{p}deg AS MATERIALIZED (
+  SELECT c, CAST(COUNT(*) AS BIGINT) AS d FROM (
+    SELECT u AS node, cu AS c FROM {p}le UNION ALL SELECT v, cv FROM {p}le
+  ) GROUP BY c
+),
+{p}agg AS (
+  SELECT CAST((SELECT COUNT(*) FROM {p}deg) AS BIGINT) AS n_communities,
+         CAST((SELECT COUNT(*) FROM {p}le WHERE cu = cv) AS BIGINT) AS intra_edges,
+         CAST((SELECT SUM(d * d) FROM {p}deg) AS BIGINT) AS sum_deg_sq
+),
+{p}q AS (
+  SELECT n_communities, intra_edges, sum_deg_sq,
+         CAST(4 * m.m * intra_edges - sum_deg_sq AS BIGINT) AS q_num,
+         ROUND(CAST(4 * m.m * intra_edges - sum_deg_sq AS BIGINT)
+               / (4e0 * m.m * m.m), 6) + 0.0 AS q
+  FROM {p}agg, mr m
+)"""
+
+
+def _contract_sql(lbl: str) -> str:
+    """The CTE contracted(u, v, w): the SQL twin of _contract over
+    ``pair`` and {lbl}(node, comm)."""
+    return f"""contracted AS MATERIALIZED (
+  SELECT LEAST(cu.comm, cv.comm) AS u, GREATEST(cu.comm, cv.comm) AS v,
+         CAST(COUNT(*) AS BIGINT) AS w
+  FROM pair p JOIN {lbl} cu ON cu.node = p.u JOIN {lbl} cv ON cv.node = p.v
+  GROUP BY 1, 2
+)"""
+
+
+def _lpa_move_sql() -> str:
+    """The opening of the A94 and A97 oracles: the LPA prelude, then
+    mr(m), w1(u, v, w = 1), one unit-weight move round on the LPA
+    labels (prefix a_) and lvl0(node, comm), the moved labels."""
+    return f"""{_lpa_prelude_sql()},
+mr AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pair),
+w1 AS MATERIALIZED (SELECT u, v, CAST(1 AS BIGINT) AS w FROM pair),
+{_wmove_sql("a_", "w1", "labels", "mr")},
+lvl0 AS MATERIALIZED (SELECT node, new_comm AS comm FROM a_moved)"""
+
+
+def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A94 — one synchronous Louvain local-move round refining the
+    A92 LPA partition: _weighted_louvain_move at w = 1 (integer-exact
+    gain score, smallest-id tie-break, strict-improvement rule). One
+    round (the classic algorithm loops until Q stalls, sequentially —
+    order-dependent and thus oracle-hostile; the synchronous single
+    round is the deterministic unit both engines can replay, and
+    composes: run it again on its own output). Output: the
+    refinement ledger — communities/Q before and after (_q_ledger's
+    exact-integer q_num, 6dp-rounded at the edge) and the move count.
+    Q CAN decrease under synchronous moves (two adjacent nodes may
+    swap into each other's communities) — the ledger reports, not
+    asserts, the delta; the oracle pins it either way."""
+    labels = _lpa_partition(spark, sf_dir)
+    _, w1, m_row = _unit_graph(spark, sf_dir)
+    # eager checkpoint (r13): moved fans out to the after-Q ledger and
+    # the move count — without it each consumer re-executed the whole
+    # move plan (kic join included) from the parquet scan up
+    moved = _weighted_louvain_move(labels, w1, m_row).localCheckpoint(eager=True)
+    before = _q_ledger(labels, w1, m_row)
+    after = _q_ledger(moved.select("node", F.col("new_comm").alias("comm")), w1, m_row)
     n_moves = moved.filter(F.col("new_comm") != F.col("own")).agg(
         F.count("*").cast("bigint").alias("n_moves")
     )
     return (
-        before.select(F.col("n_comms").alias("n_comms_before"), F.col("q").alias("q_before"))
-        .crossJoin(after.select(F.col("n_comms").alias("n_comms_after"), F.col("q").alias("q_after")))
+        before.select(F.col("n_communities").alias("n_comms_before"), F.col("q").alias("q_before"))
+        .crossJoin(
+            after.select(F.col("n_communities").alias("n_comms_after"), F.col("q").alias("q_after"))
+        )
         .crossJoin(F.broadcast(n_moves))
     )
 
 
-def _louvain_move_oracle_sql() -> str:
-    ladder_sql = _lpa_oracle_sql()
-    head, _, _ = ladder_sql.rpartition("SELECT label AS community")
-    head = head.rstrip().rstrip(",") + ","
-    return f"""{head}
-labels AS MATERIALIZED (SELECT node, label AS comm FROM l{LPA_ROUNDS}),
-m AS (SELECT COUNT(*) AS m FROM pair),
-deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS k FROM edges GROUP BY 1),
-tot AS MATERIALIZED (
-  SELECT comm, SUM(k) AS tot FROM labels JOIN deg USING (node) GROUP BY 1
-),
-kic AS MATERIALIZED (
-  SELECT e.src AS node, ld.comm AS c, COUNT(*) AS kic
-  FROM edges e JOIN labels ld ON ld.node = e.dst GROUP BY 1, 2
-),
-cand AS MATERIALIZED (
-  SELECT node, c, MAX(kic) AS kic, MAX(own) AS own FROM (
-    SELECT k.node, k.c, k.kic, o.comm AS own
-    FROM kic k JOIN labels o ON o.node = k.node
-    UNION ALL
-    SELECT node, comm AS c, 0, comm FROM labels
-  ) GROUP BY node, c
-),
-scored AS MATERIALIZED (
-  SELECT cd.node, cd.c, cd.own,
-         2 * m.m * cd.kic
-           - (t.tot - CASE WHEN cd.c = cd.own THEN d.k ELSE 0 END) * d.k AS score
-  FROM cand cd JOIN deg d ON d.node = cd.node
-  JOIN tot t ON t.comm = cd.c, m
-),
-best AS MATERIALIZED (
-  SELECT node, own, score AS best_score, c AS best_c FROM (
-    SELECT node, own, score, c,
-           row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-stay AS MATERIALIZED (SELECT node, score AS stay_score FROM scored WHERE c = own),
-moved AS MATERIALIZED (
-  SELECT b.node, b.own,
-         CASE WHEN b.best_score > s.stay_score THEN b.best_c ELSE b.own END AS new_comm
-  FROM best b JOIN stay s ON s.node = b.node
-),
-le_before AS MATERIALIZED (
-  SELECT p.u, p.v, cu.comm AS cu, cv.comm AS cv
-  FROM pair p JOIN labels cu ON cu.node = p.u JOIN labels cv ON cv.node = p.v
-),
-le_after AS MATERIALIZED (
-  SELECT p.u, p.v, cu.new_comm AS cu, cv.new_comm AS cv
-  FROM pair p JOIN moved cu ON cu.node = p.u JOIN moved cv ON cv.node = p.v
-),
-qb AS (
-  SELECT ROUND(
-           (SELECT COUNT(*) FROM le_before WHERE cu = cv) * 1.0 / m.m
-           - (SELECT SUM(POW(dsum * 1.0 / (2 * m.m), 2)) FROM (
-                SELECT c, COUNT(*) AS dsum FROM (
-                  SELECT u AS node, cu AS c FROM le_before
-                  UNION ALL SELECT v, cv FROM le_before
-                ) GROUP BY 1)), 6) + 0.0 AS q_before,
-         (SELECT CAST(COUNT(DISTINCT cu) AS BIGINT) FROM (
-            SELECT cu FROM le_before UNION ALL SELECT cv FROM le_before
-          )) AS n_comms_before
-  FROM m
-),
-qa AS (
-  SELECT ROUND(
-           (SELECT COUNT(*) FROM le_after WHERE cu = cv) * 1.0 / m.m
-           - (SELECT SUM(POW(dsum * 1.0 / (2 * m.m), 2)) FROM (
-                SELECT c, COUNT(*) AS dsum FROM (
-                  SELECT u AS node, cu AS c FROM le_after
-                  UNION ALL SELECT v, cv FROM le_after
-                ) GROUP BY 1)), 6) + 0.0 AS q_after,
-         (SELECT CAST(COUNT(DISTINCT cu) AS BIGINT) FROM (
-            SELECT cu FROM le_after UNION ALL SELECT cv FROM le_after
-          )) AS n_comms_after
-  FROM m
-)
-SELECT n_comms_before, q_before, n_comms_after, q_after,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM moved WHERE new_comm <> own) AS n_moves
-FROM qb, qa
+ORACLES["graph_louvain_move"] = f"""{_lpa_move_sql()},
+{_q_block_sql("s0", "labels")},
+{_q_block_sql("s1", "lvl0")}
+SELECT b.n_communities AS n_comms_before, b.q AS q_before,
+       a.n_communities AS n_comms_after, a.q AS q_after,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM a_moved WHERE new_comm <> own) AS n_moves
+FROM s0q b, s1q a
 """
-
-
-ORACLES["graph_louvain_move"] = _louvain_move_oracle_sql()
-
-
 
 
 def graph_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A95 — community-graph coarsening (Louvain phase 2, Blondel et
-    al. 2008): contract every A92 community into a supernode and
-    aggregate the original edges into the weighted community
-    multigraph — inter-community edges become (cu, cv, weight) with
-    cu < cv, intra-community edges fold into the supernode's
-    self-loop weight. This is the frame the NEXT local-move round
-    (A94) would run on one level up, and on its own it is the
-    community-interaction summary (which part clusters co-sell with
-    which). Exact integer arithmetic end to end; one edge⋈labels
-    join + one keyed count — linear in m, output is
-    communities², typically tiny. Self-loops are emitted with
-    cu = cv (weight = intra edge count), matching the standard
-    Louvain convention where they carry the contracted Σ_in."""
-    labels = lpa_labels(spark, sf_dir).select(
-        F.col("id").alias("node"), F.col("label").alias("comm")
-    )
-    edges = copurchase_edges_supported(spark, sf_dir)
-    lu = labels.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu_raw")
-    lv = labels.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv_raw")
-    return (
-        edges.join(lu, "u")
-        .join(lv, "v")
-        .select(
-            F.least("cu_raw", "cv_raw").alias("cu"),
-            F.greatest("cu_raw", "cv_raw").alias("cv"),
-        )
-        .groupBy("cu", "cv")
-        .agg(F.count("*").cast("bigint").alias("weight"))
+    al. 2008): _contract of the A92 partition, every community a
+    supernode and the original edges aggregated into the weighted
+    community multigraph — inter-community edges become
+    (cu, cv, weight) with cu < cv, intra-community edges fold into
+    the supernode's self-loop (cu = cv, weight = intra edge count).
+    This is the frame the NEXT local-move round runs on one level up
+    (A97 and A97b contract with the same function), and on its own it
+    is the community-interaction summary (which part clusters co-sell
+    with which). Exact integer arithmetic end to end."""
+    contracted = _contract(copurchase_edges_supported(spark, sf_dir), _lpa_partition(spark, sf_dir))
+    return contracted.select(
+        F.col("u").alias("cu"), F.col("v").alias("cv"), F.col("w").alias("weight")
     )
 
 
-def _coarsen_oracle_sql() -> str:
-    ladder_sql = _lpa_oracle_sql()
-    head, _, _ = ladder_sql.rpartition("SELECT label AS community")
-    head = head.rstrip().rstrip(",") + ","
-    return f"""{head}
-labels AS (SELECT node, label AS comm FROM l{LPA_ROUNDS})
-SELECT LEAST(cu.comm, cv.comm) AS cu, GREATEST(cu.comm, cv.comm) AS cv,
-       CAST(COUNT(*) AS BIGINT) AS weight
-FROM pair p JOIN labels cu ON cu.node = p.u JOIN labels cv ON cv.node = p.v
-GROUP BY 1, 2
+ORACLES["graph_coarsen"] = f"""{_lpa_prelude_sql()},
+{_contract_sql("labels")}
+SELECT u AS cu, v AS cv, w AS weight FROM contracted
 """
 
 
-ORACLES["graph_coarsen"] = _coarsen_oracle_sql()
+LOUVAIN_FIXPOINT_MAX_ROUNDS = 20  # safety bound; gate data converges in <6
 
 
+def _louvain_phase(
+    labels: DataFrame,
+    wedges: DataFrame,
+    m_row: DataFrame,
+    max_rounds: int = LOUVAIN_FIXPOINT_MAX_ROUNDS,
+) -> tuple[DataFrame, int]:
+    """Run synchronous local-move rounds TO FIXPOINT under monotone-Q
+    acceptance: after each round the EXACT integer q_num of the new
+    labeling is compared to the incumbent and the round is kept only
+    if it strictly improved — the guard that makes the synchronous
+    schedule safe (two adjacent nodes CAN swap into each other's
+    communities and lower Q; A94 documents the oscillation, this
+    phase rejects it and stops). Terminates when a round yields no
+    moves or no exact-Q gain, or at ``max_rounds``. Per-round state is
+    a node-sized frame, eager-localCheckpointed (lineage truncation,
+    the T44 discipline); the q ledger is a 1-row collect per round.
+    Returns (labels at fixpoint, accepted-round count)."""
+    cur = labels.localCheckpoint(eager=True)
+    q_cur = _weighted_q_num(cur, wedges, m_row).collect()[0]["q_num"]
+    accepted = 0
+    for _ in range(max_rounds):
+        # checkpoint the move output BEFORE inspecting it: the movers
+        # check and the next labeling both read the same materialized
+        # round, so the move plan executes exactly once per round
+        moved = _weighted_louvain_move(cur, wedges, m_row).localCheckpoint(eager=True)
+        if moved.filter(F.col("new_comm") != F.col("own")).limit(1).count() == 0:
+            break
+        nxt = moved.select("node", F.col("new_comm").alias("comm"))
+        q_nxt = _weighted_q_num(nxt, wedges, m_row).collect()[0]["q_num"]
+        if q_nxt <= q_cur:
+            break  # synchronous swap oscillation — reject and stop
+        cur, q_cur = nxt, q_nxt
+        accepted += 1
+    return cur, accepted
+
+
+def graph_louvain_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A97b — weighted Louvain run to FIXPOINT (the r7 verdict's
+    named extension of the bounded ladder): phase 1 iterates
+    _weighted_louvain_move rounds from the classic singleton start
+    until no round improves exact integer Q (_louvain_phase), phase 2
+    contracts the fixpoint partition with A95's _contract (intra
+    edges → self-loops) and iterates the SAME move loop on it, labels
+    projected back. Every acceptance decision is an exact BIGINT
+    comparison (q_num = 4m·intra − ΣD_c²), so the fixpoint is
+    deterministic — but the ROUND COUNT is data-dependent, which is
+    why this key is rows-only by design (SQL cannot loop to a
+    data-dependent depth); A97's fixed two-level ladder is the
+    value-oracled twin of the same stages, and pytest pins
+    monotonicity, the no-improving-round fixpoint property, and
+    parallelism-invariance. Output: one _q_ledger row per stage
+    (singleton / phase1 / final) with the stage's round count and the
+    exact Q pieces on the ORIGINAL graph.
+
+    Scale: each round is one edge⋈labels join + keyed aggregates
+    (linear in m); the phase-2 graph is communities-sized. Integer
+    headroom: q_num bounded by 4m² — BIGINT-safe while 2m < 3e9; at
+    100 TB edge counts route the ledger through DECIMAL(38,0) (the
+    A105 overflow discipline)."""
+    edges, w1, m_row = _unit_graph(spark, sf_dir)
+    singleton = _singletons(edges)
+    lvl0, rounds0 = _louvain_phase(singleton, w1, m_row)
+    contracted = _contract(edges, lvl0)
+    lvl1, rounds1 = _louvain_phase(_singletons(contracted), contracted, m_row)
+    final = _project_back(lvl0, lvl1).localCheckpoint(eager=True)
+
+    def ledger(lbl: DataFrame, stage: str, n_rounds: int) -> DataFrame:
+        return _q_ledger(
+            lbl,
+            w1,
+            m_row,
+            F.lit(stage).alias("stage"),
+            F.lit(n_rounds).cast("bigint").alias("n_rounds"),
+        )
+
+    return (
+        ledger(singleton, "singleton", 0)
+        .unionByName(ledger(lvl0, "phase1", rounds0))
+        .unionByName(ledger(final, "final", rounds1))
+    )
+
+
+def graph_louvain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A97 — the full two-level Louvain cycle, end to end and
+    value-oracled: LPA seed → one local-move round (A94) → phase-2
+    contraction of the MOVED labels (A95's _contract: intra edges
+    become supernode self-loops) → a second local-move round on the
+    weighted community multigraph (the same _weighted_louvain_move,
+    singleton init — the standard phase-2 start) → labels projected
+    back to the original nodes. Every gain comparison is
+    integer-exact at both levels, so the whole ladder replays
+    bit-for-bit in DuckDB from the same SQL fragments as A94 and A95.
+
+    Output is the _q_ledger on the ORIGINAL graph, one row per stage
+    (lpa / move / ladder): community count, intra-edge count,
+    Σ degree², and Newman Q both as the EXACT integer numerator
+    q_num = 4m·intra − ΣD_c² (Q scaled by 4m² — no float anywhere in
+    the comparison chain) and 6dp-rounded; the 'lpa' and 'move' rows
+    are A94's before and after. Synchronous rounds can lower Q (A94's
+    documented swap oscillation); the ledger reports, the oracle pins
+    it either way."""
+    labels0 = _lpa_partition(spark, sf_dir)
+    edges, w1, m_row = _unit_graph(spark, sf_dir)
+
+    # each stage ends in a node-sized frame; eager localCheckpoints
+    # truncate the lineage so the three ledger consumers and the
+    # level-1 build don't each re-analyze the whole upstream ladder
+    lvl0 = (
+        _weighted_louvain_move(labels0, w1, m_row)
+        .select("node", F.col("new_comm").alias("comm"))
+        .localCheckpoint(eager=True)
+    )
+    contracted = _contract(edges, lvl0)
+    lvl1 = _weighted_louvain_move(_singletons(contracted), contracted, m_row).select(
+        "node", F.col("new_comm").alias("comm")
+    )
+    composed = _project_back(lvl0, lvl1).localCheckpoint(eager=True)
+
+    def q_row(lbl: DataFrame, stage: str) -> DataFrame:
+        return _q_ledger(lbl, w1, m_row, F.lit(stage).alias("stage"))
+
+    return (
+        q_row(labels0, "lpa")
+        .unionByName(q_row(lvl0, "move"))
+        .unionByName(q_row(composed, "ladder"))
+    )
+
+
+ORACLES["graph_louvain_ladder"] = f"""{_lpa_move_sql()},
+{_contract_sql("lvl0")},
+labels1 AS MATERIALIZED (
+  SELECT DISTINCT node, node AS comm FROM (
+    SELECT u AS node FROM contracted UNION ALL SELECT v FROM contracted
+  )
+),
+{_wmove_sql("b_", "contracted", "labels1", "mr")},
+composed AS MATERIALIZED (
+  SELECT l.node, m1.new_comm AS comm
+  FROM lvl0 l JOIN b_moved m1 ON m1.node = l.comm
+),
+{_q_block_sql("s0", "labels")},
+{_q_block_sql("s1", "lvl0")},
+{_q_block_sql("s2", "composed")}
+SELECT 'lpa' AS stage, * FROM s0q
+UNION ALL SELECT 'move', * FROM s1q
+UNION ALL SELECT 'ladder', * FROM s2q
+"""
 
 
 LP_MAX_DEG = 64  # wedge-center degree cap (see docstring)
@@ -2663,513 +2920,6 @@ SELECT n_nodes, m AS n_edges, s1, s2, s3,
        END AS assortativity
 FROM g, nn
 """
-
-
-def _weighted_louvain_move(labels: DataFrame, wedges: DataFrame, m_row: DataFrame) -> DataFrame:
-    """One synchronous integer-exact Louvain local-move round on a
-    weighted multigraph — the A94 logic generalized so it can run on
-    graph_coarsen's output one level up. ``wedges`` is (u, v, w) with
-    u <= v and self-loops allowed; ``labels`` is (node, comm);
-    ``m_row`` a broadcastable 1-row frame with total weight m.
-    Self-loops contribute 2w to their node's weighted degree and w to
-    m, and are EXCLUDED from k_{i,c} (they move with the node, so
-    they cancel in every gain comparison). Score, tie-break, and
-    strict-improvement rule are byte-identical to A94 (which this
-    reproduces exactly at w = 1, test-pinned). Returns
-    (node, own, new_comm)."""
-    loops = (
-        wedges.filter(F.col("u") == F.col("v"))
-        .groupBy(F.col("u").alias("node"))
-        .agg(F.sum("w").alias("lw"))
-    )
-    nonloop = wedges.filter(F.col("u") < F.col("v"))
-    sym = nonloop.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), "w"
-    ).unionByName(nonloop.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
-    deg = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.sum("w").alias("sw"))
-        .join(loops, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce(F.col("sw"), F.lit(0).cast("bigint"))
-                + 2 * F.coalesce(F.col("lw"), F.lit(0).cast("bigint"))
-            ).alias("k"),
-        )
-    )
-    tot = labels.join(deg, "node").groupBy("comm").agg(F.sum("k").alias("tot"))
-    kic = (
-        sym.join(
-            labels.withColumnRenamed("node", "dst").withColumnRenamed("comm", "c"),
-            "dst",
-        )
-        .groupBy(F.col("src").alias("node"), "c")
-        .agg(F.sum("w").alias("kic"))
-    )
-    own = labels.select("node", F.col("comm").alias("own"))
-    cand = (
-        kic.join(own, "node")
-        .unionByName(
-            own.select(
-                "node", F.col("own").alias("c"), F.lit(0).cast("bigint").alias("kic"), "own"
-            )
-        )
-        .groupBy("node", "c", "own")
-        .agg(F.max("kic").alias("kic"))
-    )
-    scored = (
-        cand.join(deg, "node")
-        .join(tot.withColumnRenamed("comm", "c"), "c")
-        .crossJoin(F.broadcast(m_row))
-        .withColumn(
-            "tot_adj",
-            F.col("tot") - F.when(F.col("c") == F.col("own"), F.col("k")).otherwise(F.lit(0)),
-        )
-        .withColumn("score", 2 * F.col("m") * F.col("kic") - F.col("tot_adj") * F.col("k"))
-    )
-    # best and stay folded into ONE aggregate over scored (r13): the
-    # former best⋈stay join re-executed the whole scored subtree —
-    # including the edge-sized kic join — a second time per round.
-    # cand guarantees exactly one c == own row per node, so
-    # max(when(c == own, score)) IS the stay score; tie-break and the
-    # strict-improvement rule are unchanged.
-    best = (
-        scored.groupBy("node", "own")
-        .agg(
-            F.max(F.struct(F.col("score"), (-F.col("c")).alias("negc"))).alias("b"),
-            F.max(F.when(F.col("c") == F.col("own"), F.col("score"))).alias("stay_score"),
-        )
-        .select(
-            "node",
-            "own",
-            F.col("b.score").alias("best_score"),
-            (-F.col("b.negc")).cast("bigint").alias("best_c"),
-            "stay_score",
-        )
-    )
-    return best.select(
-        "node",
-        "own",
-        F.when(F.col("best_score") > F.col("stay_score"), F.col("best_c"))
-        .otherwise(F.col("own"))
-        .alias("new_comm"),
-    )
-
-
-LOUVAIN_FIXPOINT_MAX_ROUNDS = 20  # safety bound; gate data converges in <6
-
-
-def _weighted_q_num(labels: DataFrame, wedges: DataFrame, m_row: DataFrame) -> DataFrame:
-    """Exact integer modularity ledger of a partition over a weighted
-    multigraph (u ≤ v, self-loops allowed): one row with
-    n_communities, intra_w (Σw of cu==cv edges — loops always intra),
-    sum_deg_sq (Σ_c D_c², D_c = Σ weighted degree, loops counting 2w)
-    and q_num = 4m·intra_w − Σ D_c² (Newman Q scaled by 4m² — the
-    A97 integer discipline, so round acceptance never compares
-    floats). Weighted-contracted Q equals original-partition Q, which
-    is what lets the phase-2 loop measure itself on the small graph."""
-    loops = (
-        wedges.filter(F.col("u") == F.col("v"))
-        .groupBy(F.col("u").alias("node"))
-        .agg(F.sum("w").alias("lw"))
-    )
-    nonloop = wedges.filter(F.col("u") < F.col("v"))
-    sym = nonloop.select(F.col("u").alias("node"), "w").unionByName(
-        nonloop.select(F.col("v").alias("node"), "w")
-    )
-    deg = (
-        sym.groupBy("node")
-        .agg(F.sum("w").alias("sw"))
-        .join(loops, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce(F.col("sw"), F.lit(0).cast("bigint"))
-                + 2 * F.coalesce(F.col("lw"), F.lit(0).cast("bigint"))
-            ).alias("k"),
-        )
-    )
-    dc = (
-        labels.join(deg, "node")
-        .groupBy("comm")
-        .agg(F.sum("k").alias("d"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_communities"),
-            F.sum(F.col("d") * F.col("d")).cast("bigint").alias("sum_deg_sq"),
-        )
-    )
-    lu = labels.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
-    lv = labels.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
-    intra = (
-        wedges.join(lu, "u")
-        .join(lv, "v")
-        .filter(F.col("cu") == F.col("cv"))
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("bigint").alias("intra_w"))
-    )
-    return (
-        dc.crossJoin(intra)
-        .crossJoin(F.broadcast(m_row))
-        .select(
-            "n_communities",
-            "intra_w",
-            "sum_deg_sq",
-            (4 * F.col("m") * F.col("intra_w") - F.col("sum_deg_sq"))
-            .cast("bigint")
-            .alias("q_num"),
-            F.col("m").cast("bigint").alias("m"),
-        )
-    )
-
-
-def _louvain_phase(
-    labels: DataFrame,
-    wedges: DataFrame,
-    m_row: DataFrame,
-    max_rounds: int = LOUVAIN_FIXPOINT_MAX_ROUNDS,
-) -> tuple[DataFrame, int]:
-    """Run synchronous local-move rounds TO FIXPOINT under monotone-Q
-    acceptance: after each round the EXACT integer q_num of the new
-    labeling is compared to the incumbent and the round is kept only
-    if it strictly improved — the guard that makes the synchronous
-    schedule safe (two adjacent nodes CAN swap into each other's
-    communities and lower Q; A94 documents the oscillation, this
-    phase rejects it and stops). Terminates when a round yields no
-    moves or no exact-Q gain, or at ``max_rounds``. Per-round state is
-    a node-sized frame, eager-localCheckpointed (lineage truncation,
-    the T44 discipline); the q ledger is a 1-row collect per round.
-    Returns (labels at fixpoint, accepted-round count)."""
-    cur = labels.localCheckpoint(eager=True)
-    q_cur = _weighted_q_num(cur, wedges, m_row).collect()[0]["q_num"]
-    accepted = 0
-    for _ in range(max_rounds):
-        # checkpoint the move output BEFORE inspecting it: the movers
-        # check and the next labeling both read the same materialized
-        # round, so the move plan executes exactly once per round
-        moved = _weighted_louvain_move(cur, wedges, m_row).localCheckpoint(eager=True)
-        if moved.filter(F.col("new_comm") != F.col("own")).limit(1).count() == 0:
-            break
-        nxt = moved.select("node", F.col("new_comm").alias("comm"))
-        q_nxt = _weighted_q_num(nxt, wedges, m_row).collect()[0]["q_num"]
-        if q_nxt <= q_cur:
-            break  # synchronous swap oscillation — reject and stop
-        cur, q_cur = nxt, q_nxt
-        accepted += 1
-    return cur, accepted
-
-
-def graph_louvain_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A97b — weighted Louvain run to FIXPOINT (the r7 verdict's
-    named extension of the bounded ladder): phase 1 iterates
-    local-move rounds from the classic singleton start until no round
-    improves exact integer Q, phase 2 contracts the fixpoint
-    partition to the weighted community multigraph (intra edges →
-    self-loops, A95's convention) and iterates the SAME move loop on
-    it, labels projected back. Every acceptance decision is an exact
-    BIGINT comparison (q_num = 4m·intra − ΣD_c²), so the fixpoint is
-    deterministic — but the ROUND COUNT is data-dependent, which is
-    why this key is rows-only by design (SQL cannot loop to a
-    data-dependent depth); A97's fixed two-level ladder remains the
-    value-oracled twin of the per-round arithmetic, and pytest pins
-    monotonicity, the no-improving-round fixpoint property, and
-    parallelism-invariance. Output: one ledger row per stage
-    (singleton / phase1 / final) with the stage's round count and the
-    exact Q pieces on the ORIGINAL graph.
-
-    Scale: each round is one edge⋈labels join + keyed aggregates
-    (linear in m); the phase-2 graph is communities-sized. Integer
-    headroom: q_num bounded by 4m² — BIGINT-safe while 2m < 3e9; at
-    100 TB edge counts route the ledger through DECIMAL(38,0) (the
-    A105 overflow discipline)."""
-    edges = copurchase_edges_supported(spark, sf_dir)
-    w1 = edges.select("u", "v", F.lit(1).cast("bigint").alias("w"))
-    m_row = edges.agg(F.count("*").cast("bigint").alias("m"))
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    singleton = nodes.select("node", F.col("node").alias("comm"))
-
-    lvl0, rounds0 = _louvain_phase(singleton, w1, m_row)
-
-    cu = lvl0.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
-    cv = lvl0.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
-    contracted = (
-        edges.join(cu, "u")
-        .join(cv, "v")
-        .select(F.least("cu", "cv").alias("u"), F.greatest("cu", "cv").alias("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    singles1 = (
-        contracted.select(F.col("u").alias("node"))
-        .unionByName(contracted.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    lvl1, rounds1 = _louvain_phase(
-        singles1.select("node", F.col("node").alias("comm")), contracted, m_row
-    )
-    final = (
-        lvl0.join(lvl1.withColumnRenamed("node", "comm0"), lvl0.comm == F.col("comm0"))
-        .select(lvl0.node.alias("node"), lvl1.comm.alias("comm"))
-        .localCheckpoint(eager=True)
-    )
-
-    def ledger(lbl: DataFrame, stage: str, n_rounds: int) -> DataFrame:
-        return _weighted_q_num(lbl, w1, m_row).select(
-            F.lit(stage).alias("stage"),
-            F.lit(n_rounds).cast("bigint").alias("n_rounds"),
-            "n_communities",
-            F.col("intra_w").alias("intra_edges"),
-            "sum_deg_sq",
-            "q_num",
-            (F.round(F.col("q_num") / (4.0 * F.col("m") * F.col("m")), 6) + F.lit(0.0)).alias("q"),
-        )
-
-    return (
-        ledger(singleton, "singleton", 0)
-        .unionByName(ledger(lvl0, "phase1", rounds0))
-        .unionByName(ledger(final, "final", rounds1))
-    )
-
-
-def graph_louvain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A97 — the full two-level Louvain cycle, end to end and
-    value-oracled: LPA seed → synchronous local-move round (A94) →
-    phase-2 contraction of the MOVED labels (A95's convention:
-    intra edges become supernode self-loops) → a second local-move
-    round on the weighted community multigraph (the generalized
-    weighted move, singleton init — the standard phase-2 start) →
-    labels projected back to the original nodes. Every gain
-    comparison is integer-exact at both levels, so the whole ladder
-    replays bit-for-bit in DuckDB.
-
-    Output is the quality ledger on the ORIGINAL graph, one row per
-    stage (lpa / move / ladder): community count, intra-edge count,
-    Σ degree², and Newman Q both as the EXACT integer numerator
-    q_num = 4m·intra − ΣD_c² (Q scaled by 4m² — no float anywhere in
-    the comparison chain) and 6dp-rounded. Synchronous rounds can
-    lower Q (A94's documented swap oscillation); the ledger reports,
-    the oracle pins it either way. Plan shape per stage: one
-    edge⋈labels join + keyed aggregates, linear in m; level-1 frames
-    are communities², typically tiny. Integer headroom: scores are
-    bounded by 2m·max(k) ≤ 4m² — BIGINT-safe while 2m < 3e9."""
-    labels0 = lpa_labels(spark, sf_dir).select(
-        F.col("id").alias("node"), F.col("label").alias("comm")
-    )
-    edges = copurchase_edges_supported(spark, sf_dir)
-    w1 = edges.select("u", "v", F.lit(1).cast("bigint").alias("w"))
-    m_row = edges.agg(F.count("*").cast("bigint").alias("m"))
-
-    # each stage ends in a node-sized frame; eager localCheckpoints
-    # truncate the lineage so the three q_row consumers and the
-    # level-1 build don't each re-analyze the whole upstream ladder
-    moved0 = _weighted_louvain_move(labels0, w1, m_row).select("node", "new_comm")
-    lvl0 = moved0.select("node", F.col("new_comm").alias("comm")).localCheckpoint(
-        eager=True
-    )
-
-    cu = lvl0.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
-    cv = lvl0.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
-    contracted = (
-        edges.join(cu, "u")
-        .join(cv, "v")
-        .select(
-            F.least("cu", "cv").alias("u"),
-            F.greatest("cu", "cv").alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    singles = contracted.select(F.col("u").alias("node")).unionByName(
-        contracted.select(F.col("v").alias("node"))
-    ).distinct()
-    labels1 = singles.select("node", F.col("node").alias("comm"))
-    moved1 = _weighted_louvain_move(labels1, contracted, m_row).select(
-        F.col("node").alias("comm0"), F.col("new_comm").alias("comm1")
-    )
-    composed = (
-        lvl0.join(moved1, lvl0.comm == moved1.comm0)
-        .select("node", F.col("comm1").alias("comm"))
-        .localCheckpoint(eager=True)
-    )
-
-    def q_row(lbl: DataFrame, stage: str) -> DataFrame:
-        # NOTE (r13): a pair-aggregate form was tried and REVERTED —
-        # see q_total in graph_louvain_move: at the gate SF the
-        # support graph is tiny and the saved join re-executions are
-        # broadcast-cheap while the added exchanges are not.
-        lu = lbl.withColumnRenamed("node", "u").withColumnRenamed("comm", "cu")
-        lv = lbl.withColumnRenamed("node", "v").withColumnRenamed("comm", "cv")
-        le = edges.join(lu, "u").join(lv, "v")
-        intra = le.filter(F.col("cu") == F.col("cv")).agg(
-            F.count("*").cast("bigint").alias("intra_edges")
-        )
-        percomm = (
-            le.select(F.col("cu").alias("c"))
-            .unionByName(le.select(F.col("cv").alias("c")))
-            .groupBy("c")
-            .agg(F.count("*").cast("bigint").alias("d"))
-        )
-        agg = percomm.agg(
-            F.count("*").cast("bigint").alias("n_communities"),
-            F.sum(F.col("d") * F.col("d")).cast("bigint").alias("sum_deg_sq"),
-        )
-        return (
-            agg.crossJoin(intra)
-            .crossJoin(F.broadcast(m_row))
-            .select(
-                F.lit(stage).alias("stage"),
-                "n_communities",
-                "intra_edges",
-                "sum_deg_sq",
-                (4 * F.col("m") * F.col("intra_edges") - F.col("sum_deg_sq"))
-                .cast("bigint")
-                .alias("q_num"),
-                (
-                    F.round(
-                        (4 * F.col("m") * F.col("intra_edges") - F.col("sum_deg_sq"))
-                        / (4.0 * F.col("m") * F.col("m")),
-                        6,
-                    )
-                    + F.lit(0.0)
-                ).alias("q"),
-            )
-        )
-
-    return (
-        q_row(labels0, "lpa")
-        .unionByName(q_row(lvl0, "move"))
-        .unionByName(q_row(composed, "ladder"))
-    )
-
-
-def _wmove_sql(p: str, edges_cte: str, labels_cte: str, m_cte: str) -> str:
-    """CTE block for one weighted local-move round (prefix ``p``):
-    consumes {edges_cte}(u, v, w) / {labels_cte}(node, comm) /
-    {m_cte}(m); defines {p}moved(node, own, new_comm)."""
-    return f"""{p}loops AS MATERIALIZED (
-  SELECT u AS node, SUM(w) AS lw FROM {edges_cte} WHERE u = v GROUP BY 1
-),
-{p}sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst, w FROM {edges_cte} WHERE u < v
-  UNION ALL SELECT v, u, w FROM {edges_cte} WHERE u < v
-),
-{p}deg AS MATERIALIZED (
-  SELECT COALESCE(s.node, l.node) AS node,
-         COALESCE(s.sw, 0) + 2 * COALESCE(l.lw, 0) AS k
-  FROM (SELECT src AS node, SUM(w) AS sw FROM {p}sym GROUP BY 1) s
-  FULL OUTER JOIN {p}loops l ON l.node = s.node
-),
-{p}tot AS MATERIALIZED (
-  SELECT comm, SUM(k) AS tot FROM {labels_cte} JOIN {p}deg USING (node) GROUP BY 1
-),
-{p}kic AS MATERIALIZED (
-  SELECT e.src AS node, ld.comm AS c, SUM(e.w) AS kic
-  FROM {p}sym e JOIN {labels_cte} ld ON ld.node = e.dst GROUP BY 1, 2
-),
-{p}cand AS MATERIALIZED (
-  SELECT node, c, MAX(kic) AS kic, MAX(own) AS own FROM (
-    SELECT k.node, k.c, k.kic, o.comm AS own
-    FROM {p}kic k JOIN {labels_cte} o ON o.node = k.node
-    UNION ALL
-    SELECT node, comm AS c, 0, comm FROM {labels_cte}
-  ) GROUP BY node, c
-),
-{p}scored AS MATERIALIZED (
-  SELECT cd.node, cd.c, cd.own,
-         2 * m.m * cd.kic
-           - (t.tot - CASE WHEN cd.c = cd.own THEN d.k ELSE 0 END) * d.k AS score
-  FROM {p}cand cd JOIN {p}deg d ON d.node = cd.node
-  JOIN {p}tot t ON t.comm = cd.c, {m_cte} m
-),
-{p}best AS MATERIALIZED (
-  SELECT node, own, score AS best_score, c AS best_c FROM (
-    SELECT node, own, score, c,
-           row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn
-    FROM {p}scored
-  ) WHERE rn = 1
-),
-{p}stay AS MATERIALIZED (SELECT node, score AS stay_score FROM {p}scored WHERE c = own),
-{p}moved AS MATERIALIZED (
-  SELECT b.node, b.own,
-         CASE WHEN b.best_score > s.stay_score THEN b.best_c ELSE b.own END AS new_comm
-  FROM {p}best b JOIN {p}stay s ON s.node = b.node
-)"""
-
-
-def _louvain_ladder_oracle_sql() -> str:
-    ladder_sql = _lpa_oracle_sql()
-    head, _, _ = ladder_sql.rpartition("SELECT label AS community")
-    head = head.rstrip().rstrip(",") + ","
-
-    def q_block(p: str, lbl: str) -> str:
-        return f"""{p}le AS MATERIALIZED (
-  SELECT p.u, p.v, cu.comm AS cu, cv.comm AS cv
-  FROM pair p JOIN {lbl} cu ON cu.node = p.u JOIN {lbl} cv ON cv.node = p.v
-),
-{p}deg AS MATERIALIZED (
-  SELECT c, CAST(COUNT(*) AS BIGINT) AS d FROM (
-    SELECT u AS node, cu AS c FROM {p}le UNION ALL SELECT v, cv FROM {p}le
-  ) GROUP BY c
-),
-{p}agg AS (
-  SELECT CAST((SELECT COUNT(*) FROM {p}deg) AS BIGINT) AS n_communities,
-         CAST((SELECT COUNT(*) FROM {p}le WHERE cu = cv) AS BIGINT) AS intra_edges,
-         CAST((SELECT SUM(d * d) FROM {p}deg) AS BIGINT) AS sum_deg_sq
-)"""
-
-    stage_row = (
-        lambda p, name: f"""SELECT '{name}' AS stage, n_communities, intra_edges, sum_deg_sq,
-       CAST(4 * m.m * intra_edges - sum_deg_sq AS BIGINT) AS q_num,
-       ROUND(CAST(4 * m.m * intra_edges - sum_deg_sq AS BIGINT)
-             / (4e0 * m.m * m.m), 6) + 0.0 AS q
-FROM {p}agg, mr m"""
-    )
-    # DuckDB inlines plain CTEs; this oracle nests two move rounds on
-    # top of the LPA ladder and three Q blocks on top of those, so
-    # uncontrolled inlining expands the scan tree exponentially
-    # (observed: >20k open file handles). MATERIALIZED pins each
-    # stage to one evaluation.
-    for cte in ("op", "pair", "edges", "l0",
-                *[f"r{i}" for i in range(1, LPA_ROUNDS + 1)],
-                *[f"l{i}" for i in range(1, LPA_ROUNDS + 1)]):
-        head = head.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (")
-    return f"""{head}
-labels0 AS MATERIALIZED (SELECT node, label AS comm FROM l{LPA_ROUNDS}),
-mr AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pair),
-w1 AS MATERIALIZED (SELECT u, v, CAST(1 AS BIGINT) AS w FROM pair),
-{_wmove_sql("a_", "w1", "labels0", "mr")},
-lvl0 AS MATERIALIZED (SELECT node, new_comm AS comm FROM a_moved),
-contracted AS MATERIALIZED (
-  SELECT LEAST(cu.comm, cv.comm) AS u, GREATEST(cu.comm, cv.comm) AS v,
-         CAST(COUNT(*) AS BIGINT) AS w
-  FROM pair p JOIN lvl0 cu ON cu.node = p.u JOIN lvl0 cv ON cv.node = p.v
-  GROUP BY 1, 2
-),
-labels1 AS MATERIALIZED (
-  SELECT DISTINCT node, node AS comm FROM (
-    SELECT u AS node FROM contracted UNION ALL SELECT v FROM contracted
-  )
-),
-{_wmove_sql("b_", "contracted", "labels1", "mr")},
-composed AS MATERIALIZED (
-  SELECT l.node, m1.new_comm AS comm
-  FROM lvl0 l JOIN b_moved m1 ON m1.node = l.comm
-),
-{q_block("s0", "labels0")},
-{q_block("s1", "lvl0")},
-{q_block("s2", "composed")}
-{stage_row("s0", "lpa")}
-UNION ALL
-{stage_row("s1", "move")}
-UNION ALL
-{stage_row("s2", "ladder")}
-"""
-
-
-ORACLES["graph_louvain_ladder"] = _louvain_ladder_oracle_sql()
 
 
 # Frozen scorer for the driver-verifiable logreg companion: feature

@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``$SPARK_GRAFT_DRIVER_MEM`` is
+    unset: half of physical memory in whole GiB, capped at 16g and at
+    least 1g, so a local JVM never asks for more heap than the machine
+    has (a 15 GiB machine gets 7g)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "proceso_de_etl_spark", cpus: str | None = None) -> SparkSession:
     """Create (or fetch) the session.
 
@@ -55,7 +64,10 @@ def get_spark(app_name: str = "proceso_de_etl_spark", cpus: str | None = None) -
         # unreadable through the nanosAsLong long-path, and a trap for
         # any downstream engine reading this engine's output
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # stage progress bars corrupt captured stdout/stderr records
         # (the per-round driver keeps only a short tail of bench

@@ -406,3 +406,19 @@ def test_driver_rows_reach_spark_only_through_local_frame():
         and not (path == pathlib.Path(inspect.getsourcefile(local)) and no in span)
     ]
     assert stray == []
+
+
+@pytest.mark.parametrize(
+    ("phys_gib", "want"),
+    [(15, "7g"), (15.9, "7g"), (64, "16g"), (32, "16g"), (2, "1g"), (1, "1g")],
+)
+def test_default_driver_memory_is_half_physical_capped(monkeypatch, phys_gib, want):
+    """The driver-heap default read from sysconf, no session started:
+    half of physical memory in whole GiB, at most 16g, at least 1g."""
+    from proceso_de_etl_spark import session
+
+    page = 4096
+    pages = int(phys_gib * 2**30) // page
+    sysconf = {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": page}
+    monkeypatch.setattr(session.os, "sysconf", sysconf.__getitem__)
+    assert session.default_driver_memory() == want

@@ -1388,10 +1388,11 @@ def test_louvain_move_gain_scores_vs_reference(spark):
     barbell graph: for every node and candidate community the score
     2m*k_ic - tot'(c)*k_i must rank moves exactly as the float
     DeltaQ formula does (the scaling constant 2m^2 is positive), and
-    the synchronous move outcome must match the reference."""
+    the synchronous move outcome of _weighted_louvain_move (the move
+    every Louvain key runs) must match the reference."""
     from collections import Counter
 
-    import pyspark.sql.functions as F
+    from proceso_de_etl_spark.operators.ml import _weighted_louvain_move
 
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (4, 6), (5, 6)]
     # initial labels: every node its own community (simplest start)
@@ -1426,71 +1427,13 @@ def test_louvain_move_gain_scores_vs_reference(spark):
 
     expected = ref_moves()
 
-    # Spark twin of the scored/best/moved pipeline on the same graph
-    df = spark.createDataFrame(edges, "u long, v long")
-    sym = df.selectExpr("u as src", "v as dst").unionByName(
-        df.selectExpr("v as src", "u as dst")
-    )
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "comm", F.col("node")
-    )
-    deg_df = sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("k"))
-    tot_df = labels.join(deg_df, "node").groupBy("comm").agg(F.sum("k").alias("tot"))
-    kic_df = (
-        sym.join(
-            labels.withColumnRenamed("node", "dst").withColumnRenamed("comm", "c"),
-            "dst",
-        )
-        .groupBy(F.col("src").alias("node"), "c")
-        .agg(F.count("*").alias("kic"))
-    )
-    own = labels.select("node", F.col("comm").alias("own"))
-    cand = (
-        kic_df.join(own, "node")
-        .unionByName(
-            own.select(
-                "node",
-                F.col("own").alias("c"),
-                F.lit(0).cast("bigint").alias("kic"),
-                "own",
-            )
-        )
-        .groupBy("node", "c", "own")
-        .agg(F.max("kic").alias("kic"))
-    )
-    scored = (
-        cand.join(deg_df, "node")
-        .join(tot_df.withColumnRenamed("comm", "c"), "c")
-        .withColumn(
-            "tot_adj",
-            F.col("tot")
-            - F.when(F.col("c") == F.col("own"), F.col("k")).otherwise(F.lit(0)),
-        )
-        .withColumn("score", 2 * m * F.col("kic") - F.col("tot_adj") * F.col("k"))
-    )
-    best = (
-        scored.groupBy("node", "own")
-        .agg(F.max(F.struct(F.col("score"), (-F.col("c")).alias("negc"))).alias("b"))
-        .select(
-            "node",
-            "own",
-            F.col("b.score").alias("best_score"),
-            (-F.col("b.negc")).cast("bigint").alias("best_c"),
-        )
-    )
-    stay = scored.filter(F.col("c") == F.col("own")).select(
-        "node", F.col("score").alias("stay_score")
-    )
+    # the shipped move round on the same graph: w = 1, singleton labels
+    wedges = spark.createDataFrame([(u, v, 1) for u, v in edges], "u long, v long, w bigint")
+    labels = spark.createDataFrame([(n, n) for n in sorted(adj)], "node long, comm long")
+    m_row = spark.createDataFrame([(m,)], "m bigint")
     got = {
         r.node: r.new_comm
-        for r in best.join(stay, "node")
-        .withColumn(
-            "new_comm",
-            F.when(
-                F.col("best_score") > F.col("stay_score"), F.col("best_c")
-            ).otherwise(F.col("own")),
-        )
-        .collect()
+        for r in _weighted_louvain_move(labels, wedges, m_row).collect()
     }
     assert got == expected
 
@@ -1861,6 +1804,55 @@ def test_louvain_fixpoint_ledger_invariants_and_parallelism(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert at3 == at16
     assert sorted(map(tuple, rows.values())) == at3
+
+
+def test_community_keys_on_empty_support_graph(spark, tmp_path):
+    """Every community key (A92-A97b) returns its documented columns
+    when lineitem is empty, so the support graph has no edge: the
+    partition keys find nothing, and every Q ledger reports zero
+    communities and a NULL Q instead of dividing by m = 0."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from proceso_de_etl_spark.operators import ml
+    from tests.conftest import SF_SMOKE
+
+    ladder = ["stage", "n_communities", "intra_edges", "sum_deg_sq", "q_num", "q"]
+    columns = {
+        "graph_label_propagation": ["community", "n_members"],
+        "graph_modularity": [
+            "community", "n_members", "intra_edges", "degree_sum", "q_contribution",
+        ],
+        "graph_louvain_move": [
+            "n_comms_before", "q_before", "n_comms_after", "q_after", "n_moves",
+        ],
+        "graph_coarsen": ["cu", "cv", "weight"],
+        "graph_louvain_ladder": ladder,
+        "graph_louvain_fixpoint": ladder[:1] + ["n_rounds"] + ladder[1:],
+    }
+
+    sf = tmp_path / "sf_empty_lineitem"
+    sf.mkdir()
+    for name in os.listdir(SF_SMOKE):
+        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
+    li = sf / "lineitem.parquet"
+    empty = pq.read_table(li).slice(0, 0)
+    li.unlink()
+    pq.write_table(empty, li)
+
+    rows = {}
+    for key, cols in columns.items():
+        df = getattr(ml, key)(spark, str(sf))
+        assert df.columns == cols, key
+        rows[key] = df.collect()
+    for key in ("graph_label_propagation", "graph_modularity", "graph_coarsen"):
+        assert rows[key] == [], key
+    assert list(map(tuple, rows["graph_louvain_move"])) == [(0, None, 0, None, 0)]
+    for key in ("graph_louvain_ladder", "graph_louvain_fixpoint"):
+        assert len(rows[key]) == 3, key
+        assert all(r.n_communities == 0 and r.q is None for r in rows[key]), key
 
 
 def test_exp_smoothing_matches_python_recursion(spark):

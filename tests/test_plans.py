@@ -672,9 +672,11 @@ def test_r7_companions_stay_jvm_side(spark):
     inputs is not)."""
     from proceso_de_etl_spark.operators.dedup import semdedup_pairs
     from proceso_de_etl_spark.operators.ml import (
+        graph_coarsen,
         graph_connected_components,
         graph_hits_ladder,
         graph_link_prediction,
+        graph_louvain_fixpoint,
         graph_louvain_ladder,
         graph_louvain_move,
         graph_modularity,
@@ -704,7 +706,9 @@ def test_r7_companions_stay_jvm_side(spark):
         graph_connected_components,
         graph_modularity,
         graph_louvain_move,
+        graph_coarsen,
         graph_louvain_ladder,
+        graph_louvain_fixpoint,
         graph_pagerank_ladder,
         graph_link_prediction,
         graph_hits_ladder,
