@@ -499,7 +499,8 @@ def etl_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     target = tempfile.mkdtemp(prefix="fact_partitioned_")
     write_parquet(li, target, partition_by=["ship_year"])
-    back = spark.read.parquet(target).filter(F.col("ship_year") == 1997)
+    # read back with the schema just written: no inference job
+    back = spark.read.schema(li.schema).parquet(target).filter(F.col("ship_year") == 1997)
     return back.groupBy(F.month("l_shipdate").cast("bigint").alias("ship_month")).agg(
         F.count("*").alias("n"), dsum("l_extendedprice").alias("sum_price")
     )
@@ -534,7 +535,7 @@ def etl_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     target = tempfile.mkdtemp(prefix="fact_dpp_")
     write_parquet(li, target, partition_by=["ship_year"])
-    fact = spark.read.parquet(target)
+    fact = spark.read.schema(li.schema).parquet(target)
     # The calendar is generated in the plan rather than held as local
     # rows: a filter over a LocalRelation folds into its rows, and with
     # no Filter left on the dimension side Catalyst inserts no DPP.
@@ -619,9 +620,13 @@ def etl_atomic_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_cat = extract_dimension(part, "p_type", "id_categoria", "categoria")
     dim_pri = extract_dimension(orders, "o_orderpriority", "id_clasificacion", "clasificacion")
     root = tempfile.mkdtemp(prefix="atomic_load_")
-    atomic_write_tables(root, {"dim_categoria": dim_cat, "dim_clasificacion": dim_pri})
+    dims = {"dim_categoria": dim_cat, "dim_clasificacion": dim_pri}
+    atomic_write_tables(root, dims)
+    # counted with the schema each table was written with: no
+    # inference job per read-back
     manifest = [
-        (name, spark.read.parquet(f"{root}/{name}").count()) for name in ("dim_categoria", "dim_clasificacion")
+        (name, spark.read.schema(df.schema).parquet(f"{root}/{name}").count())
+        for name, df in dims.items()
     ]
     return local_frame(spark, manifest, "table_name string, n_rows bigint")
 

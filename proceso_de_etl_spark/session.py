@@ -95,6 +95,20 @@ def get_spark(app_name: str = "proceso_de_etl_spark", cpus: str | None = None) -
         # 10 GB) mean it engages exactly in the 100 TB regime, not on
         # test data; tests force-lower the thresholds to assert shape.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # JVM case mapping for lower/upper/initcap instead of ICU's. In
+        # ICU mode the first case mapping in a JVM loads
+        # CollationAwareUTF8String, whose static initializer calls
+        # UCharacter.toTitleCase for every code point up to U+10FFFF
+        # (1.3-2.0 s per driver or executor JVM; 0.2 s with this off).
+        # ASCII strings take the same fast path either way; non-ASCII
+        # ones go through java.lang.String case mapping in the JVM
+        # default locale, which equals ICU's root full mapping except
+        # in the tr, az and lt locales (dotted/dotless i, Lithuanian
+        # dot-above). initcap lower-cases first and then title-cases
+        # each word's first char, so a word opening with U+212A
+        # (Kelvin) or U+0130 starts with "K" or "I" + U+0307 where
+        # ICU keeps the letter.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

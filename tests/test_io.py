@@ -422,3 +422,88 @@ def test_default_driver_memory_is_half_physical_capped(monkeypatch, phys_gib, wa
     sysconf = {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": page}
     monkeypatch.setattr(session.os, "sysconf", sysconf.__getitem__)
     assert session.default_driver_memory() == want
+
+
+# ASCII, sharp s (upper expands), final sigma, Latin-1 accents, Kelvin
+# sign, dotted capital I, a title-case digraph, CJK (no case)
+CASE_SAMPLES = ["Hello, World 42", "straße", "ΟΣ", "À É Î", "\u212a", "\u0130", "X\u0130y", "ǆemal", "東京 タワー"]
+
+
+def test_case_mapping_runs_on_the_jvm_with_icu_results(spark):
+    """get_spark turns ICU case mapping off (its first use in a JVM
+    builds a title-case table over every code point). lower and upper
+    give the ICU rows on every sample. initcap lower-cases first and
+    title-cases each word's first char on its own, so it parts from
+    ICU only where lowering changes a word's first letter: U+212A
+    (Kelvin) -> k -> K and U+0130 -> i + U+0307 -> I + U+0307, where
+    ICU keeps both letters."""
+    conf = "spark.sql.icu.caseMappings.enabled"
+    assert spark.conf.get(conf) == "false"
+
+    def mapped():
+        df = local_frame(spark, [(s,) for s in CASE_SAMPLES], "s string")
+        return {
+            r.s: (r.lo, r.up, r.title)
+            for r in df.select(
+                "s", F.lower("s").alias("lo"), F.upper("s").alias("up"), F.initcap("s").alias("title")
+            ).collect()
+        }
+
+    jvm = mapped()
+    spark.conf.set(conf, "true")
+    try:
+        icu = mapped()
+    finally:
+        spark.conf.set(conf, "false")
+    assert {s: m[:2] for s, m in jvm.items()} == {s: m[:2] for s, m in icu.items()}
+    parted = {"\u212a": ("K", "\u212a"), "\u0130": ("I\u0307", "\u0130")}
+    assert {s: (jvm[s][2], icu[s][2]) for s in parted} == parted
+    assert {s: m[2] for s, m in jvm.items() if s not in parted} == {
+        s: m[2] for s, m in icu.items() if s not in parted
+    }
+    assert jvm["X\u0130y"][0] == "xi\u0307y" and jvm["straße"][1] == "STRASSE"
+
+
+@pytest.mark.parametrize("key", ["etl_partition_prune", "etl_dpp_join", "etl_atomic_write"])
+def test_etl_read_backs_infer_no_schema(spark, monkeypatch, key):
+    """The ETL keys read what they just wrote with the writer's schema,
+    so nothing past the write infers one. The partitioned keys return
+    a lazy frame and launch no job after their write; the atomic
+    manifest launches exactly the jobs of its two schema'd counts."""
+    import uuid
+
+    from proceso_de_etl_spark.operators import etl
+    from proceso_de_etl_spark.sources import atomic
+    from proceso_de_etl_spark.sources import io as sources_io
+
+    sc = spark.sparkContext
+    after = f"after-write-{uuid.uuid4().hex}"
+    written = []
+
+    def then_regroup(fn):
+        def wrapper(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            written.append(args)
+            sc.setJobGroup(after, after)
+            return out
+
+        return wrapper
+
+    monkeypatch.setattr(sources_io, "write_parquet", then_regroup(sources_io.write_parquet))
+    monkeypatch.setattr(atomic, "atomic_write_tables", then_regroup(atomic.atomic_write_tables))
+    try:
+        getattr(etl, key)(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(after))
+    assert len(written) == 1
+    if key != "etl_atomic_write":
+        assert jobs == 0
+        return
+    root, dims = written[0]
+    counts = _jobs_launched(
+        spark,
+        lambda: [spark.read.schema(df.schema).parquet(f"{root}/{n}").count() for n, df in dims.items()],
+    )
+    assert jobs == counts > 0

@@ -1806,18 +1806,32 @@ def test_louvain_fixpoint_ledger_invariants_and_parallelism(spark):
     assert sorted(map(tuple, rows.values())) == at3
 
 
-def test_community_keys_on_empty_support_graph(spark, tmp_path):
-    """Every community key (A92-A97b) returns its documented columns
-    when lineitem is empty, so the support graph has no edge: the
-    partition keys find nothing, and every Q ledger reports zero
-    communities and a NULL Q instead of dividing by m = 0."""
+def _empty_lineitem_sf(tmp_path) -> str:
+    """A copy of SF_SMOKE whose lineitem table has no rows."""
     import os
     import shutil
 
     import pyarrow.parquet as pq
 
-    from proceso_de_etl_spark.operators import ml
     from tests.conftest import SF_SMOKE
+
+    sf = tmp_path / "sf_empty_lineitem"
+    sf.mkdir()
+    for name in os.listdir(SF_SMOKE):
+        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
+    li = sf / "lineitem.parquet"
+    empty = pq.read_table(li).slice(0, 0)
+    li.unlink()
+    pq.write_table(empty, li)
+    return str(sf)
+
+
+def test_community_keys_on_empty_support_graph(spark, tmp_path):
+    """Every community key (A92-A97b) returns its documented columns
+    when lineitem is empty, so the support graph has no edge: the
+    partition keys find nothing, and every Q ledger reports zero
+    communities and a NULL Q instead of dividing by m = 0."""
+    from proceso_de_etl_spark.operators import ml
 
     ladder = ["stage", "n_communities", "intra_edges", "sum_deg_sq", "q_num", "q"]
     columns = {
@@ -1833,18 +1847,10 @@ def test_community_keys_on_empty_support_graph(spark, tmp_path):
         "graph_louvain_fixpoint": ladder[:1] + ["n_rounds"] + ladder[1:],
     }
 
-    sf = tmp_path / "sf_empty_lineitem"
-    sf.mkdir()
-    for name in os.listdir(SF_SMOKE):
-        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
-    li = sf / "lineitem.parquet"
-    empty = pq.read_table(li).slice(0, 0)
-    li.unlink()
-    pq.write_table(empty, li)
-
+    sf = _empty_lineitem_sf(tmp_path)
     rows = {}
     for key, cols in columns.items():
-        df = getattr(ml, key)(spark, str(sf))
+        df = getattr(ml, key)(spark, sf)
         assert df.columns == cols, key
         rows[key] = df.collect()
     for key in ("graph_label_propagation", "graph_modularity", "graph_coarsen"):
@@ -1853,6 +1859,23 @@ def test_community_keys_on_empty_support_graph(spark, tmp_path):
     for key in ("graph_louvain_ladder", "graph_louvain_fixpoint"):
         assert len(rows[key]) == 3, key
         assert all(r.n_communities == 0 and r.q is None for r in rows[key]), key
+
+
+def test_oriented_adjacency_summary_on_empty_graph(spark, tmp_path):
+    """With no co-purchase edge the one-row adjacency summary counts
+    zero nodes and sources and leaves the sums, max and digest NULL,
+    as its DuckDB oracle does."""
+    from proceso_de_etl_spark.operators import ml
+    from tests.oracle_harness import duckdb_con
+
+    sf = _empty_lineitem_sf(tmp_path)
+    try:
+        got = [tuple(r) for r in ml.graph_oriented_adjacency(spark, sf).collect()]
+    finally:
+        ml.unpersist_copurchase()
+    con = duckdb_con(sf)
+    want = con.sql(ml.ORACLES["graph_oriented_adjacency"]).fetchall()
+    assert got == want == [(0, 0, None, None, None, None)]
 
 
 def test_exp_smoothing_matches_python_recursion(spark):
@@ -3765,6 +3788,75 @@ def test_shared_builds_memoize_and_release(spark):
     assert ori3 is not ori1
     unpersist_copurchase()
 
+
+def _plan_leaves(plan) -> list[str]:
+    """Leaf node names of a physical plan, through adaptive wrappers
+    and query stages but not into a cache scan's stored plan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_leaves(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _plan_leaves(plan.plan())
+    kids = plan.children()
+    if kids.size() == 0:
+        return [name]
+    return [leaf for i in range(kids.size()) for leaf in _plan_leaves(kids.apply(i))]
+
+
+def test_copurchase_edges_share_one_pair_frame(spark):
+    """Raw and supported co-purchase edges are views of one persisted
+    (u < v, support) pair frame: row for row the distinct u < v
+    self-join and its HAVING COUNT(*) >= MIN_SUPPORT set, and the
+    supported frame is built from the pair cache, not a lineitem scan."""
+    from proceso_de_etl_spark.operators.ml import (
+        MIN_SUPPORT,
+        copurchase_edges,
+        copurchase_edges_supported,
+        unpersist_copurchase,
+    )
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_harness import duckdb_con
+
+    con = duckdb_con(SF_SMOKE)
+    pairs = """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem)
+    SELECT a.p, b.p FROM op a JOIN op b ON a.ok = b.ok AND a.p < b.p"""
+    want_raw = sorted(con.sql(f"SELECT DISTINCT * FROM ({pairs})").fetchall())
+    want_sup = sorted(con.sql(f"{pairs} GROUP BY 1, 2 HAVING COUNT(*) >= {MIN_SUPPORT}").fetchall())
+    assert 0 < len(want_sup) < len(want_raw)
+    unpersist_copurchase()
+    try:
+        assert sorted(map(tuple, copurchase_edges(spark, SF_SMOKE).collect())) == want_raw
+        sup = copurchase_edges_supported(spark, SF_SMOKE)
+        assert sorted(map(tuple, sup.collect())) == want_sup
+        build = sup._jdf.queryExecution().optimizedPlan().cacheBuilder().cachedPlan()
+        assert _plan_leaves(build) == ["InMemoryTableScan"]
+    finally:
+        unpersist_copurchase()
+
+
+def test_supported_edge_memo_repins_after_clear_cache(spark):
+    """An external clearCache() drops the memoized edge storage; the
+    next supported-edge call must pin the filter it returns AND the
+    shared pair frame under it again, or every community key
+    silently recomputes the edge set."""
+    from proceso_de_etl_spark.operators import ml
+    from tests.conftest import SF_SMOKE
+
+    def pinned(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    ml.unpersist_copurchase()
+    try:
+        sup = ml.copurchase_edges_supported(spark, SF_SMOKE)
+        held = list(ml._EDGE_CACHE.values())
+        # the filter and, since it is built from it, the pair frame
+        assert len(held) == 2 and any(df is sup for df in held) and all(map(pinned, held))
+        spark.catalog.clearCache()
+        assert not any(map(pinned, held))
+        assert ml.copurchase_edges_supported(spark, SF_SMOKE) is sup
+        assert all(map(pinned, held))
+    finally:
+        ml.unpersist_copurchase()
 
 def test_triangle_family_shares_cached_adjacency(spark):
     """Plan pin for the r13 amortization: graph_triangle_count and

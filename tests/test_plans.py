@@ -662,64 +662,39 @@ def test_graph_family_skew_posture(spark):
             hub_left.unpersist()
 
 
-def test_r7_companions_stay_jvm_side(spark):
+def test_r7_companions_stay_jvm_side(all_plans):
     """The r7 pinned-geometry and community operators must stay
     whole-stage-codegen territory: no Python UDF (the centroid
     assignment is a literal-array expression), no CartesianProduct
     (every join is keyed or an explicit tiny crossJoin of one-row
     aggregates — those plan as BroadcastNestedLoopJoin over 1 row,
     which is fine; an accidental CartesianProduct over corpus-sized
-    inputs is not)."""
-    from proceso_de_etl_spark.operators.dedup import semdedup_pairs
-    from proceso_de_etl_spark.operators.ml import (
-        graph_coarsen,
-        graph_connected_components,
-        graph_hits_ladder,
-        graph_link_prediction,
-        graph_louvain_fixpoint,
-        graph_louvain_ladder,
-        graph_louvain_move,
-        graph_modularity,
-        graph_pagerank_ladder,
-        ml_kmeans_ladder,
-    )
-    from proceso_de_etl_spark.operators.similarity import (
-        ann_ivf_incremental_pinned,
-        ann_ivf_pinned_topk,
-        ann_ivfpq_pinned_topk,
-        ann_pq_pinned_topk,
-        ann_recall_eval,
-    )
-    from proceso_de_etl_spark.operators.sketches import (
-        sketch_cms_portable,
-        sketch_hll_portable,
-        sketch_kmv_setops,
-    )
-
-    for fn in (
-        semdedup_pairs,
-        ann_ivf_pinned_topk,
-        ann_pq_pinned_topk,
-        ann_ivfpq_pinned_topk,
-        ann_ivf_incremental_pinned,
-        ann_recall_eval,
-        graph_connected_components,
-        graph_modularity,
-        graph_louvain_move,
-        graph_coarsen,
-        graph_louvain_ladder,
-        graph_louvain_fixpoint,
-        graph_pagerank_ladder,
-        graph_link_prediction,
-        graph_hits_ladder,
-        ml_kmeans_ladder,
-        sketch_kmv_setops,
-        sketch_hll_portable,
-        sketch_cms_portable,
+    inputs is not). Every one is a registered batch key, so its
+    executed plan at SF_CORRECT is already in ``all_plans``."""
+    for name in (
+        "semdedup_pairs",
+        "ann_ivf_pinned_topk",
+        "ann_pq_pinned_topk",
+        "ann_ivfpq_pinned_topk",
+        "ann_ivf_incremental_pinned",
+        "ann_recall_eval",
+        "graph_connected_components",
+        "graph_modularity",
+        "graph_louvain_move",
+        "graph_coarsen",
+        "graph_louvain_ladder",
+        "graph_louvain_fixpoint",
+        "graph_pagerank_ladder",
+        "graph_link_prediction",
+        "graph_hits_ladder",
+        "ml_kmeans_ladder",
+        "sketch_kmv_setops",
+        "sketch_hll_portable",
+        "sketch_cms_portable",
     ):
-        plan = plan_of(fn(spark, SF_CORRECT))
-        assert "PythonUDF" not in plan, fn.__name__
-        assert "CartesianProduct" not in plan, fn.__name__
+        plan = all_plans["plans"][name]
+        assert "PythonUDF" not in plan, name
+        assert "CartesianProduct" not in plan, name
 
 
 def test_clustering_coeff_single_intersection(spark):
