@@ -994,24 +994,20 @@ FROM part
 """
 
 
-def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E18 — CDC apply: merge an ordered change feed (insert/update/
-    delete events with a sequence number) into a base snapshot — the
-    incremental-load pattern one step beyond the reference's
-    append-only conditional load (main.py:45-59): upstream systems
-    emit corrections and deletions, not just new rows.
+_CUTOFF = "TIMESTAMP '1999-01-01 00:00:00'"
 
-    The feed is synthesized deterministically from orders (pre-1999 =
-    base; later orders arrive as inserts; every 7th base key gets an
-    update, every 13th a later delete — keys divisible by both see
-    the delete win). Application is one window (last change per key
-    by sequence) + one full-outer join against the base: no per-event
-    loop, no driver state — the shape that applies a day of CDC to a
-    100 TB snapshot in one pass."""
+
+def _change_feed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
+    """(base snapshot, [change sets in seq order]), synthesized
+    deterministically from orders: pre-1999 orders are the base; later
+    orders arrive as inserts (seq 1); every 7th base key gets an update
+    (seq 2), every 13th a later delete (seq 3) — keys divisible by both
+    see the delete win. One frame per sequence number, so the
+    streaming twin lands each as its own file."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    cutoff = F.expr("TIMESTAMP '1999-01-01 00:00:00'")
+    cutoff = F.expr(_CUTOFF)
     base = orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate")
     inserts = orders.filter(F.col("o_orderdate") >= cutoff).select(
         "o_orderkey", "o_orderstatus", "o_totalprice",
@@ -1029,10 +1025,28 @@ def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("o_totalprice"),
         F.lit("D").alias("op"), F.lit(3).alias("seq"),
     )
-    changes = inserts.unionByName(updates).unionByName(deletes)
+    return base, [inserts, updates, deletes]
 
-    from pyspark.sql import Window as W
 
+def cdc_snapshot(base: DataFrame) -> DataFrame:
+    """Version 0 of the CDC snapshot: every base row at seq 0, live.
+    Snapshot schema: (o_orderkey, o_orderstatus, o_totalprice,
+    row_source, seq, deleted)."""
+    return base.select(
+        "o_orderkey", "o_orderstatus", "o_totalprice",
+        F.lit("base").alias("row_source"),
+        F.lit(0).alias("seq"),
+        F.lit(False).alias("deleted"),
+    )
+
+
+def merge_cdc_batch(snapshot: DataFrame, changes: DataFrame) -> DataFrame:
+    """One merge of a change batch into a snapshot: last change per key
+    within the batch, then a seq-guarded full-outer upsert. A change
+    wins only when its seq is above the snapshot row's, so replayed or
+    out-of-order batches converge to the same state; deletes write
+    tombstones (``deleted``), so a late lower-seq change cannot
+    resurrect a deleted key. Readers filter tombstones out."""
     w = W.partitionBy("o_orderkey").orderBy(F.desc("seq"))
     last = (
         changes.withColumn("rk", F.row_number().over(w))
@@ -1042,17 +1056,43 @@ def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("c_status"),
             F.col("o_totalprice").alias("c_price"),
             "op",
+            F.col("seq").alias("c_seq"),
         )
     )
-    merged = base.join(last, base.o_orderkey == last.c_key, "full_outer")
+    merged = snapshot.join(last, snapshot.o_orderkey == last.c_key, "full_outer")
+    change_wins = F.col("c_seq").isNotNull() & (
+        F.col("c_seq") > F.coalesce(F.col("seq"), F.lit(-1))
+    )
+    return merged.select(
+        F.coalesce(F.col("o_orderkey"), F.col("c_key")).alias("o_orderkey"),
+        F.when(change_wins, F.col("c_status")).otherwise(F.col("o_orderstatus")).alias("o_orderstatus"),
+        F.when(change_wins, F.col("c_price")).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
+        F.when(change_wins, F.col("op")).otherwise(F.col("row_source")).alias("row_source"),
+        F.when(change_wins, F.col("c_seq")).otherwise(F.coalesce(F.col("seq"), F.lit(-1))).alias("seq"),
+        F.when(change_wins, F.col("op") == "D")
+        .otherwise(F.coalesce(F.col("deleted"), F.lit(False)))
+        .alias("deleted"),
+    )
+
+
+def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E18 — CDC apply: merge an ordered change feed (insert/update/
+    delete events with a sequence number, ``_change_feed``) into a base
+    snapshot — the incremental-load pattern one step beyond the
+    reference's append-only conditional load (main.py:45-59): upstream
+    systems emit corrections and deletions, not just new rows.
+
+    The whole feed is one ``merge_cdc_batch`` into the seq-0 snapshot,
+    so every change wins (seq >= 1) and tombstones are filtered out:
+    one window (last change per key by sequence) + one full-outer join,
+    no per-event loop, no driver state — the shape that applies a day
+    of CDC to a 100 TB snapshot in one pass."""
+    base, (inserts, updates, deletes) = _change_feed(spark, sf_dir)
+    changes = inserts.unionByName(updates).unionByName(deletes)
     return (
-        merged.filter(F.coalesce(F.col("op"), F.lit("")) != "D")
-        .select(
-            F.coalesce(F.col("o_orderkey"), F.col("c_key")).alias("o_orderkey"),
-            F.coalesce(F.col("c_status"), F.col("o_orderstatus")).alias("o_orderstatus"),
-            F.coalesce(F.col("c_price"), F.col("o_totalprice")).alias("o_totalprice"),
-            F.when(F.col("op").isNull(), "base").otherwise(F.col("op")).alias("row_source"),
-        )
+        merge_cdc_batch(cdc_snapshot(base), changes)
+        .filter(~F.col("deleted"))
+        .select("o_orderkey", "o_orderstatus", "o_totalprice", "row_source")
     )
 
 

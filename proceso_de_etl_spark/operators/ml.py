@@ -19,6 +19,8 @@ single-statement SQL twin for DuckDB to replay.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark.sources.catalog import load_table
@@ -499,6 +501,45 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ladder(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    compose: int = 1,
+    release: Iterable[DataFrame] = (),
+) -> DataFrame:
+    """Apply ``step`` to ``state`` ``rounds`` times and return the last
+    state, eager-``localCheckpoint``ed after every ``compose`` steps and
+    after the last one (plan truncation: persist alone re-analyzes an
+    O(rounds) plan, SURVEY §7). The ``release`` frames are unpersisted
+    when the ladder ends, also on error.
+
+    Fusion rule: ``compose`` > 1 is free only for a step that reads its
+    state once. The composed plan then holds each round once, and the
+    cadence only cuts the checkpoint jobs (LPA: 3 rounds in 2 jobs). A
+    step that reads its state twice (PageRank: the dangling mass and
+    the contributions) would copy every earlier round's subtree into
+    the plan, so such a ladder keeps ``compose=1``."""
+    try:
+        for i in range(1, rounds + 1):
+            state = step(state)
+            if i % compose == 0 or i == rounds:
+                state = state.localCheckpoint(eager=True)
+    finally:
+        for df in release:
+            df.unpersist()
+    return state
+
+
+def unroll_sql(block: str, n: int) -> str:
+    """The round CTEs 1..n of an oracle ladder, comma-separated:
+    ``block`` is one round's CTE text, with ``{i}`` standing for this
+    round and ``{p}`` for the previous one."""
+    return ",\n".join(
+        block.replace("{i}", str(i)).replace("{p}", str(i - 1)) for i in range(1, n + 1)
+    )
+
+
 PR_DAMPING = 0.85
 PR_N_ITER = 10
 
@@ -512,10 +553,10 @@ def pagerank(edges: DataFrame, damping: float = PR_DAMPING, n_iter: int = PR_N_I
     - out-weights are precomputed once; contributions are
       rank·weight/out_weight;
     - dangling nodes (no out-edges) leak their mass, which is
-      re-spread uniformly — the dangling sum is a 1-ROW aggregate
-      collect per round (bounded driver round-trip);
-    - ranks are ``localCheckpoint``ed per round (plan truncation —
-      persist alone re-analyzes an O(rounds) plan, SURVEY §7).
+      re-spread uniformly — the dangling sum is a 1-row aggregate
+      broadcast into the round's own plan, so each round is ONE
+      action (its checkpoint) and no driver round-trip;
+    - the rounds run on ``ladder`` with a checkpoint per round.
     Rank mass is conserved to float accuracy each round (test-pinned
     against a numpy twin)."""
     edges = edges.select("src", "dst", F.col("weight").cast("double").alias("w")).persist()
@@ -534,39 +575,30 @@ def pagerank(edges: DataFrame, damping: float = PR_DAMPING, n_iter: int = PR_N_I
     dangling_nodes = nodes.join(
         out_w.select(F.col("src").alias("node")), "node", "left_anti"
     ).persist()
-    try:
-        for _ in range(n_iter):
-            # dangling mass enters the SAME plan as a broadcast 1-row
-            # aggregate (not a .collect()): each round is exactly ONE
-            # action — the eager checkpoint — instead of three
-            dang = ranks.join(dangling_nodes, "node").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+
+    def step(ranks: DataFrame) -> DataFrame:
+        dang = ranks.join(dangling_nodes, "node").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+        )
+        contrib = (
+            ranks.join(weighted, ranks.node == weighted.src)
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") * F.col("share")).alias("inflow"))
+        )
+        return (
+            nodes.join(contrib, nodes.node == contrib.dst, "left")
+            .join(F.broadcast(dang))
+            .select(
+                "node",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.col("dm") / n + F.coalesce(F.col("inflow"), F.lit(0.0)))
+                ).alias("rank"),
             )
-            contrib = (
-                ranks.join(weighted, ranks.node == weighted.src)
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("share")).alias("inflow"))
-            )
-            new_ranks = (
-                nodes.join(contrib, nodes.node == contrib.dst, "left")
-                .join(F.broadcast(dang))
-                .select(
-                    "node",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.col("dm") / n + F.coalesce(F.col("inflow"), F.lit(0.0)))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            ranks = new_ranks
-    finally:
-        edges.unpersist()
-        weighted.unpersist()
-        dangling_nodes.unpersist()
-        nodes.unpersist()
-    return ranks
+        )
+
+    return ladder(ranks, step, n_iter, release=(edges, weighted, dangling_nodes, nodes))
 
 
 def ml_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,6 +874,17 @@ def purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edges
 
 
+def _purchase_edges_sql() -> str:
+    """The ``edges`` CTE: the customer→supplier purchase graph
+    (``purchase_edges``) in DuckDB."""
+    return """edges AS (
+  SELECT concat('c', o_custkey) AS src, concat('s', l_suppkey) AS dst,
+         CAST(COUNT(*) AS BIGINT) AS weight
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  GROUP BY 1, 2
+)"""
+
+
 def purchase_edges_directed(
     spark: SparkSession, sf_dir: str, key: str
 ) -> DataFrame:
@@ -1057,11 +1100,9 @@ def graph_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return purchase_edges(spark, sf_dir).select("src", "dst", "weight")
 
 
-ORACLES["graph_purchase_edges"] = """
-SELECT concat('c', o_custkey) AS src, concat('s', l_suppkey) AS dst,
-       CAST(COUNT(*) AS BIGINT) AS weight
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1, 2
+ORACLES["graph_purchase_edges"] = f"""
+WITH {_purchase_edges_sql()}
+SELECT src, dst, weight FROM edges
 """
 
 
@@ -1428,21 +1469,18 @@ KCORE_ORACLE_UNROLL = 8
 
 
 def _kcore_oracle_sql() -> str:
-    rounds = []
-    for i in range(1, KCORE_ORACLE_UNROLL + 1):
-        p = i - 1
-        rounds.append(
-            f"""l{i} AS MATERIALIZED (
-  SELECT node FROM (SELECT u AS node FROM e{p} UNION ALL SELECT v FROM e{p})
+    ladder = unroll_sql(
+        f"""l{{i}} AS MATERIALIZED (
+  SELECT node FROM (SELECT u AS node FROM e{{p}} UNION ALL SELECT v FROM e{{p}})
   GROUP BY node HAVING COUNT(*) < {KCORE_K}
 ),
-e{i} AS MATERIALIZED (
-  SELECT u, v FROM e{p}
-  WHERE u NOT IN (SELECT node FROM l{i}) AND v NOT IN (SELECT node FROM l{i})
-)"""
-        )
+e{{i}} AS MATERIALIZED (
+  SELECT u, v FROM e{{p}}
+  WHERE u NOT IN (SELECT node FROM l{{i}}) AND v NOT IN (SELECT node FROM l{{i}})
+)""",
+        KCORE_ORACLE_UNROLL,
+    )
     n = KCORE_ORACLE_UNROLL
-    ladder = ",\n".join(rounds)
     return f"""
 WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
 e0 AS MATERIALIZED (
@@ -1643,6 +1681,7 @@ def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
+
     def step(lbl: DataFrame) -> DataFrame:
         neigh = (
             sym.join(lbl, sym.dst == lbl.id)
@@ -1658,21 +1697,7 @@ def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # two propagation rounds composed per checkpointed job (r13
-    # verdict item 5): each step consumes the previous labels exactly
-    # once, so stacking two steps in one plan duplicates no subtree —
-    # it just halves the checkpoint-materialization job count (3
-    # jobs -> 2 at LPA_ROUNDS=3). The computation per round is
-    # byte-identical to the one-checkpoint-per-round form; only the
-    # lineage-cut cadence changes, so every consumer's oracle ladder
-    # replays unchanged.
-    done = 0
-    while done < LPA_ROUNDS:
-        take = min(2, LPA_ROUNDS - done)
-        for _ in range(take):
-            nodes = step(nodes)
-        nodes = nodes.localCheckpoint(eager=True)
-        done += take
+    nodes = ladder(nodes, step, LPA_ROUNDS, compose=2)
     _LPA_CACHE[memo_key] = nodes
     return nodes
 
@@ -1685,11 +1710,10 @@ def _lpa_prelude_sql() -> str:
     CTEs, and the Louvain oracles stack move rounds and Q blocks on
     this ladder, so inlining expands the scan tree exponentially
     (observed: >20k open file handles)."""
-    rounds = "".join(
-        f""",
-r{i} AS MATERIALIZED (
+    rounds = unroll_sql(
+        """r{i} AS MATERIALIZED (
   SELECT e.src AS node, l.label, COUNT(*) AS c
-  FROM edges e JOIN l{i - 1} l ON l.node = e.dst GROUP BY 1, 2
+  FROM edges e JOIN l{p} l ON l.node = e.dst GROUP BY 1, 2
 ),
 l{i} AS MATERIALIZED (
   SELECT node, label FROM (
@@ -1697,13 +1721,14 @@ l{i} AS MATERIALIZED (
            row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
     FROM r{i}
   ) WHERE rn = 1
-)"""
-        for i in range(1, LPA_ROUNDS + 1)
+)""",
+        LPA_ROUNDS,
     )
     return f"""
 WITH {_supported_edges_sql()},
 edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM pair UNION ALL SELECT v, u FROM pair),
-l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM edges){rounds},
+l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM edges),
+{rounds},
 labels AS MATERIALIZED (SELECT node, label AS comm FROM l{LPA_ROUNDS})"""
 
 
@@ -2438,7 +2463,135 @@ FROM (
 
 
 PRL_SCALE = 10**12  # integer rank unit: 1.0 of probability mass
-PRL_ITERS = 4  # unrolled in the DuckDB oracle — keep the two in sync
+PRL_ITERS = 4  # rounds, on both engines
+
+
+def _rank_ladder(
+    spark: SparkSession,
+    sf_dir: str,
+    teleport: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+    out_col: str,
+) -> DataFrame:
+    """The scaled-integer PageRank ladder over the customer→supplier
+    purchase graph, top-20 by scaled rank as (rank, node, ``out_col``).
+    ``teleport(nodes)`` returns every node with ``isseed`` = 1 on a seed
+    of the seed set S (NULL elsewhere), and the one-row seed count k;
+    the ladder unpersists that node frame when it ends. Mass starts as
+    SCALE div k on each seed, and each of the PRL_ITERS rounds computes
+    r'(v) = [v∈S]·(15·SCALE div (100·k))
+            + (85·(inflow(v) + [v∈S]·(dm div k))) div 100,
+    with inflow(v) = Σ (r(u)·weight) div out_weight(u) and dm the rank
+    held by dangling nodes. Every quantity is nonnegative, so integer
+    ``div`` truncates the same way on both engines. One round is one
+    join + one keyed aggregate, with the dangling mass and k as
+    broadcast 1-row aggregates in the same plan; the rounds run on
+    ``ladder``."""
+    from proceso_de_etl_spark.operators.windows import ranked_topk
+
+    edges = purchase_edges(spark, sf_dir)
+    out_w = edges.groupBy("src").agg(F.sum("weight").alias("ow"))
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .persist()
+    )
+    tele, ks = teleport(nodes)
+    weighted = edges.join(out_w, "src").persist()
+    dangling_nodes = nodes.join(
+        out_w.select(F.col("src").alias("node")), "node", "left_anti"
+    ).persist()
+    ranks = (
+        tele.join(F.broadcast(ks))
+        .select(
+            "node",
+            F.expr(
+                f"CASE WHEN isseed = 1 THEN CAST({PRL_SCALE} AS BIGINT) div k ELSE 0 END"
+            ).alias("r"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+    def step(ranks: DataFrame) -> DataFrame:
+        dang = ranks.join(dangling_nodes, "node").agg(
+            F.coalesce(F.sum("r"), F.lit(0)).cast("bigint").alias("dm")
+        )
+        contrib = (
+            ranks.join(weighted, ranks.node == weighted.src)
+            .groupBy("dst")
+            .agg(F.sum(F.expr("(r * weight) div ow")).alias("inflow"))
+        )
+        return (
+            tele.join(contrib, tele.node == contrib.dst, "left")
+            .join(F.broadcast(dang))
+            .join(F.broadcast(ks))
+            .select(
+                "node",
+                F.expr(
+                    f"CASE WHEN isseed = 1 THEN (15 * CAST({PRL_SCALE} AS BIGINT)) div (100 * k) ELSE 0 END"
+                    " + (85 * (coalesce(inflow, CAST(0 AS BIGINT))"
+                    " + CASE WHEN isseed = 1 THEN dm div k ELSE 0 END)) div 100"
+                ).alias("r"),
+            )
+        )
+
+    # edges stays persisted: it is the shared purchase_edges frame
+    # (released by unpersist_copurchase, not per-consumer)
+    ranks = ladder(ranks, step, PRL_ITERS, release=(weighted, dangling_nodes, nodes, tele))
+    return ranked_topk(
+        ranks.select("node", F.col("r").alias(out_col)),
+        [F.desc(out_col), F.asc("node")],
+        20,
+    ).select("rank", "node", out_col)
+
+
+def _rank_ladder_sql(seeds_sql: str, out_col: str) -> str:
+    """``_rank_ladder``'s oracle: ``seeds_sql`` selects the seed nodes
+    from ``nodes``; r0 … r{PRL_ITERS} are the rounds."""
+    rounds = unroll_sql(
+        f"""d{{i}} AS (
+  SELECT COALESCE(SUM(r.r), 0) AS dm
+  FROM r{{p}} r LEFT JOIN outw o ON r.node = o.src WHERE o.src IS NULL
+),
+c{{i}} AS (
+  SELECT e.dst, SUM((r.r * e.weight) // o.ow) AS inflow
+  FROM r{{p}} r JOIN edges e ON e.src = r.node JOIN outw o ON o.src = e.src
+  GROUP BY e.dst
+),
+r{{i}} AS (
+  SELECT nd.node,
+         CASE WHEN s.node IS NOT NULL THEN (15 * {PRL_SCALE}) // (100 * k) ELSE 0 END
+         + (85 * (COALESCE(c.inflow, 0)
+                  + CASE WHEN s.node IS NOT NULL THEN dm // k ELSE 0 END)) // 100 AS r
+  FROM nodes nd
+  LEFT JOIN c{{i}} c ON c.dst = nd.node
+  LEFT JOIN seeds s ON s.node = nd.node, ks, d{{i}}
+)""",
+        PRL_ITERS,
+    )
+    return f"""
+WITH {_purchase_edges_sql()},
+outw AS (SELECT src, SUM(weight) AS ow FROM edges GROUP BY src),
+nodes AS (
+  SELECT DISTINCT node FROM (
+    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges
+  )
+),
+seeds AS ({seeds_sql}),
+ks AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM seeds),
+r0 AS (
+  SELECT nd.node,
+         CASE WHEN s.node IS NOT NULL THEN {PRL_SCALE} // k ELSE 0 END AS r
+  FROM nodes nd LEFT JOIN seeds s ON s.node = nd.node, ks
+),
+{rounds}
+SELECT CAST(rank AS BIGINT) AS rank, node, CAST({out_col} AS BIGINT) AS {out_col}
+FROM (
+  SELECT node, r AS {out_col},
+         row_number() OVER (ORDER BY r DESC, node ASC) AS rank
+  FROM r{PRL_ITERS}
+) WHERE rank <= 20
+"""
 
 
 def graph_pagerank_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2448,70 +2601,25 @@ def graph_pagerank_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PRL_SCALE = one unit of mass) and every division an integer
     `div` — the graph_kcore unrolled-ladder discipline applied to the
     one graph operator whose float iteration kept it rows-only. Both
-    engines then compute bit-identical ranks: contribution =
-    (r·weight) div out_weight, teleport = (15·SCALE) div (100·n),
+    engines then compute bit-identical ranks. It is ``_rank_ladder``
+    with every node a seed (k = n): teleport = (15·SCALE) div (100·n),
     damped inflow = (85·(inflow + dangling div n)) div 100.
     Truncation drops < 1 unit (1e-12 of mass) per division —
     bounded by (in-degree+2)/SCALE per node per round, measured
     against the float twin in tests — while determinism becomes
-    exact. Iteration shape unchanged: one join + one keyed agg per
-    round, dangling mass as an in-plan broadcast 1-row aggregate,
-    per-round localCheckpoint. Returns the top-20 nodes by scaled
-    rank via TakeOrderedAndProject."""
-    from proceso_de_etl_spark.operators.windows import ranked_topk
+    exact. Returns the top-20 nodes by scaled rank via
+    TakeOrderedAndProject."""
 
-    edges = purchase_edges(spark, sf_dir)
-    out_w = edges.groupBy("src").agg(F.sum("weight").alias("ow"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    ncnt = nodes.agg(F.count("*").alias("n"))  # in-plan scalar, no collect
-    weighted = edges.join(out_w, "src").persist()
-    dangling_nodes = nodes.join(
-        out_w.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-    ranks = (
-        nodes.join(F.broadcast(ncnt))
-        .select("node", F.expr(f"CAST({PRL_SCALE} AS BIGINT) div n").alias("r"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for _ in range(PRL_ITERS):
-            dang = ranks.join(dangling_nodes, "node").agg(
-                F.coalesce(F.sum("r"), F.lit(0)).cast("bigint").alias("dm")
-            )
-            contrib = (
-                ranks.join(weighted, ranks.node == weighted.src)
-                .groupBy("dst")
-                .agg(F.sum(F.expr("(r * weight) div ow")).alias("inflow"))
-            )
-            ranks = (
-                nodes.join(contrib, nodes.node == contrib.dst, "left")
-                .join(F.broadcast(dang))
-                .join(F.broadcast(ncnt))
-                .select(
-                    "node",
-                    F.expr(
-                        f"(15 * CAST({PRL_SCALE} AS BIGINT)) div (100 * n)"
-                        " + (85 * (coalesce(inflow, CAST(0 AS BIGINT)) + dm div n)) div 100"
-                    ).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        # edges stays persisted: it is the shared purchase_edges frame
-        # (released by unpersist_copurchase, not per-consumer)
-        weighted.unpersist()
-        dangling_nodes.unpersist()
-        nodes.unpersist()
-    return ranked_topk(
-        ranks.select("node", F.col("r").alias("pr_scaled")),
-        [F.desc("pr_scaled"), F.asc("node")],
-        20,
-    ).select("rank", "node", "pr_scaled")
+    def everyone(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+        return (
+            nodes.withColumn("isseed", F.lit(1)),
+            nodes.agg(F.count("*").cast("bigint").alias("k")),
+        )
+
+    return _rank_ladder(spark, sf_dir, everyone, "pr_scaled")
+
+
+ORACLES["graph_pagerank_ladder"] = _rank_ladder_sql("SELECT node FROM nodes", "pr_scaled")
 
 
 PPR_SEEDS = 3  # personalization set: the 3 lexicographically-smallest
@@ -2520,194 +2628,33 @@ PPR_SEEDS = 3  # personalization set: the 3 lexicographically-smallest
 
 def graph_ppr_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T44d — PERSONALIZED PageRank made driver-verifiable (r8): the
-    T44b integer ladder with the teleport vector concentrated on a
-    pinned seed set (the PPR_SEEDS smallest customer nodes) and the
-    dangling mass returned to the seeds — the recommendation-serving
-    variant: on the bipartite customer→supplier purchase graph the
-    ranking reads as "the suppliers most relevant to THESE
-    customers", the query a global PageRank cannot answer. Same
-    exact-BIGINT discipline as T44b (PRL_SCALE mass units, every
-    division integer, all quantities nonnegative so truncate==floor
-    cross-engine): r'(v) = [v∈S]·(15·SCALE div (100·|S|))
-    + (85·(inflow(v) + [v∈S]·(dm div |S|))) div 100, PRL_ITERS
-    unrolled rounds, per-round localCheckpoint, top-20 via
-    TakeOrderedAndProject. Value-oracled end to end — the seed set
-    is an ORDER BY/LIMIT both engines replay identically.
+    T44b integer ladder (``_rank_ladder``) with the teleport vector
+    concentrated on a pinned seed set (the PPR_SEEDS smallest customer
+    nodes) and the dangling mass returned to the seeds — the
+    recommendation-serving variant: on the bipartite customer→supplier
+    purchase graph the ranking reads as "the suppliers most relevant
+    to THESE customers", the query a global PageRank cannot answer.
+    Value-oracled end to end — the seed set is an ORDER BY/LIMIT both
+    engines replay identically.
     Ref: extends T44b; the reference has no graph surface."""
-    from proceso_de_etl_spark.operators.windows import ranked_topk
 
-    edges = purchase_edges(spark, sf_dir)
-    out_w = edges.groupBy("src").agg(F.sum("weight").alias("ow"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    seeds = (
-        nodes.filter(F.col("node").startswith("c"))
-        .orderBy("node")
-        .limit(PPR_SEEDS)
-        .withColumn("isseed", F.lit(1))
-        .persist()
-    )
-    ks = seeds.agg(F.count("*").cast("bigint").alias("k"))  # in-plan scalar
-    weighted = edges.join(out_w, "src").persist()
-    dangling_nodes = nodes.join(
-        out_w.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-
-    def teleport_rank(inflow_joined: DataFrame) -> DataFrame:
-        return inflow_joined.select(
-            "node",
-            F.expr(
-                f"CASE WHEN isseed = 1 THEN (15 * CAST({PRL_SCALE} AS BIGINT)) div (100 * k) ELSE 0 END"
-                " + (85 * (coalesce(inflow, CAST(0 AS BIGINT))"
-                " + CASE WHEN isseed = 1 THEN dm div k ELSE 0 END)) div 100"
-            ).alias("r"),
+    def first_customers(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+        seeds = (
+            nodes.filter(F.col("node").startswith("c"))
+            .orderBy("node")
+            .limit(PPR_SEEDS)
+            .withColumn("isseed", F.lit(1))
         )
+        # persisted, so the rounds do not select the seeds again
+        tele = nodes.join(F.broadcast(seeds), "node", "left").persist()
+        return tele, tele.agg(F.count("isseed").cast("bigint").alias("k"))
 
-    ranks = (
-        nodes.join(F.broadcast(seeds), "node", "left")
-        .join(F.broadcast(ks))
-        .select(
-            "node",
-            F.expr(
-                f"CASE WHEN isseed = 1 THEN CAST({PRL_SCALE} AS BIGINT) div k ELSE 0 END"
-            ).alias("r"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for _ in range(PRL_ITERS):
-            dang = ranks.join(dangling_nodes, "node").agg(
-                F.coalesce(F.sum("r"), F.lit(0)).cast("bigint").alias("dm")
-            )
-            contrib = (
-                ranks.join(weighted, ranks.node == weighted.src)
-                .groupBy("dst")
-                .agg(F.sum(F.expr("(r * weight) div ow")).alias("inflow"))
-            )
-            ranks = teleport_rank(
-                nodes.join(contrib, nodes.node == contrib.dst, "left")
-                .join(F.broadcast(seeds), "node", "left")
-                .join(F.broadcast(dang))
-                .join(F.broadcast(ks))
-            ).localCheckpoint(eager=True)
-    finally:
-        weighted.unpersist()
-        dangling_nodes.unpersist()
-        seeds.unpersist()
-        nodes.unpersist()
-    return ranked_topk(
-        ranks.select("node", F.col("r").alias("ppr_scaled")),
-        [F.desc("ppr_scaled"), F.asc("node")],
-        20,
-    ).select("rank", "node", "ppr_scaled")
+    return _rank_ladder(spark, sf_dir, first_customers, "ppr_scaled")
 
 
-def _ppr_ladder_oracle_sql() -> str:
-    rounds = []
-    prev = "p0"
-    for k in range(1, PRL_ITERS + 1):
-        rounds.append(f"""
-pd{k} AS (
-  SELECT COALESCE(SUM(r.r), 0) AS dm
-  FROM {prev} r LEFT JOIN outw o ON r.node = o.src WHERE o.src IS NULL
-),
-pc{k} AS (
-  SELECT e.dst, SUM((r.r * e.weight) // o.ow) AS inflow
-  FROM {prev} r JOIN edges e ON e.src = r.node JOIN outw o ON o.src = e.src
-  GROUP BY e.dst
-),
-p{k} AS (
-  SELECT nd.node,
-         CASE WHEN s.node IS NOT NULL THEN (15 * {PRL_SCALE}) // (100 * k) ELSE 0 END
-         + (85 * (COALESCE(c.inflow, 0)
-                  + CASE WHEN s.node IS NOT NULL THEN dm // k ELSE 0 END)) // 100 AS r
-  FROM nodes nd
-  LEFT JOIN pc{k} c ON c.dst = nd.node
-  LEFT JOIN seeds s ON s.node = nd.node, ks, pd{k}
-)""")
-        prev = f"p{k}"
-    return f"""
-WITH edges AS (
-  SELECT concat('c', o_custkey) AS src, concat('s', l_suppkey) AS dst,
-         COUNT(*) AS weight
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-outw AS (SELECT src, SUM(weight) AS ow FROM edges GROUP BY src),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges
-  )
-),
-seeds AS (SELECT node FROM nodes WHERE node LIKE 'c%' ORDER BY node LIMIT {PPR_SEEDS}),
-ks AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM seeds),
-p0 AS (
-  SELECT nd.node,
-         CASE WHEN s.node IS NOT NULL THEN {PRL_SCALE} // k ELSE 0 END AS r
-  FROM nodes nd LEFT JOIN seeds s ON s.node = nd.node, ks
-),{",".join(rounds)}
-SELECT CAST(rank AS BIGINT) AS rank, node, CAST(ppr_scaled AS BIGINT) AS ppr_scaled
-FROM (
-  SELECT node, r AS ppr_scaled,
-         row_number() OVER (ORDER BY r DESC, node ASC) AS rank
-  FROM {prev}
-) WHERE rank <= 20
-"""
-
-
-ORACLES["graph_ppr_ladder"] = _ppr_ladder_oracle_sql()
-
-
-def _pagerank_ladder_oracle_sql() -> str:
-    rounds = []
-    prev = "r0"
-    for k in range(1, PRL_ITERS + 1):
-        rounds.append(f"""
-d{k} AS (
-  SELECT COALESCE(SUM(r.r), 0) AS dm
-  FROM {prev} r LEFT JOIN outw o ON r.node = o.src WHERE o.src IS NULL
-),
-c{k} AS (
-  SELECT e.dst, SUM((r.r * e.weight) // o.ow) AS inflow
-  FROM {prev} r JOIN edges e ON e.src = r.node JOIN outw o ON o.src = e.src
-  GROUP BY e.dst
-),
-r{k} AS (
-  SELECT nd.node,
-         (15 * {PRL_SCALE}) // (100 * n)
-         + (85 * (COALESCE(c.inflow, 0) + dm // n)) // 100 AS r
-  FROM nodes nd LEFT JOIN c{k} c ON c.dst = nd.node, nn, d{k}
-)""")
-        prev = f"r{k}"
-    return f"""
-WITH edges AS (
-  SELECT concat('c', o_custkey) AS src, concat('s', l_suppkey) AS dst,
-         COUNT(*) AS weight
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-outw AS (SELECT src, SUM(weight) AS ow FROM edges GROUP BY src),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges
-  )
-),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-r0 AS (SELECT node, {PRL_SCALE} // n AS r FROM nodes, nn),{",".join(rounds)}
-SELECT CAST(rank AS BIGINT) AS rank, node, CAST(pr_scaled AS BIGINT) AS pr_scaled
-FROM (
-  SELECT node, r AS pr_scaled,
-         row_number() OVER (ORDER BY r DESC, node ASC) AS rank
-  FROM {prev}
-) WHERE rank <= 20
-"""
-
-
-ORACLES["graph_pagerank_ladder"] = _pagerank_ladder_oracle_sql()
+ORACLES["graph_ppr_ladder"] = _rank_ladder_sql(
+    f"SELECT node FROM nodes WHERE node LIKE 'c%' ORDER BY node LIMIT {PPR_SEEDS}", "ppr_scaled"
+)
 
 
 HITS_SCALE = 10**6  # integer score unit: the per-round L∞ maximum.
@@ -2716,7 +2663,7 @@ HITS_SCALE = 10**6  # integer score unit: the per-round L∞ maximum.
 # raw·SCALE ≤ (n·SCALE)·max_w·SCALE — at 1e6 nodes and max edge
 # weight 1e3 that is ~1e21/1e3 ≈ 1e18, inside BIGINT; past ~100× the
 # node count drop HITS_SCALE a decade (the PRL_SCALE rule).
-HITS_ITERS = 3  # unrolled in the DuckDB oracle — keep the two in sync
+HITS_ITERS = 3  # rounds, on both engines
 HITS_TOPK = 10
 
 
@@ -2806,31 +2753,25 @@ def graph_hits_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_ladder_oracle_sql() -> str:
-    rounds = []
-    prev = "h0"
-    for k in range(1, HITS_ITERS + 1):
-        rounds.append(f"""
-ar{k} AS (
+    rounds = unroll_sql(
+        f"""ar{{i}} AS (
   SELECT e.dst, SUM(h.h * e.weight) AS raw
-  FROM {prev} h JOIN edges e ON e.src = h.node GROUP BY e.dst
+  FROM h{{p}} h JOIN edges e ON e.src = h.node GROUP BY e.dst
 ),
-am{k} AS (SELECT MAX(raw) AS mx FROM ar{k}),
-a{k} AS (SELECT dst AS node, (raw * {HITS_SCALE}) // mx AS a FROM ar{k}, am{k}),
-hr{k} AS (
+am{{i}} AS (SELECT MAX(raw) AS mx FROM ar{{i}}),
+a{{i}} AS (SELECT dst AS node, (raw * {HITS_SCALE}) // mx AS a FROM ar{{i}}, am{{i}}),
+hr{{i}} AS (
   SELECT e.src, SUM(a.a * e.weight) AS raw
-  FROM a{k} a JOIN edges e ON e.dst = a.node GROUP BY e.src
+  FROM a{{i}} a JOIN edges e ON e.dst = a.node GROUP BY e.src
 ),
-hm{k} AS (SELECT MAX(raw) AS mx FROM hr{k}),
-h{k} AS (SELECT src AS node, (raw * {HITS_SCALE}) // mx AS h FROM hr{k}, hm{k})""")
-        prev = f"h{k}"
+hm{{i}} AS (SELECT MAX(raw) AS mx FROM hr{{i}}),
+h{{i}} AS (SELECT src AS node, (raw * {HITS_SCALE}) // mx AS h FROM hr{{i}}, hm{{i}})""",
+        HITS_ITERS,
+    )
     return f"""
-WITH edges AS (
-  SELECT concat('c', o_custkey) AS src, concat('s', l_suppkey) AS dst,
-         COUNT(*) AS weight
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-h0 AS (SELECT DISTINCT src AS node, {HITS_SCALE} AS h FROM edges),{",".join(rounds)}
+WITH {_purchase_edges_sql()},
+h0 AS (SELECT DISTINCT src AS node, {HITS_SCALE} AS h FROM edges),
+{rounds}
 SELECT side, CAST(rank AS BIGINT) AS rank, node, CAST(score_scaled AS BIGINT) AS score_scaled
 FROM (
   SELECT 'authority' AS side, node, a AS score_scaled,
@@ -3468,24 +3409,21 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ktruss_oracle_sql() -> str:
-    rounds = []
-    for i in range(1, KTRUSS_ORACLE_UNROLL + 1):
-        p = i - 1
-        rounds.append(
-            f"""sym{p} AS MATERIALIZED (
-  SELECT u AS a, v AS b FROM e{p} UNION ALL SELECT v, u FROM e{p}
+    ladder = unroll_sql(
+        f"""sym{{p}} AS MATERIALIZED (
+  SELECT u AS a, v AS b FROM e{{p}} UNION ALL SELECT v, u FROM e{{p}}
 ),
-e{i} AS MATERIALIZED (
+e{{i}} AS MATERIALIZED (
   SELECT e.u, e.v
-  FROM e{p} e
-  JOIN sym{p} s1 ON s1.a = e.u
-  JOIN sym{p} s2 ON s2.a = e.v AND s2.b = s1.b
+  FROM e{{p}} e
+  JOIN sym{{p}} s1 ON s1.a = e.u
+  JOIN sym{{p}} s2 ON s2.a = e.v AND s2.b = s1.b
   GROUP BY e.u, e.v
   HAVING COUNT(*) >= {KTRUSS_K - 2}
-)"""
-        )
+)""",
+        KTRUSS_ORACLE_UNROLL,
+    )
     n = KTRUSS_ORACLE_UNROLL
-    ladder = ",\n".join(rounds)
     return f"""
 WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
 e0 AS MATERIALIZED (

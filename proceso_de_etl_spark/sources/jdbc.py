@@ -1,9 +1,9 @@
-"""JDBC source/sink (SURVEY.md §2.4 S5) — the reference's SQL Server
-target (reference main.py:22-36, sqlalchemy+pyodbc), as Spark's JDBC
+"""JDBC source (SURVEY.md §2.4 S5) — the reference's SQL Server
+database (reference main.py:22-36, sqlalchemy+pyodbc), as Spark's JDBC
 connector.
 
-This container ships no JDBC driver jars, so these builders are
-import-safe and fail with an actionable message only when actually
+No JDBC driver jar ships with the package, so the reader is
+import-safe and fails with an actionable message only when actually
 invoked without a driver. The partitioned-read options are the part
 that matters at scale: without partitionColumn/num_partitions a JDBC
 read is one task on one executor.
@@ -54,31 +54,3 @@ def read_jdbc_partitioned(
         .load()
     )
 
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    driver: str = "com.microsoft.sqlserver.jdbc.SQLServerDriver",
-    batchsize: int = 10_000,
-    **options: str,
-) -> None:
-    """Batched JDBC append — the load half of the reference pipeline.
-    Idempotence comes from operators/etl.incremental_new_rows before
-    the write, not from the sink."""
-    if not jdbc_available(df.sparkSession, driver):
-        raise RuntimeError(
-            f"JDBC driver {driver!r} not on the classpath; add the jar via "
-            "spark.jars / spark.jars.packages to use the JDBC sink."
-        )
-    (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("driver", driver)
-        .option("batchsize", str(batchsize))
-        .options(**options)
-        .mode(mode)
-        .save()
-    )

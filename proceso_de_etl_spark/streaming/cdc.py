@@ -30,77 +30,19 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import Window as W
 
 from proceso_de_etl_spark.operators.etl import ORACLES as _ETL_ORACLES
+from proceso_de_etl_spark.operators.etl import (
+    _CUTOFF,
+    _change_feed,
+    cdc_snapshot,
+    merge_cdc_batch,
+)
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
 from proceso_de_etl_spark.streaming.jobs import drain, replay
 
 ORACLES: dict[str, str] = {}
-
-_CUTOFF = "TIMESTAMP '1999-01-01 00:00:00'"
-
-
-def _change_feed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
-    """(base snapshot, [change sets in seq order]) — the exact feed
-    etl_cdc_apply synthesizes (etl.py::etl_cdc_apply), split into one
-    DataFrame per sequence number so each lands as its own file."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-    )
-    cutoff = F.expr(_CUTOFF)
-    base = orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate")
-    inserts = orders.filter(F.col("o_orderdate") >= cutoff).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice",
-        F.lit("I").alias("op"), F.lit(1).alias("seq"),
-    )
-    updates = base.filter(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey",
-        F.lit("U-REV").alias("o_orderstatus"),
-        (F.col("o_totalprice") + 100.0).alias("o_totalprice"),
-        F.lit("U").alias("op"), F.lit(2).alias("seq"),
-    )
-    deletes = base.filter(F.col("o_orderkey") % 13 == 0).select(
-        "o_orderkey",
-        F.lit(None).cast("string").alias("o_orderstatus"),
-        F.lit(None).cast("double").alias("o_totalprice"),
-        F.lit("D").alias("op"), F.lit(3).alias("seq"),
-    )
-    return base, [inserts, updates, deletes]
-
-
-def merge_cdc_batch(snapshot: DataFrame, changes: DataFrame) -> DataFrame:
-    """One micro-batch merge: last change per key within the batch,
-    then a seq-guarded full-outer upsert against the snapshot.
-    Snapshot schema: (o_orderkey, o_orderstatus, o_totalprice,
-    row_source, seq, deleted)."""
-    w = W.partitionBy("o_orderkey").orderBy(F.desc("seq"))
-    last = (
-        changes.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            F.col("o_orderkey").alias("c_key"),
-            F.col("o_orderstatus").alias("c_status"),
-            F.col("o_totalprice").alias("c_price"),
-            "op",
-            F.col("seq").alias("c_seq"),
-        )
-    )
-    merged = snapshot.join(last, snapshot.o_orderkey == last.c_key, "full_outer")
-    change_wins = F.col("c_seq").isNotNull() & (
-        F.col("c_seq") > F.coalesce(F.col("seq"), F.lit(-1))
-    )
-    return merged.select(
-        F.coalesce(F.col("o_orderkey"), F.col("c_key")).alias("o_orderkey"),
-        F.when(change_wins, F.col("c_status")).otherwise(F.col("o_orderstatus")).alias("o_orderstatus"),
-        F.when(change_wins, F.col("c_price")).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
-        F.when(change_wins, F.col("op")).otherwise(F.col("row_source")).alias("row_source"),
-        F.when(change_wins, F.col("c_seq")).otherwise(F.coalesce(F.col("seq"), F.lit(-1))).alias("seq"),
-        F.when(change_wins, F.col("op") == "D")
-        .otherwise(F.coalesce(F.col("deleted"), F.lit(False)))
-        .alias("deleted"),
-    )
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,12 +54,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundaries."""
     workdir = tempfile.mkdtemp(prefix="stream_cdc_")
     base, change_sets = _change_feed(spark, sf_dir)
-    snap0 = base.select(
-        "o_orderkey", "o_orderstatus", "o_totalprice",
-        F.lit("base").alias("row_source"),
-        F.lit(0).alias("seq"),
-        F.lit(False).alias("deleted"),
-    )
+    snap0 = cdc_snapshot(base)
     # each version is read back with the schema of the frame that wrote
     # it: no parquet schema-inference job per micro-batch
     state = {"cur": os.path.join(workdir, "snapshot_v0"), "schema": snap0.schema}

@@ -101,3 +101,34 @@ def test_oracle_check_pass_mismatch_and_error(spark):
     row = harness.check(spark, con, SF_SMOKE, "no_such_key")
     assert not harness.passed(row)
     assert re.search(r"KeyError: 'no_such_key'", row["err"]), row["err"]
+
+
+def test_capture_mask_is_blind_to_session_numbering():
+    """Two sessions print the same distinct-aggregate plan with other
+    expression ids, lambda suffixes and ``gid`` numbering: the rewrite
+    orders its groups by a hash of the session's expression ids, which
+    permutes the Expand columns and renumbers the groups. The mask
+    prints both alike, and still tells a plan apart whose aggregate
+    reads another group."""
+    from capture_plans import mask
+
+    one = (
+        "Aggregate [k#1], [k#1, count(a#2) FILTER (WHERE (gid#9 = 1)) AS na#10, "
+        "count(b#3) FILTER (WHERE (gid#9 = 2)) AS nb#11]\n"
+        "+- Aggregate [k#1, a#12, b#13, gid#9], [k#1, a#12, b#13, gid#9]\n"
+        "   +- Expand [[k#1, a#2, null, 1], [k#1, null, b#3, 2]], [k#1, a#12, b#13, gid#9]\n"
+        "      +- Project [k#1, a#2, b#3, filter(t#4, lambdafunction(NOT (lambda x_870# = ), "
+        "lambda x_870#, false)) AS w#5]\n"
+    )
+    other = (
+        "Aggregate [k#5], [k#5, count(a#6) FILTER (WHERE (gid#20 = 2)) AS na#21, "
+        "count(b#7) FILTER (WHERE (gid#20 = 1)) AS nb#22]\n"
+        "+- Aggregate [k#5, b#24, a#23, gid#20], [k#5, b#24, a#23, gid#20]\n"
+        "   +- Expand [[k#5, b#7, null, 1], [k#5, null, a#6, 2]], [k#5, b#24, a#23, gid#20]\n"
+        "      +- Project [k#5, a#6, b#7, filter(t#8, lambdafunction(NOT (lambda x_123# = ), "
+        "lambda x_123#, false)) AS w#9]\n"
+    )
+    assert mask(one) == mask(other)
+    assert "Expand [[a#, null, 0, k#], [null, b#, 1, k#]], [a#, b#, gid#, k#]" in mask(one)
+    crossed = other.replace("gid#20 = 2)) AS na", "gid#20 = 1)) AS na")
+    assert mask(crossed) != mask(one)

@@ -1878,6 +1878,62 @@ def test_oriented_adjacency_summary_on_empty_graph(spark, tmp_path):
     assert got == want == [(0, 0, None, None, None, None)]
 
 
+def test_rank_ladders_on_empty_purchase_graph(spark, tmp_path):
+    """With lineitem empty the purchase graph has no node: the PageRank,
+    personalized PageRank and HITS ladders run all their rounds without
+    an error (no seed count or maximum divides anything) and return no
+    row, with the columns they return on real data."""
+    from proceso_de_etl_spark.operators import ml
+    from tests.conftest import SF_SMOKE
+
+    sf = _empty_lineitem_sf(tmp_path)
+    try:
+        for key in ("graph_pagerank_ladder", "graph_ppr_ladder", "graph_hits_ladder"):
+            df = getattr(ml, key)(spark, sf)
+            assert df.collect() == [], key
+            assert df.schema == getattr(ml, key)(spark, SF_SMOKE).schema, key
+    finally:
+        ml.unpersist_copurchase()
+
+
+def test_ladder_checkpoint_cadence_and_release(spark, monkeypatch):
+    """``ladder`` checkpoints after every ``compose`` steps and after the
+    last one, applies the step exactly ``rounds`` times, and unpersists
+    the frames it was handed even when a step raises."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from proceso_de_etl_spark.operators.ml import ladder, unroll_sql
+
+    checkpoints = []
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, eager=True):
+        checkpoints.append(self.first()[0])
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    step = lambda df: df.select((F.col("x") + 1).alias("x"))  # noqa: E731
+    start = spark.range(1).select(F.lit(0).alias("x"))
+    for rounds, compose, seen in ((3, 2, [2, 3]), (4, 1, [1, 2, 3, 4]), (4, 2, [2, 4])):
+        checkpoints.clear()
+        assert ladder(start, step, rounds, compose=compose).first()[0] == rounds
+        assert checkpoints == seen, (rounds, compose)
+
+    held = spark.range(3).persist()
+    held.count()
+
+    def boom(df):
+        raise RuntimeError("round failed")
+
+    with pytest.raises(RuntimeError):
+        ladder(start, boom, 2, release=(held,))
+    assert not held.storageLevel.useMemory and not held.storageLevel.useDisk
+
+    assert unroll_sql("t{i} AS (SELECT * FROM t{p})", 2) == (
+        "t1 AS (SELECT * FROM t0),\nt2 AS (SELECT * FROM t1)"
+    )
+
+
 def test_exp_smoothing_matches_python_recursion(spark):
     """A106 semantics on gate data: replay the exact integer SES
     recursion (s_t = (2·x_t·SCALE + 8·s_{t−1}) div 10, sae_t +=

@@ -685,6 +685,7 @@ def test_r7_companions_stay_jvm_side(all_plans):
         "graph_louvain_ladder",
         "graph_louvain_fixpoint",
         "graph_pagerank_ladder",
+        "graph_ppr_ladder",
         "graph_link_prediction",
         "graph_hits_ladder",
         "ml_kmeans_ladder",
