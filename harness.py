@@ -73,8 +73,10 @@ def next_round(root: str = ROOT) -> int:
 def check(spark: SparkSession, con, sf: str, key: str, sql: str | None = None) -> dict:
     """Strict oracle gate for one key (the sweep's ledger row): row
     count, column names and exact-repr canonicalized values. ``sql``
-    defaults to the key's registered oracle; any exception, an unknown
-    key included, lands in ``err`` instead of raising."""
+    defaults to the key's registered oracle, looked up before the key
+    runs: a key with no oracle launches no Spark job. Any exception, an
+    unknown key or a missing oracle included, lands in ``err`` instead
+    of raising."""
     row = {
         "rows_match": False,
         "schema_match": False,
@@ -85,8 +87,13 @@ def check(spark: SparkSession, con, sf: str, key: str, sql: str | None = None) -
     }
     t0 = time.time()
     try:
-        got = entrymod.queries()[key](spark, sf).toPandas()
-        want = con.sql(sql if sql is not None else entrymod.oracle_sql()[key]).df()
+        build = entrymod.queries()[key]
+        if sql is None:
+            sql = entrymod.oracle_sql().get(key)
+            if sql is None:
+                raise KeyError(f"no oracle for {key}")
+        got = build(spark, sf).toPandas()
+        want = con.sql(sql).df()
         row["spark_rows"], row["oracle_rows"] = len(got), len(want)
         row["rows_match"] = len(got) == len(want)
         row["schema_match"] = sorted(got.columns) == sorted(want.columns)

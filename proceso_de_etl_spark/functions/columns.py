@@ -30,11 +30,13 @@ def dsum(c: ColumnOrName, scale: int = 2) -> Column:
 
     Perf note (measured, sf0.1): a scaled-BIGINT accumulator
     (sum(round(x*10^s)::bigint)/10^s) is ~2.5x faster than DECIMAL,
-    but Spark's non-ANSI long sum WRAPS silently on overflow —
-    unacceptable for an engine sized for 100 TB facts. DECIMAL
-    accumulation cannot overflow (38-digit headroom), so it stays
-    the default; swap in the long path only for bounded-domain
-    columns where the product sum provably fits 63 bits."""
+    but in ANSI mode (``spark.sql.ansi.enabled=true``, the Spark 4
+    default that ``get_spark`` keeps) a BIGINT sum past 2⁶³ raises
+    ARITHMETIC_OVERFLOW, and one raised overflow fails the whole query
+    — unacceptable for an engine sized for 100 TB facts. The DECIMAL
+    accumulator has 38 digits of headroom, so it stays the default;
+    swap in the long path only for bounded-domain columns where the
+    product sum provably fits 63 bits."""
     return F.sum(money(c, scale)).cast("double")
 
 

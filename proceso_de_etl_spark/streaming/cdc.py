@@ -2,26 +2,31 @@
 
 The batch twin ``operators/etl.py::etl_cdc_apply`` applies a whole
 change feed in one pass; this job applies the SAME feed as it
-*arrives* — one micro-batch per landed file — via a foreachBatch
-merge into a persistent snapshot, the shape a production CDC
-consumer runs forever (reference main.py:45-59 re-processes whole
+*arrives* — one micro-batch per landed file — the shape a production
+CDC consumer runs forever (reference main.py:45-59 re-processes whole
 files on every run; this is that loop done incrementally).
 
-Correctness under streaming conditions comes from two properties of
-the merge, not from delivery order:
+Merge on read: each micro-batch is appended, unchanged, to a parquet
+change log (``streaming.jobs.drain_to_log``), and after the drain the
+key's merge runs once over the whole log as a compaction, written as
+the next version of the state. Correctness under streaming conditions
+comes from two properties of the merge, not from delivery order or
+batch boundaries:
 - each change carries a monotone ``seq``; a change only wins against
-  the snapshot when ``change.seq > snapshot.seq``, so replayed or
+  the snapshot when ``change.seq > snapshot.seq``, and the last change
+  per key wins within the log, so replayed, redelivered or
   out-of-order batches converge to the same state (idempotent
   upsert);
 - deletes write TOMBSTONES (``deleted`` flag + seq) instead of
   removing rows, so a late lower-seq change cannot resurrect a
   deleted key. Readers filter tombstones out.
 
-Scale: each micro-batch is one window (last change per key) + one
-full-outer join against the snapshot — no per-event loop, no driver
-state beyond the current-version pointer. On a cluster the snapshot
-is a table (Delta/Iceberg MERGE); here it is a versioned parquet dir
-with atomic rename promotion (sources/atomic.py's pattern).
+Scale: a micro-batch costs one O(batch) append — no read of the
+state, no window, no join, no shuffle — and a drain costs one
+window + full-outer join over the log against the state, instead of
+one O(table) rewrite of the whole state per micro-batch. On a cluster
+the state is a table (Delta/Iceberg MERGE) and the log its change
+feed; here both are parquet dirs.
 """
 
 from __future__ import annotations
@@ -40,44 +45,39 @@ from proceso_de_etl_spark.operators.etl import (
 )
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
-from proceso_de_etl_spark.streaming.jobs import drain, replay
+from proceso_de_etl_spark.streaming.jobs import drain_to_log, replay
 
 ORACLES: dict[str, str] = {}
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract query: land the three change sets as separate files
-    (``replay``), stream them one-file-per-trigger, merge each
-    micro-batch into the versioned snapshot, return the final
-    snapshot (tombstones filtered). Shares etl_cdc_apply's DuckDB
-    oracle — the seq guard makes the final state independent of
-    batch boundaries."""
+    (``replay``), stream them one-file-per-trigger into the change log,
+    then compact: one ``merge_cdc_batch`` of the whole log into the
+    seq-0 snapshot, written as ``snapshot_v1``; return it (tombstones
+    filtered). Shares etl_cdc_apply's DuckDB oracle — the seq guard
+    makes the final state independent of batch boundaries."""
     workdir = tempfile.mkdtemp(prefix="stream_cdc_")
     base, change_sets = _change_feed(spark, sf_dir)
-    snap0 = cdc_snapshot(base)
-    # each version is read back with the schema of the frame that wrote
-    # it: no parquet schema-inference job per micro-batch
-    state = {"cur": os.path.join(workdir, "snapshot_v0"), "schema": snap0.schema}
-    snap0.write.parquet(state["cur"])
-
     # one landed file per change set, the upstream CDC feed's shape;
-    # the operator path (stream -> merge) never coalesces
+    # the operator path (stream -> log) never coalesces
     stream = replay(spark, change_sets, "stream_cdc")
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        snapshot = sess.read.schema(state["schema"]).parquet(state["cur"])
-        nxt = os.path.join(workdir, f"snapshot_v{epoch_id + 1}")
-        merged = merge_cdc_batch(snapshot, batch_df)
-        merged.write.mode("overwrite").parquet(nxt)
-        state.update(cur=nxt, schema=merged.schema)  # pointer flip = atomic promote
-
-    drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
+    log = os.path.join(workdir, "log")
+    snapshot = cdc_snapshot(base)
+    if drain_to_log(stream, log):
+        snapshot = merge_cdc_batch(snapshot, spark.read.schema(stream.schema).parquet(log))
     return (
-        spark.read.schema(state["schema"]).parquet(state["cur"])
+        _write_version(snapshot, os.path.join(workdir, "snapshot_v1"))
         .filter(~F.col("deleted"))
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "row_source")
     )
+
+
+def _write_version(state: DataFrame, path: str) -> DataFrame:
+    """Write ``state`` as a version at ``path`` and read it back with
+    the written schema, so the read runs no schema-inference job."""
+    state.write.parquet(path)
+    return state.sparkSession.read.schema(state.schema).parquet(path)
 
 
 # Batch-boundary independence (the seq guard) means the streamed
@@ -161,47 +161,15 @@ def merge_vault_batch(store: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST28 — streaming Data Vault ingestion (the real-time vault):
-    E49's insert-only hub/link/satellite load run incrementally over
-    an arriving order feed instead of as one batch build. Three waves
-    land as files and stream one-per-trigger: wave 1 = the base
-    orders (CDC cutoff: o_orderdate < 1999-01-01), wave 2 = every
-    7th base order re-statused to U-REV at price+100 (same hub/link
-    keys — the insert-only anti-join must REJECT them — but a new
-    hashdiff, so each earns exactly one new satellite version), wave
-    3 = the post-cutoff orders (new hubs, links, and satellites).
-    foreachBatch merges each micro-batch insert-only into a
-    versioned parquet store (pointer-flip promotion, the
-    stream_cdc_apply pattern).
-
-    The final state is BATCH-BOUNDARY-INDEPENDENT by construction:
-    load_epoch is the key's min `wave` VALUE from the feed (not the
-    foreachBatch epoch_id), candidates keep min-wave within a batch,
-    and the anti-join makes re-delivery a no-op — so any batching of
-    the same files converges to the same store (pytest-pinned by
-    coalescing all three waves into one batch), and the result
-    answers to a pure batch SQL oracle. Report = per (vault_table,
-    load_epoch): row count + the overflow-safe Σ(hk div 2^20) mod
-    2⁶¹−1 digests of hk and hd (`_dv_digest_col`'s law, so the
-    report stays BIGINT-exact at any corpus size).
-
-    Scale: each micro-batch does one hash projection + one
-    key-partitioned anti-join against the store — no window over the
-    feed, no driver state beyond the version pointer; on a cluster
-    the store is a Delta/Iceberg table and the anti-join a MERGE
-    WHEN NOT MATCHED. Parity: the reference re-loads whole tables
-    per run (main.py:45-59); this is that load as a standing
-    incremental consumer, vault-shaped."""
-    from proceso_de_etl_spark.operators.etl import _dv_digest_col
-
-    workdir = tempfile.mkdtemp(prefix="stream_dv_")
+def vault_waves(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """ST28's order feed, one frame per wave in wave order, each row
+    tagged with its ``wave`` (see ``stream_data_vault_ingest``)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
     cutoff = F.expr(_CUTOFF)
     base = orders.filter(F.col("o_orderdate") < cutoff)
-    waves = [
+    return [
         base.select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             F.lit(1).alias("wave"),
@@ -217,47 +185,63 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(3).alias("wave"),
         ),
     ]
+
+
+def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST28 — streaming Data Vault ingestion (the real-time vault):
+    E49's insert-only hub/link/satellite load run incrementally over
+    an arriving order feed instead of as one batch build. Three waves
+    land as files and stream one-per-trigger: wave 1 = the base
+    orders (CDC cutoff: o_orderdate < 1999-01-01), wave 2 = every
+    7th base order re-statused to U-REV at price+100 (same hub/link
+    keys — the insert-only merge must REJECT them — but a new
+    hashdiff, so each earns exactly one new satellite version), wave
+    3 = the post-cutoff orders (new hubs, links, and satellites).
+    Each micro-batch is appended to a change log
+    (``drain_to_log``); after the drain one ``merge_vault_batch`` of
+    the whole log into the empty store compacts it into ``store_v1``.
+
+    The final state is BATCH-BOUNDARY-INDEPENDENT by construction:
+    load_epoch is the key's min `wave` VALUE from the feed (not the
+    foreachBatch epoch_id), candidates keep min-wave within a batch,
+    and least() makes re-delivery a no-op — so any batching of the
+    same files converges to the same store (pytest-pinned by
+    coalescing all three waves into one batch), a wave that lands in
+    the log twice counts once, and the result answers to a pure batch
+    SQL oracle. Report = per (vault_table, load_epoch): row count + the
+    overflow-safe Σ(hk div 2^20) mod 2⁶¹−1 digests of hk and hd
+    (`_dv_digest_col`'s law, so the report stays BIGINT-exact at any
+    corpus size). Raises RuntimeError when no micro-batch ran.
+
+    Scale: a micro-batch costs one O(batch) append to the log — no
+    read of the store, no window, no join — and the drain one hash
+    projection + one key-partitioned merge over the log; on a cluster
+    the store is a Delta/Iceberg table and the compaction a MERGE.
+    Parity: the reference re-loads whole tables per run
+    (main.py:45-59); this is that load as a standing incremental
+    consumer, vault-shaped."""
+    from proceso_de_etl_spark.operators.etl import _dv_digest_col
+
+    workdir = tempfile.mkdtemp(prefix="stream_dv_")
     # one landed file per wave (``replay``) maps waves to micro-batches;
     # its coalesce(1) is fixture cost — keep it out of any bench
     # decomposition of the operator
-    stream = replay(spark, waves, "stream_dv")
-
-    # r14 (guide §6): the store starts as an in-memory EMPTY relation
-    # instead of a written-then-re-read empty parquet dir — the v0
-    # write cost ~0.65 s of pure fixed overhead per invocation
-    # (SCALE_r13/r14 `vault_ingest_ab`) and epoch 1 then paid a
-    # listing + scan + full_outer shuffle against a provably empty
-    # side; with a LocalRelation store the batch optimizer's
-    # PropagateEmptyRelation rule collapses that first merge to a
-    # projection of the candidates (AQE is off inside micro-batches,
-    # so it plays no part). Store contents after epoch 1 are identical
-    # (merge with an empty store = the candidate rows), so the final
-    # state and its oracle are unchanged.
-    # Each later version is read back with the schema of the frame
-    # that wrote it, so no micro-batch pays a schema-inference job.
-    state: dict = {"cur": None, "schema": None}
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        if state["cur"] is None:
-            store = local_frame(
-                sess, [], "vault_table string, hk bigint, hd bigint, load_epoch int"
-            )
-        else:
-            store = sess.read.schema(state["schema"]).parquet(state["cur"])
-        nxt = os.path.join(workdir, f"store_v{epoch_id + 1}")
-        merged = merge_vault_batch(store, batch_df)
-        merged.write.mode("overwrite").parquet(nxt)
-        state.update(cur=nxt, schema=merged.schema)  # pointer flip = atomic promote
-
-    drain(stream.writeStream.outputMode("update").foreachBatch(apply_batch))
-    if state["cur"] is None:
+    stream = replay(spark, vault_waves(spark, sf_dir), "stream_dv")
+    log = os.path.join(workdir, "log")
+    if not drain_to_log(stream, log):
         raise RuntimeError(
             "stream_data_vault_ingest: no micro-batch ran over the replayed "
             "waves, so no vault store was written"
         )
+    # the store starts as an in-memory EMPTY relation (r14), so the
+    # optimizer's PropagateEmptyRelation collapses the compaction's
+    # full-outer join to a projection of the candidates
+    empty = local_frame(
+        spark, [], "vault_table string, hk bigint, hd bigint, load_epoch int"
+    )
+    store = merge_vault_batch(empty, spark.read.schema(stream.schema).parquet(log))
     return (
-        spark.read.schema(state["schema"]).parquet(state["cur"])
+        _write_version(store, os.path.join(workdir, "store_v1"))
         .groupBy("vault_table", "load_epoch")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),

@@ -163,6 +163,24 @@ def drain(writer: DataStreamWriter) -> StreamingQuery:
     return q
 
 
+def drain_to_log(stream: DataFrame, log_dir: str) -> bool:
+    """Drain ``stream`` into the parquet change log ``log_dir``: each
+    micro-batch is appended to it unchanged, so a micro-batch is one
+    write job, with no read of any state, no window, no join and no
+    shuffle. The caller compacts the log once, after the drain (merge
+    on read). A redelivered micro-batch lands in the log twice, so the
+    compaction must be idempotent. Returns whether any micro-batch ran;
+    if none did, ``log_dir`` was never written."""
+    ran = []
+
+    def append(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.write.mode("append").parquet(log_dir)
+        ran.append(epoch_id)
+
+    drain(stream.writeStream.foreachBatch(append))
+    return bool(ran)
+
+
 def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     """Drive a streaming plan over the (static) source to completion
     through a memory sink; return the materialized result. The sink's

@@ -7,6 +7,24 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def empty_table_sf(tmp_path, table: str) -> str:
+    """A copy of SF_SMOKE whose ``table`` has no rows."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / f"sf_empty_{table}"
+    sf.mkdir()
+    for name in os.listdir(SF_SMOKE):
+        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
+    path = sf / f"{table}.parquet"
+    empty = pq.read_table(path).slice(0, 0)
+    path.unlink()
+    pq.write_table(empty, path)
+    return str(sf)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="tests", cpus="8")

@@ -102,6 +102,20 @@ def test_oracle_check_pass_mismatch_and_error(spark):
     assert not harness.passed(row)
     assert re.search(r"KeyError: 'no_such_key'", row["err"]), row["err"]
 
+    # a key with no oracle fails before it is built: no Spark job runs
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    try:
+        sc.setJobGroup("check_with_oracle", "q6")
+        assert harness.passed(harness.check(spark, con, SF_SMOKE, key))
+        sc.setJobGroup("check_without_oracle", "graph_louvain_fixpoint")
+        row = harness.check(spark, con, SF_SMOKE, "graph_louvain_fixpoint")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not harness.passed(row) and row["spark_rows"] is None
+    assert "no oracle for graph_louvain_fixpoint" in row["err"], row["err"]
+    assert tracker.getJobIdsForGroup("check_with_oracle")
+    assert tracker.getJobIdsForGroup("check_without_oracle") == []
+
 
 def test_capture_mask_is_blind_to_session_numbering():
     """Two sessions print the same distinct-aggregate plan with other
@@ -109,7 +123,14 @@ def test_capture_mask_is_blind_to_session_numbering():
     orders its groups by a hash of the session's expression ids, which
     permutes the Expand columns and renumbers the groups. The mask
     prints both alike, and still tells a plan apart whose aggregate
-    reads another group."""
+    reads another group. Likewise for other RDD ids, other ``mkdtemp``
+    directories and, for a memoized frame, another cached plan (the AQE
+    final plan once the cache is materialized, the initial plan
+    before): the mask prints each pair alike, renumbers a formatted
+    plan's operators without the cached plan's, and still tells apart
+    plans that read other data or another cached frame."""
+    import tempfile
+
     from capture_plans import mask
 
     one = (
@@ -132,3 +153,78 @@ def test_capture_mask_is_blind_to_session_numbering():
     assert "Expand [[a#, null, 0, k#], [null, b#, 1, k#]], [a#, b#, gid#, k#]" in mask(one)
     crossed = other.replace("gid#20 = 2)) AS na", "gid#20 = 1)) AS na")
     assert mask(crossed) != mask(one)
+
+    # RDD ids, mkdtemp directories and cached plans
+    tmp = tempfile.gettempdir()
+    # A materialized cache prints its AQE final plan below its
+    # InMemoryRelation, and a cache nested in that plan prints its
+    # blocks at an indent that ignores the enclosing tree, here left of
+    # the outer InMemoryRelation (which sits under 7 Projects).
+    def sp(k):
+        return "   " * k
+
+    cached_final = (
+        f"{sp(7)}:     +- AdaptiveSparkPlan isFinalPlan=true\n"
+        f"{sp(10)}+- == Final Plan ==\n"
+        f"{sp(11)}ResultQueryStage 1\n"
+        f"{sp(11)}+- *(2) HashAggregate(keys=[k#1L], functions=[sum(v#3L)])\n"
+        f"{sp(11)}   +- ShuffleQueryStage 0\n"
+        f"{sp(11)}      :- InMemoryTableScan [k#1L, v#3L]\n"
+        f"{sp(11)}      :     +- InMemoryRelation [k#1L, v#3L], StorageLevel(memory)\n"
+        f"{sp(11)}      :           +- AdaptiveSparkPlan isFinalPlan=true\n"
+        f"{sp(5)}+- == Final Plan ==\n"
+        f"{sp(6)}*(1) Range (0, 100, step=1, splits=2)\n"
+        f"{sp(11)}      +- Exchange hashpartitioning(k#1L, 2), [plan_id=63]\n"
+        f"{sp(10)}+- == Initial Plan ==\n"
+        f"{sp(11)}HashAggregate(keys=[k#1L], functions=[sum(v#3L)])\n"
+    )
+    cached_initial = (
+        f"{sp(7)}:     +- AdaptiveSparkPlan isFinalPlan=false\n"
+        f"{sp(7)}:        +- HashAggregate(keys=[k#7L], functions=[sum(v#8L)])\n"
+    )
+
+    def logical(n, cached, path, rdd):
+        return (
+            "Project [k#0L]\n"
+            + "".join(f"{sp(i)}+- Project [k#0L]\n" for i in range(6))
+            + f"{sp(6)}+- Join Inner, (k#{n}L = k#{n + 1}L)\n"
+            f"{sp(7)}:- InMemoryRelation [k#{n}L], StorageLevel(disk, memory, deserialized, 1 replicas)\n"
+            f"{cached}"
+            f"{sp(7)}+- Filter isnotnull(k#{n + 1}L)\n"
+            f"{sp(8)}+- LogicalRDD [k#{n + 1}L], false\n"
+            "\n"
+            f"Location: InMemoryFileIndex [file:{tmp}/stream_cdc_{path}/log]\n"
+            f"Location: InMemoryFileIndex [file:{tmp}/tt_{path}/_versions/t/{rdd:016x}]\n"
+            f"Arguments: [k#{n}L], MapPartitionsRDD[{rdd}] at localCheckpoint at {path}:0\n"
+        )
+
+    run1 = logical(1, cached_final, "ab_12xyz", 887)
+    run2 = logical(40, cached_initial, "q9_zz0k1", 16)
+    assert mask(run1) == mask(run2)
+    assert f"file:{tmp}/stream_cdc_#/log" in mask(run1)
+    assert f"file:{tmp}/tt_#/_versions/t/#]" in mask(run1)
+    assert "MapPartitionsRDD[#] at localCheckpoint at #" in mask(run1)
+    assert "AdaptiveSparkPlan" not in mask(run1)
+    assert mask(run1.replace("/log]", "/landing]")) != mask(run1)
+    assert f"{sp(7)}+- Filter isnotnull(k#)\n{sp(8)}+- LogicalRDD [k#], false\n" in mask(run1)
+    assert mask(run1.replace("InMemoryRelation [k#1L]", "InMemoryRelation [v#1L]")) != mask(run1)
+
+    def formatted(cached_ids):
+        tree = "".join(f"            +- Op ({i})\n" for i in cached_ids)
+        details = "".join(f"({i}) Op\nArguments: cached\n\n" for i in cached_ids)
+        last = cached_ids[-1] + 1  # the Filter
+        return (
+            "== Physical Plan ==\n"
+            f"Filter ({last})\n"
+            "+- InMemoryTableScan (1)\n"
+            f"      +- InMemoryRelation (2)\n{tree}\n\n"
+            "(1) InMemoryTableScan\nOutput [1]: [k#5L]\n\n"
+            "(2) InMemoryRelation\nArguments: [k#5L], StorageLevel(memory)\n\n"
+            f"{details}"
+            f"({last}) Filter\nCondition : isnotnull(k#5L)\n"
+        )
+
+    final, initial = formatted([3, 4, 5, 6]), formatted([3])
+    assert mask(final) == mask(initial)
+    assert "Filter (3)" in mask(final) and "(3) Filter" in mask(final)
+    assert "Arguments: cached" not in mask(final)

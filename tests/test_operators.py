@@ -13,6 +13,7 @@ from proceso_de_etl_spark.operators.etl import (
     synthesize_placeholders,
 )
 from proceso_de_etl_spark.operators.events import asof_join_last_prior, sessionize
+from tests.conftest import empty_table_sf
 
 
 def test_clean_id_semantics(spark):
@@ -1806,26 +1807,6 @@ def test_louvain_fixpoint_ledger_invariants_and_parallelism(spark):
     assert sorted(map(tuple, rows.values())) == at3
 
 
-def _empty_lineitem_sf(tmp_path) -> str:
-    """A copy of SF_SMOKE whose lineitem table has no rows."""
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from tests.conftest import SF_SMOKE
-
-    sf = tmp_path / "sf_empty_lineitem"
-    sf.mkdir()
-    for name in os.listdir(SF_SMOKE):
-        shutil.copyfile(f"{SF_SMOKE}/{name}", sf / name)
-    li = sf / "lineitem.parquet"
-    empty = pq.read_table(li).slice(0, 0)
-    li.unlink()
-    pq.write_table(empty, li)
-    return str(sf)
-
-
 def test_community_keys_on_empty_support_graph(spark, tmp_path):
     """Every community key (A92-A97b) returns its documented columns
     when lineitem is empty, so the support graph has no edge: the
@@ -1847,7 +1828,7 @@ def test_community_keys_on_empty_support_graph(spark, tmp_path):
         "graph_louvain_fixpoint": ladder[:1] + ["n_rounds"] + ladder[1:],
     }
 
-    sf = _empty_lineitem_sf(tmp_path)
+    sf = empty_table_sf(tmp_path, "lineitem")
     rows = {}
     for key, cols in columns.items():
         df = getattr(ml, key)(spark, sf)
@@ -1868,7 +1849,7 @@ def test_oriented_adjacency_summary_on_empty_graph(spark, tmp_path):
     from proceso_de_etl_spark.operators import ml
     from tests.oracle_harness import duckdb_con
 
-    sf = _empty_lineitem_sf(tmp_path)
+    sf = empty_table_sf(tmp_path, "lineitem")
     try:
         got = [tuple(r) for r in ml.graph_oriented_adjacency(spark, sf).collect()]
     finally:
@@ -1886,7 +1867,7 @@ def test_rank_ladders_on_empty_purchase_graph(spark, tmp_path):
     from proceso_de_etl_spark.operators import ml
     from tests.conftest import SF_SMOKE
 
-    sf = _empty_lineitem_sf(tmp_path)
+    sf = empty_table_sf(tmp_path, "lineitem")
     try:
         for key in ("graph_pagerank_ladder", "graph_ppr_ladder", "graph_hits_ladder"):
             df = getattr(ml, key)(spark, sf)

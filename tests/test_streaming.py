@@ -1,6 +1,7 @@
 """Streaming jobs vs their batch twins (SURVEY.md §5.4)."""
 
 import math
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -183,30 +184,9 @@ def test_vault_ingest_batch_boundary_independent_and_replay_idempotent(spark):
     wave_3 before wave_1, and the min-aware merge must still
     converge to the global MIN(wave) per key, not freeze the
     first-arriving wave."""
-    from proceso_de_etl_spark.streaming.cdc import (
-        _CUTOFF,
-        merge_vault_batch,
-    )
+    from proceso_de_etl_spark.streaming.cdc import merge_vault_batch, vault_waves
 
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-    )
-    cutoff = F.expr(_CUTOFF)
-    base = orders.filter(F.col("o_orderdate") < cutoff)
-    w1 = base.select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        F.lit(1).alias("wave"),
-    )
-    w2 = base.filter(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey", "o_custkey",
-        F.lit("U-REV").alias("o_orderstatus"),
-        (F.col("o_totalprice") + 100.0).alias("o_totalprice"),
-        F.lit(2).alias("wave"),
-    )
-    w3 = orders.filter(F.col("o_orderdate") >= cutoff).select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        F.lit(3).alias("wave"),
-    )
+    w1, w2, w3 = vault_waves(spark, SF_SMOKE)
     empty = spark.createDataFrame(
         [], "vault_table string, hk bigint, hd bigint, load_epoch int"
     )
@@ -221,6 +201,87 @@ def test_vault_ingest_batch_boundary_independent_and_replay_idempotent(spark):
         merge_vault_batch(merge_vault_batch(empty, w3), w2), w1
     )
     assert _sorted_rows(reversed_order) == _sorted_rows(per_wave)
+
+
+def _drained_log(spark, frames, log_dir):
+    """Replay ``frames`` as micro-batches through ``drain_to_log`` and
+    read the change log back."""
+    stream = jobs.replay(spark, frames, "log_test")
+    assert jobs.drain_to_log(stream, log_dir)
+    return spark.read.schema(stream.schema).parquet(log_dir)
+
+
+def test_log_compaction_counts_a_redelivered_batch_once(spark, tmp_path):
+    """At-least-once delivery into the change log: a micro-batch that
+    is appended twice (here redelivered after a later one) leaves its
+    rows twice in the log, and compacting that log gives the same state
+    as compacting the log that holds them once — for the CDC merge and
+    for the vault merge."""
+    from proceso_de_etl_spark.operators.etl import _change_feed, cdc_snapshot
+    from proceso_de_etl_spark.sources.local import local_frame
+    from proceso_de_etl_spark.streaming.cdc import (
+        merge_cdc_batch,
+        merge_vault_batch,
+        vault_waves,
+    )
+
+    base, (ins, upd, dele) = _change_feed(spark, SF_SMOKE)
+    once = _drained_log(spark, [ins, upd, dele], str(tmp_path / "cdc_once"))
+    twice = _drained_log(spark, [ins, upd, dele, upd], str(tmp_path / "cdc_twice"))
+    assert twice.count() == once.count() + upd.count()
+    snap = cdc_snapshot(base)
+    assert _sorted_rows(merge_cdc_batch(snap, twice)) == _sorted_rows(
+        merge_cdc_batch(snap, once)
+    )
+
+    w1, w2, w3 = vault_waves(spark, SF_SMOKE)
+    once = _drained_log(spark, [w1, w2, w3], str(tmp_path / "dv_once"))
+    twice = _drained_log(spark, [w1, w2, w3, w2], str(tmp_path / "dv_twice"))
+    assert twice.count() == once.count() + w2.count()
+    empty = local_frame(
+        spark, [], "vault_table string, hk bigint, hd bigint, load_epoch int"
+    )
+    assert _sorted_rows(merge_vault_batch(empty, twice)) == _sorted_rows(
+        merge_vault_batch(empty, once)
+    )
+
+
+def test_stream_cdc_apply_writes_one_version_over_the_raw_log(spark, tmp_path, monkeypatch):
+    """Merge on read: the micro-batches only append to the change log,
+    which ends holding exactly the rows of the three change sets, and
+    the one compaction after the drain writes the only snapshot
+    version (the seq-0 snapshot is never written)."""
+    import tempfile
+
+    from proceso_de_etl_spark.operators.etl import _change_feed
+    from proceso_de_etl_spark.streaming import cdc
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = cdc.stream_cdc_apply(spark, SF_SMOKE).collect()
+    assert got
+    (workdir,) = [d for d in tmp_path.iterdir() if (d / "log").is_dir()]
+    assert sorted(p.name for p in workdir.iterdir() if p.name.startswith("snapshot_v")) == [
+        "snapshot_v1"
+    ]
+    _, change_sets = _change_feed(spark, SF_SMOKE)
+    want = change_sets[0].unionByName(change_sets[1]).unionByName(change_sets[2])
+    log = spark.read.schema(want.schema).parquet(str(workdir / "log"))
+    # deletes carry NULL status and price: compare as multisets
+    assert Counter(map(tuple, log.collect())) == Counter(map(tuple, want.collect()))
+
+
+def test_cdc_keys_on_empty_orders(spark, tmp_path):
+    """With ``orders`` empty every change set and wave is empty: both
+    streaming keys return no row, with the columns they return on real
+    data."""
+    from proceso_de_etl_spark.streaming import cdc
+    from tests.conftest import empty_table_sf
+
+    sf = empty_table_sf(tmp_path, "orders")
+    for key in ("stream_cdc_apply", "stream_data_vault_ingest"):
+        df = getattr(cdc, key)(spark, sf)
+        assert df.collect() == [], key
+        assert df.columns == getattr(cdc, key)(spark, SF_SMOKE).columns, key
 
 
 def test_stream_approx_distinct_matches_batch_twin(spark):
