@@ -17,15 +17,24 @@ persisted frame per (applicationId, name, sf_dir) so repeat
 invocations reuse ONE entry instead of stacking new ones, and release
 everything explicitly via ``release_all()`` (bench calls it at the end
 of each pass, next to the shingle/edge hooks).
+
+``scratch_dir`` is the same discipline for files: operators that stage
+or write a table (landing dirs, change logs, state versions) take a
+fresh directory per call, and ``release_all()`` removes every one it
+handed out. A returned frame may read its directory lazily, so the
+directories live until the caller releases, not until the call ends.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_SCRATCH: list[str] = []
 
 
 def memo(
@@ -49,12 +58,24 @@ def memo(
     return df
 
 
+def scratch_dir(prefix: str) -> str:
+    """A new directory under ``tempfile.gettempdir()``, removed by the
+    next ``release_all()``."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(path)
+    return path
+
+
 def release_all() -> None:
-    """Unpersist and forget every memoized frame; safe on a stopped
-    session (mirrors dedup.unpersist_shingles)."""
+    """Unpersist and forget every memoized frame and remove every
+    scratch directory; safe on a stopped session (mirrors
+    dedup.unpersist_shingles)."""
     for df in _CACHE.values():
         try:
             df.unpersist()
         except Exception:
             pass  # session already gone - storage went with it
     _CACHE.clear()
+    for path in _SCRATCH:
+        shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH.clear()

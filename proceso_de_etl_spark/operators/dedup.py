@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from proceso_de_etl_spark.functions.hashing import md5_int, md5_int_sql
 from proceso_de_etl_spark.functions.text import shingles, shingles_sql, tokens, tokens_sql
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
@@ -174,8 +175,9 @@ LSH_BANDS = 8  # 8 bands x 4 rows
 # base value derived from md5 — identical arithmetic in Spark and
 # DuckDB, so the ORACLE reproduces signatures (and therefore the LSH
 # candidate set and the verified pair set) bit-for-bit. P = 2^31 - 1
-# keeps a_i*base < 2^62: no 64-bit overflow on either engine (Spark
-# would silently wrap, DuckDB would raise — both avoided). Constants
+# keeps a_i*base < 2^62: no 64-bit overflow on either engine (both
+# would raise: Spark in ANSI mode, the default get_spark keeps, with
+# ARITHMETIC_OVERFLOW, DuckDB with an out-of-range error). Constants
 # come from a fixed-seed LCG, not random.Random (whose randrange
 # changed across Python versions).
 _MH_P = 2147483647
@@ -192,10 +194,7 @@ def _lcg_pairs(n: int, seed: int = 0x5EED) -> tuple[tuple[int, int], ...]:
 MINHASH_AB = _lcg_pairs(MINHASH_PERMS)
 
 # md5 prefix of 15 hex chars = 60 bits: fits BIGINT/UBIGINT exactly
-_MH_BASE_SQL = (
-    "CAST(CAST(concat('0x', substr(md5(sh), 1, 15)) AS UBIGINT)"
-    f" % {_MH_P} AS BIGINT)"
-)
+_MH_BASE_SQL = f"{md5_int_sql('sh', 15)} % {_MH_P}"
 
 
 def minhash_signatures(sh: DataFrame, n_perms: int = MINHASH_PERMS) -> DataFrame:
@@ -205,7 +204,7 @@ def minhash_signatures(sh: DataFrame, n_perms: int = MINHASH_PERMS) -> DataFrame
     k. One md5 per shingle feeds all k members (32 separate md5 calls
     would be ~5x slower, measured), and the family is portable: the
     DuckDB oracle replays the identical signatures."""
-    base = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("bigint") % _MH_P
+    base = md5_int(F.col("sh"), 15) % _MH_P
     aggs = [
         F.min((F.lit(a).cast("bigint") * base + F.lit(b)) % _MH_P).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_AB[:n_perms])
@@ -380,7 +379,7 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     hashed = counted.select(
         "doc_id",
         "cnt",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint").alias("hb"),
+        md5_int(F.col("tok"), 15).alias("hb"),
     )
     h = F.col("hb")
     bit_sums = hashed.groupBy("doc_id").agg(
@@ -457,7 +456,7 @@ WITH tok AS (
 counted AS (SELECT doc_id, tok, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
 hashed AS (
   SELECT doc_id, cnt,
-         CAST(CAST(concat('0x', substr(md5(tok), 1, 15)) AS UBIGINT) AS BIGINT) AS hb
+         {md5_int_sql("tok", 15)} AS hb
   FROM counted
 ),
 bitsums AS (
@@ -636,7 +635,7 @@ def lsh_bucket_ctes(n_tables: int, planes_per_table: int, emb_dim: int) -> str:
     return f"""{EMB_ELEMS_CTES},
 grid AS (
   SELECT t.t AS table_idx, j.j AS plane, i.i AS i,
-         CASE WHEN CAST(concat('0x', substr(md5('plane:' || t.t || ':' || j.j || ':' || i.i), 1, 2)) AS INT) % 2 = 0
+         CASE WHEN {md5_int_sql("'plane:' || t.t || ':' || j.j || ':' || i.i", 2)} % 2 = 0
               THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
   FROM range({n_tables}) t(t), range({planes_per_table}) j(j), range({emb_dim}) i(i)
 ),

@@ -24,7 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.functions.columns import clean_id, dsum, money
+from proceso_de_etl_spark.functions.hashing import DIGEST_MOD, digest, digest_sql, md5_int, md5_int_sql
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
 
@@ -490,14 +492,13 @@ def etl_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory holds files sized by its bytes (one per year at test
     scale), not one per input split.
     """
-    import tempfile
 
     from proceso_de_etl_spark.sources.io import write_parquet
 
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    target = tempfile.mkdtemp(prefix="fact_partitioned_")
+    target = cachereg.scratch_dir("fact_partitioned_")
     write_parquet(li, target, partition_by=["ship_year"])
     # read back with the schema just written: no inference job
     back = spark.read.schema(li.schema).parquet(target).filter(F.col("ship_year") == 1997)
@@ -526,14 +527,13 @@ def etl_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     all of them, with zero change to the query text. Plan-asserted in
     tests/test_plans.py (PartitionFilters carries dynamicpruning).
     """
-    import tempfile
 
     from proceso_de_etl_spark.sources.io import write_parquet
 
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    target = tempfile.mkdtemp(prefix="fact_dpp_")
+    target = cachereg.scratch_dir("fact_dpp_")
     write_parquet(li, target, partition_by=["ship_year"])
     fact = spark.read.schema(li.schema).parquet(target)
     # The calendar is generated in the plan rather than held as local
@@ -578,16 +578,15 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the original table; the file-count drop
     itself is asserted in tests/test_io.py.
     """
-    import tempfile
 
     from proceso_de_etl_spark.sources.io import compact_parquet
 
     events = load_table(spark, sf_dir, "events")
-    frag_dir = tempfile.mkdtemp(prefix="events_fragmented_")
+    frag_dir = cachereg.scratch_dir("events_fragmented_")
     events.repartition(64).write.mode("overwrite").parquet(frag_dir)
 
     # 1 MiB target keeps the op meaningful at test SF (prod: 128-512 MiB)
-    compact_dir = tempfile.mkdtemp(prefix="events_compacted_")
+    compact_dir = cachereg.scratch_dir("events_compacted_")
     compact_parquet(spark, frag_dir, compact_dir, ["ts", "user_id"], 1 << 20)
     back = spark.read.parquet(compact_dir)
     return (
@@ -611,7 +610,6 @@ def etl_atomic_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged, promoted all-or-nothing, manifest returned. (Rows-only:
     the observable is the commit protocol, exercised end-to-end here
     and failure-tested in tests/test_io.py.)"""
-    import tempfile
 
     from proceso_de_etl_spark.sources.atomic import atomic_write_tables
 
@@ -619,7 +617,7 @@ def etl_atomic_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     dim_cat = extract_dimension(part, "p_type", "id_categoria", "categoria")
     dim_pri = extract_dimension(orders, "o_orderpriority", "id_clasificacion", "clasificacion")
-    root = tempfile.mkdtemp(prefix="atomic_load_")
+    root = cachereg.scratch_dir("atomic_load_")
     dims = {"dim_categoria": dim_cat, "dim_clasificacion": dim_pri}
     atomic_write_tables(root, dims)
     # counted with the schema each table was written with: no
@@ -656,7 +654,6 @@ def etl_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a rename-retained directory, no log replay, no re-load.
     Storage reclaim is vacuum_table_versions (tested in
     tests/test_io.py)."""
-    import tempfile
 
     from proceso_de_etl_spark.sources.atomic import (
         atomic_write_tables,
@@ -666,7 +663,7 @@ def etl_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     v1 = orders.filter(F.year("o_orderdate") <= 1996)
-    root = tempfile.mkdtemp(prefix="timetravel_")
+    root = cachereg.scratch_dir("timetravel_")
     atomic_write_tables(root, {"orders_fact": v1}, retain_history=True)
     atomic_write_tables(root, {"orders_fact": orders}, retain_history=True)
     archived_txn = next(
@@ -940,7 +937,6 @@ def etl_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each manifest row is one count/min/max aggregate — parquet
     footer statistics territory; the audit never scans more than the
     load itself already did."""
-    import tempfile
 
     from proceso_de_etl_spark.sources.atomic import atomic_write_tables
 
@@ -972,7 +968,7 @@ def etl_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = manifests[0]
     for m in manifests[1:]:
         audit = audit.unionByName(m)
-    root = tempfile.mkdtemp(prefix="load_audit_")
+    root = cachereg.scratch_dir("load_audit_")
     atomic_write_tables(root, {"registro_cargas": audit})
     return spark.read.parquet(f"{root}/registro_cargas")
 
@@ -1165,7 +1161,6 @@ def etl_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the oracle; the layout benefit (files skippable on both
     dims) is asserted by tests/test_operators.py via parquet footer
     stats."""
-    import tempfile
 
     li = load_table(spark, sf_dir, "lineitem")
     # both z dimensions are MATERIALIZED columns: footer min/max stats
@@ -1174,7 +1169,7 @@ def etl_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ship_day",
         F.datediff(F.col("l_shipdate"), F.lit("1995-01-01").cast("date")).cast("bigint"),
     ).withColumn("part_bucket", F.pmod(F.col("l_partkey"), F.lit(1 << Z_BITS)))
-    target = tempfile.mkdtemp(prefix="zorder_")
+    target = cachereg.scratch_dir("zorder_")
     write_zordered(staged, target, F.col("ship_day"), F.col("part_bucket"))
     back = spark.read.parquet(target).filter(
         (F.col("ship_day").between(400, 500)) & (F.col("part_bucket") < 64)
@@ -1379,14 +1374,13 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     yearly rollup must show 1997 restated and all other years
     byte-identical to the original load (the untouched-files claim is
     separately pinned in test_io by file listing)."""
-    import tempfile
 
     from proceso_de_etl_spark.sources.io import write_parquet
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    target = tempfile.mkdtemp(prefix="orders_dpo_")
+    target = cachereg.scratch_dir("orders_dpo_")
     write_parquet(orders, target, partition_by=["order_year"])
     batch = (
         orders.filter(F.col("order_year") == 1997)
@@ -1453,14 +1447,13 @@ def etl_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back rollup, value-oracled, contains 1997 but no 1998; the
     rejected batch's staging dir is gone)."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.atomic import AtomicBatchWriter
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    root = tempfile.mkdtemp(prefix="wap_")
+    root = cachereg.scratch_dir("wap_")
 
     base = orders.filter(F.col("order_year") <= 1996)
     w0 = AtomicBatchWriter(root)
@@ -2782,35 +2775,114 @@ FROM (
 )
 
 
+# ---- Data Vault layer (E49-E56, ST28): each decision written once
+# per engine — the hash keys, the as-of resolution and the per-table
+# report — and every vault key composed from them.
+
 DV_DIGEST_SHIFT = 20  # digest terms are hk div 2^20 (40-bit each)
-DV_DIGEST_MOD = (1 << 61) - 1  # Mersenne reduction of the digest sum
-# Digest law (r11): Σ(hk div 2^SHIFT) is accumulated in DECIMAL(38,0)
-# (the A105 overflow rule — a BIGINT sum of 40-bit terms wraps past
-# ~2^23 rows, which lineitem-scale keys exceed at sf10) and reduced
-# mod 2^61-1 so the emitted digest is BIGINT-ranged at ANY corpus
-# size. Spark wraps int64 silently (ANSI off) while DuckDB promotes
-# to HUGEINT, so without this the two engines silently diverge
-# exactly when the data gets big. Both engines see only non-negative
-# operands, so % is engine-identical.
+
+# Vault hash keys: per vault object, its key prefix and the columns
+# hashed after it, joined with '|' (md5_int, 15 hex digits = 60 bits).
+# Hubs hash their business key, links the business keys they relate,
+# satellites their attribute hashdiff (no prefix). The business-key
+# columns are the source's; a caller passes another expression for a
+# column by name (``o_custkey=...``). Hashdiffs cover only
+# string/integer attributes — a float's or timestamp's string form is
+# engine-specific, so ST28's price rides as integer cents.
+DV_KEYS = {
+    "hub_customer": ("c", ("c_custkey",)),
+    "hub_order": ("o", ("o_orderkey",)),
+    "link_order_customer": ("oc", ("o_orderkey", "o_custkey")),
+    "sat_customer": ("", ("c_name", "c_nationkey", "c_mktsegment")),
+    "sat_order": ("", ("o_orderstatus", "o_orderpriority")),
+    "sat_order_price": ("", ("o_orderstatus", "cents")),
+    "hub_party": ("p", ("rid",)),
+    "sal_party": ("sal", ("rid", "entity")),
+    "bridge_path": ("br", ("custkey", "o_orderkey", "l_partkey", "l_linenumber")),
+}
 
 
-def _dv_digest_col(col: str) -> Column:
-    """Order-free vault digest of a 60-bit hash column, overflow-safe.
-
-    DECIMAL(38,0) partial sums survive ~1e26 rows of 40-bit terms;
-    the Mersenne reduction brings the result back into BIGINT."""
-    return F.expr(
-        f"CAST(SUM(CAST({col} div {1 << DV_DIGEST_SHIFT} AS DECIMAL(38,0)))"
-        f" % {DV_DIGEST_MOD} AS BIGINT)"
-    )
+def dv_hk(obj: str, **cols: Column) -> Column:
+    """The 60-bit hash key of vault object ``obj`` (``DV_KEYS``)."""
+    prefix, names = DV_KEYS[obj]
+    parts = [F.lit(prefix)] if prefix else []
+    for i, n in enumerate(names):
+        parts += ([F.lit("|")] if i else []) + [cols.get(n, F.col(n))]
+    return md5_int(F.concat(*parts), 15)
 
 
-def _dv_digest_sql(col: str) -> str:
-    """DuckDB leg of the digest law: SUM(BIGINT) is HUGEINT there
-    (never wraps), so only the Mersenne reduction is needed."""
+def dv_hk_sql(obj: str, **cols: str) -> str:
+    """DuckDB twin of ``dv_hk``."""
+    prefix, names = DV_KEYS[obj]
+    body = " || '|' || ".join(cols.get(n, n) for n in names)
+    return md5_int_sql(f"'{prefix}' || {body}" if prefix else body, 15)
+
+
+def dv_digest(col: str) -> Column:
+    """Order-free vault digest Σ(hk div 2^DV_DIGEST_SHIFT) of a 60-bit
+    hash column: the overflow-safe ``digest`` of 40-bit terms."""
+    return digest(f"{col} div {1 << DV_DIGEST_SHIFT}")
+
+
+def dv_digest_sql(col: str) -> str:
+    return digest_sql(f"{col} // {1 << DV_DIGEST_SHIFT}")
+
+
+def dv_as_of(
+    events: DataFrame, snapshots: tuple[str, ...], date: str, keys: list[str],
+    picks: tuple[tuple[str, str], ...],
+) -> DataFrame:
+    """As-of resolution: per (snapshot, *keys), the event row with the
+    greatest ``date`` ≤ snapshot. The snapshot spine is a BROADCAST
+    literal frame (a handful of reporting dates); one aggregate keyed
+    on (snapshot, key) resolves it — max_by in-aggregate, no window.
+    ``picks`` are (output, column) pairs; picking ``date`` itself is
+    its max."""
+    spine = local_frame(
+        events.sparkSession, [(s,) for s in snapshots], "snapshot_date string"
+    ).select(F.col("snapshot_date").cast("date"))
     return (
-        f"CAST(SUM({col} // {1 << DV_DIGEST_SHIFT}) % {DV_DIGEST_MOD} AS BIGINT)"
+        events.join(F.broadcast(spine), F.col(date) <= F.col("snapshot_date"))
+        .groupBy("snapshot_date", *keys)
+        .agg(*[
+            (F.max(date) if c == date else F.max_by(c, date)).alias(out)
+            for out, c in picks
+        ])
     )
+
+
+def dv_as_of_sql(
+    events: str, snapshots: tuple[str, ...], date: str, keys: list[str],
+    picks: tuple[tuple[str, str], ...],
+) -> str:
+    """DuckDB twin of ``dv_as_of`` over the CTE ``events``."""
+    spine = ", ".join(f"(DATE '{s}')" for s in snapshots)
+    cols = [f"e.{k}" for k in keys] + [
+        (f"MAX(e.{date})" if c == date else f"arg_max(e.{c}, e.{date})") + f" AS {out}"
+        for out, c in picks
+    ]
+    return f"""SELECT s.snapshot_date, {", ".join(cols)}
+  FROM {events} e JOIN (VALUES {spine}) s(snapshot_date) ON e.{date} <= s.snapshot_date
+  GROUP BY {", ".join(str(i + 1) for i in range(len(keys) + 1))}"""
+
+
+def dv_report(df: DataFrame, name: str) -> DataFrame:
+    """Per-vault-table report of a frame of hash keys ``hk``: row
+    count, distinct hash-key count (the hash-collision audit: must
+    equal the business-key count) and the order-free digest."""
+    return df.agg(
+        F.lit(name).alias("vault_table"),
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.countDistinct("hk").cast("bigint").alias("n_distinct_hk"),
+        dv_digest("hk").alias("hk_digest"),
+    )
+
+
+def dv_report_sql(name: str, src: str) -> str:
+    return f"""SELECT '{name}' AS vault_table, CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(COUNT(DISTINCT hk) AS BIGINT) AS n_distinct_hk,
+       {dv_digest_sql("hk")} AS hk_digest
+FROM ({src})"""
 
 
 def etl_data_vault_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2836,59 +2908,24 @@ def etl_data_vault_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each vault table is one scan + one aggregate; hubs/links
     dedup on the hash (shuffle keyed by hk — the uniform key a
     surrogate hash exists to provide; NO skew by construction)."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-
-    hub_c = customer.select(
-        h60(F.concat(F.lit("c"), F.col("c_custkey"))).alias("hk")
-    ).distinct()
-    hub_o = orders.select(
-        h60(F.concat(F.lit("o"), F.col("o_orderkey"))).alias("hk")
-    ).distinct()
-    link_oc = orders.select(
-        h60(
-            F.concat(F.lit("oc"), F.col("o_orderkey"), F.lit("|"), F.col("o_custkey"))
-        ).alias("hk")
-    ).distinct()
-    sat_c = customer.select(
-        h60(
-            F.concat(
-                F.col("c_name"), F.lit("|"), F.col("c_nationkey"), F.lit("|"), F.col("c_mktsegment")
-            )
-        ).alias("hk")
-    )
-    sat_o = orders.select(
-        h60(F.concat(F.col("o_orderstatus"), F.lit("|"), F.col("o_orderpriority"))).alias(
-            "hk"
-        )
-    )
-
-    def summarize(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("vault_table"),
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("hk").cast("bigint").alias("n_distinct_hk"),
-            _dv_digest_col("hk").alias("hk_digest"),
-        )
-
+    src = {t: load_table(spark, sf_dir, t) for t in ("customer", "orders")}
     out = None
-    for df, name in (
-        (hub_c, "hub_customer"),
-        (hub_o, "hub_order"),
-        (link_oc, "link_order_customer"),
-        (sat_c, "sat_customer"),
-        (sat_o, "sat_order"),
-    ):
-        row = summarize(df, name)
+    for name, table, is_key in _DV_BUILD:
+        df = src[table].select(dv_hk(name).alias("hk"))
+        row = dv_report(df.distinct() if is_key else df, name)
         out = row if out is None else out.unionByName(row)
     return out
 
 
-def _dv_h60_sql(expr: str) -> str:
-    return f"CAST(CAST(concat('0x', substr(md5({expr}), 1, 15)) AS UBIGINT) AS BIGINT)"
+# E49's vault tables: (object, source table, dedup on hk) — hubs and
+# links hold one row per key, satellites one row per source row
+_DV_BUILD = (
+    ("hub_customer", "customer", True),
+    ("hub_order", "orders", True),
+    ("link_order_customer", "orders", True),
+    ("sat_customer", "customer", False),
+    ("sat_order", "orders", False),
+)
 
 
 DV_PIT_SNAPSHOTS = ("2024-03-01", "2024-09-01")  # one before, one after the planted change
@@ -2924,41 +2961,22 @@ def etl_data_vault_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's star schema keeps only current
     rows (main.py:61-74 idempotent appends); PIT is how the vault
     form answers as-of questions the reference cannot."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     cust = load_table(spark, sf_dir, "customer")
-    hk = h60(F.concat(F.lit("c"), F.col("c_custkey"))).alias("hk")
-    hd = h60(
-        F.concat(
-            F.col("c_name"), F.lit("|"), F.col("c_nationkey"), F.lit("|"), F.col("c_mktsegment")
-        )
-    ).alias("hd")
+    hk = dv_hk("hub_customer").alias("hk")
+    hd = dv_hk("sat_customer").alias("hd")
     sat1 = cust.select(hk, hd, F.lit(DV_PIT_LOAD_1).cast("date").alias("load_date"))
     sat2 = (
         cust.filter(F.col("c_custkey") % 5 == 0)
         .withColumn("c_mktsegment", F.lit("MOVED"))
         .select(hk, hd, F.lit(DV_PIT_LOAD_2).cast("date").alias("load_date"))
     )
-    sat = sat1.unionByName(sat2)
-    snaps = local_frame(
-        spark,
-        [(s,) for s in DV_PIT_SNAPSHOTS], "snapshot_date string"
-    ).select(F.col("snapshot_date").cast("date"))
-    pit = (
-        sat.join(F.broadcast(snaps), F.col("load_date") <= F.col("snapshot_date"))
-        .groupBy("snapshot_date", "hk")
-        .agg(
-            F.max("load_date").alias("version_load_date"),
-            F.max_by("hd", "load_date").alias("hd"),
-        )
-    )
+    pit = dv_as_of(sat1.unionByName(sat2), DV_PIT_SNAPSHOTS, "load_date", ["hk"], _DV_PIT_PICKS)
     return (
         pit.groupBy("snapshot_date", "version_load_date")
         .agg(
             F.count("*").cast("bigint").alias("n_keys"),
-            _dv_digest_col("hk").alias("hk_digest"),
-            _dv_digest_col("hd").alias("hd_digest"),
+            dv_digest("hk").alias("hk_digest"),
+            dv_digest("hd").alias("hd_digest"),
         )
         # ISO strings, not DATE: the gate's pandas canonicalization
         # widens DuckDB dates to midnight timestamps
@@ -2973,31 +2991,27 @@ def etl_data_vault_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DV_PIT_PICKS = (("version_load_date", "load_date"), ("hd", "hd"))
 ORACLES["etl_data_vault_pit"] = f"""
 WITH sat AS (
-  SELECT {_dv_h60_sql("'c' || c_custkey")} AS hk,
-         {_dv_h60_sql("c_name || '|' || c_nationkey || '|' || c_mktsegment")} AS hd,
+  SELECT {dv_hk_sql("hub_customer")} AS hk,
+         {dv_hk_sql("sat_customer")} AS hd,
          DATE '{DV_PIT_LOAD_1}' AS load_date
   FROM customer
   UNION ALL
-  SELECT {_dv_h60_sql("'c' || c_custkey")} AS hk,
-         {_dv_h60_sql("c_name || '|' || c_nationkey || '|' || 'MOVED'")} AS hd,
+  SELECT {dv_hk_sql("hub_customer")} AS hk,
+         {dv_hk_sql("sat_customer", c_mktsegment="'MOVED'")} AS hd,
          DATE '{DV_PIT_LOAD_2}' AS load_date
   FROM customer WHERE c_custkey % 5 = 0
 ),
-snaps(snapshot_date) AS (VALUES {", ".join(f"(DATE '{s}')" for s in DV_PIT_SNAPSHOTS)}),
 pit AS (
-  SELECT s.snapshot_date, t.hk,
-         MAX(t.load_date) AS version_load_date,
-         arg_max(t.hd, t.load_date) AS hd
-  FROM sat t JOIN snaps s ON t.load_date <= s.snapshot_date
-  GROUP BY 1, 2
+  {dv_as_of_sql("sat", DV_PIT_SNAPSHOTS, "load_date", ["hk"], _DV_PIT_PICKS)}
 )
 SELECT CAST(snapshot_date AS VARCHAR) AS snapshot_date,
        CAST(version_load_date AS VARCHAR) AS version_load_date,
        CAST(COUNT(*) AS BIGINT) AS n_keys,
-       {_dv_digest_sql("hk")} AS hk_digest,
-       {_dv_digest_sql("hd")} AS hd_digest
+       {dv_digest_sql("hk")} AS hk_digest,
+       {dv_digest_sql("hd")} AS hd_digest
 FROM pit
 GROUP BY snapshot_date, version_load_date
 ORDER BY 1, 2
@@ -3035,44 +3049,30 @@ def etl_data_vault_effectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one aggregate keyed on (snapshot, link hk) resolves the
     latest event — uniform hash keys, no skew; max_by in-aggregate,
     no window (the E50 discipline)."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     orders = load_table(spark, sf_dir, "orders")
-    link = lambda ck: h60(  # noqa: E731
-        F.concat(F.lit("oc"), F.col("o_orderkey"), F.lit("|"), ck)
-    )
     open1 = orders.select(
-        link(F.col("o_custkey")).alias("hk"),
+        dv_hk("link_order_customer").alias("hk"),
         F.lit(DV_EFF_D1).cast("date").alias("event_date"),
         F.lit(True).alias("is_open"),
     )
     moved = orders.filter(F.col("o_orderkey") % DV_EFF_MOD == 0)
     close2 = moved.select(
-        link(F.col("o_custkey")).alias("hk"),
+        dv_hk("link_order_customer").alias("hk"),
         F.lit(DV_EFF_D2).cast("date").alias("event_date"),
         F.lit(False).alias("is_open"),
     )
     open2 = moved.select(
-        link(F.col("o_custkey") + 1).alias("hk"),
+        dv_hk("link_order_customer", o_custkey=F.col("o_custkey") + 1).alias("hk"),
         F.lit(DV_EFF_D2).cast("date").alias("event_date"),
         F.lit(True).alias("is_open"),
     )
     events = open1.unionByName(close2).unionByName(open2)
-    snaps = local_frame(
-        spark,
-        [(s,) for s in DV_EFF_SNAPSHOTS], "snapshot_date string"
-    ).select(F.col("snapshot_date").cast("date"))
-    state = (
-        events.join(F.broadcast(snaps), F.col("event_date") <= F.col("snapshot_date"))
-        .groupBy("snapshot_date", "hk")
-        .agg(F.max_by("is_open", "event_date").alias("is_open"))
-    )
+    state = dv_as_of(events, DV_EFF_SNAPSHOTS, "event_date", ["hk"], (("is_open", "is_open"),))
     return (
         state.groupBy("snapshot_date", "is_open")
         .agg(
             F.count("*").cast("bigint").alias("n_links"),
-            _dv_digest_col("hk").alias("hk_digest"),
+            dv_digest("hk").alias("hk_digest"),
         )
         .select(
             F.col("snapshot_date").cast("string").alias("snapshot_date"),
@@ -3086,27 +3086,24 @@ def etl_data_vault_effectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["etl_data_vault_effectivity"] = f"""
 WITH events AS (
-  SELECT {_dv_h60_sql("'oc' || o_orderkey || '|' || o_custkey")} AS hk,
+  SELECT {dv_hk_sql("link_order_customer")} AS hk,
          DATE '{DV_EFF_D1}' AS event_date, TRUE AS is_open
   FROM orders
   UNION ALL
-  SELECT {_dv_h60_sql("'oc' || o_orderkey || '|' || o_custkey")},
+  SELECT {dv_hk_sql("link_order_customer")},
          DATE '{DV_EFF_D2}', FALSE
   FROM orders WHERE o_orderkey % {DV_EFF_MOD} = 0
   UNION ALL
-  SELECT {_dv_h60_sql("'oc' || o_orderkey || '|' || (o_custkey + 1)")},
+  SELECT {dv_hk_sql("link_order_customer", o_custkey="(o_custkey + 1)")},
          DATE '{DV_EFF_D2}', TRUE
   FROM orders WHERE o_orderkey % {DV_EFF_MOD} = 0
 ),
-snaps(snapshot_date) AS (VALUES {", ".join(f"(DATE '{s}')" for s in DV_EFF_SNAPSHOTS)}),
 state AS (
-  SELECT s.snapshot_date, e.hk, arg_max(e.is_open, e.event_date) AS is_open
-  FROM events e JOIN snaps s ON e.event_date <= s.snapshot_date
-  GROUP BY 1, 2
+  {dv_as_of_sql("events", DV_EFF_SNAPSHOTS, "event_date", ["hk"], (("is_open", "is_open"),))}
 )
 SELECT CAST(snapshot_date AS VARCHAR) AS snapshot_date, is_open,
        CAST(COUNT(*) AS BIGINT) AS n_links,
-       {_dv_digest_sql("hk")} AS hk_digest
+       {dv_digest_sql("hk")} AS hk_digest
 FROM state
 GROUP BY snapshot_date, is_open
 ORDER BY 1, 2
@@ -3148,9 +3145,6 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitions with the fact instead of shuffling it; the report
     is one partial-agged aggregate. A materialized bridge would be
     written partitioned by snapshot_date (E12's discipline)."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     open1 = orders.select(
@@ -3167,21 +3161,15 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     events = open1.unionByName(open2)
-    snaps = local_frame(
-        spark,
-        [(s,) for s in DV_EFF_SNAPSHOTS], "snapshot_date string"
-    ).select(F.col("snapshot_date").cast("date"))
     eff = (
-        events.join(F.broadcast(snaps), F.col("event_date") <= F.col("snapshot_date"))
-        .groupBy("snapshot_date", "o_orderkey")
-        .agg(F.max_by("custkey", "event_date").alias("custkey"))
+        dv_as_of(events, DV_EFF_SNAPSHOTS, "event_date", ["o_orderkey"], _DV_BRIDGE_PICKS)
         # hk_customer is a function of the EFF row (snapshot, order ->
         # customer), so hash it here at |snapshots|x|orders| rows and
         # let the lineitem join carry the 8-byte result — hashing it
         # in the post-join projection would md5 every PATH row (10x
         # more at lineitem fan-out; half the report stage's hash work
         # in the r12 sf10 stage profile)
-        .withColumn("hk_customer", h60(F.concat(F.lit("c"), F.col("custkey"))))
+        .withColumn("hk_customer", dv_hk("hub_customer", c_custkey=F.col("custkey")))
     )
     # a bridge row is a PATH, not a fact row: the source carries
     # planted duplicate lineitem rows (the dedup-family fixtures), so
@@ -3207,18 +3195,7 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridge = paths.select(
         "snapshot_date",
         (F.col("o_orderkey") % DV_EFF_MOD == 0).alias("is_reassigned"),
-        h60(
-            F.concat(
-                F.lit("br"),
-                F.col("custkey"),
-                F.lit("|"),
-                F.col("o_orderkey"),
-                F.lit("|"),
-                F.col("l_partkey"),
-                F.lit("|"),
-                F.col("l_linenumber"),
-            )
-        ).alias("hk"),
+        dv_hk("bridge_path").alias("hk"),
         "hk_customer",
     )
     # report agg in TWO stages instead of count(*)+countDistinct(hk)
@@ -3248,9 +3225,9 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 f"CAST(SUM(CAST(c AS DECIMAL(38,0))"
                 f" * CAST(hk div {1 << DV_DIGEST_SHIFT} AS DECIMAL(38,0)))"
-                f" % {DV_DIGEST_MOD} AS BIGINT)"
+                f" % {DIGEST_MOD} AS BIGINT)"
             ).alias("path_digest"),
-            F.expr(f"CAST(SUM(cust_part) % {DV_DIGEST_MOD} AS BIGINT)").alias(
+            F.expr(f"CAST(SUM(cust_part) % {DIGEST_MOD} AS BIGINT)").alias(
                 "customer_digest"
             ),
         )
@@ -3266,6 +3243,7 @@ def etl_data_vault_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DV_BRIDGE_PICKS = (("custkey", "custkey"),)
 ORACLES["etl_data_vault_bridge"] = f"""
 WITH events AS (
   SELECT o_orderkey, o_custkey AS custkey, DATE '{DV_EFF_D1}' AS event_date
@@ -3274,12 +3252,8 @@ WITH events AS (
   SELECT o_orderkey, o_custkey + 1, DATE '{DV_EFF_D2}'
   FROM orders WHERE o_orderkey % {DV_EFF_MOD} = 0
 ),
-snaps(snapshot_date) AS (VALUES {", ".join(f"(DATE '{s}')" for s in DV_EFF_SNAPSHOTS)}),
 eff AS (
-  SELECT s.snapshot_date, e.o_orderkey,
-         arg_max(e.custkey, e.event_date) AS custkey
-  FROM events e JOIN snaps s ON e.event_date <= s.snapshot_date
-  GROUP BY 1, 2
+  {dv_as_of_sql("events", DV_EFF_SNAPSHOTS, "event_date", ["o_orderkey"], _DV_BRIDGE_PICKS)}
 ),
 paths AS (
   SELECT DISTINCT eff.snapshot_date, eff.custkey, eff.o_orderkey,
@@ -3289,15 +3263,15 @@ paths AS (
 bridge AS (
   SELECT snapshot_date,
          (o_orderkey % {DV_EFF_MOD} = 0) AS is_reassigned,
-         {_dv_h60_sql("'br' || custkey || '|' || o_orderkey || '|' || l_partkey || '|' || l_linenumber")} AS hk,
-         {_dv_h60_sql("'c' || custkey")} AS hk_customer
+         {dv_hk_sql("bridge_path")} AS hk,
+         {dv_hk_sql("hub_customer", c_custkey="custkey")} AS hk_customer
   FROM paths
 )
 SELECT CAST(snapshot_date AS VARCHAR) AS snapshot_date, is_reassigned,
        CAST(COUNT(*) AS BIGINT) AS n_paths,
        CAST(COUNT(DISTINCT hk) AS BIGINT) AS n_distinct_hk,
-       {_dv_digest_sql("hk")} AS path_digest,
-       {_dv_digest_sql("hk_customer")} AS customer_digest
+       {dv_digest_sql("hk")} AS path_digest,
+       {dv_digest_sql("hk_customer")} AS customer_digest
 FROM bridge
 GROUP BY snapshot_date, is_reassigned
 ORDER BY 1, 2
@@ -3324,89 +3298,42 @@ def etl_data_vault_same_as_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: resolution is E35's bounded-block pair join + CC fixpoint;
     the vault layer adds one projection and three aggregates keyed on
     the uniform surrogate hash — no skew by construction."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     labeled = _er_labeled(spark, sf_dir)
-    hub = labeled.select(h60(F.concat(F.lit("p"), F.col("rid"))).alias("hk"))
+    hub = labeled.select(dv_hk("hub_party").alias("hk"))
     sal = labeled.select(
-        h60(
-            F.concat(F.lit("sal"), F.col("rid"), F.lit("|"), F.col("entity"))
-        ).alias("hk"),
+        dv_hk("sal_party").alias("hk"),
         (F.col("rid") != F.col("entity")).alias("nontrivial"),
     )
-
-    def summarize(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("vault_table"),
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("hk").cast("bigint").alias("n_distinct_hk"),
-            _dv_digest_col("hk").alias("hk_digest"),
-        )
-
     return (
-        summarize(hub, "hub_party")
-        .unionByName(summarize(sal, "sal_party"))
-        .unionByName(summarize(sal.filter("nontrivial"), "sal_nontrivial"))
+        dv_report(hub, "hub_party")
+        .unionByName(dv_report(sal, "sal_party"))
+        .unionByName(dv_report(sal.filter("nontrivial"), "sal_nontrivial"))
         .orderBy("vault_table")
     )
 
 
-def _dv_sal_block(name: str, src_sql: str) -> str:
-    return f"""SELECT '{name}' AS vault_table, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(DISTINCT hk) AS BIGINT) AS n_distinct_hk,
-       {_dv_digest_sql("hk")} AS hk_digest
-FROM ({src_sql})"""
-
-
 ORACLES["etl_data_vault_same_as_link"] = f"""
 WITH {_ER_LABELED_CTES},
-hub AS (SELECT {_dv_h60_sql("'p' || rid")} AS hk FROM labeled),
+hub AS (SELECT {dv_hk_sql("hub_party")} AS hk FROM labeled),
 sal AS (
-  SELECT {_dv_h60_sql("'sal' || rid || '|' || entity")} AS hk,
+  SELECT {dv_hk_sql("sal_party")} AS hk,
          rid <> entity AS nontrivial
   FROM labeled
 )
-{_dv_sal_block("hub_party", "SELECT hk FROM hub")}
+{dv_report_sql("hub_party", "SELECT hk FROM hub")}
 UNION ALL
-{_dv_sal_block("sal_party", "SELECT hk FROM sal")}
+{dv_report_sql("sal_party", "SELECT hk FROM sal")}
 UNION ALL
-{_dv_sal_block("sal_nontrivial", "SELECT hk FROM sal WHERE nontrivial")}
+{dv_report_sql("sal_nontrivial", "SELECT hk FROM sal WHERE nontrivial")}
 ORDER BY vault_table
 """
 
 
-def _dv_block(name: str, hk_sql: str, src: str, distinct: bool) -> str:
-    inner = f"SELECT {'DISTINCT ' if distinct else ''}{hk_sql} AS hk FROM {src}"
-    return f"""SELECT '{name}' AS vault_table, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(DISTINCT hk) AS BIGINT) AS n_distinct_hk,
-       {_dv_digest_sql("hk")} AS hk_digest
-FROM ({inner})"""
-
-
 ORACLES["etl_data_vault_build"] = "\nUNION ALL\n".join(
-    (
-        _dv_block("hub_customer", _dv_h60_sql("'c' || c_custkey"), "customer", True),
-        _dv_block("hub_order", _dv_h60_sql("'o' || o_orderkey"), "orders", True),
-        _dv_block(
-            "link_order_customer",
-            _dv_h60_sql("'oc' || o_orderkey || '|' || o_custkey"),
-            "orders",
-            True,
-        ),
-        _dv_block(
-            "sat_customer",
-            _dv_h60_sql("c_name || '|' || c_nationkey || '|' || c_mktsegment"),
-            "customer",
-            False,
-        ),
-        _dv_block(
-            "sat_order",
-            _dv_h60_sql("o_orderstatus || '|' || o_orderpriority"),
-            "orders",
-            False,
-        ),
+    dv_report_sql(
+        name, f"SELECT {'DISTINCT ' if is_key else ''}{dv_hk_sql(name)} AS hk FROM {table}"
     )
+    for name, table, is_key in _DV_BUILD
 )
 
 
@@ -3447,13 +3374,10 @@ def etl_data_vault_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: the reference materializes its mart by re-joining staged
     tables per run (main.py:98-126); this is that mart derived from
     an auditable raw vault instead of a staging area."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
 
-    hk_c = h60(F.concat(F.lit("c"), F.col("c_custkey")))
+    hk_c = dv_hk("hub_customer")
     sat_c_v1 = customer.select(
         hk_c.alias("hk_c"),
         F.lit(DV_MART_D1).cast("date").alias("load_date"),
@@ -3481,11 +3405,11 @@ def etl_data_vault_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hk_c",
     )
     link_oc = orders.select(
-        h60(F.concat(F.lit("o"), F.col("o_orderkey"))).alias("hk_o"),
-        h60(F.concat(F.lit("c"), F.col("o_custkey"))).alias("hk_c"),
+        dv_hk("hub_order").alias("hk_o"),
+        dv_hk("hub_customer", c_custkey=F.col("o_custkey")).alias("hk_c"),
     )
     sat_order = orders.select(
-        h60(F.concat(F.lit("o"), F.col("o_orderkey"))).alias("hk_o"),
+        dv_hk("hub_order").alias("hk_o"),
         F.col("o_orderstatus").alias("orderstatus"),
         money("o_totalprice").alias("price"),
     )
@@ -3550,19 +3474,16 @@ def etl_data_vault_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (here rebuilt in-query for the self-contained gate
     shape, one partial-agged group-by). DECIMAL accumulation
     throughout (A105); doubles only at the gate boundary."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
 
-    hk_c = h60(F.concat(F.lit("c"), F.col("c_custkey")))
+    hk_c = dv_hk("hub_customer")
     # state-0 dimension: satellite v1 only
     dim_v1 = customer.select(
         hk_c.alias("hk_c"), F.col("c_mktsegment").alias("mktsegment")
     )
     link_fact = orders.select(
-        h60(F.concat(F.lit("c"), F.col("o_custkey"))).alias("hk_c"),
+        dv_hk("hub_customer", c_custkey=F.col("o_custkey")).alias("hk_c"),
         F.col("o_orderstatus").alias("orderstatus"),
         money("o_totalprice").alias("price"),
     )
@@ -3693,25 +3614,17 @@ def etl_data_vault_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-by. Parity: the reference reloads tables wholesale and
     loses deleted rows entirely (main.py:45-59); this keeps them
     queryable history."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     orders = load_table(spark, sf_dir, "orders")
-    key_s = F.col("o_orderkey").cast("string")
-    cust_s = F.col("o_custkey").cast("string")
 
     def both_tables(src: DataFrame, date: str, deleted: bool) -> DataFrame:
-        hub = src.select(
-            F.lit("hub_order").alias("vault_table"),
-            h60(F.concat(F.lit("o"), key_s)).alias("hk"),
-            F.lit(date).cast("date").alias("event_date"),
-            F.lit(deleted).alias("deleted"),
-        )
-        link = src.select(
-            F.lit("link_order_customer").alias("vault_table"),
-            h60(F.concat(F.lit("l"), key_s, F.lit("|"), cust_s)).alias("hk"),
-            F.lit(date).cast("date").alias("event_date"),
-            F.lit(deleted).alias("deleted"),
+        hub, link = (
+            src.select(
+                F.lit(name).alias("vault_table"),
+                dv_hk(name).alias("hk"),
+                F.lit(date).cast("date").alias("event_date"),
+                F.lit(deleted).alias("deleted"),
+            )
+            for name in _DV_DEL_TABLES
         )
         return hub.unionByName(link)
 
@@ -3722,20 +3635,14 @@ def etl_data_vault_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(both_tables(gone, DV_DEL_D2, True))
         .unionByName(both_tables(back, DV_DEL_D3, False))
     )
-    snaps = local_frame(
-        spark,
-        [(s,) for s in DV_DEL_SNAPSHOTS], "snapshot_date string"
-    ).select(F.col("snapshot_date").cast("date"))
-    state = (
-        events.join(F.broadcast(snaps), F.col("event_date") <= F.col("snapshot_date"))
-        .groupBy("snapshot_date", "vault_table", "hk")
-        .agg(F.max_by("deleted", "event_date").alias("is_deleted"))
+    state = dv_as_of(
+        events, DV_DEL_SNAPSHOTS, "event_date", ["vault_table", "hk"], _DV_DEL_PICKS
     )
     return (
         state.groupBy("snapshot_date", "vault_table", "is_deleted")
         .agg(
             F.count("*").cast("bigint").alias("n_keys"),
-            _dv_digest_col("hk").alias("hk_digest"),
+            dv_digest("hk").alias("hk_digest"),
         )
         .select(
             F.col("snapshot_date").cast("string").alias("snapshot_date"),
@@ -3748,8 +3655,10 @@ def etl_data_vault_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DV_DEL_HUB_HK = _dv_h60_sql("'o' || o_orderkey")
-_DV_DEL_LINK_HK = _dv_h60_sql("'l' || o_orderkey || '|' || o_custkey")
+_DV_DEL_TABLES = ("hub_order", "link_order_customer")
+_DV_DEL_PICKS = (("is_deleted", "deleted"),)
+_DV_DEL_HUB_HK = dv_hk_sql("hub_order")
+_DV_DEL_LINK_HK = dv_hk_sql("link_order_customer")
 ORACLES["etl_data_vault_deletes"] = f"""
 WITH events AS (
   SELECT 'hub_order' AS vault_table, {_DV_DEL_HUB_HK} AS hk,
@@ -3771,16 +3680,12 @@ WITH events AS (
   SELECT 'link_order_customer', {_DV_DEL_LINK_HK}, DATE '{DV_DEL_D3}', FALSE
   FROM orders WHERE o_orderkey % {DV_DEL_MOD * DV_DEL_REMOD} = 0
 ),
-snaps(snapshot_date) AS (VALUES {", ".join(f"(DATE '{s}')" for s in DV_DEL_SNAPSHOTS)}),
 state AS (
-  SELECT s.snapshot_date, e.vault_table, e.hk,
-         arg_max(e.deleted, e.event_date) AS is_deleted
-  FROM events e JOIN snaps s ON e.event_date <= s.snapshot_date
-  GROUP BY 1, 2, 3
+  {dv_as_of_sql("events", DV_DEL_SNAPSHOTS, "event_date", ["vault_table", "hk"], _DV_DEL_PICKS)}
 )
 SELECT CAST(snapshot_date AS VARCHAR) AS snapshot_date, vault_table, is_deleted,
        CAST(COUNT(*) AS BIGINT) AS n_keys,
-       {_dv_digest_sql("hk")} AS hk_digest
+       {dv_digest_sql("hk")} AS hk_digest
 FROM state
 GROUP BY snapshot_date, vault_table, is_deleted
 ORDER BY 1, 2, 3

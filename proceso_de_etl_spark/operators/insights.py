@@ -20,6 +20,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from proceso_de_etl_spark.functions.columns import dsum, money
+from proceso_de_etl_spark.functions.hashing import digest, digest_sql, md5_int, md5_int_sql
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
 
@@ -29,8 +30,6 @@ ORACLES: dict[str, str] = {}
 # any SF; an absolute (not relative) floor keeps the operator
 # meaningful at sf0.001 smoke scale too.
 BASKET_MIN_PAIR_ORDERS = 2
-
-_PAIR_DIGEST_MOD = (1 << 61) - 1
 
 
 def _basket_frames(
@@ -93,10 +92,11 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and A69/A82 measure only their warm rule/similarity work. The
     one-row summary forces all three shared frames to materialize
     under the timer and pins the pair MULTISET exactly:
-    pair_digest sums (ante·1000003+cons)·pair_orders through
-    DECIMAL(38,0) and Mersenne-reduces to BIGINT (the overflow-safe
-    digest law — DuckDB's SUM promotes to HUGEINT, Spark's BIGINT
-    sum would wrap silently on derived tiers)."""
+    pair_digest is the overflow-safe ``digest`` of
+    (ante·1000003+cons)·pair_orders: summed through DECIMAL(38,0) and
+    Mersenne-reduced to BIGINT, because DuckDB's SUM promotes to
+    HUGEINT while Spark's BIGINT sum would raise ARITHMETIC_OVERFLOW
+    (ANSI mode, which get_spark keeps) on derived tiers."""
     baskets, item_n, pairs = _basket_frames(spark, sf_dir)
     return (
         pairs.agg(
@@ -105,10 +105,7 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_supported_pairs"),
             F.max("pair_orders").cast("bigint").alias("max_pair_orders"),
-            F.expr(
-                "CAST(SUM(CAST((ante * 1000003 + cons) * pair_orders"
-                f" AS DECIMAL(38,0))) % {_PAIR_DIGEST_MOD} AS BIGINT)"
-            ).alias("pair_digest"),
+            digest("(ante * 1000003 + cons) * pair_orders").alias("pair_digest"),
         )
         .join(
             baskets.agg(
@@ -142,8 +139,7 @@ SELECT (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) FROM baskets) AS n_bas
        (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs
          WHERE pair_orders >= {BASKET_MIN_PAIR_ORDERS}) AS n_supported_pairs,
        (SELECT CAST(MAX(pair_orders) AS BIGINT) FROM pairs) AS max_pair_orders,
-       (SELECT CAST(SUM((ante * 1000003 + cons) * pair_orders)
-               % {_PAIR_DIGEST_MOD} AS BIGINT) FROM pairs) AS pair_digest
+       (SELECT {digest_sql("(ante * 1000003 + cons) * pair_orders")} FROM pairs) AS pair_digest
 """
 
 
@@ -848,11 +844,7 @@ def ab_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment bit-for-bit; swap xxhash64 in production). One scan,
     per-arm exact moments (A74 discipline), one 2-row fold."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    ).cast("int")
+    arm = (md5_int(F.col("user_id").cast("string"), 8) % 2).cast("int")
     mom = ev.groupBy(arm.alias("arm")).agg(
         F.count("*").cast("double").alias("n"),
         F.countDistinct("user_id").alias("n_users"),
@@ -908,9 +900,9 @@ def ab_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["ab_aa_calibration"] = """
+ORACLES["ab_aa_calibration"] = f"""
 WITH mom AS (
-  SELECT CAST(CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 2 AS BIGINT) AS INT) AS arm,
+  SELECT CAST({md5_int_sql("CAST(user_id AS VARCHAR)", 8)} % 2 AS INT) AS arm,
          CAST(COUNT(*) AS DOUBLE) AS n,
          COUNT(DISTINCT user_id) AS n_users,
          CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s1,
@@ -1480,15 +1472,7 @@ def ab_bootstrap_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: reference has no inference surface; Owen & Eckles (2012)
     pattern, portable-hash discipline from dedup.py:167-190."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    u60 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("boot:"), F.col("event_id"), F.lit(":"), F.col("b"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u60 = md5_int(F.concat(F.lit("boot:"), F.col("event_id"), F.lit(":"), F.col("b")), 15)
     w = sum(
         (u60 >= F.lit(t)).cast("bigint") for t in _POIS_THRESH
     )
@@ -1563,7 +1547,7 @@ wts AS (
          {thresh} AS w
   FROM (
     SELECT event_type, b, value,
-           CAST(CAST(concat('0x', substr(md5(concat('boot:', event_id, ':', b)), 1, 15)) AS UBIGINT) AS BIGINT) AS u60
+           {md5_int_sql("concat('boot:', event_id, ':', b)", 15)} AS u60
     FROM expl
   )
 ),

@@ -23,6 +23,7 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from proceso_de_etl_spark.functions.hashing import digest, digest_sql, md5_int
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
 
@@ -319,9 +320,7 @@ def kmeans_fit_two_level(
     m = max(1, n // s_target)
     rows = (
         df.filter(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % m
+            md5_int(F.col("vec_id").cast("string"), 15) % m
             == 0
         )
         .select("vec_id", emb_col)
@@ -1018,10 +1017,11 @@ def graph_oriented_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     to materialize under the timer and value-pins the oriented
     structure: max_outdeg witnesses the orientation's O(sqrt m)
     out-degree cap, n_wedges the Σ C(outdeg,2) wedge space, and
-    edge_digest the exact oriented edge SET (s·1000003+d summed
-    through DECIMAL(38,0) and Mersenne-reduced to BIGINT — the
-    _dv_digest_col overflow law; a plain BIGINT sum would wrap
-    silently on derived tiers while DuckDB promotes to HUGEINT).
+    edge_digest the exact oriented edge SET (the overflow-safe
+    ``digest`` of s·1000003+d: summed through DECIMAL(38,0) and
+    Mersenne-reduced to BIGINT, because a plain BIGINT sum raises
+    ARITHMETIC_OVERFLOW in ANSI mode, which get_spark keeps, on
+    derived tiers while DuckDB promotes to HUGEINT).
 
     One aggregate over a tagged union of the three cached frames, not
     three one-row aggregates cross-joined: each row carries only the
@@ -1047,9 +1047,7 @@ def graph_oriented_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("outdeg").cast("bigint").alias("n_oriented_edges"),
         F.max("outdeg").cast("bigint").alias("max_outdeg"),
         F.sum(F.expr("outdeg * (outdeg - 1) div 2")).cast("bigint").alias("n_wedges"),
-        F.expr(
-            f"CAST(SUM(CAST(term AS DECIMAL(38,0))) % {(1 << 61) - 1} AS BIGINT)"
-        ).alias("edge_digest"),
+        digest("term").alias("edge_digest"),
     )
 
 
@@ -1079,7 +1077,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,
        (SELECT CAST(SUM(outdeg) AS BIGINT) FROM adj) AS n_oriented_edges,
        (SELECT CAST(MAX(outdeg) AS BIGINT) FROM adj) AS max_outdeg,
        (SELECT CAST(SUM(outdeg * (outdeg - 1) // 2) AS BIGINT) FROM adj) AS n_wedges,
-       (SELECT CAST(SUM(s * 1000003 + d) % {(1 << 61) - 1} AS BIGINT) FROM oriented) AS edge_digest
+       (SELECT {digest_sql("s * 1000003 + d")} FROM oriented) AS edge_digest
 """
 
 

@@ -22,6 +22,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.sources.catalog import load_table
 
 ORACLES: dict[str, str] = {}
@@ -522,7 +523,6 @@ def multimodal_blob_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice. Oracle recomputes digests/sizes from the documents table
     with the same staging rule (file i carries doc i % 10's text)."""
     import os
-    import tempfile
 
     docs = {
         r.doc_id: r.text
@@ -531,7 +531,7 @@ def multimodal_blob_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     }
-    stage = tempfile.mkdtemp(prefix="blob_dedup_")
+    stage = cachereg.scratch_dir("blob_dedup_")
     for i in range(BLOB_N_FILES):
         with open(os.path.join(stage, f"{i:08d}.bin"), "wb") as f:
             f.write(docs[i % BLOB_N_UNIQUE].encode("utf-8"))

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from proceso_de_etl_spark.functions.hashing import md5_int, md5_int_sql
 from proceso_de_etl_spark.operators.windows import ranked_topk
 from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -25,9 +26,10 @@ def split_bucket(key: Column) -> Column:
     The key is reduced mod 100 BEFORE the multiply: (key%100)*A+B
     is ≤ ~1.1e11, provably inside 63 bits for ANY bigint key, and
     yields the identical bucket ((key*A + B) mod 100 depends only on
-    key mod 100) — without the reduction, keys above ~8.4e9 overflow,
-    where Spark wraps silently (non-ANSI) while ANSI engines widen or
-    raise, breaking the any-engine-same-split guarantee."""
+    key mod 100) — without the reduction, keys above ~8.4e9 overflow
+    the multiply, which in ANSI mode (the default get_spark keeps)
+    raises ARITHMETIC_OVERFLOW and fails the query, while engines
+    that wrap or widen instead would split differently."""
     return (((key % 100) * F.lit(1103515245) + F.lit(12345)) % 100).cast("bigint")
 
 
@@ -507,9 +509,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint") % DSIR_DIM
-        ).cast("int").alias("bucket"),
+        (md5_int(F.col("tok"), 8) % DSIR_DIM).cast("int").alias("bucket"),
     )
     raw = tok.groupBy("bucket").agg(F.count("*").alias("c_raw"))
     tgt = (
@@ -553,7 +553,7 @@ from proceso_de_etl_spark.functions.text import tokens_sql as _toks_sql_dsir  # 
 ORACLES["sample_importance_dsir"] = f"""
 WITH tok AS (
   SELECT doc_id, lang,
-         CAST(CAST(concat('0x', substr(md5(t.tok), 1, 8)) AS UBIGINT) % {DSIR_DIM} AS INT) AS bucket
+         CAST({md5_int_sql("t.tok", 8)} % {DSIR_DIM} AS INT) AS bucket
   FROM documents, unnest({_toks_sql_dsir("text")}) AS t(tok)
 ),
 raw AS (SELECT bucket, COUNT(*) AS c_raw FROM tok GROUP BY 1),

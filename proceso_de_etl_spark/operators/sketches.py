@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from proceso_de_etl_spark import cachereg
+from proceso_de_etl_spark.functions.hashing import md5_int, md5_int_sql
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
 
@@ -162,16 +163,6 @@ _H60_SPACE = float(1 << 60)  # exactly representable (power of two)
 KMV_K = 256
 
 
-def _h60(c) -> F.Column:
-    """Portable 60-bit hash: md5 → first 15 hex chars → BIGINT.
-    Identical arithmetic in Spark and DuckDB (dedup.py's family)."""
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("bigint")
-
-
-def _h60_sql(expr: str) -> str:
-    return f"CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 15)) AS BIGINT)"
-
-
 def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A33b — portable KMV (k-minimum-values) set algebra: the theta
     sketch's estimator core with a transparent state. Per return flag
@@ -200,7 +191,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than a second shuffle at every SF measured.
     keyed = (
         li.filter(F.col("l_returnflag").isin("A", "R"))
-        .select("l_returnflag", _h60(F.col("l_partkey")).alias("h"))
+        .select("l_returnflag", md5_int(F.col("l_partkey").cast("string"), 15).alias("h"))
         .distinct()
     )
     w_salt = Window.partitionBy("l_returnflag", F.pmod(F.col("h"), F.lit(16))).orderBy("h")
@@ -289,7 +280,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["sketch_kmv_setops"] = f"""
 WITH keyed AS (
   SELECT DISTINCT l_returnflag AS flag,
-         {_h60_sql('l_partkey')} AS h
+         {md5_int_sql("CAST(l_partkey AS VARCHAR)", 15)} AS h
   FROM lineitem WHERE l_returnflag IN ('A', 'R')
 ),
 ka AS (SELECT h FROM keyed WHERE flag = 'A' ORDER BY h LIMIT {KMV_K}),
@@ -414,7 +405,7 @@ def sketch_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["sketch_hll_portable"] = f"""
 WITH fine AS (
   SELECT EXTRACT(year FROM o_orderdate) AS yr, o_orderpriority AS prio,
-         CAST(concat('0x', substr(md5(CAST(o_custkey AS VARCHAR)), 1, 2)) AS INT) AS bucket,
+         CAST({md5_int_sql("CAST(o_custkey AS VARCHAR)", 2)} AS INT) AS bucket,
          CASE WHEN CAST(concat('0x', substr(md5(CAST(o_custkey AS VARCHAR)), 3, 13)) AS BIGINT) = 0
               THEN 53
               ELSE 53 - length(bin(CAST(concat('0x', substr(md5(CAST(o_custkey AS VARCHAR)), 3, 13)) AS BIGINT)))
@@ -564,7 +555,7 @@ def sketch_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = li.select(
         "l_returnflag",
         "l_extendedprice",
-        _h60(F.concat_ws(":", "l_orderkey", "l_linenumber")).alias("h"),
+        md5_int(F.concat_ws(":", "l_orderkey", "l_linenumber"), 15).alias("h"),
     )
     w_salt = Window.partitionBy(
         "l_returnflag", F.pmod(F.col("h"), F.lit(16))
@@ -632,7 +623,7 @@ def sketch_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["sketch_sample_quantiles"] = f"""
 WITH keyed AS (
   SELECT l_returnflag, l_extendedprice,
-         {_h60_sql("concat(l_orderkey, ':', l_linenumber)")} AS h
+         {md5_int_sql("concat(l_orderkey, ':', l_linenumber)", 15)} AS h
   FROM lineitem
 ),
 kept AS (

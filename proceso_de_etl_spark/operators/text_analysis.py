@@ -24,6 +24,7 @@ from proceso_de_etl_spark.functions.text import (
     tokens_sql,
 )
 from proceso_de_etl_spark.functions.columns import dsum
+from proceso_de_etl_spark.functions.hashing import md5_int, md5_int_sql
 from proceso_de_etl_spark.operators.windows import ranked_topk
 from proceso_de_etl_spark.sources.catalog import load_table
 from proceso_de_etl_spark.sources.local import local_frame
@@ -1109,10 +1110,7 @@ def text_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window)."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-        % HASH_TF_DIM
-    ).cast("int")
+    bucket = (md5_int(F.col("tok"), 8) % HASH_TF_DIM).cast("int")
     tf = tok.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count("*").alias("tf")
     )
@@ -1131,7 +1129,7 @@ ORACLES["text_hashed_tf"] = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents),
 tf AS (
   SELECT doc_id,
-         CAST(CAST(concat('0x', substr(md5(tok), 1, 8)) AS UBIGINT) % {HASH_TF_DIM} AS INT) AS bucket,
+         CAST({md5_int_sql("tok", 8)} % {HASH_TF_DIM} AS INT) AS bucket,
          COUNT(*) AS tf
   FROM tok GROUP BY 1, 2
 )

@@ -19,10 +19,10 @@ the same write-then-register motion a warehouse deployment uses.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.functions.columns import dsum
 from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -58,7 +58,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     data (bucket-aligned scan on both sides — plan-asserted); only
     the 5-group aggregate shuffles. Values are bucketing-independent,
     so the oracle is the plain SQL join."""
-    workdir = tempfile.mkdtemp(prefix="bucketed_")
+    workdir = cachereg.scratch_dir("bucketed_")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from proceso_de_etl_spark import cachereg
+
 
 def read_csv(
     spark: SparkSession,
@@ -183,14 +185,13 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes md5/length from the documents table directly, so a
     corrupted or truncated file read moves a value."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < BINFILE_N_DOCS
     )
-    stage = tempfile.mkdtemp(prefix="binfiles_")
+    stage = cachereg.scratch_dir("binfiles_")
     for r in docs.select("doc_id", "text").collect():
         with open(os.path.join(stage, f"{r.doc_id:08d}.txt"), "wb") as f:
             f.write(r.text.encode("utf-8"))
@@ -226,12 +227,11 @@ def source_federated_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory and this union is how a migration reads the table
     DURING a format conversion — no downtime cutover."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    stage = tempfile.mkdtemp(prefix="federated_")
+    stage = cachereg.scratch_dir("federated_")
     p_dir, c_dir, j_dir = (os.path.join(stage, d) for d in ("p", "c", "j"))
     orders.filter(F.col("o_orderkey") % 3 == 0).write.mode("overwrite").parquet(p_dir)
     orders.filter(F.col("o_orderkey") % 3 == 1).write.mode("overwrite").option(
@@ -286,7 +286,6 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass). At 100 TB the quarantine column feeds E23's dead-letter
     routing; nothing here changes shape."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -304,7 +303,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(line)
         .alias("value")
     )
-    stage = os.path.join(tempfile.mkdtemp(prefix="corrupt_json_"), "feed")
+    stage = os.path.join(cachereg.scratch_dir("corrupt_json_"), "feed")
     feed.write.mode("overwrite").text(stage)
     parsed = (
         spark.read.schema("key bigint, name string, bal double, _corrupt string")
@@ -354,12 +353,11 @@ def source_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake runs before trusting a format migration (S12 federates the
     formats; this proves each leg lossless in isolation)."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    stage = tempfile.mkdtemp(prefix="roundtrip_")
+    stage = cachereg.scratch_dir("roundtrip_")
     frames = []
     for fmt in _ROUNDTRIP_FORMATS:
         path = os.path.join(stage, fmt)

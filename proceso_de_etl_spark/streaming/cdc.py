@@ -32,15 +32,19 @@ feed; here both are parquet dirs.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.operators.etl import ORACLES as _ETL_ORACLES
 from proceso_de_etl_spark.operators.etl import (
     _CUTOFF,
     _change_feed,
     cdc_snapshot,
+    dv_digest,
+    dv_digest_sql,
+    dv_hk,
+    dv_hk_sql,
     merge_cdc_batch,
 )
 from proceso_de_etl_spark.sources.catalog import load_table
@@ -57,7 +61,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq-0 snapshot, written as ``snapshot_v1``; return it (tombstones
     filtered). Shares etl_cdc_apply's DuckDB oracle — the seq guard
     makes the final state independent of batch boundaries."""
-    workdir = tempfile.mkdtemp(prefix="stream_cdc_")
+    workdir = cachereg.scratch_dir("stream_cdc_")
     base, change_sets = _change_feed(spark, sf_dir)
     # one landed file per change set, the upstream CDC feed's shape;
     # the operator path (stream -> log) never coalesces
@@ -96,43 +100,20 @@ def _vault_candidates(batch: DataFrame) -> DataFrame:
     Within the batch each key keeps its MIN wave: first-seen-wins
     must hold even if several waves land in one trigger, which is
     what makes the final state batch-boundary-independent."""
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
-    key_s = F.col("o_orderkey").cast("string")
-    cust_s = F.col("o_custkey").cast("string")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string")
-    hub_o = batch.select(
-        F.lit("hub_order").alias("vault_table"),
-        h60(F.concat(F.lit("o"), key_s)).alias("hk"),
-        F.lit(0).cast("bigint").alias("hd"),
-        "wave",
-    )
-    hub_c = batch.select(
-        F.lit("hub_customer").alias("vault_table"),
-        h60(F.concat(F.lit("c"), cust_s)).alias("hk"),
-        F.lit(0).cast("bigint").alias("hd"),
-        "wave",
-    )
-    link = batch.select(
-        F.lit("link_order_customer").alias("vault_table"),
-        h60(F.concat(F.lit("l"), key_s, F.lit("|"), cust_s)).alias("hk"),
-        F.lit(0).cast("bigint").alias("hd"),
-        "wave",
-    )
-    sat = batch.select(
-        F.lit("sat_order").alias("vault_table"),
-        h60(F.concat(F.lit("o"), key_s)).alias("hk"),
-        h60(F.concat(F.col("o_orderstatus"), F.lit("|"), cents)).alias("hd"),
-        "wave",
-    )
-    return (
-        hub_o.unionByName(hub_c)
-        .unionByName(link)
-        .unionByName(sat)
-        .groupBy("vault_table", "hk", "hd")
-        .agg(F.min("wave").alias("wave"))
-    )
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    no_hd = F.lit(0).cast("bigint")
+    cand = None
+    for table, hk, hd in (
+        ("hub_order", dv_hk("hub_order"), no_hd),
+        ("hub_customer", dv_hk("hub_customer", c_custkey=F.col("o_custkey")), no_hd),
+        ("link_order_customer", dv_hk("link_order_customer"), no_hd),
+        ("sat_order", dv_hk("hub_order"), dv_hk("sat_order_price", cents=cents)),
+    ):
+        rows = batch.select(
+            F.lit(table).alias("vault_table"), hk.alias("hk"), hd.alias("hd"), "wave"
+        )
+        cand = rows if cand is None else cand.unionByName(rows)
+    return cand.groupBy("vault_table", "hk", "hd").agg(F.min("wave").alias("wave"))
 
 
 def merge_vault_batch(store: DataFrame, batch: DataFrame) -> DataFrame:
@@ -210,8 +191,8 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the log twice counts once, and the result answers to a pure batch
     SQL oracle. Report = per (vault_table, load_epoch): row count + the
     overflow-safe Σ(hk div 2^20) mod 2⁶¹−1 digests of hk and hd
-    (`_dv_digest_col`'s law, so the report stays BIGINT-exact at any
-    corpus size). Raises RuntimeError when no micro-batch ran.
+    (``dv_digest``, so the report stays BIGINT-exact at any corpus
+    size). Raises RuntimeError when no micro-batch ran.
 
     Scale: a micro-batch costs one O(batch) append to the log — no
     read of the store, no window, no join — and the drain one hash
@@ -220,9 +201,7 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: the reference re-loads whole tables per run
     (main.py:45-59); this is that load as a standing incremental
     consumer, vault-shaped."""
-    from proceso_de_etl_spark.operators.etl import _dv_digest_col
-
-    workdir = tempfile.mkdtemp(prefix="stream_dv_")
+    workdir = cachereg.scratch_dir("stream_dv_")
     # one landed file per wave (``replay``) maps waves to micro-batches;
     # its coalesce(1) is fixture cost — keep it out of any bench
     # decomposition of the operator
@@ -245,54 +224,50 @@ def stream_data_vault_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vault_table", "load_epoch")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
-            _dv_digest_col("hk").alias("hk_digest"),
-            _dv_digest_col("hd").alias("hd_digest"),
+            dv_digest("hk").alias("hk_digest"),
+            dv_digest("hd").alias("hd_digest"),
         )
         .orderBy("vault_table", "load_epoch")
     )
 
 
-def _dv_ingest_oracle() -> str:
-    from proceso_de_etl_spark.operators.etl import _dv_digest_sql, _dv_h60_sql
-
-    return f"""
+ORACLES["stream_data_vault_ingest"] = f"""
 WITH base AS (
-  SELECT o_orderkey AS k, o_custkey AS c, o_orderstatus AS s, o_totalprice AS p
+  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
   FROM orders WHERE o_orderdate < {_CUTOFF}
 ),
 feed AS (
-  SELECT k, c, s, p, 1 AS wave FROM base
+  SELECT *, 1 AS wave FROM base
   UNION ALL
-  SELECT k, c, 'U-REV', p + 100.0, 2 FROM base WHERE k % 7 = 0
+  SELECT o_orderkey, o_custkey, 'U-REV', o_totalprice + 100.0, 2
+  FROM base WHERE o_orderkey % 7 = 0
   UNION ALL
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 3
   FROM orders WHERE o_orderdate >= {_CUTOFF}
 ),
 cand AS (
-  SELECT 'hub_order' AS vault_table, {_dv_h60_sql("'o' || k")} AS hk,
+  SELECT 'hub_order' AS vault_table, {dv_hk_sql("hub_order")} AS hk,
          CAST(0 AS BIGINT) AS hd, wave FROM feed
   UNION ALL
-  SELECT 'hub_customer', {_dv_h60_sql("'c' || c")}, 0, wave FROM feed
+  SELECT 'hub_customer', {dv_hk_sql("hub_customer", c_custkey="o_custkey")}, 0, wave FROM feed
   UNION ALL
-  SELECT 'link_order_customer', {_dv_h60_sql("'l' || k || '|' || c")}, 0, wave FROM feed
+  SELECT 'link_order_customer', {dv_hk_sql("link_order_customer")}, 0, wave FROM feed
   UNION ALL
-  SELECT 'sat_order', {_dv_h60_sql("'o' || k")},
-         {_dv_h60_sql("s || '|' || CAST(ROUND(p * 100) AS BIGINT)")}, wave FROM feed
+  SELECT 'sat_order', {dv_hk_sql("hub_order")},
+         {dv_hk_sql("sat_order_price", cents="CAST(ROUND(o_totalprice * 100) AS BIGINT)")},
+         wave FROM feed
 ),
 first_seen AS (
   SELECT vault_table, hk, hd, MIN(wave) AS load_epoch
   FROM cand GROUP BY vault_table, hk, hd
 )
 SELECT vault_table, load_epoch, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       {_dv_digest_sql("hk")} AS hk_digest,
-       {_dv_digest_sql("hd")} AS hd_digest
+       {dv_digest_sql("hk")} AS hk_digest,
+       {dv_digest_sql("hd")} AS hd_digest
 FROM first_seen
 GROUP BY vault_table, load_epoch
 ORDER BY vault_table, load_epoch
 """
-
-
-ORACLES["stream_data_vault_ingest"] = _dv_ingest_oracle()
 
 QUERIES = {
     "stream_cdc_apply": stream_cdc_apply,

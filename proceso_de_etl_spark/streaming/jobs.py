@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from proceso_de_etl_spark import cachereg
 from proceso_de_etl_spark.functions.columns import dsum
 from proceso_de_etl_spark.sources.local import local_frame
 
@@ -90,12 +91,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding a symlink to it (zero copy; in production the source is a
     landing directory or kafka and this shim disappears)."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import _ensure_session_confs
 
     _ensure_session_confs(spark)  # host-built sessions lack nanosAsLong/UTC
-    stage = tempfile.mkdtemp(prefix="stream_events_")
+    stage = cachereg.scratch_dir("stream_events_")
     src = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(src):  # multi-file table: link each part flat
         # into the stage (the file source lists one level, so a
@@ -128,10 +128,9 @@ def replay(spark: SparkSession, frames: list[DataFrame], prefix: str) -> DataFra
     disappears."""
     import os
     import shutil
-    import tempfile
     import time
 
-    root = tempfile.mkdtemp(prefix=f"{prefix}_")
+    root = cachereg.scratch_dir(f"{prefix}_")
     landing = os.path.join(root, "landing")
     os.makedirs(landing)
     base = int(time.time())
@@ -545,7 +544,6 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a foreachBatch upsert so the watermark can evict closed
     windows."""
     import os
-    import tempfile
 
     from pyspark.sql import Window as W
 
@@ -556,7 +554,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.unix_micros(F.col("w.start")).alias("window_start_us"), "event_type", "n")
     )
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="stream_topk_"), "out")
+    out_dir = os.path.join(cachereg.scratch_dir("stream_topk_"), "out")
 
     def rank_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         w = W.partitionBy("window_start_us").orderBy(F.desc("n"), F.asc("event_type"))
@@ -690,12 +688,11 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     import glob
     import os
     import shutil
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import _ensure_session_confs
 
     _ensure_session_confs(spark)
-    stage = tempfile.mkdtemp(prefix="stream_dedup_wm_")
+    stage = cachereg.scratch_dir("stream_dedup_wm_")
     src = os.path.join(sf_dir, "events.parquet")
     # single-file table OR multi-file directory (production layout):
     # pass 1 symlinks every part (original mtimes), pass 2 re-copies
@@ -771,7 +768,6 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     would emit 2× the quota. Arrival order (doc_id % 2, doc_id) is
     deterministic, so the whole admission set is value-oracled."""
     import os
-    import tempfile
 
     from pyspark.sql import Window as W
 
@@ -783,7 +779,7 @@ def stream_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = replay(
         spark, [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)], "stream_quota"
     )
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="stream_quota_"), "admitted")
+    out_dir = os.path.join(cachereg.scratch_dir("stream_quota_"), "admitted")
     admitted_so_far: dict[str, int] = {}
 
     def admit_epoch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -847,7 +843,6 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch funnel's SQL — the stream and batch forms are the same
     declarative aggregation."""
     import os
-    import tempfile
 
     counts = (
         stream_events(spark, sf_dir)
@@ -858,7 +853,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(F.col("event_type") == "purchase", F.unix_micros("ts"))).alias("t_purchase"),
         )
     )
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="stream_funnel_"), "out")
+    out_dir = os.path.join(cachereg.scratch_dir("stream_funnel_"), "out")
 
     def finish_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -959,7 +954,6 @@ def stream_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch rows are value-oracled: DuckDB recomputes each batch's
     novel count from the same parity rule."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.functions.text import shingles, tokens
     from proceso_de_etl_spark.sources.catalog import load_table
@@ -968,7 +962,7 @@ def stream_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = replay(
         spark, [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)], "stream_novelty"
     )
-    root = tempfile.mkdtemp(prefix="stream_novelty_")
+    root = cachereg.scratch_dir("stream_novelty_")
     seen_dir = os.path.join(root, "seen")
     metrics_dir = os.path.join(root, "metrics")
 
@@ -1124,7 +1118,6 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputation of the same halves, proving the monitor's
     intermediate states are right, not only its end state."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -1133,7 +1126,7 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest = raw.groupBy("event_type").agg(
         F.max(F.unix_micros("ts")).alias("latest_us")
     )
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="stream_fresh_"), "snaps")
+    out_dir = os.path.join(cachereg.scratch_dir("stream_fresh_"), "snaps")
 
     def snapshot_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         g = batch_df.agg(F.max("latest_us").alias("global_us"))
@@ -1766,7 +1759,6 @@ def stream_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY IF the store carries across triggers — per-batch recompute
     would shift first-touch credit and shrink k in the linear split."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.operators.events import ATTR_SCALE
     from proceso_de_etl_spark.sources.catalog import load_table
@@ -1775,7 +1767,7 @@ def stream_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type"
     )
     raw = replay(spark, _time_halves(ev), "stream_attr")
-    root = tempfile.mkdtemp(prefix="stream_attr_")
+    root = cachereg.scratch_dir("stream_attr_")
     touch_dir = os.path.join(root, "touches")
     credit_dir = os.path.join(root, "credits")
     attribute_epoch = _attribution_epoch_fn(touch_dir, credit_dir)
@@ -1922,7 +1914,6 @@ def stream_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     report joins the LAST store version's cohort sizes to the summed
     ledger and is value-oracled by A103's own SQL."""
     import os
-    import tempfile
 
     from proceso_de_etl_spark.sources.catalog import load_table
 
@@ -1930,7 +1921,7 @@ def stream_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     raw = replay(spark, _time_halves(ev), "stream_ltv")
-    root = tempfile.mkdtemp(prefix="stream_ltv_")
+    root = cachereg.scratch_dir("stream_ltv_")
     rev_dir = os.path.join(root, "rev")
     state = {"firsts_dir": None}
 

@@ -3305,7 +3305,7 @@ def test_data_vault_deletes_tombstone_propagate_resurrect(spark):
         back = r.o_orderkey % (DV_DEL_MOD * DV_DEL_REMOD) == 0
         for table, hk in (
             ("hub_order", h60(f"o{r.o_orderkey}")),
-            ("link_order_customer", h60(f"l{r.o_orderkey}|{r.o_custkey}")),
+            ("link_order_customer", h60(f"oc{r.o_orderkey}|{r.o_custkey}")),
         ):
             acc(s1, table, False, hk)  # before the delete wave
             acc(s2, table, gone, hk)  # deleted iff tombstoned
@@ -3331,6 +3331,26 @@ def test_data_vault_deletes_tombstone_propagate_resurrect(spark):
     assert got[(s2, "hub_order", True)][0] == n_gone
     assert got[(s3, "hub_order", True)][0] == n_gone - n_back, "resurrection"
     assert n_back > 0, "fixture must exercise the re-insert wave"
+
+
+def test_data_vault_keys_on_empty_orders_and_customer(spark, tmp_path):
+    """Degenerate input: with ``orders`` or ``customer`` empty, every
+    batch vault key answers what its DuckDB oracle answers — the same
+    columns, the same rows (none for the as-of and mart reports, a
+    zero-count row per vault table for the table reports) and NULL
+    digests over no keys."""
+    from proceso_de_etl_spark.operators import etl
+    from tests.conftest import empty_table_sf
+    from tests.oracle_harness import compare, duckdb_con
+
+    keys = sorted(k for k in etl.QUERIES if k.startswith("etl_data_vault_"))
+    assert len(keys) == 8
+    for table in ("orders", "customer"):
+        sf = empty_table_sf(tmp_path, table)
+        con = duckdb_con(sf)
+        for key in keys:
+            compare(etl.QUERIES[key](spark, sf), con, etl.ORACLES[key], f"{key} ({table} empty)")
+        con.close()
 
 
 def test_bfs_distance_on_literal_path_graph(spark, monkeypatch):

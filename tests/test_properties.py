@@ -993,3 +993,60 @@ def test_lsh_assignment_near_dup_coassignment_rate():
         co = n - j.filter(F.col("c1") != F.col("c2")).count()
         assert n == emb.count()
         assert co / n >= floor, f"eps={eps}: co-assignment {co}/{n} below floor {floor}"
+
+
+# ROADMAP item 9's palette: the empty string, ASCII, dotted capital I,
+# sharp s, final sigma, a ligature, a combining mark, a non-BMP emoji,
+# CJK and a zero-width space
+HASH_PALETTE = [
+    "",
+    "order 42|7",
+    "\u0130stanbul",
+    "stra\u00dfe",
+    "\u03bf\u03b4\u03bf\u03c2",
+    "\ufb01le",
+    "e\u0301",
+    "\U0001f600",
+    "\u6771\u4eac",
+    "a\u200bb",
+]
+
+
+def test_md5_int_matches_hashlib_on_non_ascii(spark):
+    """``md5_int`` and its DuckDB twin read the first n hex digits of
+    the UTF-8 md5 as the same integer Python does, for every n in use
+    and on non-ASCII input."""
+    import hashlib
+
+    import duckdb
+
+    from proceso_de_etl_spark.functions.hashing import md5_int, md5_int_sql
+
+    df = spark.createDataFrame(list(enumerate(HASH_PALETTE)), "i int, s string")
+    con = duckdb.connect()
+    for n in (2, 8, 15):
+        got = dict(df.select("i", md5_int(F.col("s"), n)).collect())
+        for i, s in enumerate(HASH_PALETTE):
+            want = int(hashlib.md5(s.encode()).hexdigest()[:n], 16)
+            duck = con.execute(f"SELECT {md5_int_sql('?', n)}", [s]).fetchone()[0]
+            assert (got[i], duck) == (want, want), (n, s)
+    con.close()
+
+
+def test_digest_is_overflow_safe_and_engine_portable(spark):
+    """The digest of terms whose BIGINT sum would overflow is the exact
+    sum mod 2^61-1 on both engines (and NULL over no rows)."""
+    import duckdb
+
+    from proceso_de_etl_spark.functions.hashing import DIGEST_MOD, digest, digest_sql
+
+    terms = [(1 << 62) + i for i in range(3)]
+    df = spark.createDataFrame([(t,) for t in terms], "t bigint")
+    want = sum(terms) % DIGEST_MOD
+    assert df.agg(digest("t")).first()[0] == want
+    assert df.filter("t < 0").agg(digest("t")).first()[0] is None
+    con = duckdb.connect()
+    con.execute("CREATE TABLE x (t BIGINT)")
+    con.executemany("INSERT INTO x VALUES (?)", [(t,) for t in terms])
+    assert con.execute(f"SELECT {digest_sql('t')} FROM x").fetchone()[0] == want
+    con.close()

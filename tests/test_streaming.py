@@ -875,3 +875,44 @@ def test_streaming_package_has_no_sleeps_and_one_drain():
                 stray.append(f"{path.relative_to(pkg)}:{no}")
     assert sleeps == []
     assert stray == []
+
+
+def test_package_makes_temp_dirs_only_through_scratch_dir():
+    """Every temporary directory the package makes comes from
+    ``cachereg.scratch_dir``, the one place that records it for
+    ``release_all()``: no ``mkdtemp(`` anywhere else."""
+    import inspect
+    import pathlib
+
+    import proceso_de_etl_spark
+    from proceso_de_etl_spark import cachereg
+
+    pkg = pathlib.Path(proceso_de_etl_spark.__file__).parent
+    helper_lines, start = inspect.getsourcelines(cachereg.scratch_dir)
+    helper_span = range(start, start + len(helper_lines))
+    stray = [
+        f"{path.relative_to(pkg)}:{no}"
+        for path in sorted(pkg.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "mkdtemp(" in line
+        and not (path == pathlib.Path(inspect.getsourcefile(cachereg)) and no in helper_span)
+    ]
+    assert stray == []
+
+
+def test_release_all_removes_stream_cdc_apply_dirs(spark, tmp_path, monkeypatch):
+    """``stream_cdc_apply`` leaves its workdir (change log, snapshot
+    version) and its replay landing root under the temp dir while the
+    returned frame may still read them; ``release_all()`` removes both."""
+    import tempfile
+
+    from proceso_de_etl_spark import cachereg
+    from proceso_de_etl_spark.streaming import cdc
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert cdc.stream_cdc_apply(spark, SF_SMOKE).collect()
+    made = sorted(p.name for p in tmp_path.iterdir())
+    assert any((tmp_path / d / "log").is_dir() for d in made), made
+    assert any((tmp_path / d / "landing").is_dir() for d in made), made
+    cachereg.release_all()
+    assert list(tmp_path.iterdir()) == []
